@@ -12,29 +12,35 @@ the dict entries), so a long-lived service session can evict between
 workloads.
 
 Cut policy — ``cut(df)`` is THE lineage-cut point for the iterative
-kernels (Pregel supersteps, memoized frames):
+kernels (``operators.pregel.fixpoint`` generations, memoized frames);
+the session-wide :func:`set_reliable_checkpointing` picks its mode:
 
-- default (``reliable=False``): ``localCheckpoint(eager=True)`` —
-  blocks live on executors, fast, NOT recoverable on executor loss.
-  Right for local/bench runs; on a preemptible-node cluster a lost
-  executor kills the whole multi-hour iterative job.
-- ``reliable=True`` (or the session-wide
-  :func:`set_reliable_checkpointing`): ``checkpoint(eager=True)``
-  backed by ``sc.setCheckpointDir`` — every cut is written to the
-  checkpoint filesystem (point it at HDFS/S3 on a cluster) and
-  SURVIVES executor loss; a lost executor re-reads the checkpoint
-  files instead of failing the job. Slower per cut (one write + read
-  through the cluster FS) — the classic durability/latency trade; at
-  100 TB on spot instances, reliable is the only sane setting for
-  multi-hour Pregel/dedup pipelines.
+- default: ``localCheckpoint(eager=True)`` — blocks live on executors,
+  fast, NOT recoverable on executor loss. Right for local/bench runs;
+  on a preemptible-node cluster a lost executor kills the whole
+  multi-hour iterative job.
+- reliable: ``checkpoint(eager=True)`` backed by
+  ``sc.setCheckpointDir`` — every cut is written to the checkpoint
+  filesystem (point it at HDFS/S3 on a cluster) and SURVIVES executor
+  loss; a lost executor re-reads the checkpoint files instead of
+  failing the job. Slower per cut (one write + read through the
+  cluster FS) — the classic durability/latency trade; at 100 TB on
+  spot instances, reliable is the only sane setting for multi-hour
+  Pregel/dedup pipelines.
 
-STORAGE LIFECYCLE — the two modes free superseded generations
-differently, and the O(1)-generations claim is mode-specific:
+STORAGE LIFECYCLE — ``operators.pregel.fixpoint`` is the only place
+that frees the blocks of iterative kernels: it owns every generation
+and every per-round scratch cut, and frees each once its successor is
+materialized (:func:`release_cut` is its primitive). Outside it, only
+the frame cache (:func:`memoized_checkpoint`, :func:`clear_frame_cache`)
+and the streaming sinks' own state free blocks. The two cut modes free
+superseded generations differently, and the O(1)-generations claim is
+mode-specific:
 
 - localCheckpoint blocks register in ``getPersistentRDDs``; the
-  eviction machinery here (:func:`clear_frame_cache`, Pregel's
-  prev-generation free) unpersists them synchronously, so executor
-  storage holds O(1) generations per kernel — guaranteed.
+  driver's and the frame cache's eviction unpersists them
+  synchronously, so executor storage holds O(1) generations per
+  kernel — guaranteed.
 - reliable checkpoint FILES do NOT register as persisted RDDs and
   cannot be freed by unpersist. They are deleted by Spark's
   ContextCleaner when the JVM-side RDD is garbage-collected —
@@ -60,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame, set[int]]] = {}
 
-_RELIABLE = False  # session-wide default for cut(reliable=None)
+_RELIABLE = False  # session-wide cut mode (see set_reliable_checkpointing)
 
 
 def set_reliable_checkpointing(
@@ -115,11 +121,11 @@ def ensure_checkpoint_dir(
     return path
 
 
-def cut(df: DataFrame, reliable: bool | None = None) -> DataFrame:
+def cut(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` and truncate its lineage — the one
-    cut-point every iterative kernel goes through. ``reliable=None``
-    follows the session-wide policy (see module docstring for the
-    executor-loss semantics of each mode).
+    cut-point every iterative kernel goes through. The mode follows the
+    session-wide policy (see module docstring for the executor-loss
+    semantics of each mode).
 
     STATS RESET (load-bearing): ``checkpoint``/``localCheckpoint``
     return a ``LogicalRDD`` that INHERITS the origin plan's size
@@ -139,9 +145,7 @@ def cut(df: DataFrame, reliable: bool | None = None) -> DataFrame:
     broadcasts of cut frames must stay explicit ``F.broadcast``
     (repo style already does), and AQE still converts shuffle joins
     to broadcast at runtime from TRUE materialized sizes."""
-    if reliable is None:
-        reliable = _RELIABLE
-    if reliable:
+    if _RELIABLE:
         ensure_checkpoint_dir(df.sparkSession)
         ck = df.checkpoint(eager=True)
     else:
@@ -190,15 +194,8 @@ def cut_block_ids(df: DataFrame) -> set[int]:
 
 def release_cut(*dfs: DataFrame) -> None:
     """Free the executor blocks behind superseded :func:`cut` frames —
-    the loop-body twin of pregel.py's generation freeing (guide §5,
-    round-11 VERDICT #4: persisted-block footprint per superstep).
-
-    A self-looping kernel that cuts per round leaves every dead
-    generation persisted until the session ends: O(rounds) executor
-    storage for state only the NEXT round ever read. Calling this on a
-    generation ONCE ITS SUCCESSOR IS MATERIALIZED caps the footprint
-    at O(1) generations, exactly like pregel's ``_unpersist_ids`` of
-    ``prev_block_ids``.
+    the primitive ``operators.pregel.fixpoint`` frees its generations
+    and scratch cuts with.
 
     SAFETY CONTRACT (the caller proves this): a cut frame's lineage is
     truncated, so once its blocks are gone the frame CANNOT be
@@ -220,20 +217,18 @@ def memoized_checkpoint(
     kind: str,
     sf_dir: str,
     build: Callable[[], DataFrame],
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Return the memoized eager cut of ``build()`` for this
     (kind, sf_dir), rebuilding when the session changed (a cut frame
     dies with its session). A superseded generation's blocks are
     unpersisted on rebuild, so the cache never holds more than one
-    generation per key. ``reliable`` selects the cut mode (see
-    :func:`cut`)."""
+    generation per key."""
     hit = _CACHE.get((kind, sf_dir))
     if hit is not None and hit[0] is spark:
         return hit[1]
     if hit is not None:
         _CACHE.pop((kind, sf_dir), None)
-    df = cut(build(), reliable)
+    df = cut(build())
     # attribution comes from the cut frame's own plan: nested memoized
     # keys populated during build() keep their own block ids, and a
     # concurrent job's persists are never claimed by this key

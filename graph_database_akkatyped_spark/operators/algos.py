@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from graph_database_akkatyped_spark.caching import (
     cut,
     memoized_checkpoint as _memoized,
-    release_cut,
 )
 from graph_database_akkatyped_spark.catalog import load_table
 from graph_database_akkatyped_spark.operators.graph_build import (
@@ -29,7 +28,7 @@ from graph_database_akkatyped_spark.operators.graph_build import (
     user_edges_sym,
     user_vertices,
 )
-from graph_database_akkatyped_spark.operators.pregel import pregel
+from graph_database_akkatyped_spark.operators.pregel import fixpoint, pregel
 
 _SEED_SQL = "(SELECT min(user_id) FROM events)"
 
@@ -38,29 +37,44 @@ _SEED_SQL = "(SELECT min(user_id) FROM events)"
 
 
 def bfs_frame(edges_sym: DataFrame, seed: DataFrame, max_level: int) -> DataFrame:
-    """Frontier BFS; ``edges_sym``: (a, b) symmetric, ``seed``: (id).
-    Returns (id, level).
+    """Frontier BFS to depth ``max_level``; ``edges_sym``: (a, b)
+    symmetric, ``seed``: (id), or (key..., id) for a multi-source BFS —
+    every seed column besides ``id`` is a key that runs its own BFS in
+    the same traversal (:func:`msbfs_frame`). Returns
+    (key..., id, level).
 
-    Only the frontier is joined each round (not all vertices), and each
-    level is localCheckpoint-ed so lineage stays flat — the pattern that
-    survives deep graphs at scale.
+    Only the frontier (the vertices reached last level) is joined each
+    round, never all vertices; each level is one driver generation, so
+    lineage stays flat and storage holds one visited set — the pattern
+    that survives deep graphs at scale. Stops early once a level
+    reaches nothing new.
     """
-    visited = seed.withColumn("level", F.lit(0)).transform(cut)
-    frontier = visited.select("id")
-    for lvl in range(1, max_level + 1):
-        nxt = (
-            edges_sym.join(frontier.withColumnRenamed("id", "a"), "a")
-            .select(F.col("b").alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .withColumn("level", F.lit(lvl))
-            .transform(cut)
+    keys = [c for c in seed.columns if c != "id"]
+
+    def level(visited: DataFrame, rnd) -> DataFrame:
+        frontier = visited.where(F.col("fresh") == 1).select(
+            *keys, F.col("id").alias("a")
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).transform(cut)
-        frontier = nxt.select("id")
-    return visited
+        nxt = (
+            edges_sym.join(frontier, "a")
+            .select(*keys, F.col("b").alias("id"))
+            .distinct()
+            .join(visited, [*keys, "id"], "left_anti")
+            .select(*keys, "id", F.lit(rnd.i).alias("level"), F.lit(1).alias("fresh"))
+        )
+        return visited.select(
+            *keys, "id", "level", F.lit(0).alias("fresh")
+        ).unionByName(nxt)
+
+    init = seed.select(*keys, "id", F.lit(0).alias("level"), F.lit(1).alias("fresh"))
+    return fixpoint(
+        level,
+        init,
+        max_iter=max_level,
+        name="bfs_frame",
+        delta=F.sum("fresh"),
+        horizon=True,
+    ).drop("fresh")
 
 
 def _uedges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,12 +183,10 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg=F.min("msg"),
         vprog=F.least(F.col("state"), F.col("agg_msg")),
         max_iter=10,
-        frontier_only=True,
+        # the oracle's recursion cap is tuned to a CONVERGED result; the
+        # driver fails loudly rather than return a truncated fixpoint
+        monotone="sssp_weighted",
     )
-    # the oracle's recursion cap is tuned to a CONVERGED result; fail
-    # loudly rather than silently comparing a truncated fixpoint
-    if not res.converged:
-        raise RuntimeError("sssp_weighted did not converge within max_iter")
     return (
         res.vertices.where(F.col("state").isNotNull())
         .select(F.col("id").alias("n_nationkey"), F.col("state").alias("dist"))
@@ -230,10 +242,8 @@ def sssp_user_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg=F.min("msg"),
         vprog=F.least(F.col("state"), F.col("agg_msg")),
         max_iter=30,
-        frontier_only=True,
+        monotone="sssp_user_weighted",  # see sssp_weighted
     )
-    if not res.converged:  # see sssp_weighted: oracle cap assumes fixpoint
-        raise RuntimeError("sssp_user_weighted did not converge within max_iter")
     return res.vertices.where(F.col("state").isNotNull()).select(
         F.col("id").alias("user_id"), F.col("state").alias("dist")
     )
@@ -248,7 +258,7 @@ def sssp_user_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cc_frame(verts: DataFrame, edges_sym: DataFrame, max_iter: int = 50) -> DataFrame:
     """Min-id propagation CC on any graph; verts: (id), edges: (a, b).
 
-    Converges in O(diameter) supersteps; with ``frontier_only`` the
+    Converges in O(diameter) supersteps; in pregel's monotone mode the
     fixpoint is detected (empty frontier) and the loop stops early, so
     a generous ``max_iter`` costs nothing once converged. NON-
     convergence is a loud error, not a silent wrong answer: the
@@ -270,14 +280,8 @@ def cc_frame(verts: DataFrame, edges_sym: DataFrame, max_iter: int = 50) -> Data
         agg=F.min("msg"),
         vprog=F.least(F.col("state"), F.col("agg_msg")),
         max_iter=max_iter,
-        frontier_only=True,
+        monotone="cc_frame",
     )
-    if not res.converged:
-        raise RuntimeError(
-            f"cc_frame did not reach the min-id fixpoint within "
-            f"max_iter={max_iter} supersteps (graph diameter exceeds the "
-            f"cap); labels would be mid-propagation — raise max_iter"
-        )
     return res.vertices.select("id", F.col("state").alias("component"))
 
 
@@ -440,7 +444,7 @@ def pagerank_frame(
         agg=F.sum("msg"),
         vprog=F.expr(f"CAST({_BASE} + (85 * coalesce(agg_msg, 0)) div 100 AS LONG)"),
         max_iter=iters,
-        check_convergence=False,
+        monotone=None,
     )
     return res.vertices.select(
         "id",
@@ -487,8 +491,8 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties broken to the smallest label (deterministic -> oracle-able)."""
     verts = user_vertices(spark, sf_dir)
     edges = _uedges_memo(spark, sf_dir)
-    labels = verts.select("id", F.col("id").alias("lbl"))
-    for _ in range(4):
+
+    def sweep(labels: DataFrame, rnd) -> DataFrame:
         nbr = edges.join(
             labels.select(F.col("id").alias("a"), "lbl"), "a"
         )
@@ -498,11 +502,16 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick = counts.groupBy("id").agg(
             F.expr("max_by(lbl, struct(c, -lbl))").alias("new_lbl")
         )
-        labels = (
-            labels.join(pick, "id", "left")
-            .select("id", F.coalesce("new_lbl", "lbl").alias("lbl"))
-            .transform(cut)
+        return labels.join(pick, "id", "left").select(
+            "id", F.coalesce("new_lbl", "lbl").alias("lbl")
         )
+
+    labels = fixpoint(
+        sweep,
+        verts.select("id", F.col("id").alias("lbl")),
+        max_iter=4,
+        name="label_propagation",
+    )
     return labels.select(F.col("id").alias("user_id"), F.col("lbl").alias("label"))
 
 
@@ -541,46 +550,36 @@ _KCORE_ROUNDS = 15
 def kcore_frame(edges_sym: DataFrame, k: int, max_rounds: int = 15) -> DataFrame:
     """k-core: iteratively peel vertices with degree < k until fixpoint.
 
-    Each round recomputes degrees over edges whose BOTH endpoints are
-    still alive (semi-joins — never materializing the dead set) and
-    checkpoints the survivors. Converges in O(peeling depth) rounds;
-    extra rounds are no-ops, which is what lets the unrolled SQL oracle
-    use a fixed round count.
+    The generation is the degree table of the surviving vertices; each
+    round keeps the vertices of degree >= k and recomputes degrees over
+    edges whose BOTH endpoints survive (semi-joins — never
+    materializing the dead set). The fixpoint is the round whose table
+    has no degree below k. Converges in O(peeling depth) rounds; extra
+    rounds are no-ops, which is what lets the unrolled SQL oracle use a
+    fixed round count. Loud exhaustion at ``max_rounds``: a silent
+    return at the cap is a SUPERSET of the true k-core that looks like
+    an answer (the round-8b 1M rehearsal hit exactly this: peel depth
+    64+ left 22 under-degree survivors).
     """
-    alive = (
-        edges_sym.select(F.col("a").alias("id"))
-        .distinct()
-        .transform(cut)
-    )
-    alive_cut = alive  # the cut frame backing ``alive`` (for release)
-    n_alive = alive.count()
-    # max_rounds + 1 iterations, loud exhaustion — same discipline as
-    # truss_frame: a silent return at the cap is a SUPERSET of the true
-    # k-core that looks like an answer (the round-8b 1M rehearsal hit
-    # exactly this: peel depth 64+ left 22 under-degree survivors)
-    for _ in range(max_rounds + 1):
-        live_edges = edges_sym.join(
-            alive.withColumnRenamed("id", "a"), "a", "left_semi"
-        ).join(alive.withColumnRenamed("id", "b"), "b", "left_semi")
-        deg = live_edges.groupBy(F.col("a").alias("id")).agg(
+
+    def degrees(edges: DataFrame) -> DataFrame:
+        return edges.groupBy(F.col("a").alias("id")).agg(
             F.count(F.lit(1)).alias("degree")
         )
-        keep = deg.where(F.col("degree") >= k).transform(cut)
-        # ONE driver action per peel round: the survivor count doubles as
-        # the convergence check against the previous round's count (the
-        # count itself is near-free — keep is already materialized)
-        n_keep = keep.count()
-        # the keep cut consumed the previous alive generation — free it
-        # (guide §5; ``alive`` itself may be a lazy select over the
-        # previous keep, so the release tracks the backing cut frame)
-        release_cut(alive_cut)
-        alive_cut = keep
-        if n_keep == n_alive:
-            return keep
-        alive, n_alive = keep.select("id"), n_keep
-    raise RuntimeError(
-        f"kcore_frame: no fixpoint within {max_rounds} peel rounds — "
-        "raise max_rounds (deep peeling cascade)"
+
+    def peel(deg: DataFrame, rnd) -> DataFrame:
+        alive = deg.where(F.col("degree") >= k).select("id")
+        return degrees(
+            edges_sym.join(alive.withColumnRenamed("id", "a"), "a", "left_semi")
+            .join(alive.withColumnRenamed("id", "b"), "b", "left_semi")
+        )
+
+    return fixpoint(
+        peel,
+        degrees(edges_sym),
+        max_iter=max_rounds,
+        name="kcore_frame",
+        delta=F.sum((F.col("degree") < k).cast("long")),
     )
 
 
@@ -842,20 +841,24 @@ def truss_frame(edges: DataFrame, max_rounds: int = _TRUSS_ROUNDS) -> DataFrame:
     """Truss peeling to FIXPOINT (early exit when a round removes no
     edge), loudly bounded at ``max_rounds`` — silent truncation would
     return a superset of the true truss and break oracle parity. Each
-    round is one bounded triangle enumeration + a grouped support
-    count + a semi-join — O(triangles) per round, the same scale
-    family as triangle_count, over a monotonically SHRINKING edge set.
-    The SQL oracle unrolls ``max_rounds`` rounds; its post-fixpoint
-    rounds are no-ops, so both engines land on the exact k-truss.
+    round is a grouped support count + a left join over the surviving
+    edges — O(triangles) per round, the same scale family as
+    triangle_count, over a monotonically SHRINKING edge set. The SQL
+    oracle unrolls ``max_rounds`` rounds; its post-fixpoint rounds are
+    no-ops, so both engines land on the exact k-truss.
 
-    The loop runs ``max_rounds + 1`` iterations: detecting the
-    fixpoint costs one no-change round, so a topology that shrinks for
-    exactly ``max_rounds`` rounds (which the unrolled oracle handles —
-    its e{max_rounds} IS the fixpoint) must get one extra confirm
-    round rather than erroring. The error fires only when round
+    The driver runs ``max_rounds + 1`` rounds: detecting the fixpoint
+    costs one no-change round, so a topology that shrinks for exactly
+    ``max_rounds`` rounds (which the unrolled oracle handles — its
+    e{max_rounds} IS the fixpoint) must get one extra confirm round
+    rather than erroring. The error fires only when round
     ``max_rounds + 1`` still removes edges — the case where the
     unrolled oracle would itself be a superset, so parity is
     genuinely broken.
+
+    The generation is (edges flagged ``keep``, triangle list): round
+    r drops the edges round r-1 flagged, removes their triangles, and
+    flags the survivors by their support in what is left.
 
     INCREMENTAL peel (round-9 VERDICT #2): triangles are enumerated
     ONCE — the O(Σ deg²) wedge join runs a single time — and the
@@ -877,48 +880,45 @@ def truss_frame(edges: DataFrame, max_rounds: int = _TRUSS_ROUNDS) -> DataFrame:
     SHUFFLED under the old form, now stored instead of recomputed;
     on a graph whose triangle set cannot be materialized, cap degree
     first (the capped user graph bounds it at n·cap²)."""
-    e = edges.transform(cut)
-    prev = e.count()
-    tri = _tri_enumerate(e).transform(cut)
-    for _ in range(max_rounds + 1):
-        ok = _tri_support_ok(tri)
-        new_e = e.join(ok, ["a", "b"], "left_semi").transform(cut)
-        n = new_e.count()
-        if n == prev:
-            # fixpoint: the returned survivors are a fresh cut; the
-            # previous edge set and the triangle list are dead
-            # (guide §5, VERDICT r11 #4 — free superseded generations)
-            release_cut(e, tri)
-            return new_e
-        dropped = e.join(ok, ["a", "b"], "left_anti").transform(cut)
-        new_tri = (
-            tri.join(
-                dropped.select(F.col("a").alias("x"), F.col("b").alias("y")),
-                ["x", "y"],
-                "left_anti",
+
+    def peel(state, rnd):
+        if rnd.i == 1:  # state is the raw edge list
+            e = rnd.cut(state.select("a", "b"))
+            tri = rnd.cut(_tri_enumerate(e))
+        else:
+            flagged, tri = state
+            e = flagged.where(F.col("keep")).select("a", "b")
+            dropped = flagged.where(~F.col("keep"))
+            tri = rnd.cut(
+                tri.join(
+                    dropped.select(F.col("a").alias("x"), F.col("b").alias("y")),
+                    ["x", "y"],
+                    "left_anti",
+                )
+                .join(
+                    dropped.select(F.col("a").alias("x"), F.col("b").alias("z")),
+                    ["x", "z"],
+                    "left_anti",
+                )
+                .join(
+                    dropped.select(F.col("a").alias("y"), F.col("b").alias("z")),
+                    ["y", "z"],
+                    "left_anti",
+                )
             )
-            .join(
-                dropped.select(F.col("a").alias("x"), F.col("b").alias("z")),
-                ["x", "z"],
-                "left_anti",
-            )
-            .join(
-                dropped.select(F.col("a").alias("y"), F.col("b").alias("z")),
-                ["y", "z"],
-                "left_anti",
-            )
-            .transform(cut)
+        ok = _tri_support_ok(tri).withColumn("ok", F.lit(True))
+        flagged = e.join(ok, ["a", "b"], "left").select(
+            "a", "b", F.coalesce("ok", F.lit(False)).alias("keep")
         )
-        # new_e/dropped/new_tri are materialized; the round's inputs
-        # (old e, old tri) and the one-shot dropped set are dead —
-        # O(1) generations of the O(|triangles|) frame, not O(rounds)
-        release_cut(e, tri, dropped)
-        tri = new_tri
-        e, prev = new_e, n
-    raise RuntimeError(
-        f"truss_frame: no fixpoint within {max_rounds} peel rounds — "
-        "raise _TRUSS_ROUNDS (deep support-chain topology)"
-    )
+        return flagged, tri
+
+    return fixpoint(
+        peel,
+        edges,
+        max_iter=max_rounds + 1,
+        name="truss_frame",
+        delta=F.sum((~F.col("keep")).cast("long")),
+    ).select("a", "b")
 
 
 def k_truss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

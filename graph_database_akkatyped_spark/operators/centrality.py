@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graph_database_akkatyped_spark.caching import cut, release_cut
+from graph_database_akkatyped_spark.caching import cut
 from graph_database_akkatyped_spark.caching import memoized_checkpoint as _memoized
 from graph_database_akkatyped_spark.operators.graph_extras import (
     DIRECTED_EDGES_CTE,
@@ -32,6 +32,7 @@ from graph_database_akkatyped_spark.operators.graph_build import (
     user_edges_sym,
     user_vertices,
 )
+from graph_database_akkatyped_spark.operators.pregel import fixpoint
 
 # ------------------------------------------------- HITS hubs/authorities
 
@@ -763,14 +764,12 @@ def community_louvain_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-aggregation is a full edge-list shuffle, paid (2*sweeps-1)x
     deg = cut(edges.groupBy(F.col("a").alias("v")).agg(F.sum("w").alias("d")))
     m2 = cut(edges.agg(F.sum("w").alias("m")))
-    labels = verts.select("v", F.col("v").alias("l"))
-    for _ in range(_LOUVAIN_SWEEPS):
-        prev = labels
-        labels = cut(_louvain_sweep(labels, edges, deg, m2))
-        # guide §5 (VERDICT r11 #4): the new sweep cut consumed the
-        # previous labels generation — free it (sweep 1's prev is the
-        # caller's lazy verts projection: no blocks, no-op)
-        release_cut(prev)
+    labels = fixpoint(
+        lambda labels, rnd: _louvain_sweep(labels, edges, deg, m2),
+        verts.select("v", F.col("v").alias("l")),
+        max_iter=_LOUVAIN_SWEEPS,
+        name="community_louvain_l1",
+    )
     return labels.select(
         F.col("v").alias("user_id"), F.col("l").alias("community")
     )
@@ -821,14 +820,12 @@ def louvain_multi_frame(
     # re-aggregation is a full edge-list shuffle, paid (2*sweeps-1)x
     deg = cut(edges.groupBy(F.col("a").alias("v")).agg(F.sum("w").alias("d")))
     m2 = cut(edges.agg(F.sum("w").alias("m")))
-    labels = verts.select("v", F.col("v").alias("l"))
-    for _ in range(sweeps):
-        prev = labels
-        labels = cut(_louvain_sweep(labels, edges, deg, m2))
-        # guide §5 (VERDICT r11 #4): the new cut consumed the previous
-        # sweep's labels — free that generation (sweep 1's prev is the
-        # caller's lazy verts projection: no blocks, no-op)
-        release_cut(prev)
+    labels = fixpoint(
+        lambda labels, rnd: _louvain_sweep(labels, edges, deg, m2),
+        verts.select("v", F.col("v").alias("l")),
+        max_iter=sweeps,
+        name="louvain_multi_frame: level 1",
+    )
     # contract: super-vertex = level-1 community, w = edge multiplicity
     la = labels.select(F.col("v").alias("a"), F.col("l").alias("ca"))
     lb = labels.select(F.col("v").alias("b"), F.col("l").alias("cb"))
@@ -841,15 +838,14 @@ def louvain_multi_frame(
     cdeg = cut(
         cedges.groupBy(F.col("a").alias("v")).agg(F.sum("w").alias("d"))
     )
-    clabels = (
+    clabels = fixpoint(
+        lambda clabels, rnd: _louvain_sweep(clabels, cedges, cdeg, m2),
         labels.select(F.col("l").alias("v"))
         .distinct()
-        .select("v", F.col("v").alias("l"))
+        .select("v", F.col("v").alias("l")),
+        max_iter=sweeps,
+        name="louvain_multi_frame: level 2",
     )
-    for _ in range(sweeps):
-        prev = clabels
-        clabels = cut(_louvain_sweep(clabels, cedges, cdeg, m2))
-        release_cut(prev)  # same §5 discipline on the contracted level
     proj = clabels.select(F.col("v").alias("l"), F.col("l").alias("l2"))
     return labels.join(proj, "l").select(
         "v", F.col("l2").alias("l")

@@ -19,13 +19,13 @@ linear, never |customers-per-part|² (the classic projection blow-up).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.caching import (
     cut,
     memoized_checkpoint as _memoized,
-    release_cut,
-    _unpersist_ids,
 )
 from graph_database_akkatyped_spark.catalog import load_table
 from graph_database_akkatyped_spark.operators.algos import (
@@ -44,7 +44,7 @@ from graph_database_akkatyped_spark.operators.graph_build import (
     user_edges_sym,
     user_vertices,
 )
-from graph_database_akkatyped_spark.operators.pregel import pregel
+from graph_database_akkatyped_spark.operators.pregel import fixpoint, pregel
 
 _PPR_ITERS = 5
 
@@ -82,7 +82,7 @@ def ppr_frame(
             f"+ (85 * coalesce(agg_msg, 0)) div 100 AS LONG)"
         ),
         max_iter=iters,
-        check_convergence=False,
+        monotone=None,
     )
     return res.vertices.select(
         "id",
@@ -145,7 +145,8 @@ def topo_longest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric graph). Fixed ≤6-edge horizon on both engines.
 
     Per round only (edges ⋈ current-layer) is joined — no all-pairs
-    path enumeration; layers are localCheckpoint-ed (flat lineage).
+    path enumeration; each layer is one driver generation (flat
+    lineage).
     """
     ce = _canonical_edges(spark, sf_dir)
     verts = (
@@ -153,21 +154,23 @@ def topo_longest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(ce.select(F.col("b").alias("id")))
         .distinct()
     )
-    d = verts.withColumn("depth", F.lit(0).cast("long"))
-    for _ in range(_TOPO_ROUNDS):
+
+    def layer(d: DataFrame, rnd) -> DataFrame:
         msgs = (
             ce.join(d.withColumnRenamed("id", "a"), "a")
             .groupBy(F.col("b").alias("id"))
             .agg(F.max(F.col("depth") + 1).alias("m"))
         )
-        d = (
-            d.join(msgs, "id", "left")
-            .select(
-                "id",
-                F.greatest("depth", F.coalesce("m", F.lit(0))).alias("depth"),
-            )
-            .transform(cut)
+        return d.join(msgs, "id", "left").select(
+            "id", F.greatest("depth", F.coalesce("m", F.lit(0))).alias("depth")
         )
+
+    d = fixpoint(
+        layer,
+        verts.withColumn("depth", F.lit(0).cast("long")),
+        max_iter=_TOPO_ROUNDS,
+        name="topo_longest_path",
+    )
     return d.select(F.col("id").alias("user_id"), "depth")
 
 
@@ -666,7 +669,7 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .where(gate)
     )
-    arr = (
+    seeds = (
         ev.select("user_id")
         .distinct()
         .where(F.col("user_id") % _TEMPORAL_SEED_MOD == 0)
@@ -675,7 +678,8 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_TEMPORAL_EPOCH).cast("timestamp").alias("arrival"),
         )
     )
-    for _ in range(_TEMPORAL_HOPS):
+
+    def hop(arr: DataFrame, rnd) -> DataFrame:
         msgs = (
             edges.join(
                 arr.select(F.col("v").alias("src"), "arrival"), "src"
@@ -684,16 +688,18 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("v"))
             .agg(F.min("t").alias("arrival"))
         )
-        prev = arr
-        arr = cut(
+        return (
             arr.unionByName(msgs)
             .groupBy("v")
             .agg(F.min("arrival").alias("arrival"))
         )
-        # guide §5 (VERDICT r11 #4): the new arrival cut consumed the
-        # previous hop's generation — free it (hop 1's prev is the lazy
-        # seed projection: no blocks, no-op)
-        release_cut(prev)
+
+    arr = fixpoint(
+        hop,
+        seeds,
+        max_iter=_TEMPORAL_HOPS,
+        name="graph_temporal_reachability",
+    )
     return arr.where(F.col("v") % _TEMPORAL_SEED_MOD != 0).select(
         F.col("v").alias("user_id"), F.col("arrival").alias("earliest_ts")
     )
@@ -741,64 +747,66 @@ def scc_frame(
 
     Each phase is a monotone Pregel max-propagation (frontier-pruned,
     lineage-checkpointed); one outer round resolves one "layer" of
-    SCCs, and layers shrink geometrically on real graphs. No transitive
+    SCCs, and layers shrink geometrically on real graphs. The peel
+    loop's generation is (every vertex with its root — NULL while
+    unassigned, the edges among unassigned vertices). No transitive
     closure, no O(V²) state — per-round cost is O(E) joins, which is
     the only SCC shape that survives 100 TB. Output: one row per
     vertex with ``scc_id`` = min member id (engine-neutral label) and
     the component size.
     """
-    # cut the edge build ONCE: pregel re-evaluates its edge input every
-    # superstep, and an un-materialized events self-join would re-run
-    # per superstep (measured 3.6 s/superstep -> 0.1 s after the cut)
-    remaining_v = verts.select("id").transform(cut)
-    remaining_e = edges.select("src", "dst").transform(cut)
-    assigned = None  # (id, root)
 
-    def _absorb(members: DataFrame):
-        nonlocal assigned, remaining_v, remaining_e
-        assigned = (
-            members if assigned is None else assigned.unionByName(members)
-        )
-        prev_v, prev_e = remaining_v, remaining_e
-        remaining_v = remaining_v.join(
-            members.select("id"), "id", "left_anti"
-        ).transform(cut)
-        rm = members.select(F.col("id").alias("gone"))
-        remaining_e = (
-            remaining_e.join(rm, remaining_e["src"] == rm["gone"], "left_anti")
-            .join(rm, remaining_e["dst"] == rm["gone"], "left_anti")
-            .transform(cut)
-        )
-        # guide §5 (VERDICT r11 #4): the peeled-graph cuts superseded
-        # the previous generation — free it (remaining_e is O(E), THE
-        # frame whose O(rounds) accumulation would hurt at scale).
-        # ``members`` cuts stay: ``assigned`` references every one of
-        # them until the caller materializes the returned labeling.
-        release_cut(prev_v, prev_e)
+    def among(e: DataFrame, ids: DataFrame) -> DataFrame:
+        return e.join(
+            ids.withColumnRenamed("id", "src"), "src", "left_semi"
+        ).join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
 
-    for _ in range(_SCC_ROUNDS):
-        if remaining_v.limit(1).count() == 0:
-            break
-        # TRIM to fixpoint: a vertex with no in-edge or no out-edge in
-        # the remaining graph is a singleton SCC. Peeling these without
-        # Pregel kills DAG tails and chains — the worst case for
-        # peel-based coloring (a directed chain with descending ids
-        # needs O(n) coloring rounds but trims away immediately).
-        for _ in range(30):
-            has_out = remaining_e.select(F.col("src").alias("id")).distinct()
-            has_in = remaining_e.select(F.col("dst").alias("id")).distinct()
-            core = has_out.join(has_in, "id").transform(cut)
-            singles = remaining_v.join(core, "id", "left_anti")
-            if singles.limit(1).count() == 0:
-                release_cut(core)
-                break
-            _absorb(
-                singles.select("id", F.col("id").alias("root"))
-                .transform(cut)
+    def unassigned(v: DataFrame) -> DataFrame:
+        return v.where(F.col("root").isNull()).select("id")
+
+    def trim(v: DataFrame, e: DataFrame) -> DataFrame:
+        """TRIM to fixpoint: a vertex with no in-edge or no out-edge in
+        the remaining graph is a singleton SCC. Peeling these without
+        Pregel kills DAG tails and chains — the worst case for
+        peel-based coloring (a directed chain with descending ids
+        needs O(n) coloring rounds but trims away immediately). A
+        partial trim is still correct (coloring handles the rest), so
+        the 30-sweep cap is a horizon, not an error."""
+
+        def sweep(v: DataFrame, rnd) -> DataFrame:
+            le = rnd.cut(among(e, unassigned(v)))
+            core = (
+                le.select(F.col("src").alias("id"))
+                .distinct()
+                .join(le.select(F.col("dst").alias("id")).distinct(), "id")
+                .withColumn("core", F.lit(True))
             )
-            release_cut(core)  # consumed by the members cut in _absorb
-        if remaining_v.limit(1).count() == 0:
-            break
+            single = F.col("root").isNull() & F.col("core").isNull()
+            return v.join(core, "id", "left").select(
+                "id",
+                F.when(single, F.col("id")).otherwise(F.col("root")).alias("root"),
+                single.cast("long").alias("fresh"),
+            )
+
+        return fixpoint(
+            sweep,
+            v,
+            max_iter=30,
+            name="scc_frame: trim",
+            delta=F.sum("fresh"),
+            horizon=True,
+        )
+
+    def peel(state, rnd):
+        v, e = state
+        if rnd.i == 1:
+            # cut the edge build ONCE: every trim sweep reads it, and an
+            # un-materialized events self-join would re-run per sweep
+            # (measured 3.6 s/superstep -> 0.1 s after the cut)
+            e = rnd.cut(e)
+        v = trim(v, e)
+        live = unassigned(v)
+        e = rnd.cut(among(e, live))
         # 1. forward coloring: color = max id reaching v. MUST reach
         # its fixpoint: every propagated id certifies a real path, so
         # partial colors still certify reachability — but an absorbed
@@ -806,29 +814,20 @@ def scc_frame(
         # and peeling a partial SCC severs the remaining members'
         # cycles, silently fragmenting the component (the cc_frame
         # sparse-rehearsal bug class). Loud beats wrong.
-        colors_res = pregel(
-            remaining_v.select("id", F.col("id").alias("state")),
-            remaining_e,
+        colors = pregel(
+            live.select("id", F.col("id").alias("state")),
+            e,
             msg=F.col("src_state"),
             agg=F.max("msg"),
             vprog=F.expr("greatest(state, coalesce(agg_msg, state))"),
             max_iter=max_iter,
-            frontier_only=True,
-        )
-        if not colors_res.converged:
-            raise RuntimeError(
-                f"scc_frame: forward coloring unconverged within "
-                f"max_iter={max_iter} supersteps (path longer than the "
-                "cap in the remaining graph) — raise max_iter"
-            )
-        colors = colors_res.vertices.select(
-            "id", F.col("state").alias("color")
-        )
+            monotone="scc_frame: forward coloring",
+        ).vertices.select("id", F.col("state").alias("color"))
         # 2. backward mark inside each color class, from every root at
         # once: message-edges are the original edges reversed and
         # restricted to endpoints of the same color
         ce = (
-            remaining_e.join(
+            e.join(
                 colors.select(
                     F.col("id").alias("src"), F.col("color").alias("c_src")
                 ),
@@ -842,10 +841,10 @@ def scc_frame(
             )
             .where(F.col("c_src") == F.col("c_dst"))
         )
-        rev = ce.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        ).transform(cut)
-        marks_res = pregel(
+        rev = rnd.cut(
+            ce.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        marks = pregel(
             colors.select(
                 "id",
                 (F.col("id") == F.col("color")).cast("long").alias("state"),
@@ -855,37 +854,33 @@ def scc_frame(
             agg=F.max("msg"),
             vprog=F.expr("greatest(state, coalesce(agg_msg, state))"),
             max_iter=max_iter,
-            frontier_only=True,
-        )
-        if not marks_res.converged:  # see forward coloring above
-            raise RuntimeError(
-                f"scc_frame: backward marking unconverged within "
-                f"max_iter={max_iter} supersteps — raise max_iter"
-            )
-        marks = marks_res.vertices
+            monotone="scc_frame: backward marking",
+        ).vertices
         members = (
             marks.where(F.col("state") == 1)
             .join(colors, "id")
-            .select("id", F.col("color").alias("root"))
-            .transform(cut)
+            .select("id", F.col("color").alias("new_root"))
         )
-        _absorb(members)
-        # the members cut consumed this round's coloring, marking and
-        # reversed-edge frames (pregel's final generations + our rev
-        # cut) — free them before the next peel (guide §5)
-        release_cut(rev)
-        _unpersist_ids(
-            remaining_v.sparkSession,
-            set(colors_res.block_ids) | set(marks_res.block_ids),
+        v = v.join(members, "id", "left").select(
+            "id", F.coalesce("root", "new_root").alias("root")
         )
-    if remaining_v.limit(1).count() != 0:
-        # loud failure beats silently dropping vertices: the oracle
-        # (and any consumer) expects a TOTAL partition of the graph
-        raise RuntimeError(
-            f"scc_frame: vertices unassigned after {_SCC_ROUNDS} peeling "
-            "rounds — raise _SCC_ROUNDS for this graph (deep SCC-chain "
-            "topology)"
-        )
+        return v, e
+
+    # one peel round resolves one layer of SCCs; a vertex left
+    # unassigned at the cap fails loudly — the oracle (and any
+    # consumer) expects a TOTAL partition of the graph
+    assigned = fixpoint(
+        peel,
+        (
+            verts.select(
+                "id", F.lit(None).cast(verts.schema["id"].dataType).alias("root")
+            ),
+            edges.select("src", "dst"),
+        ),
+        max_iter=_SCC_ROUNDS,
+        name="scc_frame: peel",
+        delta=F.sum(F.col("root").isNull().cast("long")),
+    )
     # relabel roots to min-member ids and attach sizes
     labels = assigned.groupBy("root").agg(F.min("id").alias("scc_id"))
     sized = (
@@ -950,8 +945,8 @@ def msbfs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS distance frame ``(seed, id, level)`` from the
     ``_ECC_SEEDS`` smallest-id vertices over the symmetric user graph.
 
-    One keyed BFS runs all seeds together: the frontier carries
-    (seed, vertex), so K seeds cost one traversal with K-wide state
+    One keyed :func:`bfs_frame` runs all seeds together: the frontier
+    carries (seed, vertex), so K seeds cost one traversal with K-wide state
     instead of K sequential passes — at 100 TB the per-superstep join
     dominates, and this amortizes it across all seeds. Memoized per
     (session, sf_dir): eccentricity/diameter and harmonic/closeness
@@ -966,27 +961,10 @@ def msbfs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         seeds = [
             r[0] for r in verts.orderBy("id").limit(_ECC_SEEDS).collect()
         ]
-        seed_df = spark.createDataFrame([(s,) for s in seeds], "seed bigint")
-        visited = (
-            seed_df.select("seed", F.col("seed").alias("id"))
-            .withColumn("level", F.lit(0))
-            .transform(cut)
+        seed_df = spark.createDataFrame(
+            [(s, s) for s in seeds], "seed bigint, id bigint"
         )
-        frontier = visited.select("seed", "id")
-        for lvl in range(1, _ECC_MAX_LEVEL + 1):
-            nxt = (
-                edges.join(frontier.withColumnRenamed("id", "a"), "a")
-                .select("seed", F.col("b").alias("id"))
-                .distinct()
-                .join(visited, ["seed", "id"], "left_anti")
-                .withColumn("level", F.lit(lvl))
-                .transform(cut)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).transform(cut)
-            frontier = nxt.select("seed", "id")
-        return visited
+        return bfs_frame(edges, seed_df, _ECC_MAX_LEVEL)
 
     return _memoized(spark, "msbfs", sf_dir, _build)
 
@@ -1139,7 +1117,7 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionings and hash-identical to the unrolled-SQL oracle.
     Per-superstep cost is one message join on the edge list (the same
     monotone-free recompute family as PageRank: every vertex sends
-    every round, so ``frontier_only`` does not apply)."""
+    every round, so pregel's monotone mode does not apply)."""
     verts = user_vertices(spark, sf_dir)
     edges = _memoized(
         spark,
@@ -1157,7 +1135,7 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST({_UNIT} + coalesce(agg_msg, 0) div 10 AS LONG)"
         ),
         max_iter=_KATZ_ITERS,
-        check_convergence=False,
+        monotone=None,
     )
     return res.vertices.select(
         F.col("id").alias("user_id"),
@@ -1216,10 +1194,10 @@ def link_predict_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bench's timed run pay a memo fetch while the true cost stays
     visible in tools/round6b_scale_check.py (which clears the frame
     cache). Round 12: this key scores the COUNT-ONLY wedge
-    (:func:`_lp_candidates_cn` — same pair set and cn values, no d_z
-    join, (x, y)-only wedge rows); a production job scoring both
-    predictors in one session should score the shared
-    :func:`_lp_candidates` frame instead (see both docstrings)."""
+    (:func:`_lp_candidates` with ``with_ra=False`` — same pair set and
+    cn values, no d_z join, (x, y)-only wedge rows); a production job
+    scoring both predictors in one session should score the
+    ``with_ra=True`` frame instead (see its docstring)."""
     return _memoized(
         spark, "link_predict_jaccard", sf_dir,
         lambda: _link_predict_jaccard_build(spark, sf_dir),
@@ -1243,13 +1221,27 @@ def _lp_edges_deg(spark: SparkSession, sf_dir: str):
     return ce, sym, deg
 
 
-def _lp_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lp_candidates(spark: SparkSession, sf_dir: str, with_ra: bool) -> DataFrame:
     """ONE shared wedge DEFINITION for BOTH link predictors (round-8
     VERDICT #5): the Σ deg² wedge join enumerates the same (x, y, z)
     wedges whether the scorer is Jaccard or Resource-Allocation, so
-    the candidate frame — non-adjacent pairs with common-neighbor
-    count AND the degree-weighted RA sum — has a single definition
-    both predictors score.
+    the candidate frame — non-adjacent pairs (x, y) with their
+    common-neighbor count ``cn`` and, with ``with_ra``, the
+    degree-weighted RA sum ``ra_e6`` — has a single definition both
+    predictors score.
+
+    ``with_ra=False`` is the COUNT-ONLY wedge the Jaccard key scores
+    (round-12, VERDICT r11 #5 — guide §2.3, shuffle/stream fewer
+    bytes): the same wedge enumeration and the same candidate pair
+    set, minus the d_z lookup join and the inv_z_e6 payload that only
+    the Resource-Allocation scorer reads. Its wedge rows are exactly
+    (x, y) — nothing wider ever rides the Σ deg² stream — and the d_z
+    join (|E| rows; a real shuffle join once dz outgrows the broadcast
+    threshold on a billion-vertex graph) is not in its plan at all.
+    Measured same-session at sf0.1: the wedge+groupBy stage 28.9 s →
+    22.7 s noop-sink (1.28×). A production job scoring BOTH predictors
+    in one session should share the ``with_ra=True`` frame instead
+    (the sharing note below applies verbatim).
 
     Deliberately LAZY (no checkpoint of its own): each predictor's
     FINAL result is already memoized, and the bench's cold protocol
@@ -1295,62 +1287,23 @@ def _lp_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     removable join."""
     ce, sym, deg = _lp_edges_deg(spark, sf_dir)
     s1 = sym.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    dz = deg.select(F.col("v").alias("z"), F.col("deg").alias("d_z"))
-    # INT, not BIGINT (guide §2.3 — narrower types through the hot
-    # stream): 1e6 div d_z <= 1e6 provably fits; every wedge row
-    # carries it, and sum(int) still aggregates to the BIGINT ra_e6
-    # the output declares.
-    s2 = (
-        sym.select(F.col("a").alias("y"), F.col("b").alias("z"))
-        .join(dz, "z")
-        .select(
+    s2 = sym.select(F.col("a").alias("y"), F.col("b").alias("z"))
+    aggs = [F.count(F.lit(1)).alias("cn")]
+    if with_ra:
+        dz = deg.select(F.col("v").alias("z"), F.col("deg").alias("d_z"))
+        # INT, not BIGINT (guide §2.3 — narrower types through the hot
+        # stream): 1e6 div d_z <= 1e6 provably fits; every wedge row
+        # carries it, and sum(int) still aggregates to the BIGINT ra_e6
+        # the output declares.
+        s2 = s2.join(dz, "z").select(
             "y", "z", F.expr("int(1000000 div d_z)").alias("inv_z_e6")
         )
-    )
+        aggs.append(F.sum("inv_z_e6").alias("ra_e6"))
     cn = (
         s1.join(s2, "z")
         .where(F.col("x") < F.col("y"))
         .groupBy("x", "y")
-        .agg(
-            F.count(F.lit(1)).alias("cn"),
-            F.sum("inv_z_e6").alias("ra_e6"),
-        )
-    )
-    return cn.join(
-        ce, (cn["x"] == ce["a"]) & (cn["y"] == ce["b"]), "left_anti"
-    )
-
-
-def _lp_candidates_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-only wedge for the JACCARD predictor (round-12, VERDICT
-    r11 #5 — guide §2.3, shuffle/stream fewer bytes): the same wedge
-    enumeration and the same candidate pair set as
-    :func:`_lp_candidates`, minus the d_z lookup join and the
-    inv_z_e6 payload that only the Resource-Allocation scorer reads.
-    The Jaccard key's wedge rows are exactly (x, y) — nothing wider
-    ever rides the Σ deg² stream — and the d_z join (|E| rows; a real
-    shuffle join once dz outgrows the broadcast threshold on a
-    billion-vertex graph) disappears from this key's plan entirely.
-    Measured same-session at sf0.1: the wedge+groupBy stage 28.9 s →
-    22.7 s noop-sink (1.28×); the pair set and every cn value are
-    identical by construction (same join, same filter, same groupBy —
-    only the unused payload column is gone).
-
-    ``_lp_candidates`` stays THE shared frame for a production job
-    scoring BOTH predictors in one session (wrap it in
-    ``memoized_checkpoint`` and feed both scorers — the round-9
-    sharing note there still applies verbatim); this specialization
-    exists because the bench's cold protocol isolates keys, so the
-    Jaccard key otherwise pays a d_z join and an 8-byte-per-wedge-row
-    payload for a column it provably never consumes."""
-    ce, sym, _ = _lp_edges_deg(spark, sf_dir)
-    s1 = sym.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    s2 = sym.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    cn = (
-        s1.join(s2, "z")
-        .where(F.col("x") < F.col("y"))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("cn"))
+        .agg(*aggs)
     )
     return cn.join(
         ce, (cn["x"] == ce["a"]) & (cn["y"] == ce["b"]), "left_anti"
@@ -1359,7 +1312,7 @@ def _lp_candidates_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _link_predict_jaccard_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, deg = _lp_edges_deg(spark, sf_dir)
-    cand = _lp_candidates_cn(spark, sf_dir)
+    cand = _lp_candidates(spark, sf_dir, with_ra=False)
     dx = deg.select(F.col("v").alias("x"), F.col("deg").alias("d_x"))
     dy = deg.select(F.col("v").alias("y"), F.col("deg").alias("d_y"))
     scored = (
@@ -1480,7 +1433,7 @@ def link_predict_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _link_predict_ra_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cand = _lp_candidates(spark, sf_dir)
+    cand = _lp_candidates(spark, sf_dir, with_ra=True)
     w = Window.partitionBy("x").orderBy(
         F.col("ra_e6").desc(), F.col("cn").desc(), "y"
     )
@@ -1572,9 +1525,9 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def cc_twophase_frame(verts: DataFrame, edges_sym: DataFrame,
-                      max_iter: int = 60,
-                      residual: list | None = None) -> DataFrame:
+def cc_twophase_frame(
+    verts: DataFrame, edges_sym: DataFrame, max_iter: int = 60
+) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce
     and Beyond", SoCC 2014) — the canonical shuffle-native CC whose
@@ -1591,30 +1544,22 @@ def cc_twophase_frame(verts: DataFrame, edges_sym: DataFrame,
     neighbor v > u at u's local min; small-star points the v ≤ u
     neighbors there. At the fixed point the edge set is a union of
     stars rooted at component minima, read off as the final labeling.
-    Convergence is detected by edge-set equality (two anti-joins), so
-    termination is exact, not probabilistic. Returns (id, component);
-    isolated vertices label themselves.
+    Convergence is detected by edge-set equality (one full outer join
+    of the new edge set with the old, folded into the generation as
+    ``changed`` flags), so termination is exact, not probabilistic.
+    Returns (id, component); isolated vertices label themselves.
 
-    Round-12 (guide §5, VERDICT r11 #4 — persisted-block footprint per
-    superstep): each round's superseded cut generations (the large-star
-    edge set once the small-star cut is materialized, the previous
-    round's edge set once the convergence check has read it) are
-    released immediately, so executor storage holds O(1) generations
-    instead of O(rounds) — the same discipline pregel.py already
-    applies. The FINAL edge set backs the returned lazy labeling and
-    cannot be released here; a caller that fully consumes the result
-    (e.g. into its own cut) may pass ``residual``, a list this
-    function appends that final frame to, and release it afterwards."""
-    e = cut(
-        edges_sym.where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .distinct()
-    )
-    for _ in range(max_iter):
-        sym = e.select("u", "v").unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    The generation is the edge set with a ``live`` flag (the previous
+    round's edges that died ride along one round, flagged, so the
+    change count needs no second pass); the large-star edge set is the
+    round's scratch cut."""
+
+    def contract(e: DataFrame, rnd) -> DataFrame:
+        if rnd.i == 1:
+            e = rnd.cut(e)
+        live = e.where(F.col("live")).select("u", "v")
+        sym = live.unionByName(
+            live.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
         mins = sym.groupBy("u").agg(
             F.least(F.min("v"), F.first("u")).alias("m")
@@ -1625,7 +1570,7 @@ def cc_twophase_frame(verts: DataFrame, edges_sym: DataFrame,
             .where(F.col("v") > F.col("u"))
             .select(F.col("m").alias("u"), F.col("v").alias("v"))
         )
-        e1 = cut(
+        e1 = rnd.cut(
             large.where(F.col("u") != F.col("v"))
             .select(
                 F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
@@ -1645,35 +1590,39 @@ def cc_twophase_frame(verts: DataFrame, edges_sym: DataFrame,
             .select(F.col("m").alias("u"), F.col("v"))
             .unionByName(mins1.select(F.col("m").alias("u"), F.col("u").alias("v")))
         )
-        e2 = cut(
+        e2 = (
             small.where(F.col("u") != F.col("v"))
             .select(
                 F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
             )
             .distinct()
         )
-        unchanged = (
-            e2.join(e, ["u", "v"], "left_anti").limit(1).count() == 0
-            and e.join(e2, ["u", "v"], "left_anti").limit(1).count() == 0
+        new, old = F.col("new").isNotNull(), F.col("old").isNotNull()
+        return (
+            e2.withColumn("new", F.lit(True))
+            .join(live.withColumn("old", F.lit(True)), ["u", "v"], "full_outer")
+            .select("u", "v", new.alias("live"), (new != old).cast("long").alias("changed"))
         )
-        # e1 died when e2 materialized; the old e died with the check
-        # above (nothing downstream reads either — e2 was cut FROM
-        # them, and a cut is a materialized copy)
-        release_cut(e1, e)
-        e = e2
-        if unchanged:
-            break
-    else:
-        # the star read-off below is only correct AT the fixed point;
-        # reading a mid-contraction edge set would return wrong labels
-        # that look like an answer (same discipline as truss/kcore/scc)
-        raise RuntimeError(
-            f"cc_twophase_frame: no fixpoint within {max_iter} rounds — "
-            "raise max_iter (O(log^2 n) bound exceeded?)"
+
+    init = (
+        edges_sym.where(F.col("a") != F.col("b"))
+        .select(
+            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
         )
+        .distinct()
+        .withColumn("live", F.lit(True))
+    )
+    # the star read-off below is only correct AT the fixed point; a
+    # mid-contraction edge set would return wrong labels that look like
+    # an answer (same discipline as truss/kcore/scc)
+    e = fixpoint(
+        contract,
+        init,
+        max_iter=max_iter,
+        name="cc_twophase_frame",
+        delta=F.sum("changed"),
+    ).where(F.col("live"))
     # fixed point: stars rooted at component minima
-    if residual is not None:
-        residual.append(e)
     root = (
         e.select(F.col("v").alias("id"), F.col("u").alias("component"))
         .groupBy("id")
@@ -1688,28 +1637,25 @@ def mst_boruvka_frame(edges: DataFrame) -> DataFrame:
     """Frame-level Borůvka kernel over canonical weighted edges
     (a, b, weight) — extracted from :func:`graph_mst_boruvka` (the
     mis_frame pattern) so scale rehearsals can drive it on synthetic
-    graphs. Returns (a, b, weight, round)."""
+    graphs. Returns (a, b, weight, round).
 
-    comp = (
-        edges.select(F.col("a").alias("v"))
-        .union(edges.select(F.col("b").alias("v")))
-        .distinct()
-        .select("v", F.col("v").alias("c"))
-    )
-    chosen: DataFrame | None = None
-    completed = False
-    for rnd in range(_MST_MAX_ROUNDS):
+    The generation is the component labeling (v, c) with a ``merged``
+    flag; the fixpoint is the round whose labeled edge set has no
+    cross-component edge, so nothing merges. Components at least
+    halve per pick round, so the cap covers 2^_MST_MAX_ROUNDS
+    vertices; leaving cross-component edges at the cap would return a
+    partial forest that LOOKS like a spanning forest (same silent-cap
+    class as cc_frame/kcore_frame — loud beats wrong)."""
+    picked: list[DataFrame] = []
+
+    def merge(comp: DataFrame, rnd) -> DataFrame:
         ca = comp.select(F.col("v").alias("a"), F.col("c").alias("ca"))
         cb = comp.select(F.col("v").alias("b"), F.col("c").alias("cb"))
-        xe = cut(
+        xe = rnd.cut(
             edges.join(ca, "a")
             .join(cb, "b")
             .where(F.col("ca") != F.col("cb"))
         )
-        if xe.limit(1).count() == 0:
-            release_cut(xe)
-            completed = True
-            break
         cand = xe.select(
             F.col("ca").alias("comp"), F.col("cb").alias("oc"),
             "a", "b", "weight",
@@ -1722,23 +1668,19 @@ def mst_boruvka_frame(edges: DataFrame) -> DataFrame:
         w = Window.partitionBy("comp").orderBy(
             F.col("weight").desc(), "a", "b"
         )
+        # sel must LIVE past the round (a plain cut, not scratch): the
+        # returned forest reads every round's picks lazily until the
+        # caller materializes it (sel is ≤ one edge per component)
         sel = cut(
             cand.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .drop("rn")
         )
-        # xe died when sel materialized (guide §5: the full labeled
-        # edge set is the round's big frame — don't hold O(rounds) of
-        # them). sel itself must LIVE: ``chosen`` below references
-        # every round's sel lazily until the caller materializes the
-        # returned forest (sel is ≤ one edge per component — tiny).
-        release_cut(xe)
-        picked = (
+        picked.append(
             sel.select("a", "b", "weight")
             .distinct()
-            .withColumn("round", F.lit(rnd + 1))
+            .withColumn("round", F.lit(rnd.i))
         )
-        chosen = picked if chosen is None else chosen.unionByName(picked)
         cverts = comp.select(F.col("c").alias("id")).distinct()
         cg_sym = sel.select(
             F.col("comp").alias("a"), F.col("oc").alias("b")
@@ -1750,36 +1692,28 @@ def mst_boruvka_frame(edges: DataFrame) -> DataFrame:
         # can be long CHAINS of merged super-vertices — O(diameter)
         # kernels pay a superstep per hop there, two-phase closes any
         # chain in O(log²) rounds
-        cc_residual: list = []
-        relabel = cc_twophase_frame(
-            cverts, cg_sym, residual=cc_residual
-        ).select(
+        relabel = cc_twophase_frame(cverts, cg_sym).select(
             F.col("id").alias("c"), F.col("component").alias("c_new")
         )
-        prev_comp = comp
-        comp = cut(
-            comp.join(relabel, "c").select("v", F.col("c_new").alias("c"))
+        return comp.join(relabel, "c").select(
+            "v",
+            F.col("c_new").alias("c"),
+            (F.col("c_new") != F.col("c")).cast("long").alias("merged"),
         )
-        # the new comp cut consumed both the previous comp generation
-        # and the contraction CC's final edge set — free them
-        release_cut(prev_comp, *cc_residual)
-    if not completed:
-        # components at least halve per pick round, so the cap covers
-        # 2^_MST_MAX_ROUNDS vertices; exiting the loop with cross-
-        # component edges still present would return a partial forest
-        # that LOOKS like a spanning forest (same silent-cap class as
-        # cc_frame/kcore_frame — loud beats wrong)
-        raise RuntimeError(
-            f"mst_boruvka_frame: cross-component edges remain after "
-            f"{_MST_MAX_ROUNDS} rounds — raise _MST_MAX_ROUNDS "
-            "(graph has more than 2^rounds vertices?)"
-        )
-    release_cut(comp)  # the final labeling only fed the empty xe check
-    if chosen is None:
-        return edges.select("a", "b", "weight").limit(0).withColumn(
-            "round", F.lit(0)
-        )
-    return chosen.select("a", "b", "weight", "round")
+
+    fixpoint(
+        merge,
+        edges.select(F.col("a").alias("v"))
+        .union(edges.select(F.col("b").alias("v")))
+        .distinct()
+        .select("v", F.col("v").alias("c")),
+        max_iter=_MST_MAX_ROUNDS,
+        name="mst_boruvka_frame",
+        delta=F.sum("merged"),
+    )
+    return reduce(DataFrame.unionByName, picked).select(
+        "a", "b", "weight", "round"
+    )
 
 
 # ------------------------------------------------- node2vec biased walks
@@ -2075,13 +2009,9 @@ def graph_greedy_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
         prio = lambda c: F.conv(
             F.substring(F.md5(c.cast("string")), 1, 8), 16, 10
         ).cast("long")
-        uncolored = (
-            sym.select(F.col("a").alias("v")).distinct()
-        )
-        colors: DataFrame | None = None
-        for _ in range(_JP_MAX_ROUNDS):
-            if uncolored.limit(1).count() == 0:
-                break
+
+        def color_round(colors: DataFrame, rnd) -> DataFrame:
+            uncolored = colors.where(F.col("color").isNull()).select("v")
             ua = uncolored.select(F.col("v").alias("a"))
             ub = uncolored.select(F.col("v").alias("b"))
             und = sym.join(ua, "a").join(ub, "b")
@@ -2096,54 +2026,40 @@ def graph_greedy_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.col("a").alias("v"))
                 .distinct()
             )
-            ready = uncolored.join(blocked, "v", "left_anti")
-            if colors is None:
-                used = ready.select(
-                    "v", F.lit(None).cast("long").alias("c")
-                ).where(F.lit(False))
-            else:
-                used = (
-                    sym.join(ready.select(F.col("v").alias("a")), "a")
-                    .join(
-                        colors.select(
-                            F.col("v").alias("b"), F.col("color").alias("c")
-                        ),
-                        "b",
-                    )
-                    .select(F.col("a").alias("v"), "c")
+            winners = rnd.cut(uncolored.join(blocked, "v", "left_anti"))
+            used = (
+                sym.join(winners.select(F.col("v").alias("a")), "a")
+                .join(
+                    colors.where(F.col("color").isNotNull()).select(
+                        F.col("v").alias("b"), F.col("color").alias("c")
+                    ),
+                    "b",
                 )
+                .select(F.col("a").alias("v"), "c")
+            )
             mex = F.aggregate(
                 F.sort_array(F.collect_set("c")),
                 F.lit(0).cast("long"),
                 lambda acc, c: F.when(c == acc, acc + 1).otherwise(acc),
             )
-            newly = cut(
-                ready.join(
-                    used.groupBy("v").agg(mex.alias("color")), "v", "left"
-                ).select(
-                    "v", F.coalesce("color", F.lit(0).cast("long")).alias("color")
-                )
+            newly = winners.join(
+                used.groupBy("v").agg(mex.alias("new")), "v", "left"
+            ).select("v", F.coalesce("new", F.lit(0).cast("long")).alias("new"))
+            return colors.join(newly, "v", "left").select(
+                "v", F.coalesce("color", "new").alias("color")
             )
-            prev_colors = colors
-            colors = newly if colors is None else cut(
-                colors.unionByName(newly)
-            )
-            prev_uncolored = uncolored
-            uncolored = cut(uncolored.join(newly, "v", "left_anti"))
-            # guide §5 (VERDICT r11 #4): the new colors/uncolored cuts
-            # consumed the previous generations and (for rounds > 1)
-            # this round's newly — free them; round 1's newly IS
-            # colors and must live
-            if prev_colors is not None:
-                release_cut(prev_colors)
-                release_cut(newly)
-            release_cut(prev_uncolored)
-        if uncolored.limit(1).count() != 0:
-            raise RuntimeError(
-                "graph_greedy_coloring did not converge within "
-                f"{_JP_MAX_ROUNDS} rounds — partial colorings are not "
-                "returned (see docstring: sparsify more or raise the cap)"
-            )
+
+        # partial colorings are never returned (see docstring: sparsify
+        # more or raise the cap)
+        colors = fixpoint(
+            color_round,
+            sym.select(F.col("a").alias("v"))
+            .distinct()
+            .withColumn("color", F.lit(None).cast("long")),
+            max_iter=_JP_MAX_ROUNDS,
+            name="graph_greedy_coloring",
+            delta=F.sum(F.col("color").isNull().cast("long")),
+        )
         return colors.select(F.col("v").alias("user_id"), "color")
 
     return _memoized(spark, "greedy_coloring", sf_dir, build)
@@ -2340,11 +2256,15 @@ def mis_frame(verts: DataFrame, sym: DataFrame, rounds: int) -> DataFrame:
     ``sym`` is a symmetric edge list (a, b). Raises if the active set
     survives the round horizon — partial (non-maximal) sets are never
     returned. Also the unit the 1M-vertex kernel rehearsal drives
-    (tools/round6_kernel_rehearsal.py)."""
-    active = verts
-    mis: DataFrame | None = None
-    for r in range(1, rounds + 1):
-        ha, hb = _mis_prio(F.col("a"), r), _mis_prio(F.col("b"), r)
+    (tools/round6_kernel_rehearsal.py).
+
+    The generation is every vertex with its status ``s``: NULL while
+    active, 1 once in the set, 0 once a neighbor joined it; each
+    round's winners are its scratch cut."""
+
+    def luby(st: DataFrame, rnd) -> DataFrame:
+        active = st.where(F.col("s").isNull()).select("v")
+        ha, hb = _mis_prio(F.col("a"), rnd.i), _mis_prio(F.col("b"), rnd.i)
         und = (
             sym.join(active.select(F.col("v").alias("a")), "a")
             .join(active.select(F.col("v").alias("b")), "b")
@@ -2354,43 +2274,26 @@ def mis_frame(verts: DataFrame, sym: DataFrame, rounds: int) -> DataFrame:
             .select(F.col("a").alias("v"))
             .distinct()
         )
-        winners = cut(active.join(blocked, "v", "left_anti"))
-        prev_mis = mis
-        mis = winners if mis is None else cut(mis.unionByName(winners))
+        winners = rnd.cut(active.join(blocked, "v", "left_anti"))
         nbrs = (
             sym.join(winners.select(F.col("v").alias("a")), "a")
             .select(F.col("b").alias("v"))
             .distinct()
         )
-        prev_active = active
-        active = cut(
-            active.join(
-                winners.unionByName(nbrs).distinct(), "v", "left_anti"
-            )
+        return (
+            st.join(winners.withColumn("won", F.lit(1)), "v", "left")
+            .join(nbrs.withColumn("near", F.lit(0)), "v", "left")
+            .select("v", F.coalesce("s", "won", "near").alias("s"))
         )
-        # guide §5 (VERDICT r11 #4): the new mis/active cuts consumed
-        # the previous generations and this round's winners — free
-        # them so executor storage stays O(1) generations. winners
-        # survives round 1, where it IS mis; prev_active in round 1 is
-        # the caller's verts frame (not our cut — release is a no-op
-        # unless it happens to be cut-backed, in which case the caller
-        # pattern [mis over a one-shot symmetric frame] never re-reads
-        # it either).
-        if prev_mis is not None:
-            release_cut(prev_mis)
-        if mis is not winners:
-            release_cut(winners)
-        if prev_active is not verts:
-            release_cut(prev_active)
-        if active.limit(1).count() == 0:
-            break
-    if active.limit(1).count() != 0:
-        raise RuntimeError(
-            f"Luby MIS did not converge within {rounds} rounds — "
-            "partial (non-maximal) sets are not returned"
-        )
-    release_cut(active)  # empty by the check above; mis is the result
-    return mis
+
+    st = fixpoint(
+        luby,
+        verts.select("v", F.lit(None).cast("int").alias("s")),
+        max_iter=rounds,
+        name="mis_frame",
+        delta=F.sum(F.col("s").isNull().cast("long")),
+    )
+    return st.where(F.col("s") == 1).select("v")
 
 
 def _sql_mis_prio(col: str, r: int) -> str:
@@ -2720,17 +2623,19 @@ def anf_frame(verts: DataFrame, edges_sym: DataFrame) -> DataFrame:
             "shiftleft(1L, least(bit_count((h & -h) - 1), 40))"
         ).alias("mask"),
     )
-    for _ in range(_ANF_K):
+
+    def hop(masks: DataFrame, rnd) -> DataFrame:
         nbr = (
             edges.join(masks.withColumnRenamed("v", "a"), "a")
             .select(F.col("b").alias("v"), "m", "mask")
         )
-        masks = (
+        return (
             masks.unionByName(nbr)
             .groupBy("v", "m")
             .agg(F.expr("bit_or(mask)").alias("mask"))
-            .transform(cut)
         )
+
+    masks = fixpoint(hop, masks, max_iter=_ANF_K, name="anf_frame")
     r = F.expr("bit_count(((~mask) & (mask + 1)) - 1)")
     per_v = masks.select("v", r.alias("r")).groupBy("v").agg(
         F.sum("r").cast("long").alias("r_sum")

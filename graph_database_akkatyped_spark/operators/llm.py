@@ -23,10 +23,10 @@ from graph_database_akkatyped_spark.caching import (
     cut,
     layout_dir,
     memoized_checkpoint,
-    release_cut,
 )
 from graph_database_akkatyped_spark.catalog import load_table
 from graph_database_akkatyped_spark.numerics import davg, sql_davg
+from graph_database_akkatyped_spark.operators.pregel import fixpoint
 
 # --------------------------------------------------------------- helpers
 
@@ -1831,12 +1831,9 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     slim = cand.select("q_id", "vec_id", "cos")
     w1 = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    selected = (
-        slim.withColumn("rn", F.row_number().over(w1))
-        .where(F.col("rn") == 1)
-        .select("q_id", "vec_id", "cos", F.lit(1).cast("int").alias("rnk"))
-    )
-    for r in range(2, _MMR_K + 1):
+
+    def rerank(selected: DataFrame, rnd) -> DataFrame:
+        r = rnd.i + 1
         rem = slim.join(selected.select("q_id", "vec_id"), ["q_id", "vec_id"], "left_anti")
         maxsim = (
             rem.join(
@@ -1857,12 +1854,17 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("rn") == 1)
             .select("q_id", "vec_id", "cos", F.lit(r).cast("int").alias("rnk"))
         )
-        prev = selected
-        selected = cut(selected.unionByName(pick))
-        # guide §5 (VERDICT r11 #4): the new cut consumed the previous
-        # selected generation (r=2's prev is the lazy top-1 window
-        # frame — no blocks, no-op)
-        release_cut(prev)
+        return selected.unionByName(pick)
+
+    # one generation per pick: the top-1 seed, then ranks 2.._MMR_K
+    selected = fixpoint(
+        rerank,
+        slim.withColumn("rn", F.row_number().over(w1))
+        .where(F.col("rn") == 1)
+        .select("q_id", "vec_id", "cos", F.lit(1).cast("int").alias("rnk")),
+        max_iter=_MMR_K - 1,
+        name="simsearch_mmr",
+    )
     return selected.select("q_id", "vec_id", "cos", "rnk")
 
 

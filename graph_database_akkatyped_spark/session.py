@@ -37,7 +37,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # reliable checkpoints (caching.cut(reliable=True)) are cleaned
+        # reliable checkpoints (caching.set_reliable_checkpointing) are cleaned
         # by the ContextCleaner when the JVM-side RDD becomes
         # unreachable — without this, superseded Pregel-superstep
         # checkpoints accumulate on the checkpoint FS forever (disk

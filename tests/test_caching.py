@@ -53,7 +53,8 @@ def test_reliable_checkpoint_same_result(spark):
 
 
 def test_pregel_reliable_kwarg(spark):
-    """Per-call reliable=True on the kernel itself (no global flag)."""
+    """The session-wide cut mode reaches the kernel itself: a Pregel
+    run under reliable checkpoints == the same run under local ones."""
     from graph_database_akkatyped_spark.operators.pregel import pregel
 
     edges = spark.createDataFrame(
@@ -65,17 +66,20 @@ def test_pregel_reliable_kwarg(spark):
     )
 
     def run(reliable):
-        res = pregel(
-            verts,
-            edges,
-            msg=F.col("src_state") + F.col("weight"),
-            agg=F.min("msg"),
-            vprog=F.least(F.col("state"), F.col("agg_msg")),
-            max_iter=5,
-            reliable=reliable,
-        )
-        assert res.converged
-        return _rows(res.vertices)
+        set_reliable_checkpointing(reliable, spark)
+        try:
+            res = pregel(
+                verts,
+                edges,
+                msg=F.col("src_state") + F.col("weight"),
+                agg=F.min("msg"),
+                vprog=F.least(F.col("state"), F.col("agg_msg")),
+                max_iter=5,
+            )
+            assert res.converged
+            return _rows(res.vertices)
+        finally:
+            set_reliable_checkpointing(False)
 
     assert run(True) == run(False) == [(0, 0), (1, 1), (2, 2)]
 

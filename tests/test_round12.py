@@ -17,12 +17,34 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from graph_database_akkatyped_spark.caching import persistent_rdd_ids
+from graph_database_akkatyped_spark.caching import (
+    clear_frame_cache,
+    persistent_rdd_ids,
+)
+from graph_database_akkatyped_spark.operators.algos import (
+    _canonical_edges,
+    _uedges_memo,
+    bfs_frame,
+    cc_frame,
+    kcore_frame,
+    label_propagation,
+    truss_frame,
+)
+from graph_database_akkatyped_spark.operators.centrality import (
+    louvain_multi_frame,
+)
 from graph_database_akkatyped_spark.operators.graph_extras import (
+    anf_frame,
     cc_twophase_frame,
     mis_frame,
+    msbfs_frame,
     mst_boruvka_frame,
+    scc_frame,
+    topo_longest_path,
 )
+from tests.conftest import SF_ORACLE
+
+SF = SF_ORACLE  # 150 users
 
 
 def _chain_edges(spark, n):
@@ -33,20 +55,16 @@ def _chain_edges(spark, n):
     )
 
 
-def test_mis_frame_releases_generations(spark):
-    sym_src = _chain_edges(spark, 200)
-    sym = sym_src.unionByName(
-        sym_src.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    verts = spark.range(201).select(F.col("id").alias("v"))
-    before = persistent_rdd_ids(spark)
-    mis = mis_frame(verts, sym, rounds=40)
-    rows = mis.collect()  # must be readable AFTER the releases
-    leaked = persistent_rdd_ids(spark) - before
-    # Luby on a 200-chain runs several rounds; the old code persisted
-    # winners+mis+active per round (3/round). Now only the final mis
-    # (and at most a trailing generation) may remain.
-    assert len(leaked) <= 3, f"leaked {len(leaked)} cut generations"
+def _sym(df):
+    return df.unionByName(df.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
+def _verts(spark, n, col="id"):
+    return spark.range(n).select(F.col("id").alias(col))
+
+
+def _case_mis(spark):
+    rows = mis_frame(_verts(spark, 201, "v"), _sym(_chain_edges(spark, 200)), 40).collect()
     # independence + maximality: no two adjacent picks, no addable vertex
     picked = {r.v for r in rows}
     for v in picked:
@@ -56,42 +74,119 @@ def test_mis_frame_releases_generations(spark):
             assert (v - 1 in picked) or (v + 1 in picked)
 
 
-def test_cc_twophase_releases_generations(spark):
-    edges = _chain_edges(spark, 150)
-    sym = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    verts = spark.range(151).select(F.col("id").alias("id"))
-    before = persistent_rdd_ids(spark)
-    residual: list = []
-    cc = cc_twophase_frame(verts, sym, residual=residual)
-    rows = cc.collect()
-    assert {r.component for r in rows} == {0}  # one chain, one component
-    assert len(rows) == 151
-    leaked = persistent_rdd_ids(spark) - before
-    # per round the kernel cuts e1+e2 (2/round, O(log² n) rounds); only
-    # the final fixed-point edge set may remain — and the caller can
-    # free even that through ``residual`` once it has consumed the
-    # labeling (collect() above did).
-    assert len(leaked) <= 2, f"leaked {len(leaked)} cut generations"
-    assert len(residual) == 1
+def _case_cc_twophase(spark):
+    rows = cc_twophase_frame(_verts(spark, 151), _sym(_chain_edges(spark, 150))).collect()
+    assert len(rows) == 151 and {r.component for r in rows} == {0}
 
 
-def test_mst_boruvka_releases_generations(spark):
+def _case_cc_frame(spark):
+    rows = cc_frame(_verts(spark, 11), _sym(_chain_edges(spark, 10))).collect()
+    assert len(rows) == 11 and {r.component for r in rows} == {0}
+
+
+def _case_mst_boruvka(spark):
     # weighted path: unique max spanning forest = all edges
     edges = _chain_edges(spark, 100).select(
         "a", "b", (F.col("a") % 7 + 1).cast("long").alias("weight")
     )
+    assert len(mst_boruvka_frame(edges).collect()) == 100
+
+
+def _case_bfs(spark):
+    seed = spark.createDataFrame([(0,)], "id long")
+    rows = bfs_frame(_sym(_chain_edges(spark, 12)), seed, 200).collect()
+    assert {(r.id, r.level) for r in rows} == {(i, i) for i in range(13)}
+
+
+def _case_msbfs(spark):
+    clear_frame_cache(SF)  # rebuild the memoized traversal
+    rows = msbfs_frame(spark, SF).collect()
+    assert rows and min(r.level for r in rows) == 0
+
+
+def _case_label_propagation(spark):
+    assert label_propagation(spark, SF).count() > 0
+
+
+def _case_topo(spark):
+    assert topo_longest_path(spark, SF).count() > 0
+
+
+def _case_anf(spark):
+    rows = anf_frame(_verts(spark, 31), _sym(_chain_edges(spark, 30))).collect()
+    assert len(rows) == 31
+
+
+def _case_kcore(spark):
+    # 60-cycle with a 5-vertex pendant chain: peeling the chain takes
+    # one round per vertex, the cycle is the 2-core
+    cyc = [(i, (i + 1) % 60) for i in range(60)]
+    tail = [(0, 60)] + [(i, i + 1) for i in range(60, 64)]
+    edges = _sym(spark.createDataFrame(cyc + tail, "a long, b long"))
+    rows = kcore_frame(edges, k=2).collect()
+    assert {r.id for r in rows} == set(range(60))
+
+
+def _case_truss(spark):
+    # a 4-clique survives; a strip of triangles cascades away over
+    # several rounds
+    clique = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    strip = [(i, i + 1) for i in range(10, 40)] + [(i, i + 2) for i in range(10, 39)]
+    edges = spark.createDataFrame(clique + strip, "a long, b long")
+    assert {(r.a, r.b) for r in truss_frame(edges).collect()} == set(clique)
+
+
+def _case_scc(spark):
+    # directed 8-cycle plus a 5-vertex tail into it (the tail trims)
+    cyc = [(i, (i + 1) % 8) for i in range(8)]
+    tail = [(i, i - 1) for i in range(9, 13)] + [(8, 0)]
+    edges = spark.createDataFrame(cyc + tail, "src long, dst long")
+    rows = scc_frame(_verts(spark, 13), edges).collect()
+    assert {r.id for r in rows if r.scc_size == 8} == set(range(8))
+    assert sum(1 for r in rows if r.scc_size == 1) == 5
+
+
+def _case_louvain(spark):
+    edges = _sym(_chain_edges(spark, 40)).select("a", "b", F.lit(1).cast("long").alias("w"))
+    assert len(louvain_multi_frame(_verts(spark, 41, "v"), edges).collect()) == 41
+
+
+# (case, max persisted-RDD growth): the final generation(s), plus the
+# cuts a result still reads that are not generations — Borůvka's
+# per-round forest picks (~7 rounds on a 101-vertex chain), the msbfs
+# memo entry and the edge memo it rebuilds, Louvain's four
+# sweep-invariant degree/weight cuts
+_DRIVER_KERNELS = {
+    "mis_frame": (_case_mis, 1),
+    "cc_twophase_frame": (_case_cc_twophase, 1),
+    "cc_frame": (_case_cc_frame, 1),
+    "mst_boruvka_frame": (_case_mst_boruvka, 10),
+    "bfs_frame": (_case_bfs, 1),
+    "msbfs_frame": (_case_msbfs, 3),
+    "label_propagation": (_case_label_propagation, 1),
+    "topo_longest_path": (_case_topo, 1),
+    "anf_frame": (_case_anf, 1),
+    "kcore_frame": (_case_kcore, 1),
+    "truss_frame": (_case_truss, 1),
+    "scc_frame": (_case_scc, 1),
+    "louvain_multi_frame": (_case_louvain, 6),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_DRIVER_KERNELS))
+def test_driver_kernels_release_generations(spark, kernel):
+    """Every kernel on the fixpoint driver leaves at most its final
+    generation(s) persisted, and its result stays readable after the
+    driver freed everything else (the case collects it AFTER the
+    releases)."""
+    case, live = _DRIVER_KERNELS[kernel]
+    # session memos the fixture-backed kernels read are not theirs
+    _uedges_memo(spark, SF)
+    _canonical_edges(spark, SF)
     before = persistent_rdd_ids(spark)
-    forest = mst_boruvka_frame(edges)
-    rows = forest.collect()
-    assert len(rows) == 100  # spanning tree of a 101-vertex path
+    case(spark)
     leaked = persistent_rdd_ids(spark) - before
-    # per round the old code persisted xe+sel+comp plus the inner CC's
-    # e/e1/e2 per CC round. Now only the per-round sel picks (tiny,
-    # referenced by the returned forest until materialized) survive —
-    # Borůvka on a chain halves components per round: ~7 rounds.
-    assert len(leaked) <= 10, f"leaked {len(leaked)} cut generations"
+    assert len(leaked) <= live, f"{kernel} leaked {len(leaked)} cut generations"
 
 
 def test_jaccard_pair_frames_thread_sizes(spark):
@@ -158,6 +253,14 @@ def test_contain_verify_threads_sizes(spark):
     assert r13.contain_b_in_a == pytest.approx(1.0)
 
 
+def _join_nodes(plan) -> int:
+    """Join operators in a Catalyst plan tree, counted node by node."""
+    kids = plan.children()
+    return int(plan.nodeName() == "Join") + sum(
+        _join_nodes(kids.apply(i)) for i in range(kids.size())
+    )
+
+
 def test_lp_count_only_wedge_matches_shared_frame(spark):
     """Round-12 link-predict split (guide §2.3, VERDICT r11 #5): the
     Jaccard key scores a count-only wedge (no d_z join, (x, y)-only
@@ -167,24 +270,25 @@ def test_lp_count_only_wedge_matches_shared_frame(spark):
     must never change what gets counted."""
     from graph_database_akkatyped_spark.operators.graph_extras import (
         _lp_candidates,
-        _lp_candidates_cn,
     )
 
     sf = "/root/testdata/sf0.001"
     full = {
         (r.x, r.y): r.cn
-        for r in _lp_candidates(spark, sf).select("x", "y", "cn").collect()
+        for r in _lp_candidates(spark, sf, with_ra=True)
+        .select("x", "y", "cn")
+        .collect()
     }
     cn_only = {
-        (r.x, r.y): r.cn for r in _lp_candidates_cn(spark, sf).collect()
+        (r.x, r.y): r.cn
+        for r in _lp_candidates(spark, sf, with_ra=False).collect()
     }
     assert cn_only == full
     # and the count-only plan really has no d_z lookup: one wedge
     # equi-join plus the ce anti-join, nothing else
     plan = (
-        _lp_candidates_cn(spark, sf)
+        _lp_candidates(spark, sf, with_ra=False)
         ._jdf.queryExecution()
         .optimizedPlan()
-        .toString()
     )
-    assert plan.count("Join") == 2, plan
+    assert _join_nodes(plan) == 2, plan.toString()

@@ -83,7 +83,7 @@ def main() -> None:
         agg=F.sum("msg"),
         vprog=F.expr(f"CAST({_UNIT} + coalesce(agg_msg, 0) div 10 AS LONG)"),
         max_iter=_KATZ_ITERS,
-        check_convergence=False,
+        monotone=None,
     ).vertices
     kmax = katz.agg(F.max("state")).first()[0]
     print(
