@@ -5,10 +5,15 @@ vertex actor persists events to a journal (event sourcing) and answers
 GetNode / Traverse asks from replayed state. The Spark-native analog is
 the lakehouse event-log pattern:
 
-- **mutations append** parquet event batches to a journal directory
-  (append-only, partition-friendly — exactly how a 100 TB ingest works);
+- **mutations append** one parquet file per command to a journal
+  directory (append-only, partition-friendly). A command holds a few
+  rows, so the driver writes the file itself with pyarrow — no Spark
+  job — under a dot-prefixed temp name, then renames it into place:
+  readers see the whole file or nothing;
 - **state is a replay**: latest event per key wins (window by batch
-  seq), tombstones drop deleted entities;
+  id; ids are taken under the write lock and rise strictly within a
+  writer, and duplicate keys inside one command collapse to their last
+  row before the write), tombstones drop deleted entities;
 - **compaction** folds the journal into a snapshot so replay cost stays
   O(live data), the Spark analog of Akka Persistence snapshots.
 
@@ -26,12 +31,18 @@ Example::
 
 from __future__ import annotations
 
+import functools
 import os
 import time
+import uuid
 from collections.abc import Iterable
 from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from graph_database_akkatyped_spark.operators.algos import (
     bfs_frame,
@@ -41,6 +52,14 @@ from graph_database_akkatyped_spark.operators.algos import (
 
 _V_SCHEMA = "id string, kind string, name string, op string, batch long"
 _E_SCHEMA = "src string, dst string, rel string, weight double, op string, batch long"
+_V_KEY = ["id"]
+_E_KEY = ["src", "dst", "rel"]
+
+
+@functools.cache
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow twin of a journal's DDL schema (one definition each)."""
+    return to_arrow_schema(StructType.fromDDL(ddl))
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -53,15 +72,27 @@ class GraphDB:
 
     In the reference pattern, each vertex actor's mailbox serializes its
     mutations; the journal analog here serializes at the whole-DB level:
-    ``batch`` ids (time_ns at append time) order events, and replay
-    takes the latest batch per key, which is only correct if batches
-    never interleave. Every mutation (add/remove/compact) therefore
-    takes an exclusive lock file (O_CREAT|O_EXCL — atomic on POSIX and
-    on object-store FUSE mounts that honor exclusive create) for the
-    duration of the append; a concurrent mutation raises
-    :class:`ConcurrentWriterError` instead of silently corrupting batch
-    order. Readers never lock: parquet appends are atomic at file
-    granularity, so a read sees a consistent prefix of the journal.
+    ``batch`` ids order events, and replay takes the latest batch per
+    key, which is only correct if batches never interleave. Every
+    mutation (add/remove/compact) therefore takes an exclusive lock file
+    (O_CREAT|O_EXCL — atomic on POSIX and on object-store FUSE mounts
+    that honor exclusive create) for the duration of the append; a
+    concurrent mutation raises :class:`ConcurrentWriterError` instead of
+    silently corrupting batch order. The batch id is taken under that
+    lock, from the wall clock but strictly above the previous id this
+    instance issued, so it rises even if the clock stalls or steps
+    back; a wall-clock step back between two writer PROCESSES (or
+    between a writer and a later reopen) is not guarded against. Inside
+    one command, duplicate keys (``id``; ``(src, dst, rel)``) collapse
+    to their last row, so replay never has to break a tie.
+
+    Each command writes exactly one parquet file per journal it touches
+    (an empty command writes none): the driver writes it with pyarrow
+    to a dot-prefixed temp name in the journal directory and renames it
+    to ``part-….parquet`` while still holding the lock. Spark's file
+    listing and the journal stream skip dot-prefixed names, so readers
+    never lock: a read sees a consistent prefix of the journal, and a
+    temp file left by a crashed writer is never read.
     ``compact()`` additionally requires that NO reader holds a plan over
     the journal while it swaps directories — schedule it off-path, as
     its docstring says. If a writer dies holding the lock, remove the
@@ -75,6 +106,7 @@ class GraphDB:
         self._lock_path = os.path.join(path, "journal", ".write_lock")
         os.makedirs(self._vdir, exist_ok=True)
         os.makedirs(self._edir, exist_ok=True)
+        self._batch = 0  # last batch id issued; see _next_batch
 
     # ------------------------------------------------------------ commands
 
@@ -101,19 +133,40 @@ class GraphDB:
         if os.path.exists(self._lock_path):
             os.unlink(self._lock_path)
 
-    def _append_unlocked(self, rows: list, schema: str, dest: str) -> None:
-        df = self.spark.createDataFrame(rows, schema)
-        df.write.mode("append").parquet(dest)
+    def _next_batch(self) -> int:
+        """A batch id strictly above the last one this writer issued.
+        Call with the write lock held."""
+        self._batch = max(time.time_ns(), self._batch + 1)
+        return self._batch
 
-    def _append(self, rows: list, schema: str, dest: str) -> None:
+    def _append_unlocked(
+        self, rows: list[tuple], batch: int, schema: str, keys: list[str], dest: str
+    ) -> None:
+        """Write one command's rows (all columns but ``batch``) as one
+        parquet file; the last row per key wins."""
+        last = {r[: len(keys)]: r for r in rows}
+        if not last:
+            return
+        arrow = _arrow_schema(schema)
+        cols = zip(*[(*r, batch) for r in last.values()])
+        table = pa.table(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+        name = f"part-{batch:020d}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(dest, "." + name)
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(dest, name))
+
+    def _append(
+        self, rows: list[tuple], schema: str, keys: list[str], dest: str
+    ) -> None:
         with self._write_lock():
-            self._append_unlocked(rows, schema, dest)
+            self._append_unlocked(rows, self._next_batch(), schema, keys, dest)
 
     def add_vertices(self, rows: Iterable[tuple]) -> None:
         """rows: (id, kind, name). Reference: AddNode command."""
-        batch = time.time_ns()
         self._append(
-            [(i, k, n, "upsert", batch) for i, k, n in rows], _V_SCHEMA, self._vdir
+            [(i, k, n, "upsert") for i, k, n in rows], _V_SCHEMA, _V_KEY, self._vdir
         )
 
     def remove_vertex(self, vid: str) -> None:
@@ -125,43 +178,44 @@ class GraphDB:
         later re-add of the same id would silently resurrect old edges —
         unless compact() had run in between, which would drop them
         permanently. Appending explicit edge deletes makes replay
-        compaction-invariant. The incident-edge fetch is a point lookup
-        on one vertex id (OLTP-sized), not a scan."""
+        compaction-invariant. Incident edges come from the raw edge
+        replay, not :meth:`edges`: an edge whose other endpoint is not
+        (yet) live is still incident and would otherwise come back once
+        both endpoints exist. The lookup is a point filter on one vertex
+        id (OLTP-sized), not a scan."""
         with self._write_lock():  # one lock spans both appends: the
             # edge-tombstone + vertex-tombstone pair must not interleave
             # with another writer's re-add of the same id
             incident = (
-                self.edges()
+                self._edge_replay(None)
                 .where((F.col("src") == vid) | (F.col("dst") == vid))
                 .select("src", "dst", "rel")
                 .collect()
             )
-            batch = time.time_ns()
-            if incident:
-                self._append_unlocked(
-                    [
-                        (r.src, r.dst, r.rel, None, "delete", batch)
-                        for r in incident
-                    ],
-                    _E_SCHEMA,
-                    self._edir,
-                )
+            batch = self._next_batch()
             self._append_unlocked(
-                [(vid, None, None, "delete", batch)], _V_SCHEMA, self._vdir
+                [(r.src, r.dst, r.rel, None, "delete") for r in incident],
+                batch,
+                _E_SCHEMA,
+                _E_KEY,
+                self._edir,
+            )
+            self._append_unlocked(
+                [(vid, None, None, "delete")], batch, _V_SCHEMA, _V_KEY, self._vdir
             )
 
     def add_edges(self, rows: Iterable[tuple]) -> None:
         """rows: (src, dst, rel, weight). Reference: AddEdge command."""
-        batch = time.time_ns()
         self._append(
-            [(s, d, r, float(w), "upsert", batch) for s, d, r, w in rows],
+            [(s, d, r, float(w), "upsert") for s, d, r, w in rows],
             _E_SCHEMA,
+            _E_KEY,
             self._edir,
         )
 
     def remove_edge(self, src: str, dst: str, rel: str) -> None:
         self._append(
-            [(src, dst, rel, None, "delete", time.time_ns())], _E_SCHEMA, self._edir
+            [(src, dst, rel, None, "delete")], _E_SCHEMA, _E_KEY, self._edir
         )
 
     # -------------------------------------------------------------- replay
@@ -176,7 +230,11 @@ class GraphDB:
         )
 
     def _read_journal(self, dest: str, schema: str) -> DataFrame:
-        if any(f.endswith(".parquet") for f in os.listdir(dest)):
+        # Spark skips "." / "_" names (in-flight temp files, markers)
+        if any(
+            f.endswith(".parquet") and not f.startswith((".", "_"))
+            for f in os.listdir(dest)
+        ):
             return self.spark.read.schema(schema).parquet(dest)
         return self.spark.createDataFrame([], schema)
 
@@ -195,7 +253,7 @@ class GraphDB:
         compaction are gone (same contract as Akka snapshot deletion)."""
         return self._latest(
             self._as_of(self._read_journal(self._vdir, _V_SCHEMA), as_of_batch),
-            ["id"],
+            _V_KEY,
         )
 
     def edges(self, as_of_batch: int | None = None) -> DataFrame:
@@ -203,13 +261,22 @@ class GraphDB:
         must be live vertices — in the reference, adjacency is
         vertex-actor state and dies with the vertex, so a tombstoned
         vertex implicitly drops its edges."""
-        e = self._latest(
+        return self._live_edges(self.vertices(as_of_batch), as_of_batch)
+
+    def _edge_replay(self, as_of_batch: int | None) -> DataFrame:
+        """Latest event per edge key, endpoints not checked."""
+        return self._latest(
             self._as_of(self._read_journal(self._edir, _E_SCHEMA), as_of_batch),
-            ["src", "dst", "rel"],
+            _E_KEY,
         )
-        live = self.vertices(as_of_batch).select("id")
+
+    def _live_edges(self, live: DataFrame, as_of_batch: int | None) -> DataFrame:
+        """Edge replay restricted to endpoints in ``live`` (the vertex
+        replay at the same as-of point, built once by the caller)."""
+        live = live.select("id")
         return (
-            e.join(live.withColumnRenamed("id", "src"), "src", "left_semi")
+            self._edge_replay(as_of_batch)
+            .join(live.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(live.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .select("src", "dst", "rel", "weight")
         )
@@ -246,7 +313,7 @@ class GraphDB:
         swap would be silently dropped.
         """
         with self._write_lock():
-            batch = time.time_ns()
+            batch = self._next_batch()
             v = self.vertices().withColumn("op", F.lit("upsert")).withColumn(
                 "batch", F.lit(batch)
             )
@@ -275,8 +342,8 @@ class GraphDB:
 
     def neighbors(self, vid: str) -> DataFrame:
         """Out-neighbors with edge attributes (adjacency read)."""
-        e = self.edges().where(F.col("src") == vid)
         v = self.vertices()
+        e = self._live_edges(v, None).where(F.col("src") == vid)
         return e.join(v, e.dst == v.id).select("src", "dst", "rel", "weight", "kind", "name")
 
     def degrees(self) -> DataFrame:

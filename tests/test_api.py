@@ -3,7 +3,8 @@
 
 from __future__ import annotations
 
-import tempfile
+import os
+import time
 
 import pytest
 
@@ -11,8 +12,8 @@ from graph_database_akkatyped_spark.api import GraphDB
 
 
 @pytest.fixture()
-def db(spark):
-    return GraphDB(spark, tempfile.mkdtemp(prefix="graphdb_"))
+def db(spark, tmp_path):
+    return GraphDB(spark, str(tmp_path / "graphdb"))
 
 
 def test_crud_roundtrip(db):
@@ -188,3 +189,122 @@ def test_round4b_analytics_facade(db):
     db.remove_edge("b", "a", "r")
     rec2 = db.reciprocity().collect()[0]
     assert rec2["m_edges"] == 3 and rec2["m_reciprocal"] == 0
+
+
+def test_intra_command_last_row_wins(db):
+    """Duplicate keys inside one command collapse to their last row, so
+    replay never breaks a tie inside one batch arbitrarily."""
+    db.add_vertices([("v", "k", f"v{i}") for i in range(50)])
+    assert db.get_vertex("v").collect()[0]["name"] == "v49"
+    db.add_vertices([("w", "k", "w")])
+    db.add_edges([("v", "w", "r", float(i)) for i in range(30)])
+    assert [tuple(r) for r in db.edges().collect()] == [("v", "w", "r", 29.0)]
+
+
+def test_batch_ids_monotone_under_coarse_clock(db, monkeypatch):
+    """Batch ids are strictly increasing within one writer even when the
+    wall clock does not advance between two commands."""
+    monkeypatch.setattr(time, "time_ns", lambda: 1_000)
+    db.add_vertices([("v", "k", "old")])
+    db.add_vertices([("v", "k", "new")])
+    db.remove_edge("v", "v", "r")
+    batches = [r["batch"] for r in db.batches().collect()]
+    assert len(batches) == 3 and batches == sorted(set(batches))
+    assert db.get_vertex("v").collect()[0]["name"] == "new"
+
+
+def test_remove_vertex_tombstones_edges_to_absent_endpoints(db):
+    """An edge whose other endpoint did not exist yet is still incident:
+    remove_vertex must tombstone it, or re-adding both endpoints would
+    bring it back."""
+    db.add_vertices([("a", "k", "x")])
+    db.add_edges([("a", "z", "r", 1.0)])  # z does not exist yet
+    db.remove_vertex("a")
+    db.add_vertices([("z", "k", "z"), ("a", "k", "x2")])
+    assert db.edges().collect() == []
+
+
+def _parts(d: str) -> list[str]:
+    return sorted(n for n in os.listdir(d) if n.endswith(".parquet") and n[0] not in "._")
+
+
+def test_each_command_appends_one_file(db):
+    def counts():
+        return len(_parts(db._vdir)), len(_parts(db._edir))
+
+    db.add_vertices([("a", "k", "x"), ("b", "k", "y"), ("c", "k", "z")])
+    assert counts() == (1, 0)
+    db.add_edges([("a", "b", "r", 1.0), ("b", "a", "r", 2.0), ("a", "c", "r", 3.0)])
+    assert counts() == (1, 1)
+    db.remove_edge("a", "c", "r")
+    assert counts() == (1, 2)
+    db.remove_vertex("b")  # two incident edges: one file per journal
+    assert counts() == (2, 3)
+    db.remove_vertex("c")  # no live incident edge left: vertex journal only
+    assert counts() == (3, 3)
+
+
+def test_empty_command_writes_no_file(db):
+    db.add_vertices([])
+    db.add_edges([])
+    assert os.listdir(db._vdir) == [] and os.listdir(db._edir) == []
+    assert db.batches().count() == 0
+
+
+def _crash_before_rename(db, monkeypatch, command, *args):
+    """Run one command that dies between writing its temp file and
+    renaming it into place, as a crashed writer would."""
+
+    def boom(*_a, **_k):
+        raise OSError("crash before rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", boom)
+        with pytest.raises(OSError, match="crash before rename"):
+            command(*args)
+
+
+def test_leftover_temp_file_is_invisible(db, monkeypatch, tmp_path):
+    # a journal holding ONLY a crashed append's temp file reads as empty
+    _crash_before_rename(db, monkeypatch, db.add_vertices, [("ghost", "k", "g")])
+    _crash_before_rename(db, monkeypatch, db.add_edges, [("ghost", "g2", "r", 1.0)])
+    for d in (db._vdir, db._edir):
+        names = os.listdir(d)
+        assert len(names) == 1 and names[0].startswith(".") and not _parts(d)
+    assert db.vertices().count() == 0 and db.edges().count() == 0
+    assert db.history("ghost").count() == 0 and db.batches().count() == 0
+
+    # next to committed files, the leftover's rows are not replayed or streamed
+    db.add_vertices([("a", "k", "x"), ("b", "k", "y"), ("ghost", "k", "g")])
+    db.add_edges([("a", "b", "r", 1.0)])
+    _crash_before_rename(db, monkeypatch, db.add_edges, [("a", "b", "lost", 9.0)])
+    assert sorted(r["id"] for r in db.vertices().collect()) == ["a", "b", "ghost"]
+    assert [tuple(r) for r in db.edges().collect()] == [("a", "b", "r", 1.0)]
+    assert db.history("ghost").count() == 1
+    assert db.batches().count() == 2
+    counts = db.run_incremental_edge_counts(str(tmp_path / "ckpt"), "leftover_counts")
+    assert [tuple(r) for r in counts.collect()] == [("r", "upsert", 1)]
+
+
+def test_tombstone_null_weight_roundtrips_ddl_schema(db, spark):
+    """Driver-written journal files carry exactly the DDL schema, and a
+    delete's null weight reads back as null."""
+    from pyspark.sql.types import StructType
+
+    from graph_database_akkatyped_spark.api import _E_SCHEMA, _V_SCHEMA
+
+    db.add_vertices([("a", "k", "x"), ("b", "k", "y")])
+    db.add_edges([("a", "b", "r", 1.5)])
+    db.remove_edge("a", "b", "r")
+    db.remove_vertex("a")
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for d, ddl in ((db._vdir, _V_SCHEMA), (db._edir, _E_SCHEMA)):
+        inferred = spark.read.parquet(d).schema  # the files' own schema
+        assert fields(inferred) == fields(StructType.fromDDL(ddl))
+    rows = spark.read.parquet(db._edir).orderBy("batch").collect()
+    assert [(r["op"], r["weight"]) for r in rows] == [("upsert", 1.5), ("delete", None)]
+    v = spark.read.parquet(db._vdir).where("op = 'delete'").collect()
+    assert [(r["id"], r["kind"], r["name"]) for r in v] == [("a", None, None)]

@@ -3,14 +3,12 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from graph_database_akkatyped_spark.api import GraphDB
 
 
-def test_incremental_edge_counts(spark):
-    db = GraphDB(spark, tempfile.mkdtemp(prefix="graphdb_stream_"))
-    ckpt = tempfile.mkdtemp(prefix="graphdb_ckpt_")
+def test_incremental_edge_counts(spark, tmp_path):
+    db = GraphDB(spark, str(tmp_path / "graphdb"))
+    ckpt = str(tmp_path / "ckpt")
     db.add_vertices([("a", "n", "A"), ("b", "n", "B"), ("c", "n", "C")])
     db.add_edges([("a", "b", "bought", 1.0), ("a", "c", "bought", 2.0)])
 
