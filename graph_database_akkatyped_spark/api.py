@@ -62,6 +62,26 @@ def _arrow_schema(ddl: str) -> pa.Schema:
     return to_arrow_schema(StructType.fromDDL(ddl))
 
 
+def _journal_files(dest: str) -> list[str]:
+    """The journal's committed parquet files; Spark skips "." / "_"
+    names too (in-flight temp files, markers)."""
+    return [
+        os.path.join(dest, f)
+        for f in os.listdir(dest)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+
+
+def _max_batch(path: str) -> int:
+    """The largest ``batch`` in one journal file, from its footer's
+    row-group statistics (empty row groups carry none)."""
+    meta = pq.read_metadata(path)
+    col = meta.schema.names.index("batch")
+    groups = (meta.row_group(i) for i in range(meta.num_row_groups))
+    stats = (g.column(col).statistics for g in groups)
+    return max((st.max for st in stats if st is not None and st.has_min_max), default=0)
+
+
 class ConcurrentWriterError(RuntimeError):
     """A second writer attempted a mutation while another held the
     journal write lock."""
@@ -81,8 +101,11 @@ class GraphDB:
     silently corrupting batch order. The batch id is taken under that
     lock, from the wall clock but strictly above the previous id this
     instance issued, so it rises even if the clock stalls or steps
-    back; a wall-clock step back between two writer PROCESSES (or
-    between a writer and a later reopen) is not guarded against. Inside
+    back. Opening a GraphDB seeds that previous id with the journal's
+    largest batch (read from parquet footer statistics — no Spark job),
+    so a reopen after the clock stepped back still writes after every
+    event already in the journal. Two writer instances open at once,
+    with clocks apart, are not guarded against (single writer). Inside
     one command, duplicate keys (``id``; ``(src, dst, rel)``) collapse
     to their last row, so replay never has to break a tie.
 
@@ -106,7 +129,9 @@ class GraphDB:
         self._lock_path = os.path.join(path, "journal", ".write_lock")
         os.makedirs(self._vdir, exist_ok=True)
         os.makedirs(self._edir, exist_ok=True)
-        self._batch = 0  # last batch id issued; see _next_batch
+        # last batch id issued (see _next_batch), seeded from the journal
+        files = _journal_files(self._vdir) + _journal_files(self._edir)
+        self._batch = max(map(_max_batch, files), default=0)
 
     # ------------------------------------------------------------ commands
 
@@ -230,11 +255,7 @@ class GraphDB:
         )
 
     def _read_journal(self, dest: str, schema: str) -> DataFrame:
-        # Spark skips "." / "_" names (in-flight temp files, markers)
-        if any(
-            f.endswith(".parquet") and not f.startswith((".", "_"))
-            for f in os.listdir(dest)
-        ):
+        if _journal_files(dest):
             return self.spark.read.schema(schema).parquet(dest)
         return self.spark.createDataFrame([], schema)
 

@@ -12,7 +12,8 @@ the dict entries), so a long-lived service session can evict between
 workloads.
 
 Cut policy — ``cut(df)`` is THE lineage-cut point for the iterative
-kernels (``operators.pregel.fixpoint`` generations, memoized frames);
+kernels (``operators.pregel.fixpoint`` generations, their edge frames
+via :func:`cut_once`, memoized frames);
 the session-wide :func:`set_reliable_checkpointing` picks its mode:
 
 - default: ``localCheckpoint(eager=True)`` — blocks live on executors,
@@ -28,14 +29,22 @@ the session-wide :func:`set_reliable_checkpointing` picks its mode:
   spot instances, reliable is the only sane setting for multi-hour
   Pregel/dedup pipelines.
 
-STORAGE LIFECYCLE — ``operators.pregel.fixpoint`` is the only place
-that frees the blocks of iterative kernels: it owns every generation
-and every per-round scratch cut, and frees each once its successor is
-materialized (:func:`release_cut` is its primitive). Outside it, only
-the frame cache (:func:`memoized_checkpoint`, :func:`clear_frame_cache`)
-and the streaming sinks' own state free blocks. The two cut modes free
-superseded generations differently, and the O(1)-generations claim is
-mode-specific:
+STORAGE LIFECYCLE — two places free the blocks of iterative kernels,
+both through :func:`release_cut`:
+
+- ``operators.pregel.fixpoint`` owns every generation and every
+  per-round scratch cut, and frees each once its successor is
+  materialized;
+- :func:`cut_once` owns a kernel's loop-invariant input (the edge
+  frame of ``pregel`` and ``bfs_frame``): it cuts a lazy frame once
+  for the run and frees that cut when the run ends — returned or
+  raised. A frame that already is a cut is the caller's, so it is
+  neither cut again nor freed.
+
+Outside them, only the frame cache (:func:`memoized_checkpoint`,
+:func:`clear_frame_cache`) and the streaming sinks' own state free
+blocks. The two cut modes free superseded generations differently,
+and the O(1)-generations claim is mode-specific:
 
 - localCheckpoint blocks register in ``getPersistentRDDs``; the
   driver's and the frame cache's eviction unpersists them
@@ -60,7 +69,8 @@ from __future__ import annotations
 
 import shutil
 import tempfile
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -210,6 +220,26 @@ def release_cut(*dfs: DataFrame) -> None:
         ids = cut_block_ids(df)
         if ids:
             _unpersist_ids(df.sparkSession, ids)
+
+
+@contextmanager
+def cut_once(df: DataFrame) -> Iterator[DataFrame]:
+    """Hold ``df`` materialized for one kernel run: the frame every
+    round of the run reads (an edge relation joined with each
+    superstep's messages). Left lazy, a journal replay or a degree
+    join would re-run inside every round's plan. A frame that already
+    is a cut (``cut_block_ids`` non-empty) is handed back unchanged
+    and stays the caller's; otherwise it is cut once here and freed on
+    exit, also when the run raises at its cap. The kernel's result must
+    not read the frame lazily: it is a cut generation of its own."""
+    if cut_block_ids(df):
+        yield df
+        return
+    held = cut(df)
+    try:
+        yield held
+    finally:
+        release_cut(held)
 
 
 def memoized_checkpoint(

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graph_database_akkatyped_spark.caching import (
-    cut,
+    cut_once,
     memoized_checkpoint as _memoized,
 )
 from graph_database_akkatyped_spark.catalog import load_table
@@ -47,11 +47,13 @@ def bfs_frame(edges_sym: DataFrame, seed: DataFrame, max_level: int) -> DataFram
     round, never all vertices; each level is one driver generation, so
     lineage stays flat and storage holds one visited set — the pattern
     that survives deep graphs at scale. Stops early once a level
-    reaches nothing new.
+    reaches nothing new. ``edges_sym`` is cut once for the run
+    (``caching.cut_once``), so a lazy edge plan is not re-run per
+    level.
     """
     keys = [c for c in seed.columns if c != "id"]
 
-    def level(visited: DataFrame, rnd) -> DataFrame:
+    def level(visited: DataFrame, rnd, edges_sym: DataFrame) -> DataFrame:
         frontier = visited.where(F.col("fresh") == 1).select(
             *keys, F.col("id").alias("a")
         )
@@ -67,24 +69,22 @@ def bfs_frame(edges_sym: DataFrame, seed: DataFrame, max_level: int) -> DataFram
         ).unionByName(nxt)
 
     init = seed.select(*keys, "id", F.lit(0).alias("level"), F.lit(1).alias("fresh"))
-    return fixpoint(
-        level,
-        init,
-        max_iter=max_level,
-        name="bfs_frame",
-        delta=F.sum("fresh"),
-        horizon=True,
-    ).drop("fresh")
+    with cut_once(edges_sym) as held:
+        return fixpoint(
+            lambda visited, rnd: level(visited, rnd, held),
+            init,
+            max_iter=max_level,
+            name="bfs_frame",
+            delta=F.sum("fresh"),
+            horizon=True,
+        ).drop("fresh")
 
 
 def _uedges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized symmetric user edge list — the SHARED frame
-    every iterative kernel should join per superstep. Passing the lazy
-    ``user_edges_sym`` plan into a Pregel loop re-executes the slot
-    self-join in EVERY superstep's message join (the round-9
-    pagerank/semantic_clusters recompute class); the memo key is the
-    same "uedges_sym" the ANF/modularity family already shares, so the
-    build happens once per (session, sf_dir) across all consumers."""
+    """Session-memoized symmetric user edge list, shared by the user
+    graph's kernels: the memo key is the same "uedges_sym" the
+    ANF/modularity family uses, so the slot self-join is built once
+    per (session, sf_dir) across all consumers, not once per key."""
     return _memoized(
         spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
     )
@@ -413,6 +413,17 @@ _UNIT = 10**12
 _BASE = 15 * _UNIT // 100  # 0.15 in µ-units
 
 
+def _degree_weighted(edges_sym: DataFrame) -> DataFrame:
+    """(src, dst, weight = out-degree of src): the PageRank family's
+    message edges, cut once per run by ``pregel``."""
+    deg = edges_sym.groupBy(F.col("a").alias("src")).agg(
+        F.count(F.lit(1)).alias("weight")
+    )
+    return edges_sym.select(F.col("a").alias("src"), F.col("b").alias("dst")).join(
+        deg, "src"
+    )
+
+
 def pagerank_frame(
     verts: DataFrame, edges_sym: DataFrame, iters: int = 10
 ) -> DataFrame:
@@ -425,21 +436,9 @@ def pagerank_frame(
     larger scale drop UNIT accordingly.
     """
     v = verts.select("id", F.lit(_UNIT).cast("long").alias("state"))
-    deg = edges_sym.groupBy(F.col("a").alias("src")).agg(
-        F.count(F.lit(1)).alias("weight")  # out-degree rides as edge attr
-    )
-    # CUT the weighted edge frame once: it feeds every superstep, and
-    # left lazy the deg groupBy + join would be RECOMPUTED 10x inside
-    # the superstep joins (measured 28 s -> 8 s for the 10-superstep
-    # run at sf0.1 when materialized up front).
-    e = cut(
-        edges_sym.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).join(deg, "src")
-    )
     res = pregel(
         v,
-        e,
+        _degree_weighted(edges_sym),
         msg=F.expr("src_state div weight"),
         agg=F.sum("msg"),
         vprog=F.expr(f"CAST({_BASE} + (85 * coalesce(agg_msg, 0)) div 100 AS LONG)"),

@@ -34,6 +34,7 @@ from graph_database_akkatyped_spark.operators.algos import (
     _TRI_BASE,
     _UNIT,
     _canonical_edges,
+    _degree_weighted,
     _edge_common_counts,
     bfs_frame,
 )
@@ -63,18 +64,9 @@ def ppr_frame(
         .cast("long")
         .alias("state"),
     )
-    deg = edges_sym.groupBy(F.col("a").alias("src")).agg(
-        F.count(F.lit(1)).alias("weight")
-    )
-    # cut once: same per-superstep deg-recompute fix as pagerank_frame
-    e = cut(
-        edges_sym.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).join(deg, "src")
-    )
     res = pregel(
         v,
-        e,
+        _degree_weighted(edges_sym),
         msg=F.expr("src_state div weight"),
         agg=F.sum("msg"),
         vprog=F.expr(
@@ -841,15 +833,12 @@ def scc_frame(
             )
             .where(F.col("c_src") == F.col("c_dst"))
         )
-        rev = rnd.cut(
-            ce.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
         marks = pregel(
             colors.select(
                 "id",
                 (F.col("id") == F.col("color")).cast("long").alias("state"),
             ),
-            rev,
+            ce.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
             msg=F.col("src_state"),
             agg=F.max("msg"),
             vprog=F.expr("greatest(state, coalesce(agg_msg, state))"),

@@ -2534,9 +2534,8 @@ def semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-degree graph whatever the corpus size. The result is
     memoized (like SCC/HITS/betweenness/MST): the min-label CC runs
     ~diameter Pregel rounds on the chain-heavy knn graph — ~12 s cold
-    at sf0.1 after the round-9 edge-frame cut (the knn pipeline used
-    to re-execute inside every superstep) — and every repeat consumer
-    pays a memo fetch."""
+    at sf0.1, with the knn edge frame cut once per run by ``pregel`` —
+    and every repeat consumer pays a memo fetch."""
     from graph_database_akkatyped_spark.operators.algos import cc_frame
 
     def build() -> DataFrame:
@@ -2546,18 +2545,8 @@ def semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("id")
         )
-        # CUT the strong-edge frame before the Pregel loop: left lazy,
-        # every CC superstep's message join re-executed the ENTIRE
-        # un-memoized knn IVF pipeline (same recompute class as the
-        # round-9 pagerank_frame fix).
-        from graph_database_akkatyped_spark.caching import cut
-
-        sym = cut(
-            edges.select(
-                F.col("src").alias("a"), F.col("dst").alias("b")
-            ).unionAll(
-                edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-            )
+        sym = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionAll(
+            edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
         )
         comp = cc_frame(emb, sym)
         sizes = comp.groupBy("component").agg(

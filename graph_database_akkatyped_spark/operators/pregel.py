@@ -10,8 +10,8 @@ dataflow engine = join + groupBy per superstep, with ONE iteration
 operator making the physical choices — here :func:`fixpoint`, which
 every self-looping kernel of the package runs on.
 
-Scale notes (the part naive Spark iteration gets wrong), all owned by
-:func:`fixpoint`:
+Scale notes (the part naive Spark iteration gets wrong), owned by
+:func:`fixpoint` and, for the edge frame, by :func:`pregel`:
 - each generation is cut (``caching.cut``) to truncate lineage;
   otherwise the logical plan doubles per iteration and analysis time
   explodes long before data size matters. The session-wide cut policy
@@ -19,17 +19,24 @@ Scale notes (the part naive Spark iteration gets wrong), all owned by
   (fast, dies with an executor) or filesystem checkpoints (survive
   executor loss — the mandatory setting for preemptible-node
   clusters). Results are bit-identical either way.
-- STORAGE LIFECYCLE: the driver is the only place that frees the
-  blocks of an iterative kernel. The PREVIOUS generation and the
-  round's scratch cuts are unpersisted once the new generation is
-  materialized, so EXECUTOR storage stays O(1) generations instead of
-  O(iterations) over a long convergence run. (That synchronous bound
+- STORAGE LIFECYCLE: the driver frees the generations of an
+  iterative kernel, ``caching.cut_once`` its loop-invariant edge cut.
+  The PREVIOUS generation and the round's scratch cuts are unpersisted
+  once the new generation is materialized, so EXECUTOR storage stays
+  O(1) generations instead of O(iterations) over a long convergence
+  run. (That synchronous bound
   covers localCheckpoint blocks; in reliable mode the superseded
   checkpoint FILES are reclaimed asynchronously by the ContextCleaner
   — requires ``spark.cleaner.referenceTracking.cleanCheckpoints``,
   which ``session.get_spark`` sets; see caching.py STORAGE LIFECYCLE.)
-- the convergence check aggregates the just-materialized generation,
-  so it reuses its blocks instead of recomputing the round.
+- the edge relation every superstep joins is cut ONCE per run
+  (``caching.cut_once``; ``bfs_frame`` does the same) and freed when
+  the run ends, returned or raised: a lazy edge plan (a journal
+  replay, a degree join) would otherwise re-run inside every
+  superstep's message join.
+- convergence is observed on the generation's own cut: ``delta`` rides
+  the result frame as a ``DataFrame.observe`` metric, so the cut's
+  action computes it and a round costs one Spark action, not two.
 - Messages shuffle on ``dst`` and states on ``id`` — the same key — so
   AQE can reuse/coalesce partitioning between supersteps. Skewed
   high-degree vertices are handled by AQE skew-join (session default).
@@ -41,9 +48,9 @@ import threading
 from dataclasses import dataclass
 from typing import Callable, Union
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
-from graph_database_akkatyped_spark.caching import cut, release_cut
+from graph_database_akkatyped_spark.caching import cut, cut_once, release_cut
 
 Generation = Union[DataFrame, tuple]
 
@@ -92,9 +99,12 @@ def fixpoint(
     1. cuts every frame of the new generation through ``caching.cut``
        (a frame the step already cut with ``rnd.cut`` is kept as is);
     2. frees the superseded generation and the round's scratch cuts;
-    3. with ``delta``, aggregates it over the new ``result`` frame —
-       one driver action on materialized blocks — and stops when the
-       value is 0 or NULL.
+    3. with ``delta``, reads it off the cut of step 1 — the driver
+       attaches it to the new ``result`` frame as an observed metric
+       before cutting, so the round runs no second action — and stops
+       when the value is 0 or NULL. The result frame of a to-fixpoint
+       step is therefore always cut by the driver: return it lazy,
+       not from ``rnd.cut``.
 
     Modes:
     - to fixpoint (``delta`` given): running out of ``max_iter``
@@ -108,7 +118,8 @@ def fixpoint(
       Louvain sweeps).
 
     Returns the final ``result`` frame; the final ``aux`` frames are
-    freed on return, and ``init`` is never freed (it is the caller's).
+    freed on return, the whole last generation when the cap raises,
+    and ``init`` is never freed (it is the caller's).
     A driver run inside another driver's step belongs to that round:
     its result is freed with the round's scratch, so the step must
     consume it into its generation, not keep it across rounds.
@@ -134,14 +145,18 @@ def fixpoint(
         finally:
             rounds.pop()
         frames = new if isinstance(new, tuple) else (new,)
+        if delta is not None:
+            seen = Observation()
+            frames = (frames[0].observe(seen, delta.alias("delta")), *frames[1:])
         gen = tuple(f if _holds(rnd.scratch, f) else cut(f) for f in frames)
         release_cut(*owned, *(s for s in rnd.scratch if not _holds(gen, s)))
         owned = gen
         state = gen if isinstance(new, tuple) else gen[0]
-        if delta is not None and not gen[0].agg(delta).first()[0]:
+        if delta is not None and not seen.get["delta"]:
             break
     else:
         if delta is not None and not horizon:
+            release_cut(*owned)
             raise RuntimeError(
                 f"{name}: no fixpoint within {max_iter} rounds — raise "
                 "its round cap for this graph"
@@ -174,7 +189,10 @@ def pregel(
 
     - ``vertices``: DataFrame(id, state)
     - ``edges``: DataFrame(src, dst, weight) — direct edges as they
-      should carry messages (symmetrize first for undirected semantics)
+      should carry messages (symmetrize first for undirected semantics).
+      Pass it lazy: the run cuts it once and frees that cut on return
+      (``caching.cut_once``); a frame that already is a cut is read
+      as is and stays the caller's.
     - ``msg``: Column over (src, dst, weight, src_state) producing the
       message sent to ``dst``; NULL means "send nothing"
     - ``agg``: aggregate Column over column ``msg`` (the combiner)
@@ -194,7 +212,7 @@ def pregel(
       contributes every round.
     """
 
-    def superstep(g: DataFrame, rnd: Round) -> DataFrame:
+    def superstep(g: DataFrame, rnd: Round, edges: DataFrame) -> DataFrame:
         v = g.select("id", "state")
         senders = (
             g.where(F.col("changed") == 1).select("id", "state")
@@ -225,13 +243,14 @@ def pregel(
             )
         )
 
-    final = fixpoint(
-        superstep,
-        vertices.select("id", "state", F.lit(1).cast("long").alias("changed")),
-        max_iter=max_iter,
-        name=monotone or "pregel",
-        delta=F.sum("changed") if monotone else None,
-    )
+    with cut_once(edges) as held:
+        final = fixpoint(
+            lambda g, rnd: superstep(g, rnd, held),
+            vertices.select("id", "state", F.lit(1).cast("long").alias("changed")),
+            max_iter=max_iter,
+            name=monotone or "pregel",
+            delta=F.sum("changed") if monotone else None,
+        )
     return PregelResult(
         vertices=final.select("id", "state"), converged=monotone is not None
     )

@@ -213,6 +213,35 @@ def test_batch_ids_monotone_under_coarse_clock(db, monkeypatch):
     assert db.get_vertex("v").collect()[0]["name"] == "new"
 
 
+def test_reopen_after_clock_step_back_writes_after_journal(
+    spark, tmp_path, monkeypatch
+):
+    """A GraphDB opened after the wall clock stepped back still issues
+    batch ids above the journal's, so its writes win on replay; the
+    ids come from parquet footers, so opening runs no Spark job."""
+    path = str(tmp_path / "graphdb")
+    monkeypatch.setattr(time, "time_ns", lambda: 2_000_000)
+    db = GraphDB(spark, path)
+    db.add_vertices([("v", "k", "old"), ("w", "k", "w")])
+    db.remove_vertex("v")
+    monkeypatch.setattr(time, "time_ns", lambda: 1_000_000)  # clock steps back
+    sc = spark.sparkContext
+    sc.setJobGroup("graphdb-open", "graphdb-open")
+    try:
+        db = GraphDB(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("graphdb-open") == []
+    db.add_vertices([("v", "k", "new")])
+    assert [r["name"] for r in db.get_vertex("v").collect()] == ["new"]
+    # a compacted journal (Spark-written snapshot files) seeds it too
+    db.compact()
+    db = GraphDB(spark, path)
+    db.add_vertices([("w", "k", "w2")])
+    assert [r["name"] for r in db.get_vertex("w").collect()] == ["w2"]
+
+
 def test_remove_vertex_tombstones_edges_to_absent_endpoints(db):
     """An edge whose other endpoint did not exist yet is still incident:
     remove_vertex must tombstone it, or re-adding both endpoints would
