@@ -58,13 +58,13 @@ def _run_once(df) -> float:
 # (BENCH_FULL.json warm / BENCH_FULL_COLD.json cold, "canary" field) —
 # drift is therefore always vs the PREVIOUS round close and its
 # provenance is the committed file itself, with no hardcoded constant
-# to re-anchor; the fallback constants below (round-10-close sf0.1,
-# commit 6a699e7) apply only if the artifact is missing/unreadable.
+# to re-anchor. A run is compared only with an artifact taken at the
+# same sf, cache regime and core count (``cpus``): a 4-core run against
+# 32-core anchors would read as drift and regressions that are neither.
 # NOISE FLOOR: the canary keys are median-of-3 sampled (see the
 # timing loop), but each remains a sub-second measurement — treat
 # |drift - 1| < 0.15 as no-signal, not as environment drift.
 _CANARY_KEYS = ("filter_project", "join_inner_hash", "window_rank")
-_CANARY_REF_FALLBACK = {False: {0.1: 0.4486}, True: {0.1: 0.9017}}
 
 
 def _round_close_artifact(cold: bool) -> str:
@@ -73,20 +73,33 @@ def _round_close_artifact(cold: bool) -> str:
     )
 
 
-def _canary_ref(cold: bool, sf: float) -> float | None:
-    """Sum of the canary keys' timings in the committed round-close
-    artifact of this regime, provided it covers the same sf and all
-    three keys; else the hardcoded fallback (or None off-sf0.1)."""
+def _comparable_round_close(
+    cold: bool, sf: float, cpus: int
+) -> tuple[dict | None, str | None]:
+    """The committed round-close artifact of this regime, read once:
+    ``(artifact, None)`` when its ``sf``, ``cold_cache`` and ``cpus``
+    all match this run, else ``(None, reason)``. An artifact without a
+    ``cpus`` field is never comparable."""
+    path = _round_close_artifact(cold)
+    name = os.path.basename(path)
     try:
-        with open(_round_close_artifact(cold)) as fh:
+        with open(path) as fh:
             prev = json.load(fh)
-        if prev.get("sf") == sf and prev.get("cold_cache", False) == cold:
-            vals = [prev.get("canary", {}).get(k) for k in _CANARY_KEYS]
-            if all(isinstance(v, (int, float)) and v > 0 for v in vals):
-                return float(sum(vals))
-    except (OSError, ValueError):
-        pass
-    return _CANARY_REF_FALLBACK[cold].get(sf)
+    except (OSError, ValueError) as exc:
+        return None, f"{name} unreadable ({type(exc).__name__})"
+    for field, want in (("sf", sf), ("cold_cache", cold), ("cpus", cpus)):
+        if prev.get(field) != want:
+            return None, f"{name} has {field}={prev.get(field)!r}, run has {want!r}"
+    return prev, None
+
+
+def _canary_ref(prev: dict) -> float | None:
+    """Sum of the canary keys' timings in a comparable artifact, or
+    None when it lacks one of them."""
+    vals = [prev.get("canary", {}).get(k) for k in _CANARY_KEYS]
+    if all(isinstance(v, (int, float)) and v > 0 for v in vals):
+        return float(sum(vals))
+    return None
 
 
 def main() -> None:
@@ -118,6 +131,7 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0
+    cpus = spark.sparkContext.defaultParallelism
 
     slow_cutoff = float(os.environ.get("SPARK_GRAFT_BENCH_SLOW_SEC", "1.0"))
     timings: dict[str, float] = {}
@@ -149,17 +163,18 @@ def main() -> None:
     total = round(sum(v for v in timings.values() if v >= 0), 4)
     # Canary drift discriminator (round-9 VERDICT #7): the sweep's own
     # timings of three cheap, plan-stable, memo-free keys vs their
-    # round-9-close recording in the SAME regime. A key that moved
+    # recording in the comparable round-close artifact. A key that moved
     # 1.3x in a run whose canary_drift is 1.3 is environment noise;
-    # the same move at drift ~1.0 is a plan change. References exist
-    # for sf0.1 only (the recorded protocol); other sf dirs get the
-    # raw canary times, drift null.
+    # the same move at drift ~1.0 is a plan change. Without a
+    # comparable artifact the run records its raw canary times, drift
+    # null, and says why in ``not_comparable``.
     canary = {
         k: timings[k]
         for k in _CANARY_KEYS
         if timings.get(k, -1.0) >= 0
     }
-    ref = _canary_ref(cold, sf)
+    prev, not_comparable = _comparable_round_close(cold, sf, cpus)
+    ref = _canary_ref(prev) if prev else None
     canary_drift = (
         round(sum(canary.values()) / ref, 3)
         if ref and len(canary) == len(_CANARY_KEYS)
@@ -171,14 +186,10 @@ def main() -> None:
     # localize a regression (the r10 driver-vs-builder 1.067-vs-0.909
     # split); this names the keys. Sub-second keys are exempt (their
     # jitter dwarfs any plan signal) and so are keys absent from the
-    # previous artifact (new this round).
-    regressions = []
-    try:
-        with open(_round_close_artifact(cold)) as fh:
-            prev = json.load(fh)
-    except (OSError, ValueError):
-        prev = None
-    if prev and prev.get("sf") == sf:
+    # previous artifact (new this round). No comparable artifact -> null.
+    regressions = None
+    if prev:
+        regressions = []
         # canary_drift is measured against THIS artifact's canaries
         # (see _canary_ref), so cur/cur_drift is already expressed in
         # the previous round-close's environment units — compare to
@@ -223,9 +234,11 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "cold_cache": cold,
+                "cpus": cpus,
                 "canary": canary,
                 "canary_drift": canary_drift,
                 "regressions": regressions,
+                "not_comparable": not_comparable,
             },
             fh,
             indent=1,
@@ -236,11 +249,13 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": sf,
+        "cpus": cpus,
         "n_queries": len(timings),
         "n_failed": sum(1 for v in timings.values() if v < 0),
         "detail": out_name,
         "canary_drift": canary_drift,
-        "n_regressions": len(regressions),
+        "n_regressions": None if regressions is None else len(regressions),
+        "not_comparable": not_comparable,
         "queries": {},
     }
     budget = 1800

@@ -1719,29 +1719,168 @@ FROM (
 # ------------------------------------------------------ similarity search
 
 
+# Every vector-search key is assembled from the stages below, one
+# definition each: the vector frame, the query frame, the brute-force
+# pair scan, integer-mean centroids, the nprobe cell probe, the cosine
+# score with its top-k window, nearest-cell assignment and the PQ
+# index. Oracle parity rests on their recipes (floor-scaled integer
+# means, strict left-to-right ``_dot`` chains, fully tie-broken ranks),
+# so a change to one of them lands in one place for every key.
+
+
+def _vectors(emb: DataFrame, *carry) -> DataFrame:
+    """The vector frame (vec_id, *carry, embedding, nrm): ``carry`` names
+    (or Column expressions) ride along, nrm = embedding·embedding."""
+    return emb.select(
+        "vec_id",
+        *carry,
+        "embedding",
+        _dot(F.col("embedding"), F.col("embedding")).alias("nrm"),
+    )
+
+
+def _as_queries(vecs: DataFrame, *carry: str) -> DataFrame:
+    """Every row of the vector frame ``vecs`` as a query:
+    (q_id, q_<carry>..., q_emb, q_nrm)."""
+    return vecs.select(
+        F.col("vec_id").alias("q_id"),
+        *(F.col(c).alias(f"q_{c}") for c in carry),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
+
+
+def _queries(vecs: DataFrame, *carry: str) -> DataFrame:
+    """The search keys' query set, vec_id < 5, as a query frame."""
+    return _as_queries(vecs.where(F.col("vec_id") < 5), *carry)
+
+
+def _scan_pairs(vecs: DataFrame, queries: DataFrame) -> DataFrame:
+    """Brute force: every (candidate, query) pair but the query itself,
+    the tiny query side broadcast."""
+    return vecs.crossJoin(F.broadcast(queries)).where(
+        F.col("vec_id") != F.col("q_id")
+    )
+
+
+def _cos() -> Column:
+    """Query-to-candidate cosine, q_emb·embedding / (√q_nrm·√nrm)."""
+    return _dot(F.col("q_emb"), F.col("embedding")) / (
+        F.sqrt("q_nrm") * F.sqrt("nrm")
+    )
+
+
+def _topk(scored: DataFrame, k: int, rank: str = "rnk") -> DataFrame:
+    """Per-query top-``k`` of ``scored`` by (cos desc, vec_id): adds the
+    row_number column ``rank`` and keeps rank <= k."""
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
+    return scored.withColumn(rank, F.row_number().over(w)).where(
+        F.col(rank) <= k
+    )
+
+
+def _cos_topk(cand: DataFrame, k: int, rank: str = "rnk") -> DataFrame:
+    """Scores the (query, candidate) rows ``cand`` by ``_cos`` and keeps
+    each query's ``_topk``: the exact re-rank stage of every key."""
+    return _topk(cand.withColumn("cos", _cos()), k, rank)
+
+
+def _dim_means(members: DataFrame, *key: str) -> DataFrame:
+    """Per-(key, pos) mean of ``members``' embedding dims, (*key, pos,
+    cval): each value is floor-scaled to an integer before the sum, so
+    the mean is bit-identical across partitionings and engines."""
+    dims = members.select(
+        *key, F.posexplode(F.col("embedding")).alias("pos", "val")
+    )
+    return dims.groupBy(*key, "pos").agg(
+        (
+            F.sum(
+                F.floor(F.col("val").cast("double") * 1e8).cast("long")
+            ).cast("double")
+            / (F.count(F.lit(1)).cast("double") * 1e8)
+        ).alias("cval")
+    )
+
+
+def _cell_means(members: DataFrame, *key: str) -> DataFrame:
+    """Deterministic centroid of each ``key`` cell of ``members`` (a
+    label, a (label, sub) sub-cell, an assigned cell), from the
+    ``_dim_means`` integer means: (*key, centroid, cnrm)."""
+    cents = _dim_means(members, *key).groupBy(*key).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
+            lambda s: s.cval,
+        ).alias("centroid")
+    )
+    return cents.select(
+        *key,
+        "centroid",
+        _dot(F.col("centroid"), F.col("centroid")).alias("cnrm"),
+    )
+
+
+def _probe(queries: DataFrame, cells: DataFrame, nprobe: int) -> DataFrame:
+    """The ``nprobe`` cells nearest each query by centroid cosine, ties
+    by cell key — the ``cells`` columns before ``centroid``, as
+    ``_cell_means`` lays them out: (query columns..., *key). The cell
+    table is broadcast: O(|queries| x cells), never the corpus."""
+    key = cells.columns[: cells.columns.index("centroid")]
+    c_cos = _dot(F.col("q_emb"), F.col("centroid")) / (
+        F.sqrt("q_nrm") * F.sqrt("cnrm")
+    )
+    wc = Window.partitionBy("q_id").orderBy(F.col("c_cos").desc(), *key)
+    return (
+        queries.crossJoin(F.broadcast(cells))
+        .withColumn("c_cos", c_cos)
+        .withColumn("cell_rnk", F.row_number().over(wc))
+        .where(F.col("cell_rnk") <= nprobe)
+        .select(*queries.columns, *key)
+    )
+
+
+def _nearest_cell(
+    vecs: DataFrame, cells: DataFrame, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """Assign every vector of ``vecs`` (vec_id, label, embedding, nrm)
+    to its argmax-cosine cell from the broadcast ``cells`` table
+    (cell, centroid, cnrm, ...), ties to the smallest cell id, with
+    that cosine as ``c_cos``. ``keep`` names extra columns to carry
+    through the argmax (``c_cos``, or caller columns such as the
+    rebalance report's ``cell_stale``). Every assignment to a frozen
+    or recomputed cell table goes through here — append, rebalance and
+    the streaming store; only knn's within-label seed assignment keeps
+    its own window (it joins seeds on label instead of scanning every
+    cell).
+
+    Measured negative (kept as-is on purpose): replacing this
+    crossJoin + row_number window with a per-row higher-order argmax
+    fold over a collected cell array (zero exchange, zero sort) timed
+    simsearch_recall_rebalance 2.93s -> 4.07s same-session — the fold
+    is CodegenFallback (interpreted per row, same finding as the
+    ``_dot`` audit) while this shape keeps WindowGroupLimit's map-side
+    top-1 prune and whole-stage codegen around the window, so the
+    vec_id exchange it pays carries only one pre-pruned row per vector
+    per map partition."""
+    c_cos = _dot(F.col("embedding"), F.col("centroid")) / (
+        F.sqrt("nrm") * F.sqrt("cnrm")
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), "cell")
+    return (
+        vecs.crossJoin(F.broadcast(cells))
+        .withColumn("c_cos", c_cos)
+        .withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") == 1)
+        .select("vec_id", "label", "embedding", "nrm", "cell", *keep)
+    )
+
+
 def simsearch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 per query vector (vec_id < 5), brute force:
     broadcast the tiny query side, score all candidates, per-query
     window top-k. At scale this is the re-rank stage after LSH."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        base.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select("q_id", "vec_id", "cos", "rnk")
+    base = _vectors(load_table(spark, sf_dir, "embeddings"))
+    return _cos_topk(_scan_pairs(base, _queries(base)), 10).select(
+        "q_id", "vec_id", "cos", "rnk"
     )
 
 
@@ -1787,25 +1926,11 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact rationals and would diverge by ulps); ties break by
     vec_id. Oracle unrolls the 4 rounds as MATERIALIZED CTEs.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
+    base = _vectors(load_table(spark, sf_dir, "embeddings"))
     cand = cut(
-        base.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= _MMR_POOL)
-        .select("q_id", "vec_id", "cos", "embedding", "nrm")
+        _cos_topk(_scan_pairs(base, _queries(base)), _MMR_POOL).select(
+            "q_id", "vec_id", "cos", "embedding", "nrm"
+        )
     )
     pcos = _dot(F.col("a_emb"), F.col("b_emb")) / (
         F.sqrt("a_nrm") * F.sqrt("b_nrm")
@@ -1830,7 +1955,6 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "a", "b", pcos.alias("pcos"))
     )
     slim = cand.select("q_id", "vec_id", "cos")
-    w1 = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
 
     def rerank(selected: DataFrame, rnd) -> DataFrame:
         r = rnd.i + 1
@@ -1859,9 +1983,9 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one generation per pick: the top-1 seed, then ranks 2.._MMR_K
     selected = fixpoint(
         rerank,
-        slim.withColumn("rn", F.row_number().over(w1))
-        .where(F.col("rn") == 1)
-        .select("q_id", "vec_id", "cos", F.lit(1).cast("int").alias("rnk")),
+        _topk(slim, 1, "rn").select(
+            "q_id", "vec_id", "cos", F.lit(1).cast("int").alias("rnk")
+        ),
         max_iter=_MMR_K - 1,
         name="simsearch_mmr",
     )
@@ -1948,30 +2072,13 @@ def simsearch_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     simsearch_ivf with the label equi-condition added to the cell
     join.) The filter column rides the same row as the vector, so no
     extra join against a metadata table is needed at any scale."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "label", "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    base = _vectors(load_table(spark, sf_dir, "embeddings"), "label")
+    cand = base.join(
+        F.broadcast(_queries(base, "label")),
+        (F.col("label") == F.col("q_label"))
+        & (F.col("vec_id") != F.col("q_id")),
     )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        base.join(
-            F.broadcast(queries),
-            (F.col("label") == F.col("q_label"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 5)
-        .select("q_id", "vec_id", F.col("label").alias("label"), "cos", "rnk")
-    )
+    return _cos_topk(cand, 5).select("q_id", "vec_id", "label", "cos", "rnk")
 
 
 _SIMSEARCH_FILTERED_SQL = f"""
@@ -2012,21 +2119,10 @@ def simsearch_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≥ ~0.9) the sign-LSH banding of dedup_embedding_cosine is the
     candidate pruner; at a moderate radius like this, banding loses
     recall and the honest plan IS the linear scan."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
+    base = _vectors(load_table(spark, sf_dir, "embeddings"))
     return (
-        base.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
+        _scan_pairs(base, _queries(base))
+        .withColumn("cos", _cos())
         .where(F.col("cos") >= F.lit(_RANGE_COS))
         .select("q_id", "vec_id", "cos")
     )
@@ -2160,67 +2256,22 @@ def simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table is laid out by cell).
 
     The coarse quantizer here is the label clustering; centroids are
-    floor-scaled integer means (deterministic at any parallelism — a
-    float mean would drift with partition order), so candidate sets and
+    ``_cell_means`` floor-scaled integer means (deterministic at any
+    parallelism — a float mean would drift with partition order), the
+    probe is ``_probe`` and the re-rank ``_cos_topk``, so candidate sets and
     ranks are exact-reproducible and the whole pipeline hash-matches the
     SQL oracle. nprobe=2 gives recall < 1 by design vs `simsearch_topk`.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    # 1) deterministic per-cell centroids (64 dims)
-    dims = emb.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos", "val")
-    )
-    cdims = dims.groupBy("label", "pos").agg(
-        (
-            F.sum(F.floor(F.col("val").cast("double") * 1e8).cast("long")).cast(
-                "double"
-            )
-            / (F.count(F.lit(1)).cast("double") * 1e8)
-        ).alias("cval")
-    )
-    centroids = cdims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))), lambda s: s.cval
-        ).alias("centroid")
-    )
-    cnorm = _dot(F.col("centroid"), F.col("centroid"))
-    cells = centroids.select("label", "centroid", cnorm.alias("cnrm"))
-    # 2) probe: top-2 cells per query by centroid cosine. base feeds
-    # three consumers (query filter, probe, final cell join) but the
-    # re-derived work is one scan + norm fold — a checkpoint cut costs
-    # more than it saves at this scale (measured); persist on a real
-    # corpus where the scan dominates.
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "label", "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c_cos = _dot(F.col("q_emb"), F.col("centroid")) / (
-        F.sqrt("q_nrm") * F.sqrt("cnrm")
-    )
-    wc = Window.partitionBy("q_id").orderBy(F.col("c_cos").desc(), "label")
-    probed = (
-        queries.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("cell_rnk", F.row_number().over(wc))
-        .where(F.col("cell_rnk") <= 2)
-        .select("q_id", "q_emb", "q_nrm", "label")
-    )
-    # 3) exact re-rank inside the probed cells only
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        base.join(probed, "label")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select("q_id", "vec_id", "cos", "rnk")
-    )
+    # base feeds three consumers (query filter, probe, final cell join)
+    # but the re-derived work is one scan + norm fold — a checkpoint cut
+    # costs more than it saves at this scale (measured); persist on a
+    # real corpus where the scan dominates.
+    base = _vectors(emb, "label")
+    probed = _probe(_queries(base), _cell_means(emb, "label"), 2)
+    # exact re-rank inside the probed cells only
+    cand = base.join(probed, "label").where(F.col("vec_id") != F.col("q_id"))
+    return _cos_topk(cand, 10).select("q_id", "vec_id", "cos", "rnk")
 
 
 _SIMSEARCH_IVF_SQL = f"""
@@ -2300,7 +2351,8 @@ _KNN_PROBE = 4
 def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Builds the k-NN GRAPH over the embedding corpus — every vector
     gets its top-``_KNN_K`` cosine neighbors via the IVF path (assign
-    → probe top-2 cells → exact re-rank inside probed cells only).
+    → probe the ``_KNN_PROBE`` nearest sub-cells → exact re-rank
+    inside probed cells only).
     This is the bridge between the repo's two pillars: vectors in,
     GRAPH out — the edge list that semantic clustering (Louvain/CC on
     semantic edges), graph-based re-ranking, and diversity sampling
@@ -2308,8 +2360,8 @@ def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     build (HNSW's layer-0 construction is exactly repeated
     probe-and-re-rank).
 
-    Same determinism recipe as simsearch_ivf (floor-scaled integer
-    centroid means, fully tie-broken ranks), so the whole edge list
+    Built from the shared stages (``_cell_means`` over the (label, sub)
+    sub-cells, ``_probe``, ``_cos_topk``), so the whole edge list
     value-hashes against the oracle. 100 TB shape: queries here are
     ALL n vectors, so the re-rank term is n·cell_size = n²/cells —
     a FIXED cell count (the fixture's 10 labels, the round-≤10
@@ -2334,8 +2386,7 @@ def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "label", "embedding", norm.alias("nrm"))
+    base = _vectors(emb, "label")
     # scale-aware cell count: m = ceil(sqrt(n) / L) sub-cells per
     # label -> labels*m >= sqrt(n) cells total. One global 2-scalar
     # aggregate, broadcast — keeps the whole build a single plan (no
@@ -2371,7 +2422,9 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # one Lloyd assignment step: argmax cosine to the (broadcast)
-    # same-label seeds, ties to the smaller sub id. n*m dots.
+    # same-label seeds, ties to the smaller sub id. n*m dots. Its own
+    # window, not _nearest_cell: the seeds join on label, where every
+    # _nearest_cell site scans the whole cell table.
     a_cos = _dot(F.col("embedding"), F.col("s_emb")) / (
         F.sqrt("nrm") * F.sqrt("s_nrm")
     )
@@ -2383,54 +2436,14 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("arn") == 1)
         .select("vec_id", "label", "sub", "embedding", "nrm")
     )
-    dims = assign.select(
-        "label", "sub", F.posexplode(F.col("embedding")).alias("pos", "val")
+    cells = _cell_means(assign, "label", "sub")
+    # every vector queries the graph: probe its sub-cells, re-rank
+    probed = _probe(_as_queries(base), cells, _KNN_PROBE)
+    cand = probed.join(assign, ["label", "sub"]).where(
+        F.col("vec_id") != F.col("q_id")
     )
-    cdims = dims.groupBy("label", "sub", "pos").agg(
-        (
-            F.sum(
-                F.floor(F.col("val").cast("double") * 1e8).cast("long")
-            ).cast("double")
-            / (F.count(F.lit(1)).cast("double") * 1e8)
-        ).alias("cval")
-    )
-    centroids = cdims.groupBy("label", "sub").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s.cval,
-        ).alias("centroid")
-    )
-    cnorm = _dot(F.col("centroid"), F.col("centroid"))
-    cells = centroids.select("label", "sub", "centroid", cnorm.alias("cnrm"))
-    queries = base.select(
-        F.col("vec_id").alias("src"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c_cos = _dot(F.col("q_emb"), F.col("centroid")) / (
-        F.sqrt("q_nrm") * F.sqrt("cnrm")
-    )
-    wc = Window.partitionBy("src").orderBy(
-        F.col("c_cos").desc(), "label", "sub"
-    )
-    probed = (
-        queries.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("cell_rnk", F.row_number().over(wc))
-        .where(F.col("cell_rnk") <= _KNN_PROBE)
-        .select("src", "q_emb", "q_nrm", "label", "sub")
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        probed.join(assign, ["label", "sub"])
-        .where(F.col("vec_id") != F.col("src"))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _KNN_K)
-        .select("src", F.col("vec_id").alias("dst"), "cos", "rnk")
+    return _cos_topk(cand, _KNN_K).select(
+        F.col("q_id").alias("src"), F.col("vec_id").alias("dst"), "cos", "rnk"
     )
 
 
@@ -2613,17 +2626,9 @@ def simsearch_greedy_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda: knn_graph_build(spark, sf_dir).select("src", "dst"),
     )
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
+    base = _vectors(load_table(spark, sf_dir, "embeddings"))
+    queries = _queries(base)
+    cos = _cos()
     state = (
         queries.crossJoin(
             F.broadcast(base.where(F.col("vec_id") == _GREEDY_ENTRY))
@@ -2755,29 +2760,14 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     truth = simsearch_topk(spark, sf_dir).select("q_id", "vec_id")
-    sliced = emb.select(
-        "vec_id", F.slice("embedding", 1, _MATRYOSHKA_DIMS).alias("embedding")
+    base = _vectors(
+        emb.select(
+            "vec_id",
+            F.slice("embedding", 1, _MATRYOSHKA_DIMS).alias("embedding"),
+        )
     )
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = sliced.select("vec_id", "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    cand = (
-        base.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select("q_id", "vec_id")
-    )
-    return _recall_vs_truth(truth, cand)
+    cand = _cos_topk(_scan_pairs(base, _queries(base)), 10)
+    return _recall_vs_truth(truth, cand.select("q_id", "vec_id"))
 
 
 def _matryoshka_sql(dims: int = _MATRYOSHKA_DIMS) -> str:
@@ -3027,65 +3017,17 @@ def simsearch_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered neighbors live outside its probed cells; the honest
     scorecard is :func:`simsearch_recall_filtered`."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos", "val")
+    base = _vectors(emb, _tenant_col(), "label")
+    probed = _probe(
+        _queries(base, "tenant"), _cell_means(emb, "label"), _FILT_NPROBE
+    ).withColumnRenamed("label", "p_label")
+    cand = base.join(
+        probed,
+        (F.col("label") == F.col("p_label"))
+        & (F.col("tenant") == F.col("q_tenant"))
+        & (F.col("vec_id") != F.col("q_id")),
     )
-    cdims = dims.groupBy("label", "pos").agg(
-        (
-            F.sum(F.floor(F.col("val").cast("double") * 1e8).cast("long")).cast(
-                "double"
-            )
-            / (F.count(F.lit(1)).cast("double") * 1e8)
-        ).alias("cval")
-    )
-    centroids = cdims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))), lambda s: s.cval
-        ).alias("centroid")
-    )
-    cells = centroids.select(
-        "label", "centroid", _dot(F.col("centroid"), F.col("centroid")).alias("cnrm")
-    )
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select(
-        "vec_id", _tenant_col(), "label", "embedding", norm.alias("nrm")
-    )
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("tenant").alias("q_tenant"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c_cos = _dot(F.col("q_emb"), F.col("centroid")) / (
-        F.sqrt("q_nrm") * F.sqrt("cnrm")
-    )
-    wc = Window.partitionBy("q_id").orderBy(F.col("c_cos").desc(), "label")
-    probed = (
-        queries.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("cell_rnk", F.row_number().over(wc))
-        .where(F.col("cell_rnk") <= _FILT_NPROBE)
-        .select(
-            "q_id", "q_tenant", "q_emb", "q_nrm",
-            F.col("label").alias("p_label"),
-        )
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        base.join(
-            probed,
-            (F.col("label") == F.col("p_label"))
-            & (F.col("tenant") == F.col("q_tenant"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select("q_id", "vec_id", "tenant", "cos", "rnk")
-    )
+    return _cos_topk(cand, 10).select("q_id", "vec_id", "tenant", "cos", "rnk")
 
 
 _IVF_FILTERED_SQL = f"""
@@ -3144,30 +3086,13 @@ def _filtered_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force filtered top-10 (tenant predicate only, every
     cell scanned) — the ground truth `simsearch_recall_filtered`
     measures the IVF path against."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", _tenant_col(), "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("tenant").alias("q_tenant"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    base = _vectors(load_table(spark, sf_dir, "embeddings"), _tenant_col())
+    cand = base.join(
+        F.broadcast(_queries(base, "tenant")),
+        (F.col("tenant") == F.col("q_tenant"))
+        & (F.col("vec_id") != F.col("q_id")),
     )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        base.join(
-            F.broadcast(queries),
-            (F.col("tenant") == F.col("q_tenant"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select("q_id", "vec_id")
-    )
+    return _cos_topk(cand, 10).select("q_id", "vec_id")
 
 
 def simsearch_recall_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3236,8 +3161,8 @@ def simsearch_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected to the driver to form the static IN-list that the scan
     prunes on, the same bounded-collect pattern as the seed lists in
     operators.algos. Results are value-identical to ``simsearch_ivf``
-    (same centroids, same probe, same re-rank over the same rows), so
-    the oracle is the same SQL.
+    (the same ``_cell_means``, ``_probe`` and ``_cos_topk`` stages over
+    the same rows), so the oracle is the same SQL.
 
     The partitioned layout is written ONCE per sf_dir through
     ``caching.layout_dir`` (shared with the stream-replay splits in
@@ -3255,67 +3180,18 @@ def simsearch_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = spark.read.parquet(out).select(
         "vec_id", F.col("label").cast("long").alias("label"), "embedding"
     )
-    dims = idx.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos", "val")
-    )
-    cdims = dims.groupBy("label", "pos").agg(
-        (
-            F.sum(
-                F.floor(F.col("val").cast("double") * 1e8).cast("long")
-            ).cast("double")
-            / (F.count(F.lit(1)).cast("double") * 1e8)
-        ).alias("cval")
-    )
-    centroids = cdims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s.cval,
-        ).alias("centroid")
-    )
-    cells = centroids.select(
-        "label",
-        "centroid",
-        _dot(F.col("centroid"), F.col("centroid")).alias("cnrm"),
-    )
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    queries = (
-        emb.where(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            norm.alias("q_nrm"),
-        )
-    )
-    c_cos = _dot(F.col("q_emb"), F.col("centroid")) / (
-        F.sqrt("q_nrm") * F.sqrt("cnrm")
-    )
-    wc = Window.partitionBy("q_id").orderBy(F.col("c_cos").desc(), "label")
-    probed = (
-        queries.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("cell_rnk", F.row_number().over(wc))
-        .where(F.col("cell_rnk") <= 2)
-        .select("q_id", "q_emb", "q_nrm", "label")
+    probed = _probe(
+        _queries(_vectors(emb)), _cell_means(idx, "label"), 2
     )
     # bounded probe fan-out -> static partition IN-list for the scan
     probed_cells = sorted(
         {r["label"] for r in probed.select("label").distinct().collect()}
     )
-    cand = idx.where(F.col("label").isin(probed_cells)).select(
-        "vec_id", "label", "embedding", norm.alias("nrm")
+    cand = _vectors(idx.where(F.col("label").isin(probed_cells)), "label")
+    pairs = cand.join(F.broadcast(probed), "label").where(
+        F.col("vec_id") != F.col("q_id")
     )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        cand.join(F.broadcast(probed), "label")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select("q_id", "vec_id", "cos", "rnk")
-    )
+    return _cos_topk(pairs, 10).select("q_id", "vec_id", "cos", "rnk")
 
 
 # -------------------------------------------- incremental index append
@@ -3328,9 +3204,9 @@ def simsearch_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the nearest centroid of a FROZEN index — never recluster the
     base corpus on append. The corpus splits deterministically (vec_id
     % {mod} == 7 is the arriving batch, the rest is the indexed base);
-    centroids are rebuilt from the base only, with the same
-    floor-scaled integer means as ``simsearch_ivf``, then each new
-    vector picks its cell by centroid cosine (ties broken by cell id).
+    centroids are rebuilt from the base only (``_cell_means``), then
+    each new vector picks its cell by centroid cosine, ties broken by
+    cell id (``_nearest_cell``).
 
     Output per appended vector: the assigned cell, its centroid
     cosine, whether the assignment DRIFTED off the vector's own label
@@ -3347,55 +3223,18 @@ def simsearch_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     is_new = (F.col("vec_id") % _APPEND_MOD) == 7
-    base = emb.where(~is_new)
     # frozen index: deterministic per-cell centroids from the BASE only
-    dims = base.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos", "val")
-    )
-    cdims = dims.groupBy("label", "pos").agg(
-        (
-            F.sum(
-                F.floor(F.col("val").cast("double") * 1e8).cast("long")
-            ).cast("double")
-            / (F.count(F.lit(1)).cast("double") * 1e8)
-        ).alias("cval")
-    )
-    centroids = cdims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s.cval,
-        ).alias("centroid")
-    )
-    fill = base.groupBy("label").agg(F.count(F.lit(1)).alias("cell_n_base"))
-    cells = centroids.join(fill, "label").select(
-        F.col("label").alias("cell"),
-        "centroid",
-        _dot(F.col("centroid"), F.col("centroid")).alias("cnrm"),
-        "cell_n_base",
-    )
-    newb = emb.where(is_new).select(
+    base = emb.where(~is_new).withColumnRenamed("label", "cell")
+    fill = base.groupBy("cell").agg(F.count(F.lit(1)).alias("cell_n_base"))
+    cells = _cell_means(base, "cell").join(fill, "cell")
+    newb = _vectors(emb.where(is_new), "label")
+    return _nearest_cell(newb, cells, keep=("c_cos", "cell_n_base")).select(
         "vec_id",
         "label",
-        "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("nrm"),
-    )
-    c_cos = _dot(F.col("embedding"), F.col("centroid")) / (
-        F.sqrt("nrm") * F.sqrt("cnrm")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), "cell")
-    return (
-        newb.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select(
-            "vec_id",
-            "label",
-            "cell",
-            "c_cos",
-            (F.col("cell") != F.col("label")).alias("drifted"),
-            "cell_n_base",
-        )
+        "cell",
+        "c_cos",
+        (F.col("cell") != F.col("label")).alias("drifted"),
+        "cell_n_base",
     )
 
 
@@ -3460,69 +3299,6 @@ _REBAL_K = 10
 _REBAL_NQ = 5
 
 
-def _cell_means(members: DataFrame, key: str) -> DataFrame:
-    """Deterministic per-cell centroid over ``members`` grouped by
-    ``key`` — the same floor-scaled integer-mean discipline as
-    ``simsearch_ivf`` (bit-identical across partitionings and engines).
-    Returns (cell, centroid, cnrm)."""
-    dims = members.select(
-        F.col(key).alias("cell"),
-        F.posexplode(F.col("embedding")).alias("pos", "val"),
-    )
-    cdims = dims.groupBy("cell", "pos").agg(
-        (
-            F.sum(
-                F.floor(F.col("val").cast("double") * 1e8).cast("long")
-            ).cast("double")
-            / (F.count(F.lit(1)).cast("double") * 1e8)
-        ).alias("cval")
-    )
-    cents = cdims.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s.cval,
-        ).alias("centroid")
-    )
-    return cents.select(
-        "cell",
-        "centroid",
-        _dot(F.col("centroid"), F.col("centroid")).alias("cnrm"),
-    )
-
-
-def _nearest_cell(
-    vecs: DataFrame, cells: DataFrame, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """Assign every vector of ``vecs`` (vec_id, label, embedding, nrm)
-    to its argmax-cosine cell from the broadcast ``cells`` table, ties
-    to the smallest cell id. ``keep`` names extra caller columns to
-    carry through the argmax (round-11 ADVICE: the rebalance report
-    needs ``cell_stale`` on the assigned row, and re-inlining this
-    window there risked the two argmaxes silently diverging — one
-    definition now serves every assignment site).
-
-    Round-11 measured negative (kept as-is on purpose): replacing this
-    crossJoin + row_number window with a per-row higher-order argmax
-    fold over a collected cell array (zero exchange, zero sort) timed
-    simsearch_recall_rebalance 2.93s -> 4.07s same-session — the fold
-    is CodegenFallback (interpreted per row, same finding as the
-    ``_dot`` round-11 audit) while this shape keeps WindowGroupLimit's
-    map-side top-1 prune and whole-stage codegen around the window, so
-    the vec_id exchange it pays carries only one pre-pruned row per
-    vector per map partition."""
-    c_cos = _dot(F.col("embedding"), F.col("centroid")) / (
-        F.sqrt("nrm") * F.sqrt("cnrm")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), "cell")
-    return (
-        vecs.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select("vec_id", "label", "embedding", "nrm", "cell", *keep)
-    )
-
-
 def _rebal_state(spark: SparkSession, sf_dir: str):
     """Shared build for the rebalance pair: the index was built when
     only labels < ``_REBAL_BASE_LABELS`` existed (frozen per-label
@@ -3534,19 +3310,16 @@ def _rebal_state(spark: SparkSession, sf_dir: str):
 
     Returns (corpus, frozen cells, stale assignment, rebalanced cells,
     new assignment)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        "vec_id",
+    corpus = _vectors(
+        load_table(spark, sf_dir, "embeddings"),
         F.col("label").cast("long").alias("label"),
-        "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("nrm"),
     )
-    base = corpus.where(F.col("label") < _REBAL_BASE_LABELS)
+    base = corpus.where(F.col("label") < _REBAL_BASE_LABELS).withColumn(
+        "cell", F.col("label")
+    )
     app = corpus.where(F.col("label") >= _REBAL_BASE_LABELS)
-    frozen = _cell_means(base, "label")
-    stale = base.withColumn("cell", F.col("label")).unionByName(
-        _nearest_cell(app, frozen)
-    )
+    frozen = _cell_means(base, "cell")
+    stale = base.unionByName(_nearest_cell(app, frozen))
     rebal = _cell_means(stale, "cell")
     new = _nearest_cell(corpus, rebal)
     return corpus, frozen, stale, rebal, new
@@ -3660,34 +3433,15 @@ simsearch_ivf_rebalance.__doc__ = simsearch_ivf_rebalance.__doc__.format(
 
 def _rebal_probe(queries: DataFrame, cells: DataFrame, assign: DataFrame,
                  hit_col: str) -> DataFrame:
-    """nprobe-cell probe + exact re-rank within probed cells (the same
-    probe as ``simsearch_ivf``) against one (cells, assignment) index
-    generation; returns (q_id, vec_id) candidate top-k."""
-    c_cos = _dot(F.col("q_emb"), F.col("centroid")) / (
-        F.sqrt("q_nrm") * F.sqrt("cnrm")
+    """``_probe`` + exact re-rank within the probed cells against one
+    (cells, assignment) index generation; returns the candidate top-k
+    as (q_<hit_col>, <hit_col>)."""
+    probed = _probe(queries, cells, _REBAL_NPROBE)
+    cand = assign.join(F.broadcast(probed), "cell").where(
+        F.col("vec_id") != F.col("q_id")
     )
-    wc = Window.partitionBy("q_id").orderBy(F.col("c_cos").desc(), "cell")
-    probed = (
-        queries.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("cell_rnk", F.row_number().over(wc))
-        .where(F.col("cell_rnk") <= _REBAL_NPROBE)
-        .select("q_id", "q_emb", "q_nrm", "cell")
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        assign.join(F.broadcast(probed), "cell")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _REBAL_K)
-        .select(
-            F.col("q_id").alias(f"q_{hit_col}"),
-            F.col("vec_id").alias(hit_col),
-        )
+    return _cos_topk(cand, _REBAL_K).select(
+        F.col("q_id").alias(f"q_{hit_col}"), F.col("vec_id").alias(hit_col)
     )
 
 
@@ -3704,27 +3458,13 @@ def simsearch_recall_rebalance(
     near-arbitrary cells, while the rebalanced centroids carry the
     arrived mass and point the probe back at it."""
     corpus, frozen, stale, rebal, new = _rebal_state(spark, sf_dir)
-    queries = (
+    queries = _as_queries(
         corpus.where(F.col("label") >= _REBAL_BASE_LABELS)
         .orderBy("vec_id")
         .limit(_REBAL_NQ)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
     )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    wt = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    truth = (
-        corpus.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(wt))
-        .where(F.col("rnk") <= _REBAL_K)
-        .select("q_id", "vec_id")
+    truth = _cos_topk(_scan_pairs(corpus, queries), _REBAL_K).select(
+        "q_id", "vec_id"
     )
     c_stale = _rebal_probe(queries, frozen, stale, "hit_stale")
     c_rebal = _rebal_probe(queries, rebal, new, "hit_rebal")
@@ -3957,21 +3697,15 @@ def _pq_dist_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, c_label, m, d_int): 1e9-scaled integer squared L2
     distance between every vector's m-th subvector and every codebook
     centroid for that subspace. The codebook is the label clustering's
-    floor-scaled integer mean (same deterministic construction as
-    ``simsearch_ivf``), sliced per subspace; per-dim squared errors are
-    floored into BIGINTs BEFORE the per-subspace sum so the aggregate
-    is partition-order-proof and engine-exact."""
+    ``_dim_means`` integer means, sliced per subspace; per-dim squared
+    errors are floored into BIGINTs BEFORE the per-subspace sum so the
+    aggregate is partition-order-proof and engine-exact."""
     emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
-        "vec_id", "label", F.posexplode(F.col("embedding")).alias("pos", "val")
+        "vec_id", F.posexplode(F.col("embedding")).alias("pos", "val")
     )
-    cdims = dims.groupBy(F.col("label").alias("c_label"), "pos").agg(
-        (
-            F.sum(F.floor(F.col("val").cast("double") * 1e8).cast("long")).cast(
-                "double"
-            )
-            / (F.count(F.lit(1)).cast("double") * 1e8)
-        ).alias("cval")
+    cdims = _dim_means(
+        emb.select(F.col("label").alias("c_label"), "embedding"), "c_label"
     )
     diff = F.col("val").cast("double") - F.col("cval")
     se = dims.join(F.broadcast(cdims), "pos").select(
@@ -3982,6 +3716,45 @@ def _pq_dist_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return se.groupBy("vec_id", "c_label", "m").agg(
         F.sum("se_int").alias("d_int")
+    )
+
+
+def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The PQ index shared by ``simsearch_pq`` and ``simsearch_ivfadc``:
+    the codes (vec_id, m, code) — each subvector's nearest codebook
+    centroid, ties to the smaller label — and the ADC lookup table
+    (q_id, code, m, d_int), the queries' OWN subspace distances to
+    every centroid."""
+    dist = _pq_dist_frame(spark, sf_dir)
+    wc = Window.partitionBy("vec_id", "m").orderBy("d_int", "c_label")
+    codes = (
+        dist.withColumn("rn", F.row_number().over(wc))
+        .where(F.col("rn") == 1)
+        .select("vec_id", "m", F.col("c_label").alias("code"))
+    )
+    qd = dist.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("c_label").alias("code"),
+        "m",
+        "d_int",
+    )
+    return codes, qd
+
+
+def _adc_top10(adc: DataFrame) -> DataFrame:
+    """Per-query top-10 of the (q_id, vec_id, adc_e9) ADC sums, ties by
+    vec_id, with the distance rounded back to float as ``adc_dist``."""
+    w = Window.partitionBy("q_id").orderBy("adc_e9", "vec_id")
+    return (
+        adc.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= 10)
+        .select(
+            "q_id",
+            "vec_id",
+            "adc_e9",
+            F.round(F.col("adc_e9").cast("double") / 1e9, 6).alias("adc_dist"),
+            "rnk",
+        )
     )
 
 
@@ -4000,38 +3773,14 @@ def simsearch_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking break ties by label/vec_id — the whole ANN pipeline
     hash-matches the DuckDB oracle, like `simsearch_ivf`.
     """
-    dist = _pq_dist_frame(spark, sf_dir)
-    wc = Window.partitionBy("vec_id", "m").orderBy("d_int", "c_label")
-    codes = (
-        dist.withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("c_label").alias("code"))
-    )
-    # ADC lookup table: the query's OWN subspace distances to centroids
-    qd = dist.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("c_label").alias("code"),
-        "m",
-        "d_int",
-    )
+    codes, qd = _pq_index(spark, sf_dir)
     adc = (
         codes.join(F.broadcast(qd), ["m", "code"])
         .where(F.col("vec_id") != F.col("q_id"))
         .groupBy("q_id", "vec_id")
         .agg(F.sum("d_int").alias("adc_e9"))
     )
-    w = Window.partitionBy("q_id").orderBy("adc_e9", "vec_id")
-    return (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select(
-            "q_id",
-            "vec_id",
-            "adc_e9",
-            F.round(F.col("adc_e9").cast("double") / 1e9, 6).alias("adc_dist"),
-            "rnk",
-        )
-    )
+    return _adc_top10(adc)
 
 
 _PQ_DIST_SQL = f"""
@@ -4128,10 +3877,10 @@ def simsearch_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse probe × PQ/ADC fine ranking — the composition FAISS
     ships as IVFADC and the layout every billion-vector deployment
     actually runs: the coarse quantizer prunes the corpus to the
-    probed cells (here the same per-label centroids and nprobe=2 probe
-    as ``simsearch_ivf``), and inside those cells candidates are
+    probed cells (here ``_cell_means`` per-label centroids and the
+    nprobe=2 ``_probe``), and inside those cells candidates are
     ranked by PQ asymmetric distance (8 code bytes per vector, the
-    broadcast ADC table of ``simsearch_pq``) instead of exact float
+    broadcast ADC table of ``_pq_index``) instead of exact float
     dot products. Cost per query: |probed cells| ÷ |corpus| of the
     scan × 1 byte-lookup-join per candidate — both axes compressed.
 
@@ -4142,43 +3891,14 @@ def simsearch_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: integer-mean centroids, 1e9-floored integer ADC
     sums, (adc, vec_id) tie-breaks — full SQL-hash oracle. Recall
     twin: ``simsearch_recall_ivfadc``."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        "vec_id",
+    corpus = _vectors(
+        load_table(spark, sf_dir, "embeddings"),
         F.col("label").cast("long").alias("label"),
-        "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("nrm"),
     )
-    cells = _cell_means(corpus, "label")
-    queries = corpus.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c_cos = _dot(F.col("q_emb"), F.col("centroid")) / (
-        F.sqrt("q_nrm") * F.sqrt("cnrm")
-    )
-    wc = Window.partitionBy("q_id").orderBy(F.col("c_cos").desc(), "cell")
-    probed = (
-        queries.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("cell_rnk", F.row_number().over(wc))
-        .where(F.col("cell_rnk") <= 2)
-        .select("q_id", F.col("cell").alias("label"))
-    )
-    dist = _pq_dist_frame(spark, sf_dir)
-    wcode = Window.partitionBy("vec_id", "m").orderBy("d_int", "c_label")
-    codes = (
-        dist.withColumn("rn", F.row_number().over(wcode))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("c_label").alias("code"))
-    )
-    qd = dist.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("c_label").alias("code"),
-        "m",
-        "d_int",
-    )
+    probed = _probe(
+        _queries(corpus), _cell_means(corpus, "label"), 2
+    ).select("q_id", "label")
+    codes, qd = _pq_index(spark, sf_dir)
     cand = (
         corpus.select("vec_id", "label")
         .join(F.broadcast(probed), "label")
@@ -4191,20 +3911,7 @@ def simsearch_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "vec_id")
         .agg(F.sum("d_int").alias("adc_e9"))
     )
-    w = Window.partitionBy("q_id").orderBy("adc_e9", "vec_id")
-    return (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select(
-            "q_id",
-            "vec_id",
-            "adc_e9",
-            F.round(F.col("adc_e9").cast("double") / 1e9, 6).alias(
-                "adc_dist"
-            ),
-            "rnk",
-        )
-    )
+    return _adc_top10(adc)
 
 
 def simsearch_recall_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6980,29 +6687,12 @@ def simsearch_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; text branch: equi-join on the token — linear, shuffle on the
     token key); the fusion is a full outer join of two ≤20-row-per-query
     lists — trivially small however large the corpus."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    base = _vectors(load_table(spark, sf_dir, "embeddings"))
     docs = load_table(spark, sf_dir, "documents")
 
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    vq = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    wv = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    vec = (
-        base.crossJoin(F.broadcast(vq))
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("vec_rank", F.row_number().over(wv))
-        .where(F.col("vec_rank") <= _RRF_CAND)
-        .select("q_id", F.col("vec_id").alias("cand_id"), "vec_rank")
-    )
-
+    vec = _cos_topk(
+        _scan_pairs(base, _queries(base)), _RRF_CAND, "vec_rank"
+    ).select("q_id", F.col("vec_id").alias("cand_id"), "vec_rank")
     toks = _toks_frame(docs, "doc_id").select(
         "doc_id", F.explode(F.array_distinct("toks")).alias("tok")
     )
@@ -7110,33 +6800,17 @@ def simsearch_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator is the LSH/IVF path and this exact scoring is the re-rank
     stage over its candidates — the label filter is a pushed-down
     predicate either way."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    base = emb.select("vec_id", "label", "embedding", norm.alias("nrm"))
-    queries = base.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    base = _vectors(load_table(spark, sf_dir, "embeddings"), "label")
+    cand = base.crossJoin(F.broadcast(_queries(base, "label"))).where(
+        F.col("label") != F.col("q_label")
     )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt("q_nrm") * F.sqrt("nrm")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        base.crossJoin(F.broadcast(queries))
-        .where(F.col("label") != F.col("q_label"))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 5)
-        .select(
-            "q_id",
-            "q_label",
-            F.col("vec_id").alias("neg_id"),
-            F.col("label").alias("neg_label"),
-            "cos",
-            "rnk",
-        )
+    return _cos_topk(cand, 5).select(
+        "q_id",
+        "q_label",
+        F.col("vec_id").alias("neg_id"),
+        F.col("label").alias("neg_label"),
+        "cos",
+        "rnk",
     )
 
 

@@ -12,8 +12,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
+
+_STAGE_ID = re.compile(r"\s*\(\d+\)$")
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -45,5 +49,29 @@ def uses(df: DataFrame, operator: str) -> bool:
     return operator in formatted_plan(df)
 
 
-def count_occurrences(df: DataFrame, operator: str) -> int:
-    return formatted_plan(df).count(operator)
+def node_counts(df: DataFrame, logical: bool = False) -> Counter:
+    """Operator nodes in ``df``'s plan, counted node by node.
+
+    The physical form walks the executed plan and, under AQE, the
+    ``AdaptiveSparkPlan``'s ``initialPlan()`` (the plan before any
+    stage has run); names are Spark's node names without the codegen
+    stage id, e.g. ``Exchange`` (a shuffle), ``BroadcastExchange``,
+    ``BroadcastHashJoin``, ``Window``, ``Scan parquet``. With
+    ``logical=True`` it walks the optimized logical plan (``Join``,
+    ``Aggregate``, ...). A substring count over ``explain()`` text
+    cannot stand in for this: the formatted mode prints every operator
+    twice, and ``Exchange`` is also a substring of ``BroadcastExchange``
+    and ``ReusedExchange``."""
+    qe = df._jdf.queryExecution()
+    root = qe.optimizedPlan() if logical else qe.executedPlan()
+    counts: Counter = Counter()
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.initialPlan())
+            continue
+        counts[_STAGE_ID.sub("", node.nodeName()).strip()] += 1
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return counts

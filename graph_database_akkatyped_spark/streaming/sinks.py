@@ -833,16 +833,14 @@ def run_stream_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph_database_akkatyped_spark.operators.llm import (
         _REBAL_BASE_LABELS,
         _cell_means,
-        _dot,
+        _vectors,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.where(F.col("label") < _REBAL_BASE_LABELS).select(
-        "vec_id",
-        F.col("label").cast("long").alias("label"),
-        "embedding",
+        F.col("label").cast("long").alias("cell"), "embedding"
     )
-    cells = cut(_cell_means(base, "label"))
+    cells = cut(_cell_means(base, "cell"))
     store = IncrementalIvfStore(spark, cells)
     split_dir = _emb_split_dir(spark, sf_dir)
     schema = spark.read.parquet(split_dir).schema
@@ -855,12 +853,7 @@ def run_stream_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         vecs = cut(
-            batch_df.select(
-                "vec_id",
-                F.col("label").cast("long").alias("label"),
-                "embedding",
-                _dot(F.col("embedding"), F.col("embedding")).alias("nrm"),
-            )
+            _vectors(batch_df, F.col("label").cast("long").alias("label"))
         )
         last.append((vecs, batch_id))
         store.apply(vecs, batch_id)

@@ -255,7 +255,7 @@ def test_journal_compaction_invariants_and_falsifiability(spark):
 # ---------------------------------------------------------- bench.py
 
 
-def _write_artifact(path, sf, cold, canary, queries, drift):
+def _write_artifact(path, sf, cold, canary, queries, drift, **extra):
     with open(path, "w") as fh:
         json.dump(
             {
@@ -264,31 +264,42 @@ def _write_artifact(path, sf, cold, canary, queries, drift):
                 "canary": canary,
                 "canary_drift": drift,
                 "queries": queries,
+                **extra,
             },
             fh,
         )
 
 
 def test_canary_ref_reads_round_close_artifact(tmp_path, monkeypatch):
+    """The bench compares a run with the committed round-close artifact
+    only when sf, cache regime and core count all match; otherwise it
+    names the reason and compares nothing (drift and regressions null)."""
     import bench
 
     monkeypatch.setattr(bench, "_REPO", str(tmp_path))
-    # no artifact -> fallback constant
-    assert bench._canary_ref(False, 0.1) == pytest.approx(
-        bench._CANARY_REF_FALLBACK[False][0.1]
-    )
-    # committed artifact -> its canary sum wins (round-over-round)
+    # no artifact -> not comparable, with a reason
+    prev, why = bench._comparable_round_close(False, 0.1, 4)
+    assert prev is None and "BENCH_FULL.json" in why
     canary = {k: 0.2 for k in bench._CANARY_KEYS}
+    # an artifact without a core count is never comparable
+    _write_artifact(tmp_path / "BENCH_FULL.json", 0.1, False, canary, {}, 1.0)
+    prev, why = bench._comparable_round_close(False, 0.1, 4)
+    assert prev is None and "cpus" in why
+    # same sf, regime and cores -> its canary sum is the reference
     _write_artifact(
-        tmp_path / "BENCH_FULL.json", 0.1, False, canary, {}, 1.0
+        tmp_path / "BENCH_FULL.json", 0.1, False, canary, {}, 1.0, cpus=4
     )
-    assert bench._canary_ref(False, 0.1) == pytest.approx(0.6)
-    # off-protocol sf -> artifact ignored, fallback (None off 0.1)
-    assert bench._canary_ref(False, 0.01) is None
-    # cold regime reads the COLD artifact, not the warm one
-    assert bench._canary_ref(True, 0.1) == pytest.approx(
-        bench._CANARY_REF_FALLBACK[True][0.1]
-    )
+    prev, why = bench._comparable_round_close(False, 0.1, 4)
+    assert why is None
+    assert bench._canary_ref(prev) == pytest.approx(0.6)
+    # another core count or sf -> not comparable
+    assert bench._comparable_round_close(False, 0.1, 32)[0] is None
+    assert "sf" in bench._comparable_round_close(False, 0.01, 4)[1]
+    # the cold regime reads the COLD artifact, not the warm one
+    assert bench._comparable_round_close(True, 0.1, 4)[0] is None
+    # an artifact missing a canary key gives no reference
+    del prev["canary"][bench._CANARY_KEYS[0]]
+    assert bench._canary_ref(prev) is None
 
 
 def test_regression_gate_math_flags_only_true_movers():

@@ -42,6 +42,7 @@ from graph_database_akkatyped_spark.operators.graph_extras import (
     scc_frame,
     topo_longest_path,
 )
+from graph_database_akkatyped_spark.plans.explain import node_counts
 from tests.conftest import SF_ORACLE
 
 SF = SF_ORACLE  # 150 users
@@ -208,8 +209,8 @@ def test_jaccard_pair_frames_thread_sizes(spark):
         _ngram_pairs(spark, SF_SMOKE),
         dedup_incremental(spark, SF_SMOKE),
     ):
-        plan = frame._jdf.queryExecution().optimizedPlan().toString()
-        assert plan.count("Join") == 3, plan
+        joins = node_counts(frame, logical=True)["Join"]
+        assert joins == 3, frame._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_contain_verify_threads_sizes(spark):
@@ -234,9 +235,9 @@ def test_contain_verify_threads_sizes(spark):
         "a long, b long, n_a long, n_b long",
     )
     out = _contain_verify(cand, grams)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
     # two gram probes, zero sizes joins (the old shape had four)
-    assert plan.count("Join") == 2, plan
+    joins = node_counts(out, logical=True)["Join"]
+    assert joins == 2, out._jdf.queryExecution().optimizedPlan().toString()
     rows = {(r.a, r.b): r for r in out.collect()}
     # (0,1): |A∩B|=2, C(A in B)=2/2=1.0, C(B in A)=2/3 — survives
     # (0,2): |A∩B|=0 — empty intersection never reaches the filter
@@ -251,14 +252,6 @@ def test_contain_verify_threads_sizes(spark):
     assert r13.n_common == 1
     assert r13.contain_a_in_b == pytest.approx(1.0 / 3.0)
     assert r13.contain_b_in_a == pytest.approx(1.0)
-
-
-def _join_nodes(plan) -> int:
-    """Join operators in a Catalyst plan tree, counted node by node."""
-    kids = plan.children()
-    return int(plan.nodeName() == "Join") + sum(
-        _join_nodes(kids.apply(i)) for i in range(kids.size())
-    )
 
 
 def test_lp_count_only_wedge_matches_shared_frame(spark):
@@ -286,9 +279,6 @@ def test_lp_count_only_wedge_matches_shared_frame(spark):
     assert cn_only == full
     # and the count-only plan really has no d_z lookup: one wedge
     # equi-join plus the ce anti-join, nothing else
-    plan = (
-        _lp_candidates(spark, sf, with_ra=False)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-    )
-    assert _join_nodes(plan) == 2, plan.toString()
+    cn_frame = _lp_candidates(spark, sf, with_ra=False)
+    joins = node_counts(cn_frame, logical=True)["Join"]
+    assert joins == 2, cn_frame._jdf.queryExecution().optimizedPlan().toString()

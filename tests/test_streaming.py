@@ -808,7 +808,7 @@ def test_ivf_store_ledger_and_batch_convergence(spark):
     )
     base = emb.where(F.col("label") < _REBAL_BASE_LABELS)
     app = emb.where(F.col("label") >= _REBAL_BASE_LABELS)
-    cells = cut(_cell_means(base, "label"))
+    cells = cut(_cell_means(base.withColumn("cell", F.col("label")), "cell"))
     store = IncrementalIvfStore(spark, cells)
     b0 = app.where(F.col("vec_id") % 2 == 0)
     b1 = app.where(F.col("vec_id") % 2 == 1)
