@@ -22,6 +22,10 @@ from graph_database_akkatyped_spark.catalog import load_table
 from graph_database_akkatyped_spark.operators.llm import (
     _GRAM_FROM_TOKS,
     _TOKS,
+    _cos_verify,
+    _shingles,
+    _sign_bands,
+    _text_hash,
     _toks_frame,
 )
 
@@ -73,16 +77,10 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = docs.where(F.col("b") <= 7)
     test = docs.where(F.col("b") == 9)
-    test_grams = (
-        _toks_frame(test)
-        .select(F.explode(F.expr(_GRAM_FROM_TOKS)).alias("g"))
-        .distinct()
-    )
-    train_grams = _toks_frame(train, "doc_id").select(
-        "doc_id", F.explode(F.expr(_GRAM_FROM_TOKS)).alias("g")
-    )
+    test_grams = _shingles(test).distinct()
     shared = (
-        train_grams.join(F.broadcast(test_grams), "g")
+        _shingles(train, "doc_id")
+        .join(F.broadcast(test_grams), "g")
         .distinct()
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
@@ -340,7 +338,7 @@ def curation_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "text",
-        F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("th"),
+        _text_hash().alias("th"),
         F.expr(_TOKS).alias("toks"),
     )
     w = Window.partitionBy("th")
@@ -698,12 +696,11 @@ def corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     q = quality_gopher_rules(spark, sf_dir).select("doc_id", "keep")
-    h = F.sha2(F.lower(F.trim(F.col("text"))), 256)
     from pyspark.sql import Window
 
     wmin = Window.partitionBy("text_hash")
     e = (
-        docs.select("doc_id", h.alias("text_hash"))
+        docs.select("doc_id", _text_hash().alias("text_hash"))
         .withColumn("e_keep", F.col("doc_id") == F.min("doc_id").over(wmin))
         .select("doc_id", "e_keep")
     )
@@ -815,10 +812,10 @@ def decontam_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rendered leaks that share no surface n-grams — the audit both
     the benchmark-hygiene and dataset-release literature now expect.
 
-    Scale shape: candidates come from the same 8-band sign-LSH as
-    dedup_embedding_cosine / dedup_semantic, but as a TRAIN × EVAL
-    bipartite equi-join on (band, key) — never the |train|·|eval|
-    cross product; only banded candidates get the exact-dot verify.
+    Scale shape: candidates come from the ``_sign_bands`` 8-band
+    sign-LSH, but as a TRAIN × EVAL bipartite equi-join on (band, key)
+    — never the |train|·|eval| cross product; only banded candidates
+    get the exact-dot verify (``_cos_verify``).
     Band recall rises with the threshold, so at the production
     setting (near-duplicate leaks, τ ≥ 0.9) the bands are a
     high-recall pruner; the fixture τ of 0.30 exercises the same
@@ -826,22 +823,12 @@ def decontam_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical banded candidate set, so even max_cos value-hashes.
     Output: one row per eval vector (clean rows keep NULL max_cos),
     linear in corpus size."""
-    from graph_database_akkatyped_spark.operators.llm import (
-        _EMB_BANDS,
-        _dot,
-        _sign_band_key,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings").withColumn(
         "b", F.expr(_VEC_BUCKET)
     )
-    banded = emb.select(
-        "vec_id",
-        "b",
-        F.posexplode(
-            F.array(*[_sign_band_key(k) for k in range(_EMB_BANDS)])
-        ).alias("band", "key"),
-    )
+    banded = _sign_bands(emb, "b")
+    # a train x eval join, not a self-join: each side keeps its own
+    # filter and there is no a < b, so it stays out of _band_pairs
     cand = (
         banded.where(F.col("b") <= 7)
         .select(F.col("vec_id").alias("t"), "band", "key")
@@ -853,30 +840,8 @@ def decontam_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("t", "v")
         .distinct()
     )
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    e = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    cos = _dot(F.col("emb_t"), F.col("emb_v")) / (
-        F.sqrt("nrm_t") * F.sqrt("nrm_v")
-    )
     hits = (
-        cand.join(
-            e.select(
-                F.col("vec_id").alias("t"),
-                F.col("embedding").alias("emb_t"),
-                F.col("nrm").alias("nrm_t"),
-            ),
-            "t",
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("v"),
-                F.col("embedding").alias("emb_v"),
-                F.col("nrm").alias("nrm_v"),
-            ),
-            "v",
-        )
-        .withColumn("cos", cos)
-        .where(F.col("cos") >= F.lit(_DECONTAM_SEM_COS))
+        _cos_verify(cand, emb, "t", "v", _DECONTAM_SEM_COS)
         .groupBy(F.col("v").alias("vec_id"))
         .agg(
             F.count(F.lit(1)).alias("n_train_near"),

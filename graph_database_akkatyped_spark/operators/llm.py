@@ -73,12 +73,280 @@ def _sql_dot(a: str, b: str) -> str:
 # ------------------------------------------------------------------ dedup
 
 
+# Every dedup, decontamination and signature key is assembled from the
+# stages below, one definition each: the exact text hash, the
+# word-3-gram shingle explode and its memoized corpus frame, the
+# salted-md5 MinHash minima and their band explode, the banded
+# self-join, the gram-overlap Jaccard verify, the sign-LSH band explode
+# and the cosine pair verify. Each key is a banded candidate stage plus
+# an exact verify stage; oracle parity rests on their recipes (md5
+# salts, band width, the gram definition, the ``_dot`` operand order),
+# so a change to one of them lands in one place for every key.
+
+_NGRAM_HASHES = 8  # deterministic minhash functions (1 band each, r=1)
+_JACCARD_MIN = 0.1
+
+
+# word-3-gram shingles; the slice length is clamped to ≥ 0: a doc with
+# < 3 tokens has no 3-grams — an unclamped ``size - 2`` goes negative
+# and Spark raises INVALID_PARAMETER_VALUE on exactly the short/empty
+# docs a real dedup corpus contains (the DuckDB twin's list_slice
+# clamps, so the engines would diverge)
+_GRAM_EXPR = (
+    f"transform(slice({_TOKS}, 1, greatest(size({_TOKS}) - 2, 0)), "
+    f"(x, i) -> concat(x, ' ', {_TOKS}[i + 1], ' ', {_TOKS}[i + 2]))"
+)
+
+# Same shingles over a PRE-PROJECTED `toks` array column. Expressions
+# referenced inside a higher-order-function lambda re-evaluate per
+# element access, so `split(text)[i + 1]` inside transform() re-splits
+# the whole document for every gram — O(tokens²) character work.
+# Projecting the split once (CollapseProject keeps multi-use aliases
+# materialized) made text_repetition 6x faster at sf0.1; every
+# gram-family operator goes through this form.
+_GRAM_FROM_TOKS = (
+    "transform(slice(toks, 1, greatest(size(toks) - 2, 0)), "
+    "(x, i) -> concat(x, ' ', toks[i + 1], ' ', toks[i + 2]))"
+)
+
+
+def _toks_frame(docs: DataFrame, *cols: str) -> DataFrame:
+    """Project the whitespace token array ONCE (see _GRAM_FROM_TOKS)."""
+    return docs.select(*cols, F.expr(_TOKS).alias("toks"))
+
+
+def _minhash(k: int) -> Column:
+    """60-bit salted md5 hash of a shingle — the same bytes both engines
+    can compute, so the minhash signature (and therefore the candidate
+    set) is bit-identical to the SQL oracle. Hash 2s and 2s+1 are the
+    two 60-bit halves of md5(g|s): 8 hash functions for 4 md5 calls
+    (md5 dominates signature cost at corpus scale)."""
+    salt, off = k // 2, 1 if k % 2 == 0 else 17
+    return (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.col("g"), F.lit(f"|{salt}"))), off, 15
+            ),
+            16,
+            10,
+        ).cast("long")
+    )
+
+
+def _minhash_sql(k: int) -> str:
+    salt, off = k // 2, 1 if k % 2 == 0 else 17
+    return f"CAST('0x' || substr(md5(g || '|{salt}'), {off}, 15) AS BIGINT)"
+
+
+_EMB_BANDS = 8
+_EMB_BAND_BITS = 8
+
+
+def _sign_band_key(band: int) -> Column:
+    """Band key = the 8 sign bits of dims [band*8, band*8+8). Sign
+    random projection (SimHash for cosine): vectors with cosine ≥ 0.95
+    agree on almost every sign, so they collide in ≥ 1 of the 8 bands
+    w.p. ≈ 0.99, while unrelated vectors land in 256-way buckets. Sign
+    compares are exact in both engines — no float-arithmetic drift."""
+    bits: Column = F.lit(0)
+    for j in range(_EMB_BAND_BITS):
+        bits = bits + F.when(
+            F.col("embedding").getItem(band * _EMB_BAND_BITS + j) > 0,
+            F.lit(1 << j),
+        ).otherwise(F.lit(0))
+    return bits
+
+
+def _sign_band_key_sql(band: int) -> str:
+    terms = " + ".join(
+        f"CASE WHEN embedding[{band * _EMB_BAND_BITS + j + 1}] > 0 "
+        f"THEN {1 << j} ELSE 0 END"
+        for j in range(_EMB_BAND_BITS)
+    )
+    return f"({terms})"
+
+
+def _text_hash() -> Column:
+    """The exact-dedup key: sha256 of the trimmed, lower-cased text."""
+    return F.sha2(F.lower(F.trim(F.col("text"))), 256)
+
+
+def _shingles(docs: DataFrame, *key: str) -> DataFrame:
+    """(*key, g): every word-3-gram of each ``docs`` text, repeats kept
+    (``_GRAM_FROM_TOKS`` over the once-projected token array)."""
+    return _toks_frame(docs, *key).select(
+        *key, F.explode(F.expr(_GRAM_FROM_TOKS)).alias("g")
+    )
+
+
+def _gram_frame(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, g) word-3-gram shingles (see ``_GRAM_EXPR``)."""
+    return _shingles(docs, "doc_id").distinct()
+
+
+def _ngram_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus ``_gram_frame``, memoized per (session, sf_dir): the
+    MinHash-banded keys read it for signatures and again per verify
+    side."""
+    return memoized_checkpoint(
+        spark, "ngram_grams", sf_dir,
+        lambda: _gram_frame(load_table(spark, sf_dir, "documents")),
+    )
+
+
+def _minhash_mins() -> list[Column]:
+    """The signature aggregates m0..m7: each ``_minhash``'s minimum over
+    a document's shingles."""
+    return [F.min(_minhash(k)).alias(f"m{k}") for k in range(_NGRAM_HASHES)]
+
+
+def _sig_bands(sigs: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, *carry, k, mh): one row per band of each signature in
+    ``sigs`` — band k is minhash m<k> alone (r = 1)."""
+    return sigs.select(
+        "doc_id",
+        *carry,
+        F.posexplode(
+            F.array(*[F.col(f"m{k}") for k in range(_NGRAM_HASHES)])
+        ).alias("k", "mh"),
+    )
+
+
+def _ngram_bands(grams: DataFrame) -> DataFrame:
+    """(doc_id, n_g, k, mh): the signature bands of ``grams`` with each
+    document's gram count n_g, which rides the signature aggregate for
+    free (same groupBy) so the verify needs no sizes join."""
+    return _sig_bands(
+        grams.groupBy("doc_id").agg(
+            *_minhash_mins(), F.count(F.lit(1)).alias("n_g")
+        ),
+        "n_g",
+    )
+
+
+# the gram count n_g of each band row, carried as n_a / n_b per pair
+_N_AB = (("n_g", "n_a", "n_b"),)
+
+
+def _band_pairs(
+    bands: DataFrame,
+    id_col: str,
+    key: tuple[str, ...],
+    carry: tuple[tuple[str, str, str], ...] = (),
+) -> DataFrame:
+    """The banded self-join: distinct candidate pairs (a, b, ...), a < b,
+    of the ``id_col`` rows of ``bands`` that agree on every ``key``
+    column. ``carry`` holds (column, a-side name, b-side name) triples;
+    a carried column must be a function of the id, so carrying it leaves
+    the distinct's cardinality (and the pair set) unchanged."""
+
+    def side(name: str, names: list[tuple[str, str]]) -> DataFrame:
+        return bands.select(
+            F.col(id_col).alias(name),
+            *(F.col(c).alias(n) for c, n in names),
+            *key,
+        )
+
+    return (
+        side("a", [(c, na) for c, na, _ in carry])
+        .join(side("b", [(c, nb) for c, _, nb in carry]), list(key))
+        .where(F.col("a") < F.col("b"))
+        .select(
+            "a", "b", *(na for _, na, _ in carry), *(nb for _, _, nb in carry)
+        )
+        .distinct()
+    )
+
+
+def _jaccard() -> Column:
+    """|A∩B| / |A∪B| of a pair from its n_common, n_a and n_b columns."""
+    return F.col("n_common").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_common")
+    ).cast("double")
+
+
+def _gram_overlap(
+    cand: DataFrame, grams: DataFrame, a: str, b: str, *sizes: str
+) -> DataFrame:
+    """(a, b, n_common, *sizes): the exact shared-gram count of every
+    candidate pair of ``cand``, whose sides are the columns ``a`` and
+    ``b``. ``sizes`` names per-pair constants of ``cand`` that max()
+    reads back through the aggregate instead of a sizes join."""
+    return (
+        cand.join(grams.select(F.col("doc_id").alias(a), "g"), a)
+        .join(grams.select(F.col("doc_id").alias(b), "g"), [b, "g"])
+        .groupBy(a, b)
+        .agg(
+            F.count(F.lit(1)).alias("n_common"),
+            *(F.max(c).alias(c) for c in sizes),
+        )
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, grams: DataFrame, a: str, b: str
+) -> DataFrame:
+    """(a, b, n_common, jaccard) of the candidate pairs of ``cand`` (a, b,
+    n_a, n_b) whose exact gram Jaccard is >= ``_JACCARD_MIN``."""
+    return (
+        _gram_overlap(cand, grams, a, b, "n_a", "n_b")
+        .withColumn("jaccard", _jaccard())
+        .where(F.col("jaccard") >= _JACCARD_MIN)
+        .select(a, b, "n_common", "jaccard")
+    )
+
+
+def _sign_bands(emb: DataFrame, *carry: str) -> DataFrame:
+    """(vec_id, *carry, band, key): one row per sign-LSH band of each
+    vector (``_sign_band_key``)."""
+    return emb.select(
+        "vec_id",
+        *carry,
+        F.posexplode(
+            F.array(*[_sign_band_key(b) for b in range(_EMB_BANDS)])
+        ).alias("band", "key"),
+    )
+
+
+def _cos_side(vecs: DataFrame, side: str) -> DataFrame:
+    """One side of a vector pair, (side, emb_<side>, nrm_<side>), from
+    the ``_vectors`` frame ``vecs``."""
+    return vecs.select(
+        F.col("vec_id").alias(side),
+        F.col("embedding").alias(f"emb_{side}"),
+        F.col("nrm").alias(f"nrm_{side}"),
+    )
+
+
+def _pair_cos(a: str, b: str) -> Column:
+    """Exact pair cosine emb_a·emb_b / (√nrm_a·√nrm_b) of two
+    ``_cos_side`` frames."""
+    return _dot(F.col(f"emb_{a}"), F.col(f"emb_{b}")) / (
+        F.sqrt(f"nrm_{a}") * F.sqrt(f"nrm_{b}")
+    )
+
+
+def _cos_verify(
+    cand: DataFrame, emb: DataFrame, a: str, b: str, tau: float
+) -> DataFrame:
+    """(*cand columns, cos): the candidate pairs of ``cand``, whose sides
+    are the vec_id columns ``a`` and ``b``, with exact cosine >= ``tau``
+    over the vectors of ``emb``."""
+    vecs = _vectors(emb)
+    return (
+        cand.join(_cos_side(vecs, a), a)
+        .join(_cos_side(vecs, b), b)
+        .withColumn("cos", _pair_cos(a, b))
+        .where(F.col("cos") >= tau)
+        .select(*cand.columns, "cos")
+    )
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text hash; keeper = min doc_id."""
     docs = load_table(spark, sf_dir, "documents")
-    h = F.sha2(F.lower(F.trim(F.col("text"))), 256)
     return (
-        docs.select(h.alias("text_hash"), "doc_id")
+        docs.select(_text_hash().alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
@@ -240,17 +508,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", "simhash32", "bk.band", "bk.key")
-    a = banded.select(
-        F.col("doc_id").alias("a"), F.col("simhash32").alias("fp_a"), "band", "key"
-    )
-    b = banded.select(
-        F.col("doc_id").alias("b"), F.col("simhash32").alias("fp_b"), "band", "key"
-    )
     return (
-        a.join(b, ["band", "key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", "fp_a", "fp_b")
-        .distinct()
+        _band_pairs(
+            banded, "doc_id", ("band", "key"), (("simhash32", "fp_a", "fp_b"),)
+        )
         .withColumn("hamming", F.expr("bit_count(fp_a ^ fp_b)"))
         .where(F.col("hamming") <= 6)
         .select("a", "b", "hamming")
@@ -293,70 +554,6 @@ WHERE bit_count(xor(fa, fb)) <= 6
 """
 
 
-_NGRAM_HASHES = 8  # deterministic minhash functions (1 band each, r=1)
-_JACCARD_MIN = 0.1
-
-
-# word-3-gram shingles; the slice length is clamped to ≥ 0: a doc with
-# < 3 tokens has no 3-grams — an unclamped ``size - 2`` goes negative
-# and Spark raises INVALID_PARAMETER_VALUE on exactly the short/empty
-# docs a real dedup corpus contains (the DuckDB twin's list_slice
-# clamps, so the engines would diverge)
-_GRAM_EXPR = (
-    f"transform(slice({_TOKS}, 1, greatest(size({_TOKS}) - 2, 0)), "
-    f"(x, i) -> concat(x, ' ', {_TOKS}[i + 1], ' ', {_TOKS}[i + 2]))"
-)
-
-# Same shingles over a PRE-PROJECTED `toks` array column. Expressions
-# referenced inside a higher-order-function lambda re-evaluate per
-# element access, so `split(text)[i + 1]` inside transform() re-splits
-# the whole document for every gram — O(tokens²) character work.
-# Projecting the split once (CollapseProject keeps multi-use aliases
-# materialized) made text_repetition 6x faster at sf0.1; every
-# gram-family operator goes through this form.
-_GRAM_FROM_TOKS = (
-    "transform(slice(toks, 1, greatest(size(toks) - 2, 0)), "
-    "(x, i) -> concat(x, ' ', toks[i + 1], ' ', toks[i + 2]))"
-)
-
-
-def _toks_frame(docs: DataFrame, *cols: str) -> DataFrame:
-    """Project the whitespace token array ONCE (see _GRAM_FROM_TOKS)."""
-    return docs.select(*cols, F.expr(_TOKS).alias("toks"))
-
-
-def _gram_frame(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, g) word-3-gram shingles (see ``_GRAM_EXPR``)."""
-    return (
-        _toks_frame(docs, "doc_id")
-        .select("doc_id", F.explode(F.expr(_GRAM_FROM_TOKS)).alias("g"))
-        .distinct()
-    )
-
-
-def _minhash(k: int) -> Column:
-    """60-bit salted md5 hash of a shingle — the same bytes both engines
-    can compute, so the minhash signature (and therefore the candidate
-    set) is bit-identical to the SQL oracle. Hash 2s and 2s+1 are the
-    two 60-bit halves of md5(g|s): 8 hash functions for 4 md5 calls
-    (md5 dominates signature cost at corpus scale)."""
-    salt, off = k // 2, 1 if k % 2 == 0 else 17
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("g"), F.lit(f"|{salt}"))), off, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-    )
-
-
-def _minhash_sql(k: int) -> str:
-    salt, off = k // 2, 1 if k % 2 == 0 else 17
-    return f"CAST('0x' || substr(md5(g || '|{salt}'), {off}, 15) AS BIGINT)"
-
-
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard ≥ 0.1 near-dup pairs, MinHash-banded.
 
@@ -396,58 +593,9 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the min-side shape: their regime IS the skewed excerpt⊂host case
     # the Σ min(|A|,|B|) bound targets, and it was measured 0.83 there
     # (round 11).
-    docs = load_table(spark, sf_dir, "documents")
-    grams = memoized_checkpoint(  # used 3x below
-        spark, "ngram_grams", sf_dir, lambda: _gram_frame(docs)
-    )
-    sigs = grams.groupBy("doc_id").agg(
-        *[F.min(_minhash(k)).alias(f"m{k}") for k in range(_NGRAM_HASHES)],
-        F.count(F.lit(1)).alias("n_g"),
-    )
-    lsig = sigs.select(
-        "doc_id",
-        "n_g",
-        F.posexplode(
-            F.array(*[F.col(f"m{k}") for k in range(_NGRAM_HASHES)])
-        ).alias("k", "mh"),
-    )
-    s1 = lsig.select(
-        F.col("doc_id").alias("a"), F.col("n_g").alias("n_a"), "k", "mh"
-    )
-    s2 = lsig.select(
-        F.col("doc_id").alias("b"), F.col("n_g").alias("n_b"), "k", "mh"
-    )
-    cand = (
-        s1.join(s2, ["k", "mh"])
-        .where(F.col("a") < F.col("b"))
-        # n_a/n_b are functions of a/b, so the distinct's cardinality
-        # (and the candidate pair set) is unchanged by carrying them
-        .select("a", "b", "n_a", "n_b")
-        .distinct()
-    )
-    ga = grams.select(F.col("doc_id").alias("a"), "g")
-    gb = grams.select(F.col("doc_id").alias("b"), "g")
-    common = (
-        cand.join(ga, "a")
-        .join(gb, ["b", "g"])
-        .groupBy("a", "b")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            # constant per (a, b) group — max() reads them back
-            # without a sizes join
-            F.max("n_a").alias("n_a"),
-            F.max("n_b").alias("n_b"),
-        )
-    )
-    return (
-        common.withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-        )
-        .where(F.col("jaccard") >= _JACCARD_MIN)
-        .select("a", "b", "n_common", "jaccard")
-    )
+    grams = _ngram_grams(spark, sf_dir)
+    cand = _band_pairs(_ngram_bands(grams), "doc_id", ("k", "mh"), _N_AB)
+    return _jaccard_verify(cand, grams, "a", "b")
 
 
 _DEDUP_NGRAM_SQL = f"""
@@ -509,11 +657,9 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash banding). Output: (src_a, src_b, n_shared, n_a, n_b,
     overlap_bp)."""
     docs = load_table(spark, sf_dir, "documents")
-    sg = (
-        _toks_frame(docs.select(F.col("source").alias("sid"), "text"), "sid")
-        .select("sid", F.explode(F.expr(_GRAM_FROM_TOKS)).alias("g"))
-        .distinct()
-    )
+    sg = _shingles(
+        docs.select(F.col("source").alias("sid"), "text"), "sid"
+    ).distinct()
     sizes = sg.groupBy("sid").agg(F.count(F.lit(1)).alias("n_g"))
     a = sg.select(F.col("sid").alias("src_a"), "g")
     b = sg.select(F.col("sid").alias("src_b"), "g")
@@ -668,23 +814,7 @@ def _contain_verify(cand: DataFrame, grams: DataFrame) -> DataFrame:
         F.when(small_a, F.col("n_a")).otherwise(F.col("n_b")).alias("n_s"),
         F.when(small_a, F.col("n_b")).otherwise(F.col("n_a")).alias("n_m"),
     )
-    common = (
-        ordered.join(
-            grams.select(F.col("doc_id").alias("sdoc"), "g"), "sdoc"
-        )
-        .join(
-            grams.select(F.col("doc_id").alias("mdoc"), "g"),
-            ["mdoc", "g"],
-        )
-        .groupBy("sdoc", "mdoc")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            # constant per (sdoc, mdoc) group — max() just reads them
-            # back without a sizes join
-            F.max("n_s").alias("n_s"),
-            F.max("n_m").alias("n_m"),
-        )
-    )
+    common = _gram_overlap(ordered, grams, "sdoc", "mdoc", "n_s", "n_m")
     a_is_s = F.col("sdoc") < F.col("mdoc")
     scored = common.select(
         F.least("sdoc", "mdoc").alias("a"),
@@ -717,10 +847,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     case Jaccard misses (a 10-line snippet fully contained in a
     10-page doc has J ≈ 0.01 but C ≈ 1.0).
 
-    Candidates come from the SAME memoized minhash bands as
-    ``dedup_ngram_jaccard`` (shared ``ngram_grams`` frame, linear
-    explode + equi-join, never all-pairs), then only candidates get the
-    exact intersection count. Honest recall note: minhash banding
+    Candidates come from the ``_ngram_bands`` signature bands over the
+    memoized ``_ngram_grams`` frame and the ``_band_pairs`` self-join
+    (linear explode + equi-join, never all-pairs), then only candidates
+    get the exact intersection count (``_gram_overlap``). Honest recall note: minhash banding
     recalls by JACCARD, so a tiny doc inside a huge one can be missed
     at the fringe — the standard scale fix is banding on the SMALL
     side's shingles only (sample each doc's first s shingles), which
@@ -731,43 +861,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: counts are exact integers; each containment is a
     single BIGINT/BIGINT IEEE division.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    grams = memoized_checkpoint(
-        spark, "ngram_grams", sf_dir, lambda: _gram_frame(docs)
-    )
-    # n_g rides the signature aggregate for free (same groupBy) and is
-    # carried through the band join so the verify needs no sizes joins
-    # (round-12 _contain_verify contract)
-    sigs = grams.groupBy("doc_id").agg(
-        *[F.min(_minhash(k)).alias(f"m{k}") for k in range(_NGRAM_HASHES)],
-        F.count(F.lit(1)).alias("n_g"),
-    )
-    lsig = sigs.select(
-        "doc_id",
-        "n_g",
-        F.posexplode(
-            F.array(*[F.col(f"m{k}") for k in range(_NGRAM_HASHES)])
-        ).alias("k", "mh"),
-    )
-    cand = (
-        lsig.select(
-            F.col("doc_id").alias("a"), F.col("n_g").alias("n_a"), "k", "mh"
-        )
-        .join(
-            lsig.select(
-                F.col("doc_id").alias("b"),
-                F.col("n_g").alias("n_b"),
-                "k",
-                "mh",
-            ),
-            ["k", "mh"],
-        )
-        .where(F.col("a") < F.col("b"))
-        # n_a/n_b are functions of a/b, so the distinct's cardinality
-        # (and the candidate pair set) is unchanged by carrying them
-        .select("a", "b", "n_a", "n_b")
-        .distinct()
-    )
+    grams = _ngram_grams(spark, sf_dir)
+    # n_g is carried through the band join so the verify needs no sizes
+    # joins (round-12 _contain_verify contract)
+    cand = _band_pairs(_ngram_bands(grams), "doc_id", ("k", "mh"), _N_AB)
     return _contain_verify(cand, grams)
 
 
@@ -863,10 +960,7 @@ def dedup_containment_smallside(spark: SparkSession, sf_dir: str) -> DataFrame:
     to strip). The oracle applies the same cap, so parity is
     unaffected either way.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    grams = memoized_checkpoint(
-        spark, "ngram_grams", sf_dir, lambda: _gram_frame(docs)
-    )
+    grams = _ngram_grams(spark, sf_dir)
     rare = (
         grams.groupBy("g")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -1003,33 +1097,13 @@ def dedup_banding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (
         common.join(na, "a")
         .join(nb, "b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast(
-                "double"
-            ),
-        )
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= _RECALL_MIN)
         .select("a", "b", "jaccard")
     )
-    sigs = grams.groupBy("doc_id").agg(
-        *[F.min(_minhash(k)).alias(f"m{k}") for k in range(_NGRAM_HASHES)]
-    )
-    lsig = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"m{k}") for k in range(_NGRAM_HASHES)])
-        ).alias("k", "mh"),
-    )
-    s1 = lsig.select(F.col("doc_id").alias("a"), "k", "mh")
-    s2 = lsig.select(F.col("doc_id").alias("b"), "k", "mh")
-    cand = (
-        s1.join(s2, ["k", "mh"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .withColumn("hit", F.lit(1).cast("long"))
+    bands = _sig_bands(grams.groupBy("doc_id").agg(*_minhash_mins()))
+    cand = _band_pairs(bands, "doc_id", ("k", "mh")).withColumn(
+        "hit", F.lit(1).cast("long")
     )
     return (
         truth.join(cand, ["a", "b"], "left")
@@ -1148,33 +1222,7 @@ FROM reach GROUP BY s
 """
 
 
-_EMB_BANDS = 8
-_EMB_BAND_BITS = 8
 _EMB_COS_MIN = 0.95
-
-
-def _sign_band_key(band: int) -> Column:
-    """Band key = the 8 sign bits of dims [band*8, band*8+8). Sign
-    random projection (SimHash for cosine): vectors with cosine ≥ 0.95
-    agree on almost every sign, so they collide in ≥ 1 of the 8 bands
-    w.p. ≈ 0.99, while unrelated vectors land in 256-way buckets. Sign
-    compares are exact in both engines — no float-arithmetic drift."""
-    bits: Column = F.lit(0)
-    for j in range(_EMB_BAND_BITS):
-        bits = bits + F.when(
-            F.col("embedding").getItem(band * _EMB_BAND_BITS + j) > 0,
-            F.lit(1 << j),
-        ).otherwise(F.lit(0))
-    return bits
-
-
-def _sign_band_key_sql(band: int) -> str:
-    terms = " + ".join(
-        f"CASE WHEN embedding[{band * _EMB_BAND_BITS + j + 1}] > 0 "
-        f"THEN {1 << j} ELSE 0 END"
-        for j in range(_EMB_BAND_BITS)
-    )
-    return f"({terms})"
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1200,42 +1248,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a g·(g+1)/2 slot grid with IDENTICAL candidate semantics.
     Demonstrated in tools/dedup_skew_check.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    banded = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[_sign_band_key(b) for b in range(_EMB_BANDS)])
-        ).alias("band", "key"),
-    )
-    cand = (
-        banded.select(F.col("vec_id").alias("a"), "band", "key")
-        .join(banded.select(F.col("vec_id").alias("b"), "band", "key"),
-              ["band", "key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    e = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    ea = e.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("emb_a"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt("nrm_a") * F.sqrt("nrm_b")
-    )
-    return (
-        cand.join(ea, "a")
-        .join(eb, "b")
-        .withColumn("cos", cos)
-        .where(F.col("cos") >= _EMB_COS_MIN)
-        .select("a", "b", "cos")
-    )
+    cand = _band_pairs(_sign_bands(emb), "vec_id", ("band", "key"))
+    return _cos_verify(cand, emb, "a", "b", _EMB_COS_MIN)
 
 
 _DEDUP_EMB_SQL = f"""
@@ -1287,12 +1301,9 @@ def dedup_embedding_cosine_salted(
     can split (both join sides share it)."""
     g = n_salt
     emb = load_table(spark, sf_dir, "embeddings")
-    banded = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[_sign_band_key(b) for b in range(_EMB_BANDS)])
-        ).alias("band", "key"),
-    ).withColumn("grp", F.pmod(F.xxhash64("vec_id"), F.lit(g)).cast("int"))
+    banded = _sign_bands(emb).withColumn(
+        "grp", F.pmod(F.xxhash64("vec_id"), F.lit(g)).cast("int")
+    )
     left = banded.select(
         F.col("vec_id").alias("a"), "band", "key",
         F.col("grp").alias("i"),
@@ -1316,28 +1327,7 @@ def dedup_embedding_cosine_salted(
         )
         .distinct()
     )
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    e = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    ea = e.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("emb_a"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt("nrm_a") * F.sqrt("nrm_b")
-    )
-    return (
-        cand.join(ea, "a")
-        .join(eb, "b")
-        .withColumn("cos", cos)
-        .where(F.col("cos") >= _EMB_COS_MIN)
-        .select("a", "b", "cos")
-    )
+    return _cos_verify(cand, emb, "a", "b", _EMB_COS_MIN)
 
 
 def text_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1345,18 +1335,16 @@ def text_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     m0..m7) — what a 100 TB dedup pipeline persists so that incremental
     ingest only hashes NEW documents and joins signatures against the
     stored sketch, never re-shingling the corpus. Deterministic salted
-    md5 minhashes (same functions as ``dedup_ngram_jaccard``), so the
+    md5 minhashes (the ``_minhash_mins`` aggregates), so the
     table is engine-portable and fully oracle-checked. Docs with < 3
     tokens have no shingles and no signature row."""
-    docs = load_table(spark, sf_dir, "documents")
     # distinct-first, then aggregate: measured faster than folding
     # count_distinct into the agg (the distinct-agg rewrite Expands
     # every shingle row twice), and the minhashes are computed once per
     # distinct shingle
-    grams = _gram_frame(docs)
+    grams = _gram_frame(load_table(spark, sf_dir, "documents"))
     return grams.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_grams"),
-        *[F.min(_minhash(k)).alias(f"m{k}") for k in range(_NGRAM_HASHES)],
+        F.count(F.lit(1)).alias("n_grams"), *_minhash_mins()
     )
 
 
@@ -1389,25 +1377,14 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new-sig x stored-sig equi-join on (k, minhash); exact Jaccard verify
     on candidates only. Returns incoming docs that duplicate a stored
     doc."""
-    docs = load_table(spark, sf_dir, "documents")
-    grams = memoized_checkpoint(
-        spark, "ngram_grams", sf_dir, lambda: _gram_frame(docs)
-    )
+    grams = _ngram_grams(spark, sf_dir)
     # Round-12: same n_g threading as `_ngram_pairs` (zero sizes joins
     # in the verify; plan Exchange 28→20, SMJ 10→6, paired A/B 0.95) —
     # and the same measured negative: the min-side relabel was 1.35×
-    # slower here, so the explode stays on the new (query) side.
-    sigs = grams.groupBy("doc_id").agg(
-        *[F.min(_minhash(k)).alias(f"m{k}") for k in range(_NGRAM_HASHES)],
-        F.count(F.lit(1)).alias("n_g"),
-    )
-    lsig = sigs.select(
-        "doc_id",
-        "n_g",
-        F.posexplode(
-            F.array(*[F.col(f"m{k}") for k in range(_NGRAM_HASHES)])
-        ).alias("k", "mh"),
-    )
+    # slower here, so the explode stays on the new (query) side. The
+    # band join is new x stored, not a self-join, so it keeps its own
+    # shape; the verify is `_ngram_pairs`'.
+    lsig = _ngram_bands(grams)
     is_new = (F.col("doc_id") % _INCR_MOD) == 0
     new_s = lsig.where(is_new).select(
         F.col("doc_id").alias("new_id"), F.col("n_g").alias("n_a"), "k", "mh"
@@ -1421,27 +1398,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("new_id", "dup_of", "n_a", "n_b")
         .distinct()
     )
-    ga = grams.select(F.col("doc_id").alias("new_id"), "g")
-    gb = grams.select(F.col("doc_id").alias("dup_of"), "g")
-    common = (
-        cand.join(ga, "new_id")
-        .join(gb, ["dup_of", "g"])
-        .groupBy("new_id", "dup_of")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.max("n_a").alias("n_a"),
-            F.max("n_b").alias("n_b"),
-        )
-    )
-    return (
-        common.withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-        )
-        .where(F.col("jaccard") >= _JACCARD_MIN)
-        .select("new_id", "dup_of", "n_common", "jaccard")
-    )
+    return _jaccard_verify(cand, grams, "new_id", "dup_of")
 
 
 _DEDUP_INCR_SQL = f"""
@@ -1522,7 +1479,6 @@ def corpus_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the row, so the manifest is reproducible on any engine or
     partitioning."""
     docs = load_table(spark, sf_dir, "documents")
-    th = F.sha2(F.lower(F.trim(F.col("text"))), 256)
     n_tok = F.size(F.split(F.col("text"), " "))
     w = Window.partitionBy("text_hash")
     bucket = (
@@ -1535,7 +1491,10 @@ def corpus_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         docs.select(
-            "doc_id", "lang", th.alias("text_hash"), n_tok.alias("n_tokens")
+            "doc_id",
+            "lang",
+            _text_hash().alias("text_hash"),
+            n_tok.alias("n_tokens"),
         )
         .withColumn("is_keeper", F.col("doc_id") == F.min("doc_id").over(w))
         .where(F.col("is_keeper") & F.col("n_tokens").between(5, 1000))
@@ -1806,7 +1765,13 @@ def _cell_means(members: DataFrame, *key: str) -> DataFrame:
     """Deterministic centroid of each ``key`` cell of ``members`` (a
     label, a (label, sub) sub-cell, an assigned cell), from the
     ``_dim_means`` integer means: (*key, centroid, cnrm)."""
-    cents = _dim_means(members, *key).groupBy(*key).agg(
+    return _centroids(_dim_means(members, *key), *key)
+
+
+def _centroids(means: DataFrame, *key: str) -> DataFrame:
+    """(*key, centroid, cnrm) from the ``_dim_means`` frame ``means``:
+    each cell's means in pos order and the centroid's squared norm."""
+    cents = means.groupBy(*key).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "cval"))),
             lambda s: s.cval,
@@ -1926,12 +1891,7 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact rationals and would diverge by ulps); ties break by
     vec_id. Oracle unrolls the 4 rounds as MATERIALIZED CTEs.
     """
-    base = _vectors(load_table(spark, sf_dir, "embeddings"))
-    cand = cut(
-        _cos_topk(_scan_pairs(base, _queries(base)), _MMR_POOL).select(
-            "q_id", "vec_id", "cos", "embedding", "nrm"
-        )
-    )
+    cand = cut(_mmr_pool(spark, sf_dir))
     pcos = _dot(F.col("a_emb"), F.col("b_emb")) / (
         F.sqrt("a_nrm") * F.sqrt("b_nrm")
     )
@@ -1990,6 +1950,16 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         name="simsearch_mmr",
     )
     return selected.select("q_id", "vec_id", "cos", "rnk")
+
+
+def _mmr_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``simsearch_mmr``'s corpus-sized stage, the relevance pool
+    (q_id, vec_id, cos, embedding, nrm): each query's exact cosine
+    top-``_MMR_POOL``, the broadcast scan of ``simsearch_topk``."""
+    base = _vectors(load_table(spark, sf_dir, "embeddings"))
+    return _cos_topk(_scan_pairs(base, _queries(base)), _MMR_POOL).select(
+        "q_id", "vec_id", "cos", "embedding", "nrm"
+    )
 
 
 def _mmr_sql(pool: int = _MMR_POOL, k: int = _MMR_K) -> str:
@@ -3693,19 +3663,23 @@ FROM per_q
 _PQ_SUB = 8  # subspaces (64 dims -> 8 x 8-dim subvectors)
 
 
-def _pq_dist_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _label_means(emb: DataFrame) -> DataFrame:
+    """The per-label ``_dim_means`` (c_label, pos, cval) of ``emb``: the
+    PQ codebook, and IVFADC's coarse cells."""
+    return _dim_means(
+        emb.select(F.col("label").alias("c_label"), "embedding"), "c_label"
+    )
+
+
+def _pq_dist_frame(emb: DataFrame, cdims: DataFrame) -> DataFrame:
     """(vec_id, c_label, m, d_int): 1e9-scaled integer squared L2
     distance between every vector's m-th subvector and every codebook
-    centroid for that subspace. The codebook is the label clustering's
-    ``_dim_means`` integer means, sliced per subspace; per-dim squared
+    centroid for that subspace. The codebook ``cdims`` is the label
+    clustering's ``_label_means``, sliced per subspace; per-dim squared
     errors are floored into BIGINTs BEFORE the per-subspace sum so the
     aggregate is partition-order-proof and engine-exact."""
-    emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id", F.posexplode(F.col("embedding")).alias("pos", "val")
-    )
-    cdims = _dim_means(
-        emb.select(F.col("label").alias("c_label"), "embedding"), "c_label"
     )
     diff = F.col("val").cast("double") - F.col("cval")
     se = dims.join(F.broadcast(cdims), "pos").select(
@@ -3719,13 +3693,15 @@ def _pq_dist_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The PQ index shared by ``simsearch_pq`` and ``simsearch_ivfadc``:
-    the codes (vec_id, m, code) — each subvector's nearest codebook
-    centroid, ties to the smaller label — and the ADC lookup table
-    (q_id, code, m, d_int), the queries' OWN subspace distances to
-    every centroid."""
-    dist = _pq_dist_frame(spark, sf_dir)
+def _pq_index(
+    emb: DataFrame, cdims: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The PQ index of ``emb`` over the codebook ``cdims``, shared by
+    ``simsearch_pq`` and ``simsearch_ivfadc``: the codes (vec_id, m,
+    code) — each subvector's nearest codebook centroid, ties to the
+    smaller label — and the ADC lookup table (q_id, code, m, d_int),
+    the queries' OWN subspace distances to every centroid."""
+    dist = _pq_dist_frame(emb, cdims)
     wc = Window.partitionBy("vec_id", "m").orderBy("d_int", "c_label")
     codes = (
         dist.withColumn("rn", F.row_number().over(wc))
@@ -3773,7 +3749,8 @@ def simsearch_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking break ties by label/vec_id — the whole ANN pipeline
     hash-matches the DuckDB oracle, like `simsearch_ivf`.
     """
-    codes, qd = _pq_index(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    codes, qd = _pq_index(emb, _label_means(emb))
     adc = (
         codes.join(F.broadcast(qd), ["m", "code"])
         .where(F.col("vec_id") != F.col("q_id"))
@@ -3877,8 +3854,8 @@ def simsearch_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse probe × PQ/ADC fine ranking — the composition FAISS
     ships as IVFADC and the layout every billion-vector deployment
     actually runs: the coarse quantizer prunes the corpus to the
-    probed cells (here ``_cell_means`` per-label centroids and the
-    nprobe=2 ``_probe``), and inside those cells candidates are
+    probed cells (here per-label centroids and the nprobe=2
+    ``_probe``), and inside those cells candidates are
     ranked by PQ asymmetric distance (8 code bytes per vector, the
     broadcast ADC table of ``_pq_index``) instead of exact float
     dot products. Cost per query: |probed cells| ÷ |corpus| of the
@@ -3890,15 +3867,21 @@ def simsearch_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``simsearch_pq`` so the two keys pin the same codebook).
     Determinism: integer-mean centroids, 1e9-floored integer ADC
     sums, (adc, vec_id) tie-breaks — full SQL-hash oracle. Recall
-    twin: ``simsearch_recall_ivfadc``."""
-    corpus = _vectors(
-        load_table(spark, sf_dir, "embeddings"),
-        F.col("label").cast("long").alias("label"),
+    twin: ``simsearch_recall_ivfadc``.
+
+    The coarse cells and the PQ codebook are one ``_label_means``
+    frame, as in the oracle's one ``cdims`` CTE, cut once (|labels| x
+    64 rows) so its posexplode + aggregate pass runs once for the cell
+    table and both sides of the PQ index. The probe's cell key is the
+    long label of the candidate join."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = _vectors(emb, F.col("label").cast("long").alias("label"))
+    cdims = cut(_label_means(emb))
+    cells = _centroids(cdims, "c_label").select(
+        F.col("c_label").cast("long").alias("label"), "centroid", "cnrm"
     )
-    probed = _probe(
-        _queries(corpus), _cell_means(corpus, "label"), 2
-    ).select("q_id", "label")
-    codes, qd = _pq_index(spark, sf_dir)
+    probed = _probe(_queries(corpus), cells, 2).select("q_id", "label")
+    codes, qd = _pq_index(emb, cdims)
     cand = (
         corpus.select("vec_id", "label")
         .join(F.broadcast(probed), "label")
@@ -6558,13 +6541,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band", "key"),
     )
-    cand = (
-        banded.select(F.col("doc_id").alias("a"), "band", "key")
-        .join(banded.select(F.col("doc_id").alias("b"), "band", "key"), ["band", "key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    cand = _band_pairs(banded, "doc_id", ("band", "key"))
     ham = F.expr(
         "aggregate(transform(sequence(1, 64), i -> "
         "IF(substring(ah, i, 1) = substring(bh, i, 1), 0, 1)), "
@@ -7314,25 +7291,8 @@ def _semantic_cand_frame(
     against exact all-pairs truth on a bounded sample)."""
     if asg is None:
         asg = _semantic_asg_frame(emb)
-    banded = (
-        emb.select(
-            "vec_id",
-            F.posexplode(
-                F.array(*[_sign_band_key(b) for b in range(_EMB_BANDS)])
-            ).alias("band", "key"),
-        )
-        .join(asg, "vec_id")
-    )
-    return (
-        banded.select(F.col("vec_id").alias("a"), "cid", "band", "key")
-        .join(
-            banded.select(F.col("vec_id").alias("b"), "cid", "band", "key"),
-            ["cid", "band", "key"],
-        )
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    banded = _sign_bands(emb).join(asg, "vec_id")
+    return _band_pairs(banded, "vec_id", ("cid", "band", "key"))
 
 
 def dedup_semantic_frame(
@@ -7343,8 +7303,8 @@ def dedup_semantic_frame(
     within-cluster near-duplicates above a cosine threshold.
 
     Composition of two proven kernels — :func:`kmeans_assign` (the
-    deterministic Lloyd loop) scopes the search, and the sign-LSH
-    banding from :func:`dedup_embedding_cosine` generates candidates
+    deterministic Lloyd loop) scopes the search, and the ``_sign_bands``
+    sign-LSH banding through ``_band_pairs`` generates candidates
     WITHIN each cluster (join key = (cid, band, key)), so the pair
     work per cluster is banded-linear, never members². Verified pairs
     (exact cosine >= tau) feed the keep-first rule: a vector is pruned
@@ -7360,32 +7320,7 @@ def dedup_semantic_frame(
     the 10x ratio."""
     asg = _semantic_asg_frame(emb)
     cand = _semantic_cand_frame(emb, asg)
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    e = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt("nrm_a") * F.sqrt("nrm_b")
-    )
-    pairs = (
-        cand.join(
-            e.select(
-                F.col("vec_id").alias("a"),
-                F.col("embedding").alias("emb_a"),
-                F.col("nrm").alias("nrm_a"),
-            ),
-            "a",
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("b"),
-                F.col("embedding").alias("emb_b"),
-                F.col("nrm").alias("nrm_b"),
-            ),
-            "b",
-        )
-        .withColumn("cos", cos)
-        .where(F.col("cos") >= F.lit(tau))
-        .select("a", "b")
-    )
+    pairs = _cos_verify(cand, emb, "a", "b", tau).select("a", "b")
     earlier = pairs.groupBy(F.col("b").alias("vec_id")).agg(
         F.count(F.lit(1)).alias("n_dup_earlier")
     )
@@ -7437,28 +7372,11 @@ def dedup_semantic_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _semantic_cand_frame(emb).where(
         (F.col("a") < _RECALL_SAMPLE) & (F.col("b") < _RECALL_SAMPLE)
     )
-    norm = _dot(F.col("embedding"), F.col("embedding"))
-    e = emb.where(F.col("vec_id") < _RECALL_SAMPLE).select(
-        "vec_id", "embedding", norm.alias("nrm")
-    )
-    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt("nrm_a") * F.sqrt("nrm_b")
-    )
+    e = _vectors(emb.where(F.col("vec_id") < _RECALL_SAMPLE))
     truth = (
-        e.select(
-            F.col("vec_id").alias("a"),
-            F.col("embedding").alias("emb_a"),
-            F.col("nrm").alias("nrm_a"),
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("b"),
-                F.col("embedding").alias("emb_b"),
-                F.col("nrm").alias("nrm_b"),
-            ),
-            F.col("a") < F.col("b"),
-        )
-        .withColumn("cos", cos)
+        _cos_side(e, "a")
+        .join(_cos_side(e, "b"), F.col("a") < F.col("b"))
+        .withColumn("cos", _pair_cos("a", "b"))
         .where(F.col("cos") >= _SEM_RECALL_MIN)
         .select("a", "b", F.floor(F.col("cos") * 10).cast("int").alias("bucket"))
     )
@@ -8005,7 +7923,7 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = docs.select(
         "doc_id",
         "source",
-        F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("text_hash"),
+        _text_hash().alias("text_hash"),
     ).withColumn(
         "is_exact_dup", F.col("doc_id") != F.min("doc_id").over(w)
     )

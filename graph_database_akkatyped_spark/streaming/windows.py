@@ -813,10 +813,8 @@ def stream_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming query has a FULL hash oracle (duplicate shingles don't
     move a min, hence no stream-side distinct is needed)."""
     from graph_database_akkatyped_spark.operators.llm import (
-        _GRAM_FROM_TOKS,
-        _NGRAM_HASHES,
-        _minhash,
-        _toks_frame,
+        _minhash_mins,
+        _shingles,
     )
 
     _ensure_session_confs(spark)
@@ -824,12 +822,7 @@ def stream_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(schema).parquet(
         _stream_dir(sf_dir, "documents")
     )
-    grams = _toks_frame(stream, "doc_id").select(
-        "doc_id", F.explode(F.expr(_GRAM_FROM_TOKS)).alias("g")
-    )
-    sigs = grams.groupBy("doc_id").agg(
-        *[F.min(_minhash(k)).alias(f"m{k}") for k in range(_NGRAM_HASHES)]
-    )
+    sigs = _shingles(stream, "doc_id").groupBy("doc_id").agg(*_minhash_mins())
     name = f"sig_{uuid.uuid4().hex[:8]}"
     q = (
         sigs.writeStream.format("memory")

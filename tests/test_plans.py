@@ -381,12 +381,14 @@ def test_containment_candidates_no_cartesian(spark):
 
 def test_mmr_pool_work_is_broadcast(spark):
     """simsearch_mmr's corpus-sized stage is the broadcast top-k pool
-    scan; pairwise work happens after the pool cut."""
+    scan; pairwise work happens after the pool cut. The key's own plan
+    is a scan of its rerank fixpoint's last cut, so the pool stage
+    (``_mmr_pool``) is checked directly."""
     from graph_database_akkatyped_spark.operators import llm
-    from graph_database_akkatyped_spark.plans.explain import formatted_plan
 
-    plan = formatted_plan(llm.simsearch_mmr(spark, SF_ORACLE))
-    assert "CartesianProduct" not in plan, plan
+    counts = node_counts(llm._mmr_pool(spark, SF_ORACLE))
+    assert counts["BroadcastNestedLoopJoin"] >= 1, counts
+    assert counts["CartesianProduct"] == 0, counts
 
 
 def test_dedup_lines_scan_prunes_and_shuffles_minimally(spark):
@@ -521,19 +523,23 @@ def test_truss_incremental_materializes_triangles_once(spark):
     )
 
 
-# Vector-search plan shapes at sf0.01, counted node by node (physical
-# plan, AQE's initial plan). Columns: shuffle Exchange, BroadcastExchange,
-# BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin, Window,
-# parquet scans. Every key is assembled from the shared stages in
-# operators/llm.py (vector and query frames, _cell_means, _probe,
-# _cos_topk, _nearest_cell, _pq_index); a stage edit that adds a
-# shuffle, turns a broadcast into a shuffled join or rescans the corpus
-# shows up here as a changed count. simsearch_mmr's result is a cut of
-# its rerank fixpoint, so its plan is that one cut scan; _knn_graph_build
-# stands in for knn_graph_build, whose key memoizes.
-_VECTOR_PLAN_SHAPES = {
+# Vector-search and dedup plan shapes at sf0.01, counted node by node
+# (physical plan, AQE's initial plan). Columns: shuffle Exchange,
+# BroadcastExchange, BroadcastHashJoin, BroadcastNestedLoopJoin,
+# SortMergeJoin, Window, parquet scans. Every key is assembled from the
+# shared stages in operators/llm.py — for vector search the vector and
+# query frames, _cell_means, _probe, _cos_topk, _nearest_cell and
+# _pq_index; for dedup the text hash, _shingles, _ngram_grams, the
+# MinHash signature and band stages, _band_pairs, _jaccard_verify,
+# _sign_bands and _cos_verify. A stage edit that adds a shuffle, turns
+# a broadcast into a shuffled join or rescans the corpus shows up here
+# as a changed count. _mmr_pool stands in for simsearch_mmr (whose
+# result is a cut of its rerank fixpoint), _knn_graph_build for
+# knn_graph_build and _ngram_pairs for dedup_ngram_jaccard (both keys
+# memoize).
+_PLAN_SHAPES = {
     "simsearch_topk": (1, 1, 0, 1, 0, 1, 2),
-    "simsearch_mmr": (0, 0, 0, 0, 0, 0, 0),
+    "_mmr_pool": (1, 1, 0, 1, 0, 1, 2),
     "simsearch_filtered_topk": (1, 1, 1, 0, 0, 1, 2),
     "simsearch_range": (0, 1, 0, 1, 0, 0, 2),
     "simsearch_ivf": (3, 2, 1, 1, 0, 2, 3),
@@ -546,13 +552,31 @@ _VECTOR_PLAN_SHAPES = {
     "simsearch_ivf_rebalance": (17, 5, 1, 4, 1, 4, 10),
     "simsearch_recall_rebalance": (24, 9, 2, 7, 2, 10, 15),
     "simsearch_pq": (7, 3, 3, 0, 0, 2, 4),
-    "simsearch_ivfadc": (11, 5, 4, 1, 1, 3, 7),
+    "simsearch_ivfadc": (8, 5, 4, 1, 1, 3, 4),
     "simsearch_hybrid_rrf": (6, 2, 1, 1, 1, 3, 4),
     "simsearch_hard_negatives": (1, 1, 0, 1, 0, 1, 2),
     "simsearch_recall": (8, 3, 1, 2, 1, 4, 5),
     "simsearch_recall_pq": (12, 4, 3, 1, 1, 4, 6),
-    "simsearch_recall_ivfadc": (16, 6, 4, 2, 2, 5, 9),
+    "simsearch_recall_ivfadc": (13, 6, 4, 2, 2, 5, 6),
     "simsearch_greedy_graph": (104, 83, 52, 31, 26, 26, 114),
+    "_ngram_pairs": (10, 0, 0, 0, 3, 0, 0),
+    "dedup_exact": (1, 0, 0, 0, 0, 0, 1),
+    "corpus_training_manifest": (1, 0, 0, 0, 0, 1, 1),
+    "corpus_dedup_report": (6, 1, 1, 0, 1, 2, 2),
+    "curation_filter_report": (1, 0, 0, 0, 0, 1, 1),
+    "corpus_pipeline_funnel": (7, 5, 5, 0, 1, 1, 6),
+    "corpus_source_overlap": (7, 3, 3, 0, 0, 0, 4),
+    "decontam_ngram_overlap": (3, 2, 2, 0, 0, 0, 3),
+    "dedup_containment": (10, 0, 0, 0, 3, 0, 0),
+    "dedup_containment_smallside": (16, 0, 0, 0, 7, 1, 0),
+    "dedup_banding_recall": (11, 4, 4, 0, 1, 0, 6),
+    "text_minhash_signature": (2, 0, 0, 0, 0, 0, 1),
+    "dedup_incremental": (10, 0, 0, 0, 3, 0, 0),
+    "dedup_embedding_cosine": (1, 3, 3, 0, 0, 0, 4),
+    "dedup_embedding_cosine_salted": (1, 3, 3, 0, 0, 0, 4),
+    "dedup_semantic": (16, 10, 4, 6, 2, 3, 13),
+    "dedup_semantic_recall": (13, 7, 2, 5, 2, 2, 10),
+    "decontam_semantic": (3, 3, 3, 0, 1, 0, 5),
 }
 _SHAPE_NODES = (
     "Exchange",
@@ -565,14 +589,15 @@ _SHAPE_NODES = (
 )
 
 
-@pytest.mark.parametrize("name", sorted(_VECTOR_PLAN_SHAPES))
+@pytest.mark.parametrize("name", sorted(_PLAN_SHAPES))
 def test_vector_search_plan_shape(spark, name):
-    from graph_database_akkatyped_spark.operators import llm
+    from graph_database_akkatyped_spark.operators import curation, llm
 
-    counts = node_counts(getattr(llm, name)(spark, SF_ORACLE))
+    build = getattr(llm, name, None) or getattr(curation, name)
+    counts = node_counts(build(spark, SF_ORACLE))
     got = tuple(counts[n] for n in _SHAPE_NODES)
     assert dict(zip(_SHAPE_NODES, got)) == dict(
-        zip(_SHAPE_NODES, _VECTOR_PLAN_SHAPES[name])
+        zip(_SHAPE_NODES, _PLAN_SHAPES[name])
     ), counts
     assert counts["CartesianProduct"] == 0, counts
     assert counts["ShuffledHashJoin"] == 0, counts
