@@ -49,6 +49,11 @@ from graph_database_akkatyped_spark.operators.algos import (
     cc_frame,
     pagerank_frame,
 )
+from graph_database_akkatyped_spark.operators.graph_build import (
+    _degrees,
+    _mirror,
+    _sym,
+)
 
 _V_SCHEMA = "id string, kind string, name string, op string, batch long"
 _E_SCHEMA = "src string, dst string, rel string, weight double, op string, batch long"
@@ -369,12 +374,8 @@ class GraphDB:
 
     def degrees(self) -> DataFrame:
         e = self.edges()
-        out_d = e.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("out_degree")
-        )
-        in_d = e.groupBy(F.col("dst").alias("id")).agg(
-            F.count(F.lit(1)).alias("in_degree")
-        )
+        out_d = _degrees(e, "src", "id", "out_degree")
+        in_d = _degrees(e, "dst", "id", "in_degree")
         return (
             self.vertices()
             .select("id")
@@ -420,9 +421,7 @@ class GraphDB:
 
     def _sym_edges(self) -> DataFrame:
         e = self.edges().select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        return e.unionByName(
-            e.select(F.col("a").alias("b"), F.col("b").alias("a")).select("a", "b")
-        ).distinct()
+        return _sym(e, "a", "b").distinct()
 
     def bfs(self, source: str, max_level: int = 20) -> DataFrame:
         """Reference: Traverse(depth) from a seed vertex."""
@@ -482,9 +481,8 @@ class GraphDB:
     def reciprocity(self) -> DataFrame:
         """Follow-back rate of the live directed edge state (1 row)."""
         e = self.edges().select("src", "dst")
-        rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         tot = e.agg(F.count(F.lit(1)).alias("m_edges"))
-        rec = e.join(rev, ["src", "dst"], "left_semi").agg(
+        rec = e.join(_mirror(e, "src", "dst"), ["src", "dst"], "left_semi").agg(
             F.count(F.lit(1)).alias("m_reciprocal")
         )
         return tot.crossJoin(F.broadcast(rec)).select(

@@ -24,8 +24,11 @@ from graph_database_akkatyped_spark.catalog import load_table
 from graph_database_akkatyped_spark.operators.graph_build import (
     NATION_EDGES_CTE,
     USER_EDGES_CTE,
+    _degrees,
+    _md5_int,
+    _sym,
+    _uedges_memo,
     nation_edges,
-    user_edges_sym,
     user_vertices,
 )
 from graph_database_akkatyped_spark.operators.pregel import fixpoint, pregel
@@ -78,16 +81,6 @@ def bfs_frame(edges_sym: DataFrame, seed: DataFrame, max_level: int) -> DataFram
             delta=F.sum("fresh"),
             horizon=True,
         ).drop("fresh")
-
-
-def _uedges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized symmetric user edge list, shared by the user
-    graph's kernels: the memo key is the same "uedges_sym" the
-    ANF/modularity family uses, so the slot self-join is built once
-    per (session, sf_dir) across all consumers, not once per key."""
-    return _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    )
 
 
 def _bfs_visited(
@@ -215,13 +208,9 @@ def sssp_user_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ce = _canonical_edges(spark, sf_dir)
     cost = (1 + (F.col("a") + F.col("b")) % 7).cast("long")
-    directed = ce.select("a", "b", cost.alias("weight"))
-    edges = directed.select(
+    weighted = ce.select("a", "b", cost.alias("weight"))
+    edges = _sym(weighted, "a", "b", "weight").select(
         F.col("a").alias("src"), F.col("b").alias("dst"), "weight"
-    ).unionByName(
-        directed.select(
-            F.col("b").alias("src"), F.col("a").alias("dst"), "weight"
-        )
     )
     events = load_table(spark, sf_dir, "events")
     seed = events.agg(F.min("user_id")).first()[0]
@@ -416,9 +405,7 @@ _BASE = 15 * _UNIT // 100  # 0.15 in µ-units
 def _degree_weighted(edges_sym: DataFrame) -> DataFrame:
     """(src, dst, weight = out-degree of src): the PageRank family's
     message edges, cut once per run by ``pregel``."""
-    deg = edges_sym.groupBy(F.col("a").alias("src")).agg(
-        F.count(F.lit(1)).alias("weight")
-    )
+    deg = _degrees(edges_sym, "a", "src", "weight")
     return edges_sym.select(F.col("a").alias("src"), F.col("b").alias("dst")).join(
         deg, "src"
     )
@@ -561,21 +548,17 @@ def kcore_frame(edges_sym: DataFrame, k: int, max_rounds: int = 15) -> DataFrame
     64+ left 22 under-degree survivors).
     """
 
-    def degrees(edges: DataFrame) -> DataFrame:
-        return edges.groupBy(F.col("a").alias("id")).agg(
-            F.count(F.lit(1)).alias("degree")
-        )
-
     def peel(deg: DataFrame, rnd) -> DataFrame:
         alive = deg.where(F.col("degree") >= k).select("id")
-        return degrees(
+        return _degrees(
             edges_sym.join(alive.withColumnRenamed("id", "a"), "a", "left_semi")
-            .join(alive.withColumnRenamed("id", "b"), "b", "left_semi")
+            .join(alive.withColumnRenamed("id", "b"), "b", "left_semi"),
+            "a", "id", "degree",
         )
 
     return fixpoint(
         peel,
-        degrees(edges_sym),
+        _degrees(edges_sym, "a", "id", "degree"),
         max_iter=max_rounds,
         name="kcore_frame",
         delta=F.sum((F.col("degree") < k).cast("long")),
@@ -586,10 +569,7 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Members of the 10-core of the strong user graph with their
     in-core degree (graph-quality filtering: drop weakly-embedded
     vertices before community analysis)."""
-    ce = _canonical_edges(spark, sf_dir)
-    sym = ce.unionByName(
-        ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    sym = _sym(_canonical_edges(spark, sf_dir), "a", "b")
     return kcore_frame(sym, _KCORE_K, _KCORE_ROUNDS).select(
         F.col("id").alias("user_id"), "degree"
     )
@@ -705,24 +685,18 @@ def triangle_count_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     family: exact enumeration costs Σdeg² wedge checks (8·10⁸ at the
     1M-vertex rehearsal, BASELINE.md), so at real scale you count on a
     DETERMINISTIC edge sample and scale up. Each edge survives an md5
-    gate with probability q = {_TRI_SAMPLE_PCT}/100 (the same
-    hash-gate recipe as the SCC graph — reproducible across engines
-    and runs, unlike rand()); a triangle survives iff all 3 edges do
-    (q³), so ``n_est = n_sampled / q³`` is the standard unbiased
-    edge-sampling estimator (Tsourakakis et al.'s DOULION) — computed
-    in exact integers (q = 1/4 → ×64). Wedge-work drops by q², and
+    gate with probability q = {_TRI_SAMPLE_PCT}/100 (:func:`_md5_int`
+    over ``a_b``, as the SCC graph's gate — reproducible across engines
+    and runs, unlike rand(); a and b are never NULL on the canonical
+    edges, so concat_ws hashes the DuckDB twin's text); a triangle
+    survives iff all 3 edges do (q³), so ``n_est = n_sampled / q³`` is
+    the standard unbiased edge-sampling estimator (Tsourakakis et
+    al.'s DOULION) — computed in exact integers (q = 1/4 → ×64).
+    Wedge-work drops by q², and
     because the gate is deterministic the whole estimate value-hashes
     against the DuckDB twin."""
     ce = _canonical_edges(spark, sf_dir)
-    gate = (
-        F.expr(
-            "CAST(conv(substring(md5(concat(CAST(a AS STRING), '_', "
-            "CAST(b AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-        )
-        % 100
-        < _TRI_SAMPLE_PCT
-    )
-    s = ce.where(gate)
+    s = ce.where(_md5_int("_", 8, "a", "b") % 100 < _TRI_SAMPLE_PCT)
     e1 = s.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = s.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = s.select(F.col("a").alias("x"), F.col("b").alias("z"))
@@ -998,13 +972,8 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(tri.select(F.col("y").alias("id")))
         .unionAll(tri.select(F.col("z").alias("id")))
     )
-    tri_cnt = corners.groupBy("id").agg(F.count(F.lit(1)).alias("n_tri"))
-    sym = ce.unionByName(
-        ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("id")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
+    tri_cnt = _degrees(corners, "id", "id", "n_tri")
+    deg = _degrees(_sym(ce, "a", "b"), "a", "id", "degree")
     return (
         deg.join(tri_cnt, "id", "left")
         .select(
@@ -1118,13 +1087,8 @@ def graph_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive algorithm runs. All counts are exact integers; the two
     floats are single divisions of identical integers (bit-identical
     across engines)."""
-    ce = _canonical_edges(spark, sf_dir)
-    sym = ce.unionByName(
-        ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("id")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
+    sym = _sym(_canonical_edges(spark, sf_dir), "a", "b")
+    deg = _degrees(sym, "a", "id", "degree")
     return deg.agg(
         F.count(F.lit(1)).alias("n_vertices"),
         F.expr("sum(degree) div 2").alias("n_edges"),

@@ -1,8 +1,8 @@
 """Centrality extensions: HITS hubs/authorities and sampled
 harmonic/closeness centrality.
 
-HITS runs on the directed succession graph (the same memoized
-``dedges`` frame SCC and Katz share); harmonic/closeness aggregates the
+HITS runs on the directed succession graph (``_dedges_memo``, the
+frame SCC and Katz share); harmonic/closeness aggregates the
 memoized multi-source-BFS distance frame that also backs
 ``graph_eccentricity`` — the traversal is paid once per (session,
 sf_dir) however many centrality keys run.
@@ -24,12 +24,14 @@ from graph_database_akkatyped_spark.operators.graph_extras import (
     DIRECTED_EDGES_CTE,
     _ECC_MAX_LEVEL,
     _ECC_SEEDS,
+    _dedges_memo,
     msbfs_frame,
-    user_directed_edges,
 )
 from graph_database_akkatyped_spark.operators.graph_build import (
     USER_EDGES_CTE,
-    user_edges_sym,
+    _degrees,
+    _mirror,
+    _uedges_memo,
     user_vertices,
 )
 from graph_database_akkatyped_spark.operators.pregel import fixpoint
@@ -114,12 +116,10 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS on the directed user-succession graph — the graph-DB query
     behind "who initiates cascades (hubs) vs who is repeated (
     authorities)", the classic companion ranking to PageRank/Katz.
-    Reuses the memoized ``dedges`` edge frame and memoizes its own
+    Reuses the memoized ``_dedges_memo`` edge frame and memoizes its own
     result like SCC (bounded checkpoint accumulation across bench/sweep
     invocations)."""
-    edges = _memoized(
-        spark, "dedges", sf_dir, lambda: user_directed_edges(spark, sf_dir)
-    )
+    edges = _dedges_memo(spark, sf_dir)
     return _memoized(
         spark,
         "hits",
@@ -281,10 +281,7 @@ def betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     at K = n it equals directed-pair Brandes betweenness."""
     def _build() -> DataFrame:
         visited = msbfs_frame(spark, sf_dir)  # (seed, id, level)
-        edges = _memoized(
-            spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-        )
-        return betweenness_frame(visited, edges).select(
+        return betweenness_frame(visited, _uedges_memo(spark, sf_dir)).select(
             F.col("id").alias("user_id"),
             "bc_e6",
             (F.col("bc_e6").cast("double") / F.lit(1e6)).alias("bc"),
@@ -452,10 +449,8 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (den = 0 on regular/empty graphs -> 0.0 on both engines; Spark
     would otherwise yield NaN while DuckDB yields NULL, breaking hash
     parity on degenerate inputs — same guard as harmonic_closeness)."""
-    edges = _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    )
-    deg = edges.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
+    edges = _uedges_memo(spark, sf_dir)
+    deg = _degrees(edges, "a", "a", "d")
     annotated = (
         edges.join(deg.select(F.col("a"), F.col("d").alias("da")), "a")
         .join(
@@ -538,12 +533,8 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = label_propagation(spark, sf_dir).select(
         F.col("user_id").alias("v"), F.col("label").alias("l")
     )
-    edges = _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    )
-    deg = edges.groupBy(F.col("a").alias("v")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
+    edges = _uedges_memo(spark, sf_dir)
+    deg = _degrees(edges, "a", "v", "d")
     e_in = (
         edges.join(
             labels.select(F.col("v").alias("a"), F.col("l").alias("la")), "a"
@@ -753,9 +744,9 @@ def community_louvain_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer scores, min-id ties), so the whole pipeline value-hash
     matches the unrolled SQL oracle."""
     verts = user_vertices(spark, sf_dir).select(F.col("id").alias("v"))
-    edges = _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    ).select("a", "b", F.lit(1).cast("long").alias("w"))
+    edges = _uedges_memo(spark, sf_dir).select(
+        "a", "b", F.lit(1).cast("long").alias("w")
+    )
     # deg/m2 are sweep-invariant and each sweep's job re-aggregates
     # them from the edge checkpoint (per-sweep cut() boundaries defeat
     # ReusedExchange) — cut once. Measured FLAT at sf0.1 (6.0-7.1 s vs
@@ -796,9 +787,9 @@ def community_louvain_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     gain surrogate needs no rescaling and the whole two-level pipeline
     stays bit-deterministic → full SQL-hash oracle parity."""
     verts = user_vertices(spark, sf_dir).select(F.col("id").alias("v"))
-    edges = _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    ).select("a", "b", F.lit(1).cast("long").alias("w"))
+    edges = _uedges_memo(spark, sf_dir).select(
+        "a", "b", F.lit(1).cast("long").alias("w")
+    )
     return louvain_multi_frame(verts, edges).select(
         F.col("v").alias("user_id"), F.col("l").alias("community")
     )
@@ -990,13 +981,8 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of the per-vertex ``motif_find_nonmutual``. One self-semi-join
     on the (reversed) edge key + two counts — linear, and the semi-join
     shuffles once on the same key the edge frame already hashes by."""
-    edges = _memoized(
-        spark, "dedges", sf_dir, lambda: user_directed_edges(spark, sf_dir)
-    )
-    rev = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    recip = edges.join(rev, ["src", "dst"], "left_semi")
+    edges = _dedges_memo(spark, sf_dir)
+    recip = edges.join(_mirror(edges, "src", "dst"), ["src", "dst"], "left_semi")
     tot = edges.agg(F.count(F.lit(1)).alias("m_edges"))
     rec = recip.agg(F.count(F.lit(1)).alias("m_reciprocal"))
     return tot.crossJoin(F.broadcast(rec)).select(

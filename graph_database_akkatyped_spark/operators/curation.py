@@ -23,6 +23,7 @@ from graph_database_akkatyped_spark.operators.llm import (
     _GRAM_FROM_TOKS,
     _TOKS,
     _cos_verify,
+    _exact_keeper,
     _shingles,
     _sign_bands,
     _text_hash,
@@ -332,20 +333,17 @@ def curation_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     One window (hash-keeper) over otherwise map-only expressions; the
     reason string is assembled in a fixed order so it is deterministic.
     """
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         "text",
-        _text_hash().alias("th"),
+        _text_hash().alias("text_hash"),
         F.expr(_TOKS).alias("toks"),
     )
-    w = Window.partitionBy("th")
     n_tok = F.size(F.col("toks"))
     n_tri = F.greatest(F.expr("size(toks) - 2"), F.lit(0))
     n_tri_d = F.size(F.array_distinct(F.expr(_GRAM_FROM_TOKS)))
-    dup = F.col("doc_id") != F.min("doc_id").over(w)
+    dup = ~_exact_keeper()
     short = n_tok < 5
     long_ = n_tok > 1000
     # dup-trigram ratio > 0.5, integer form: 2*(n_tri - distinct) > n_tri
@@ -696,12 +694,9 @@ def corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     q = quality_gopher_rules(spark, sf_dir).select("doc_id", "keep")
-    from pyspark.sql import Window
-
-    wmin = Window.partitionBy("text_hash")
     e = (
         docs.select("doc_id", _text_hash().alias("text_hash"))
-        .withColumn("e_keep", F.col("doc_id") == F.min("doc_id").over(wmin))
+        .withColumn("e_keep", _exact_keeper())
         .select("doc_id", "e_keep")
     )
     n = dedup_clusters(spark, sf_dir).select(

@@ -16,8 +16,9 @@ is DERIVED from the relational fixtures (FIXTURES.md §derived-graph):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from graph_database_akkatyped_spark.caching import memoized_checkpoint
 from graph_database_akkatyped_spark.catalog import load_table
 from graph_database_akkatyped_spark.numerics import dsum, sql_dsum
 
@@ -132,19 +133,11 @@ WHERE src = 'c:1'
 
 
 def degree_out(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        build_edges(spark, sf_dir)
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.count(F.lit(1)).alias("out_degree"))
-    )
+    return _degrees(build_edges(spark, sf_dir), "src", "id", "out_degree")
 
 
 def degree_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        build_edges(spark, sf_dir)
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.count(F.lit(1)).alias("in_degree"))
-    )
+    return _degrees(build_edges(spark, sf_dir), "dst", "id", "in_degree")
 
 
 def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,6 +149,54 @@ def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- user graph (algorithms)
+
+# Graph stages. Every graph key (here, in algos, graph_extras,
+# centrality and motif, and the GraphDB / streaming graph inputs) is
+# assembled from these: the one "uedges_sym" memo, the endpoint mirror
+# and the symmetric closure built on it, the per-vertex degree count
+# and the md5-prefix integer draw behind every hash gate, sampling key
+# and priority. Column names are data, so one definition serves every
+# naming a caller uses.
+
+
+def _uedges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-memoized symmetric user edge list (:func:`user_edges_sym`)
+    shared by every user-graph kernel: the slot self-join is built once
+    per (session, sf_dir) across all consumers, not once per key."""
+    return memoized_checkpoint(
+        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
+    )
+
+
+def _mirror(e: DataFrame, a: str, b: str, *carry: str) -> DataFrame:
+    """``e`` with endpoint columns ``a`` and ``b`` swapped; the carried
+    columns ride along unchanged. Output columns: (a, b, *carry)."""
+    return e.select(F.col(b).alias(a), F.col(a).alias(b), *carry)
+
+
+def _sym(e: DataFrame, a: str, b: str, *carry: str) -> DataFrame:
+    """Symmetric closure: ``e`` ∪ :func:`_mirror` of ``e`` (duplicates
+    kept — callers that need a set add their own distinct)."""
+    return e.select(a, b, *carry).unionByName(_mirror(e, a, b, *carry))
+
+
+def _degrees(e: DataFrame, key: str, id_name: str, out_name: str) -> DataFrame:
+    """Per-vertex row count: (id_name, out_name) grouped by ``key``."""
+    return e.groupBy(F.col(key).alias(id_name)).agg(
+        F.count(F.lit(1)).alias(out_name)
+    )
+
+
+def _md5_int(sep: str, n_hex: int, *parts: str | Column) -> Column:
+    """BIGINT of the first ``n_hex`` hex digits of
+    ``md5(concat_ws(sep, parts))`` — the engine-portable draw (DuckDB:
+    ``CAST('0x' || substr(md5(...), 1, n_hex) AS BIGINT)``). A part is
+    a column name or a Column; NULL parts are skipped by concat_ws."""
+    text = F.concat_ws(
+        sep, *[(F.col(p) if isinstance(p, str) else p).cast("string") for p in parts]
+    )
+    return F.conv(F.substring(F.md5(text), 1, n_hex), 16, 10).cast("long")
+
 
 # symmetric distinct co-occurrence pairs; shared CTE text for all oracles
 USER_EDGES_CTE = """
@@ -303,7 +344,6 @@ def build_user_graph_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes ONCE and reuses, so the repo builds it once per
     (session, sf_dir) too. Scale tools clear the frame cache, so the
     build cost stays measured there."""
-    from graph_database_akkatyped_spark.caching import memoized_checkpoint
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "events").select(

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.caching import (
     cut,
@@ -41,8 +41,15 @@ from graph_database_akkatyped_spark.operators.algos import (
 from graph_database_akkatyped_spark.operators.graph_build import (
     NATION_EDGES_CTE,
     USER_EDGES_CTE,
+    _degrees,
+    _md5_int,
+    _mirror,
+    _sym,
+    _uedges_memo,
+    build_user_graph_capped,
     nation_edges,
-    user_edges_sym,
+    slot_capped_users,
+    user_edges_sym,  # re-exported: callers import it from here
     user_vertices,
 )
 from graph_database_akkatyped_spark.operators.pregel import fixpoint, pregel
@@ -87,8 +94,6 @@ def pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PPR from the min user id over the user graph (reference analog:
     'related vertices' ranked from a query vertex). The seed fetch is
     the one sanctioned scalar driver action (same as BFS seeds)."""
-    from graph_database_akkatyped_spark.operators.algos import _uedges_memo
-
     events = load_table(spark, sf_dir, "events")
     seed = events.agg(F.min("user_id")).first()[0]
     return ppr_frame(
@@ -191,17 +196,12 @@ def edge_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Common-neighbor counts come from the shared canonical a<b<c
     triangle frame (``algos._edge_common_counts`` — intermediates
     bounded by the triangle count, as in ``mutual_neighbors``); degrees
-    are one groupBy over the symmetric edge view. Integers throughout,
-    one rounded division at the end.
+    are :func:`_degrees` over the symmetric edge view. Integers
+    throughout, one rounded division at the end.
     """
     ce = _canonical_edges(spark, sf_dir)
     common = _edge_common_counts(spark, sf_dir)
-    deg = (
-        ce.select(F.col("a").alias("v"))
-        .unionAll(ce.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(_sym(ce, "a", "b"), "a", "v", "deg")
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b"))
     denom = F.col("deg_a") + F.col("deg_b") - 2 - F.col("n_common")
@@ -427,14 +427,12 @@ _WALKS_PER_SEED = 3
 _WALK_STEPS = 4
 
 
-def _walk_hash(step: int) -> str:
+def _walk_hash(step: int) -> Column:
     """48-bit integer hash of (seed, walk_no, step) — the per-hop
-    pseudo-random draw, identical in Spark and DuckDB."""
-    return (
-        f"CAST(conv(substring(md5(concat(CAST(seed AS STRING), '_', "
-        f"CAST(walk_no AS STRING), '_', CAST({step} AS STRING))), 1, 12), "
-        f"16, 10) AS BIGINT)"
-    )
+    pseudo-random draw, identical in Spark and DuckDB. The parts are
+    never NULL where the draw is read: a NULL seed keeps a NULL cur,
+    whose adjacency row (and so the indexed array) is missing."""
+    return _md5_int("_", 12, "seed", "walk_no", F.lit(step))
 
 
 def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -460,12 +458,12 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     verts = user_vertices(spark, sf_dir)
     # neighbor arrays, sorted for a canonical index order; built from
-    # the events self-join once and memoized across invocations
+    # the shared edge memo once and memoized across invocations
     adj = _memoized(
         spark,
         "uadj",
         sf_dir,
-        lambda: user_edges_sym(spark, sf_dir)
+        lambda: _uedges_memo(spark, sf_dir)
         .groupBy(F.col("a").alias("cur"))
         .agg(F.array_sort(F.collect_list("b")).alias("nbrs")),
     )
@@ -481,9 +479,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ]
     for k in range(1, _WALK_STEPS + 1):
-        pick = F.expr(
-            f"element_at(nbrs, CAST({_walk_hash(k)} % size(nbrs) AS INT) + 1)"
-        )
+        pick = F.element_at("nbrs", (_walk_hash(k) % F.size("nbrs")).cast("int") + 1)
         # eager cut per step: without it, unioning the L step frames
         # re-evaluates every prefix of the walk chain (1+2+..+L joins)
         state = (
@@ -501,10 +497,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cur").alias("node"),
             )
         )
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionByName(s)
-    return out
+    return reduce(DataFrame.unionByName, steps)
 
 
 def _walks_sql() -> str:
@@ -567,41 +560,48 @@ def user_directed_edges(
     direction gives real asymmetry (cycles exist but edges don't pair
     up), and the hash gate keeps the graph sparse enough that its SCC
     structure is non-trivial. Equi-join on the (event_type, hour) slot
-    key, never a theta join.
+    key, never a theta join (:func:`_succession`).
 
     ``cap`` applies the per-slot membership guard
     (graph_build.slot_capped_users) before the succession join — the
     hot-slot k² protection for cluster runs; default None preserves
     the exact semantics the registered SCC/HITS/walk oracles pin."""
-    from graph_database_akkatyped_spark.operators.graph_build import (
-        slot_capped_users,
-    )
-
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour")
     )
     if cap is not None:
         e = slot_capped_users(e, cap)
-    a = e.select(F.col("user_id").alias("src"), "event_type", "hour")
-    b = e.select(
+    return _succession(e)
+
+
+def _succession(events: DataFrame, *carry: str) -> DataFrame:
+    """Succession contacts (src, dst, *carry) of ``events`` (user_id,
+    event_type, hour, *carry): dst repeats src's event type in the next
+    hour, src ≠ dst, distinct, thinned by the md5 gate on the (src, dst)
+    pair. Carried columns are read from dst's row. The gate hashes
+    ``src_dst`` with concat_ws: past the src ≠ dst filter neither part
+    is NULL, so it reads the same text as the DuckDB twin's ``||``."""
+    a = events.select(F.col("user_id").alias("src"), "event_type", "hour")
+    b = events.select(
         F.col("user_id").alias("dst"),
         "event_type",
         (F.col("hour") - F.expr("INTERVAL 1 HOUR")).alias("hour"),
-    )
-    gate = (
-        F.expr(
-            "CAST(conv(substring(md5(concat(CAST(src AS STRING), '_', "
-            "CAST(dst AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-        )
-        % 100
-        < _SCC_GATE_PCT
+        *carry,
     )
     return (
         a.join(b, ["event_type", "hour"])
         .where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
+        .select("src", "dst", *carry)
         .distinct()
-        .where(gate)
+        .where(_md5_int("_", 8, "src", "dst") % 100 < _SCC_GATE_PCT)
+    )
+
+
+def _dedges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-memoized :func:`user_directed_edges`: the one "dedges"
+    frame SCC, Katz, HITS, reciprocity and the non-mutual motif read."""
+    return _memoized(
+        spark, "dedges", sf_dir, lambda: user_directed_edges(spark, sf_dir)
     )
 
 
@@ -633,34 +633,13 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-folded at the end — set-semantics equality with the BF labels
     is exactly the dominance argument above.
 
-    Timed edges reuse the succession-contact construction of
-    ``user_directed_edges`` (same md5 sparsity gate) but KEEP the
-    contact hour as the edge timestamp instead of collapsing it."""
+    Timed edges are :func:`_succession` contacts, as in
+    ``user_directed_edges``, but KEEP the contact hour as the edge
+    timestamp ``t`` instead of collapsing it."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour")
     )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "hour")
-    b = ev.select(
-        F.col("user_id").alias("dst"),
-        "event_type",
-        (F.col("hour") - F.expr("INTERVAL 1 HOUR")).alias("hour"),
-        F.col("hour").alias("t"),
-    )
-    gate = (
-        F.expr(
-            "CAST(conv(substring(md5(concat(CAST(src AS STRING), '_', "
-            "CAST(dst AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-        )
-        % 100
-        < _SCC_GATE_PCT
-    )
-    edges = cut(
-        a.join(b, ["event_type", "hour"])
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst", "t")
-        .distinct()
-        .where(gate)
-    )
+    edges = cut(_succession(ev.withColumn("t", F.col("hour")), "t"))
     seeds = (
         ev.select("user_id")
         .distinct()
@@ -838,7 +817,7 @@ def scc_frame(
                 "id",
                 (F.col("id") == F.col("color")).cast("long").alias("state"),
             ),
-            ce.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            _mirror(ce, "src", "dst"),
             msg=F.col("src_state"),
             agg=F.max("msg"),
             vprog=F.expr("greatest(state, coalesce(agg_msg, state))"),
@@ -893,9 +872,7 @@ def scc_strongly_connected(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, sf_dir) like the triangle frame: repeated invocations in
     a long-lived session reuse one checkpointed result instead of
     stacking new blocks."""
-    edges = _memoized(
-        spark, "dedges", sf_dir, lambda: user_directed_edges(spark, sf_dir)
-    )
+    edges = _dedges_memo(spark, sf_dir)
     return _memoized(
         spark,
         "scc",
@@ -943,9 +920,7 @@ def msbfs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     once."""
 
     def _build() -> DataFrame:
-        edges = _memoized(
-            spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-        )
+        edges = _uedges_memo(spark, sf_dir)
         verts = user_vertices(spark, sf_dir)
         seeds = [
             r[0] for r in verts.orderBy("id").limit(_ECC_SEEDS).collect()
@@ -1020,9 +995,7 @@ def path_shortest_bidirectional(spark: SparkSession, sf_dir: str) -> DataFrame:
     "farther than 2·HALF or disconnected", n_meet = # distinct midpoint
     vertices lying on a shortest path. No driver-side collect — seeds
     are 1-row aggregate frames fed straight to the frontier BFS."""
-    edges = _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    )
+    edges = _uedges_memo(spark, sf_dir)
     events = load_table(spark, sf_dir, "events")
     cnt = bidirectional_dist_frame(
         edges,
@@ -1108,12 +1081,7 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone-free recompute family as PageRank: every vertex sends
     every round, so pregel's monotone mode does not apply)."""
     verts = user_vertices(spark, sf_dir)
-    edges = _memoized(
-        spark,
-        "dedges",
-        sf_dir,
-        lambda: user_directed_edges(spark, sf_dir),
-    )
+    edges = _dedges_memo(spark, sf_dir)
     v = verts.select("id", F.lit(_UNIT).cast("long").alias("state"))
     res = pregel(
         v,
@@ -1196,18 +1164,9 @@ def link_predict_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lp_edges_deg(spark: SparkSession, sf_dir: str):
     """Shared prelude for both link predictors: the memoized capped
     edge list, its symmetric closure, and per-vertex degrees."""
-    from graph_database_akkatyped_spark.operators.graph_build import (
-        build_user_graph_capped,
-    )
-
     ce = build_user_graph_capped(spark, sf_dir).select("a", "b")
-    sym = ce.unionAll(
-        ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("v")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    return ce, sym, deg
+    sym = _sym(ce, "a", "b")
+    return ce, sym, _degrees(sym, "a", "v", "deg")
 
 
 def _lp_candidates(spark: SparkSession, sf_dir: str, with_ra: bool) -> DataFrame:
@@ -1500,10 +1459,6 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation steps (bounds documented at the generator); value
     determinism is additionally pinned by the Kruskal cross-check in
     tests/test_round6c.py."""
-    from graph_database_akkatyped_spark.operators.graph_build import (
-        build_user_graph_capped,
-    )
-
     return _memoized(
         spark,
         "mst_boruvka",
@@ -1547,9 +1502,7 @@ def cc_twophase_frame(
         if rnd.i == 1:
             e = rnd.cut(e)
         live = e.where(F.col("live")).select("u", "v")
-        sym = live.unionByName(
-            live.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+        sym = _sym(live, "u", "v")
         mins = sym.groupBy("u").agg(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
@@ -1566,9 +1519,7 @@ def cc_twophase_frame(
             )
             .distinct()
         )
-        sym1 = e1.select("u", "v").unionByName(
-            e1.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+        sym1 = _sym(e1, "u", "v")
         mins1 = sym1.groupBy("u").agg(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
@@ -1645,14 +1596,12 @@ def mst_boruvka_frame(edges: DataFrame) -> DataFrame:
             .join(cb, "b")
             .where(F.col("ca") != F.col("cb"))
         )
-        cand = xe.select(
-            F.col("ca").alias("comp"), F.col("cb").alias("oc"),
-            "a", "b", "weight",
-        ).unionByName(
+        # each cross edge is a candidate of both its components
+        cand = _sym(
             xe.select(
-                F.col("cb").alias("comp"), F.col("ca").alias("oc"),
-                "a", "b", "weight",
-            )
+                F.col("ca").alias("comp"), F.col("cb").alias("oc"), "a", "b", "weight"
+            ),
+            "comp", "oc", "a", "b", "weight",
         )
         w = Window.partitionBy("comp").orderBy(
             F.col("weight").desc(), "a", "b"
@@ -1671,10 +1620,8 @@ def mst_boruvka_frame(edges: DataFrame) -> DataFrame:
             .withColumn("round", F.lit(rnd.i))
         )
         cverts = comp.select(F.col("c").alias("id")).distinct()
-        cg_sym = sel.select(
-            F.col("comp").alias("a"), F.col("oc").alias("b")
-        ).unionByName(
-            sel.select(F.col("oc").alias("a"), F.col("comp").alias("b"))
+        cg_sym = _sym(
+            sel.select(F.col("comp").alias("a"), F.col("oc").alias("b")), "a", "b"
         )
         # two-phase CC, not min-label propagation: the contraction
         # graph is a pseudo-forest of best-edge picks whose components
@@ -1707,6 +1654,22 @@ def mst_boruvka_frame(edges: DataFrame) -> DataFrame:
 
 # ------------------------------------------------- node2vec biased walks
 
+
+def _backbone(ce: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` strongest-edge backbone of weighted canonical edges
+    ``ce`` (a, b, weight): every vertex keeps its ``k`` heaviest incident
+    edges (weight desc, then b), symmetrized, distinct, cut. Returns
+    (a, b); node2vec walks and greedy coloring run on it."""
+    top = Window.partitionBy("a").orderBy(F.col("weight").desc(), "b")
+    kept = (
+        _sym(ce, "a", "b", "weight")
+        .withColumn("rn", F.row_number().over(top))
+        .where(F.col("rn") <= k)
+        .select("a", "b")
+    )
+    return cut(_sym(kept, "a", "b").distinct())
+
+
 _N2V_STEPS = 6
 _N2V_WALKS = 2   # walks per seed
 _N2V_TOPK = 3    # backbone sparsification (same as coloring)
@@ -1716,13 +1679,8 @@ _N2V_TOPK = 3    # backbone sparsification (same as coloring)
 # for the exact ticket lottery below.
 
 
-def _n2v_hash(step: int) -> str:
-    return (
-        f"CAST(conv(substring(md5(concat_ws(':', CAST(seed AS STRING), "
-        f"CAST(walk_no AS STRING), CAST({step} AS STRING), "
-        f"CAST(x AS STRING), CAST(tick AS STRING))), 1, 12), 16, 10) "
-        f"AS BIGINT)"
-    )
+def _n2v_hash(step: int) -> Column:
+    return _md5_int(":", 12, "seed", "walk_no", F.lit(step), "x", "tick")
 
 
 def _n2v_hash_sql(step: int) -> str:
@@ -1749,33 +1707,15 @@ def graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     promise. First hop: prev = cur, so every neighbor is
     prev-adjacent and the draw is uniform — the node2vec convention.
 
-    Runs on the top-``_N2V_TOPK`` backbone (same sparsification as
-    the coloring key) because second-order bias NEEDS the
+    Runs on the top-``_N2V_TOPK`` :func:`_backbone` (the coloring
+    key's sparsification) because second-order bias NEEDS the
     per-candidate adjacency test against t — O(degree) per step, the
     documented cost the uniform-walk key's O(1) array index cannot
     pay; bounding degree makes each step |walks|·O(topk) rows with
     ≤ 2 tickets each. Walk corpus generation is the input stage of
     DeepWalk/node2vec embedding training. Dangling vertices hold
     position (lazy self-loop), one row per (seed, walk, step)."""
-    from graph_database_akkatyped_spark.operators.graph_build import (
-        build_user_graph_capped,
-    )
-
-    ce = build_user_graph_capped(spark, sf_dir)
-    dsym = ce.select("a", "b", "weight").unionAll(
-        ce.select(F.col("b").alias("a"), F.col("a").alias("b"), "weight")
-    )
-    wtop = Window.partitionBy("a").orderBy(F.col("weight").desc(), "b")
-    backbone = (
-        dsym.withColumn("rn", F.row_number().over(wtop))
-        .where(F.col("rn") <= _N2V_TOPK)
-        .select("a", "b")
-    )
-    bsym = cut(
-        backbone.unionAll(
-            backbone.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).distinct()
-    )
+    bsym = _backbone(build_user_graph_capped(spark, sf_dir), _N2V_TOPK)
     eset = bsym.select(
         F.least("a", "b").alias("ex"), F.greatest("a", "b").alias("ey")
     ).distinct()
@@ -1823,7 +1763,7 @@ def graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         lottery = cand.select(
             "seed", "walk_no", "cur", "x",
             F.explode(F.expr("sequence(1, tickets)")).alias("tick"),
-        ).withColumn("hkey", F.expr(_n2v_hash(k)))
+        ).withColumn("hkey", _n2v_hash(k))
         wpick = Window.partitionBy("seed", "walk_no").orderBy(
             F.col("hkey").desc(), F.col("x").asc_nulls_last()
         )
@@ -1842,10 +1782,7 @@ def graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cur").alias("node"),
             )
         )
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionByName(s)
-    return out
+    return reduce(DataFrame.unionByName, steps)
 
 
 def _n2v_sql() -> str:
@@ -1958,7 +1895,8 @@ def graph_greedy_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected rounds hold for bounded-degree graphs, which is also the
     shape real schedulers color (sparsified conflict graphs). So the
     key sparsifies first — each vertex keeps its ``_COLOR_TOPK``
-    strongest edges (weight DESC, b), symmetrized — and colors that.
+    strongest edges (weight DESC, b), symmetrized (:func:`_backbone`)
+    — and colors that.
 
     The mex needs no Python: sort the colored-neighbor color set and
     fold ``aggregate(arr, 0, (acc, c) -> IF(c = acc, acc + 1, acc))``
@@ -1973,31 +1911,9 @@ def graph_greedy_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, so ``_coloring_sql()`` replays the rounds in DuckDB
     (unrolled JP, set-SQL mex); the proper-coloring and determinism
     properties are additionally pinned in tests/test_round6c.py."""
-    from graph_database_akkatyped_spark.operators.graph_build import (
-        build_user_graph_capped,
-    )
-
     def build() -> DataFrame:
-        ce = build_user_graph_capped(spark, sf_dir)
-        dsym = ce.select("a", "b", "weight").unionAll(
-            ce.select(
-                F.col("b").alias("a"), F.col("a").alias("b"), "weight"
-            )
-        )
-        wtop = Window.partitionBy("a").orderBy(F.col("weight").desc(), "b")
-        backbone = (
-            dsym.withColumn("rn", F.row_number().over(wtop))
-            .where(F.col("rn") <= _COLOR_TOPK)
-            .select("a", "b")
-        )
-        sym = cut(
-            backbone.unionAll(
-                backbone.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            ).distinct()
-        )
-        prio = lambda c: F.conv(
-            F.substring(F.md5(c.cast("string")), 1, 8), 16, 10
-        ).cast("long")
+        sym = _backbone(build_user_graph_capped(spark, sf_dir), _COLOR_TOPK)
+        prio = lambda c: _md5_int(":", 8, c)
 
         def color_round(colors: DataFrame, rnd) -> DataFrame:
             uncolored = colors.where(F.col("color").isNull()).select("v")
@@ -2006,11 +1922,8 @@ def graph_greedy_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
             und = sym.join(ua, "a").join(ub, "b")
             blocked = (
                 und.where(
-                    (prio(F.col("b")) > prio(F.col("a")))
-                    | (
-                        (prio(F.col("b")) == prio(F.col("a")))
-                        & (F.col("b") > F.col("a"))
-                    )
+                    (prio("b") > prio("a"))
+                    | ((prio("b") == prio("a")) & (F.col("b") > F.col("a")))
                 )
                 .select(F.col("a").alias("v"))
                 .distinct()
@@ -2063,19 +1976,11 @@ _GNN_F2 = 3      # hop-2 fan-out
 
 def _edge_hash(src, dst):
     """Deterministic per-edge sampling key: first 8 hex digits of
-    md5("src:dst") as a BIGINT — the same engine-portable hash recipe
-    as split_train_test's bucket (md5 prefix → integer), so the
+    md5("src:dst") as a BIGINT (:func:`_md5_int`, the engine-portable
+    md5-prefix draw every graph gate and priority uses), so the
     sampled neighbor CHOICE is a pure function of the edge, stable
     across runs, partitionings, and engines."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", src.cast("string"), dst.cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    return _md5_int(":", 8, src, dst)
 
 
 def _sql_edge_hash(src: str, dst: str) -> str:
@@ -2105,14 +2010,7 @@ def gnn_sample_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped user graph the per-parent window sorts ≤ cap rows. Seeds
     here = the ``_GNN_SEEDS`` smallest vertex ids (a deterministic
     stand-in for a training batch; production passes real batch ids)."""
-    from graph_database_akkatyped_spark.operators.graph_build import (
-        build_user_graph_capped,
-    )
-
-    ce = build_user_graph_capped(spark, sf_dir).select("a", "b")
-    sym = ce.unionAll(
-        ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    sym = _sym(build_user_graph_capped(spark, sf_dir).select("a", "b"), "a", "b")
     seeds = (
         sym.select(F.col("a").alias("seed"))
         .distinct()
@@ -2190,14 +2088,8 @@ _MIS_ROUNDS = 8  # sf0.1 converges in 6; +2 margin (empty rounds are no-ops)
 def _mis_prio(c, r: int):
     """Per-round 60-bit priority: md5("<id>:<round>") prefix as BIGINT —
     fresh symmetry-breaking randomness every round (true Luby), engine-
-    portable byte-for-byte (same recipe as ``_edge_hash``)."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", c.cast("string"), F.lit(str(r)))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    portable byte-for-byte (:func:`_md5_int`, as ``_edge_hash``)."""
+    return _md5_int(":", 15, c, F.lit(str(r)))
 
 
 def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2227,10 +2119,7 @@ def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked against the unrolled-round DuckDB twin.
     """
     def build() -> DataFrame:
-        ce = _canonical_edges(spark, sf_dir)
-        sym = ce.unionByName(
-            ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
+        sym = _sym(_canonical_edges(spark, sf_dir), "a", "b")
         verts = user_vertices(spark, sf_dir).select(F.col("id").alias("v"))
         return mis_frame(verts, sym, _MIS_ROUNDS).select(
             F.col("v").alias("user_id")
@@ -2553,6 +2442,58 @@ _ANF_C = tuple(
 )
 
 
+def _anf_masks(verts: DataFrame) -> DataFrame:
+    """Initial FM sketches of ``verts`` (id): one row (v, m, mask) per
+    vertex and sketch m < ``_ANF_M``, the bit at the trailing-zero count
+    of the first 60 md5 bits of ``v|m``."""
+    return (
+        verts.select(
+            F.col("id").alias("v"),
+            F.explode(F.array(*[F.lit(m) for m in range(_ANF_M)])).alias("m"),
+        )
+        .withColumn("h", _md5_int("|", 15, "v", "m"))
+        .select(
+            "v",
+            "m",
+            F.expr("shiftleft(1L, least(bit_count((h & -h) - 1), 40))").alias("mask"),
+        )
+    )
+
+
+def _anf_hop(masks: DataFrame, edges_sym: DataFrame) -> DataFrame:
+    """One ANF hop: each vertex ORs its neighbours' masks into its own
+    (``edges_sym``: (a, b) symmetric) — bit_or is the only aggregate."""
+    nbr = edges_sym.join(masks.withColumnRenamed("v", "a"), "a").select(
+        F.col("b").alias("v"), "m", "mask"
+    )
+    return (
+        masks.unionByName(nbr)
+        .groupBy("v", "m")
+        .agg(F.expr("bit_or(mask)").alias("mask"))
+    )
+
+
+def _anf_estimate(masks: DataFrame) -> DataFrame:
+    """(v, r_sum, est_ppm): r_sum = Σ_m index of the lowest zero bit,
+    est_ppm = 2^(r_sum div M) · ``_ANF_C``[r_sum % M] — exact integers."""
+    r = F.expr("bit_count(((~mask) & (mask + 1)) - 1)")
+    c_case = "CASE " + " ".join(
+        f"WHEN r_sum % {_ANF_M} = {f} THEN {c}L" for f, c in enumerate(_ANF_C)
+    ) + " END"
+    return (
+        masks.select("v", r.alias("r"))
+        .groupBy("v")
+        .agg(F.sum("r").cast("long").alias("r_sum"))
+        .select(
+            "v",
+            "r_sum",
+            F.expr(f"shiftleft(1L, int(r_sum div {_ANF_M})) * ({c_case})").alias(
+                "est_ppm"
+            ),
+        )
+    )
+
+
 def graph_neighborhood_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANF — the Approximate Neighborhood Function (Palmer, Gibbons &
     Faloutsos, KDD 2002): per-vertex estimated |{u : dist(u,v) ≤ K}|
@@ -2579,12 +2520,7 @@ def graph_neighborhood_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream consumer fetch the same checkpointed sketch table
     instead of re-propagating (the scc/hits discipline)."""
     def build() -> DataFrame:
-        verts = user_vertices(spark, sf_dir)
-        edges = _memoized(
-            spark, "uedges_sym", sf_dir,
-            lambda: user_edges_sym(spark, sf_dir),
-        )
-        return anf_frame(verts, edges)
+        return anf_frame(user_vertices(spark, sf_dir), _uedges_memo(spark, sf_dir))
 
     return _memoized(spark, "anf", sf_dir, build).select(
         F.col("v").alias("user_id"), "r_sum", "est_ppm"
@@ -2597,49 +2533,13 @@ def anf_frame(verts: DataFrame, edges_sym: DataFrame) -> DataFrame:
     See :func:`graph_neighborhood_anf` for the full contract; the 1M
     rehearsal (tools/round8c_kernel_rehearsal.py) drives this frame
     directly."""
-    edges = edges_sym
-    sketches = verts.select(
-        F.col("id").alias("v"),
-        F.explode(F.array(*[F.lit(m) for m in range(_ANF_M)])).alias("m"),
+    masks = fixpoint(
+        lambda masks, rnd: _anf_hop(masks, edges_sym),
+        _anf_masks(verts),
+        max_iter=_ANF_K,
+        name="anf_frame",
     )
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", "v", "m")), 1, 15), 16, 10
-    ).cast("long")
-    masks = sketches.withColumn("h", h).select(
-        "v",
-        "m",
-        F.expr(
-            "shiftleft(1L, least(bit_count((h & -h) - 1), 40))"
-        ).alias("mask"),
-    )
-
-    def hop(masks: DataFrame, rnd) -> DataFrame:
-        nbr = (
-            edges.join(masks.withColumnRenamed("v", "a"), "a")
-            .select(F.col("b").alias("v"), "m", "mask")
-        )
-        return (
-            masks.unionByName(nbr)
-            .groupBy("v", "m")
-            .agg(F.expr("bit_or(mask)").alias("mask"))
-        )
-
-    masks = fixpoint(hop, masks, max_iter=_ANF_K, name="anf_frame")
-    r = F.expr("bit_count(((~mask) & (mask + 1)) - 1)")
-    per_v = masks.select("v", r.alias("r")).groupBy("v").agg(
-        F.sum("r").cast("long").alias("r_sum")
-    )
-    c_case = "CASE " + " ".join(
-        f"WHEN r_sum % {_ANF_M} = {f} THEN {c}L"
-        for f, c in enumerate(_ANF_C)
-    ) + " END"
-    return per_v.select(
-        "v",
-        "r_sum",
-        F.expr(
-            f"shiftleft(1L, int(r_sum div {_ANF_M})) * ({c_case})"
-        ).alias("est_ppm"),
-    )
+    return _anf_estimate(masks)
 
 
 def _anf_sql() -> str:
@@ -2704,10 +2604,8 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     audits are five broadcast semi-joins over one cached degree
     frame. No quadratic anything: e_k comes from counting EXISTING
     edges inside the club, never from enumerating possible ones."""
-    edges = _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    )
-    deg = cut(edges.groupBy("a").agg(F.count(F.lit(1)).alias("deg")))
+    edges = _uedges_memo(spark, sf_dir)
+    deg = cut(_degrees(edges, "a", "a", "deg"))
     out = None
     for k in _RICH_CLUB_KS:
         club = deg.where(F.col("deg") > k).select("a")
@@ -2774,62 +2672,26 @@ def graph_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     N(k) = Σ_v |N_k(v)| for k = 1..``_EFFDIAM_K`` and report the first
     k where N(k) reaches ``_EFFDIAM_BP``/10⁴ of N(K) — "90% of all
     reachable pairs are within k hops", the small-world number for the
-    user graph. Same O(K·|E|) bit_or propagation as
-    ``graph_neighborhood_anf``; this key just snapshots the per-round
-    totals instead of only the last round.
+    user graph. Same ANF stages as ``graph_neighborhood_anf``
+    (:func:`_anf_masks`, :func:`_anf_hop`, :func:`_anf_estimate`); this
+    key runs its own per-round loop to snapshot every round's total
+    instead of only the last round (a ``fixpoint`` generation holds one
+    round, see its docstring).
 
     All-integer: per-round totals sum the exact est_ppm integers;
     reach_bp is one BIGINT division; the flag is a comparison. Output:
     one row per k (k, total_est_ppm, reach_bp, is_effective_diameter)."""
-    verts = user_vertices(spark, sf_dir)
-    edges = _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    )
-    sketches = verts.select(
-        F.col("id").alias("v"),
-        F.explode(F.array(*[F.lit(m) for m in range(_ANF_M)])).alias("m"),
-    )
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", "v", "m")), 1, 15), 16, 10
-    ).cast("long")
-    masks = sketches.withColumn("h", h).select(
-        "v",
-        "m",
-        F.expr(
-            "shiftleft(1L, least(bit_count((h & -h) - 1), 40))"
-        ).alias("mask"),
-    )
-    c_case = "CASE " + " ".join(
-        f"WHEN r_sum % {_ANF_M} = {f} THEN {c}L"
-        for f, c in enumerate(_ANF_C)
-    ) + " END"
-    rounds = None
+    edges = _uedges_memo(spark, sf_dir)
+    masks = _anf_masks(user_vertices(spark, sf_dir))
+    totals = []
     for k in range(1, _EFFDIAM_K + 1):
-        nbr = (
-            edges.join(masks.withColumnRenamed("v", "a"), "a")
-            .select(F.col("b").alias("v"), "m", "mask")
-        )
-        masks = (
-            masks.unionByName(nbr)
-            .groupBy("v", "m")
-            .agg(F.expr("bit_or(mask)").alias("mask"))
-            .transform(cut)
-        )
-        r = F.expr("bit_count(((~mask) & (mask + 1)) - 1)")
-        total = (
-            masks.select("v", r.alias("r"))
-            .groupBy("v")
-            .agg(F.sum("r").cast("long").alias("r_sum"))
-            .select(
-                F.expr(
-                    f"shiftleft(1L, int(r_sum div {_ANF_M})) * ({c_case})"
-                ).alias("est_ppm")
-            )
+        masks = _anf_hop(masks, edges).transform(cut)
+        totals.append(
+            _anf_estimate(masks)
             .agg(F.sum("est_ppm").cast("long").alias("total_est_ppm"))
             .select(F.lit(k).alias("k"), "total_est_ppm")
         )
-        rounds = total if rounds is None else rounds.unionByName(total)
-    out = rounds.withColumn(
+    out = reduce(DataFrame.unionByName, totals).withColumn(
         "reach_bp",
         # widen through DECIMAL(38,0) before the *10000: the BIGINT
         # product overflows once summed est_ppm approaches its
@@ -2932,9 +2794,7 @@ def graph_anf_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     est_ppm and exact_n are both exact integers; ratio_bp is one
     BIGINT division (positive, trunc == floor)."""
-    edges = _memoized(
-        spark, "uedges_sym", sf_dir, lambda: user_edges_sym(spark, sf_dir)
-    )
+    edges = _uedges_memo(spark, sf_dir)
     sample = user_vertices(spark, sf_dir).where(
         F.pmod(F.col("id"), F.lit(_ANF_SAMPLE_MOD)) == 0
     ).select(F.col("id").alias("seed"))

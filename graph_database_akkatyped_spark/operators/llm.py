@@ -171,6 +171,13 @@ def _text_hash() -> Column:
     return F.sha2(F.lower(F.trim(F.col("text"))), 256)
 
 
+def _exact_keeper() -> Column:
+    """True on each exact-dedup group's keeper: the row whose doc_id is
+    the minimum over its ``text_hash`` partition. The duplicate flag is
+    its negation."""
+    return F.col("doc_id") == F.min("doc_id").over(Window.partitionBy("text_hash"))
+
+
 def _shingles(docs: DataFrame, *key: str) -> DataFrame:
     """(*key, g): every word-3-gram of each ``docs`` text, repeats kept
     (``_GRAM_FROM_TOKS`` over the once-projected token array)."""
@@ -1185,12 +1192,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``is_keeper`` marks the document to retain.
     """
     from graph_database_akkatyped_spark.operators.algos import cc_frame
+    from graph_database_akkatyped_spark.operators.graph_build import _sym
 
     def sym_pairs() -> DataFrame:
-        pairs = dedup_ngram_jaccard(spark, sf_dir).select("a", "b")
-        return pairs.unionByName(
-            pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
+        return _sym(dedup_ngram_jaccard(spark, sf_dir), "a", "b")
 
     sym = memoized_checkpoint(spark, "dedup_sym_pairs", sf_dir, sym_pairs)
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1341,8 +1346,9 @@ def text_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-first, then aggregate: measured faster than folding
     # count_distinct into the agg (the distinct-agg rewrite Expands
     # every shingle row twice), and the minhashes are computed once per
-    # distinct shingle
-    grams = _gram_frame(load_table(spark, sf_dir, "documents"))
+    # distinct shingle — read from the memoized _ngram_grams frame every
+    # MinHash-banded key shares, so a warm session never re-shingles
+    grams = _ngram_grams(spark, sf_dir)
     return grams.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"), *_minhash_mins()
     )
@@ -1480,7 +1486,6 @@ def corpus_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning."""
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " "))
-    w = Window.partitionBy("text_hash")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long")
@@ -1496,7 +1501,7 @@ def corpus_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             _text_hash().alias("text_hash"),
             n_tok.alias("n_tokens"),
         )
-        .withColumn("is_keeper", F.col("doc_id") == F.min("doc_id").over(w))
+        .withColumn("is_keeper", _exact_keeper())
         .where(F.col("is_keeper") & F.col("n_tokens").between(5, 1000))
         .select("doc_id", "lang", split.alias("split"), "n_tokens")
     )
@@ -7919,14 +7924,11 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    w = Window.partitionBy("text_hash")
     flagged = docs.select(
         "doc_id",
         "source",
         _text_hash().alias("text_hash"),
-    ).withColumn(
-        "is_exact_dup", F.col("doc_id") != F.min("doc_id").over(w)
-    )
+    ).withColumn("is_exact_dup", ~_exact_keeper())
     pairs = dedup_ngram_jaccard(spark, sf_dir)
     near = (
         pairs.select(F.col("a").alias("doc_id"))

@@ -33,7 +33,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graph_database_akkatyped_spark.catalog import load_table
+from graph_database_akkatyped_spark.caching import memoized_checkpoint
+from graph_database_akkatyped_spark.operators.graph_build import _degrees, build_edges
+from graph_database_akkatyped_spark.operators.graph_extras import _dedges_memo
 
 _TERM_RE = re.compile(
     r"^\s*(!?)\s*\(\s*(\w*)\s*\)\s*-\s*\[\s*(\w*)\s*(?::\s*(\w+))?\s*\]\s*->"
@@ -119,6 +121,13 @@ def find(edges: DataFrame, pattern: str) -> DataFrame:
 # ------------------------------------------------- registered motif keys
 
 
+def _bedges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-memoized property-graph edge list (``build_edges``)."""
+    return memoized_checkpoint(
+        spark, "bedges", sf_dir, lambda: build_edges(spark, sf_dir)
+    )
+
+
 def motif_cosupplied_enumerated(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -129,16 +138,9 @@ def motif_cosupplied_enumerated(
     combinatorial plan (tests/test_motif.py pins plan equality on the
     small fixture); never register this shape — a hot supplier with
     10⁵ customers is 5·10⁹ intermediate rows."""
-    from graph_database_akkatyped_spark.caching import memoized_checkpoint
-    from graph_database_akkatyped_spark.operators.graph_build import build_edges
-
-    edges = memoized_checkpoint(
-        spark, "bedges", sf_dir, lambda: build_edges(spark, sf_dir)
-    )
-    matches = find(edges, "(a)-[:sourced]->(s); (b)-[:sourced]->(s)").where(
-        F.col("a") < F.col("b")
-    )
-    return matches.groupBy("s").agg(F.count(F.lit(1)).alias("n_pairs"))
+    pattern = "(a)-[:sourced]->(s); (b)-[:sourced]->(s)"
+    matches = find(_bedges_memo(spark, sf_dir), pattern).where(F.col("a") < F.col("b"))
+    return _degrees(matches, "s", "s", "n_pairs")
 
 
 def motif_find_cosupplied(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,17 +153,8 @@ def motif_find_cosupplied(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged from the enumerating version (the answer is identical);
     :func:`motif_cosupplied_enumerated` keeps the raw motif-compiler
     path exercised, with plan equality pinned in tests/test_motif.py."""
-    from graph_database_akkatyped_spark.caching import memoized_checkpoint
-    from graph_database_akkatyped_spark.operators.graph_build import build_edges
-
-    edges = memoized_checkpoint(
-        spark, "bedges", sf_dir, lambda: build_edges(spark, sf_dir)
-    )
-    deg = (
-        edges.where(F.col("rel") == "sourced")
-        .groupBy(F.col("dst").alias("s"))
-        .agg(F.count(F.lit(1)).alias("n_cust"))
-    )
+    sourced = _bedges_memo(spark, sf_dir).where(F.col("rel") == "sourced")
+    deg = _degrees(sourced, "dst", "s", "n_cust")
     return deg.where(F.col("n_cust") >= 2).select(
         "s",
         (F.col("n_cust") * (F.col("n_cust") - 1) / 2)
@@ -187,20 +180,10 @@ def motif_find_nonmutual(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a)->(b) with NO reciprocal (b)->(a) edge — "who follows whom
     without follow-back", per source vertex. The negated term compiles
     to an anti-join (never a filter over a cross product)."""
-    from graph_database_akkatyped_spark.caching import memoized_checkpoint
-    from graph_database_akkatyped_spark.operators.graph_extras import (
-        user_directed_edges,
-    )
-
-    # same "dedges" frame SCC/Katz/HITS share — the negation anti-join
-    # reads the cut instead of re-running the events self-join
-    edges = memoized_checkpoint(
-        spark, "dedges", sf_dir, lambda: user_directed_edges(spark, sf_dir)
-    )
-    matches = find(edges, "(a)-[]->(b); !(b)-[]->(a)")
-    return matches.groupBy("a").agg(
-        F.count(F.lit(1)).alias("n_oneway")
-    ).select(F.col("a").alias("user_id"), "n_oneway")
+    # _dedges_memo, the frame SCC/Katz/HITS share — the negation
+    # anti-join reads the cut instead of re-running the events self-join
+    matches = find(_dedges_memo(spark, sf_dir), "(a)-[]->(b); !(b)-[]->(a)")
+    return _degrees(matches, "a", "user_id", "n_oneway")
 
 
 _MOTIF_NONMUTUAL_SQL = """

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.catalog import load_table
+from graph_database_akkatyped_spark.operators.graph_build import _sym
 from graph_database_akkatyped_spark.numerics import (
     dec2double,
     dsum,
@@ -2195,11 +2196,7 @@ def recommend_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("cooc"))
     )
-    sym = pairs.unionByName(
-        pairs.select(
-            F.col("pj").alias("pi"), F.col("pi").alias("pj"), "cooc"
-        )
-    )
+    sym = _sym(pairs, "pi", "pj", "cooc")
     scored = (
         sym.join(
             F.broadcast(deg.select(F.col("l_partkey").alias("pi"),

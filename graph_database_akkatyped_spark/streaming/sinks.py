@@ -42,6 +42,7 @@ from graph_database_akkatyped_spark.caching import (
     memoized_checkpoint,
 )
 from graph_database_akkatyped_spark.catalog import load_table
+from graph_database_akkatyped_spark.operators.graph_build import _degrees, _sym
 from graph_database_akkatyped_spark.numerics import dec2double, sql_dsum
 
 _N_SPLITS = 4  # micro-batches the fixture is replayed as
@@ -307,9 +308,7 @@ class IncrementalDegreeStore:
             else self.edges.unionByName(new_pairs)
         )
         edges_cut = cut(merged)
-        delta = new_pairs.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("degree")
-        )
+        delta = _degrees(new_pairs, "user_id", "user_id", "degree")
         new_deg = (
             delta
             if self.degrees is None
@@ -494,15 +493,11 @@ class IncrementalCooccurStore:
         from graph_database_akkatyped_spark.operators.algos import (
             pagerank_frame,
         )
-
         assert self.pairs is not None, "no batch was ever applied"
         verts = self.members.select(
             F.col("user_id").alias("id")
         ).distinct()
-        edges_sym = self.pairs.unionByName(
-            self.pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        return pagerank_frame(verts, edges_sym, 10).select(
+        return pagerank_frame(verts, _sym(self.pairs, "a", "b"), 10).select(
             F.col("id").alias("user_id"), "rank_e12", "rank"
         )
 

@@ -216,3 +216,36 @@ def test_temporal_reachability_respects_time(spark, tmp_path_factory):
         for r in graph_temporal_reachability(spark, str(d)).collect()
     }
     assert got == {b: at(1), c: at(3)}, got  # c2 must be absent
+
+
+def test_user_graph_keys_share_one_edge_build(spark, monkeypatch):
+    """graph_random_walks, graph_rich_club and community_modularity all
+    read the one memoized symmetric edge list: from a cleared frame
+    cache the slot self-join (``user_edges_sym``) is built exactly once
+    for the three keys, whichever module a caller took the name from."""
+    import importlib
+
+    from graph_database_akkatyped_spark.caching import clear_frame_cache
+    from graph_database_akkatyped_spark.operators.centrality import (
+        community_modularity,
+    )
+    from graph_database_akkatyped_spark.operators.graph_extras import (
+        graph_rich_club,
+    )
+
+    calls = {"n": 0}
+
+    def counted(*args, **kwargs):
+        calls["n"] += 1
+        return user_edges_sym(*args, **kwargs)
+
+    pkg = "graph_database_akkatyped_spark.operators"
+    for name in ("graph_build", "algos", "graph_extras", "centrality", "motif"):
+        mod = importlib.import_module(f"{pkg}.{name}")
+        if hasattr(mod, "user_edges_sym"):
+            monkeypatch.setattr(mod, "user_edges_sym", counted)
+    clear_frame_cache(SF_ORACLE)
+    graph_random_walks(spark, SF_ORACLE)
+    graph_rich_club(spark, SF_ORACLE)
+    community_modularity(spark, SF_ORACLE)
+    assert calls["n"] == 1, f"user_edges_sym built {calls['n']}x; must be once"

@@ -523,20 +523,26 @@ def test_truss_incremental_materializes_triangles_once(spark):
     )
 
 
-# Vector-search and dedup plan shapes at sf0.01, counted node by node
-# (physical plan, AQE's initial plan). Columns: shuffle Exchange,
+# Vector-search, dedup and graph plan shapes at sf0.01, counted node by
+# node (physical plan, AQE's initial plan). Columns: shuffle Exchange,
 # BroadcastExchange, BroadcastHashJoin, BroadcastNestedLoopJoin,
-# SortMergeJoin, Window, parquet scans. Every key is assembled from the
-# shared stages in operators/llm.py — for vector search the vector and
+# SortMergeJoin, Window, parquet scans. Every key is assembled from
+# shared stages: in operators/llm.py, for vector search the vector and
 # query frames, _cell_means, _probe, _cos_topk, _nearest_cell and
-# _pq_index; for dedup the text hash, _shingles, _ngram_grams, the
+# _pq_index, and for dedup the text hash, _shingles, _ngram_grams, the
 # MinHash signature and band stages, _band_pairs, _jaccard_verify,
-# _sign_bands and _cos_verify. A stage edit that adds a shuffle, turns
-# a broadcast into a shuffled join or rescans the corpus shows up here
-# as a changed count. _mmr_pool stands in for simsearch_mmr (whose
-# result is a cut of its rerank fixpoint), _knn_graph_build for
-# knn_graph_build and _ngram_pairs for dedup_ngram_jaccard (both keys
-# memoize).
+# _sign_bands and _cos_verify; for the graph family the stages at the
+# head of operators/graph_build.py's user-graph section (_uedges_memo,
+# _mirror, _sym, _degrees, _md5_int) and graph_extras' _dedges_memo,
+# _succession, _backbone and ANF stages. A stage edit that adds a
+# shuffle, turns a broadcast into a shuffled join or rescans an input
+# shows up here as a changed count. _mmr_pool stands in for
+# simsearch_mmr (whose result is a cut of its rerank fixpoint),
+# _knn_graph_build for knn_graph_build, _ngram_pairs for
+# dedup_ngram_jaccard and the two _link_predict_*_build builders for
+# the link predictors (those keys memoize). Graph keys whose result is
+# a cut (fixpoint or memoized kernels) have a one-scan plan and are not
+# listed; tools/explain.py reports the jobs and stages their build ran.
 _PLAN_SHAPES = {
     "simsearch_topk": (1, 1, 0, 1, 0, 1, 2),
     "_mmr_pool": (1, 1, 0, 1, 0, 1, 2),
@@ -570,13 +576,31 @@ _PLAN_SHAPES = {
     "dedup_containment": (10, 0, 0, 0, 3, 0, 0),
     "dedup_containment_smallside": (16, 0, 0, 0, 7, 1, 0),
     "dedup_banding_recall": (11, 4, 4, 0, 1, 0, 6),
-    "text_minhash_signature": (2, 0, 0, 0, 0, 0, 1),
+    "text_minhash_signature": (1, 0, 0, 0, 0, 0, 0),
     "dedup_incremental": (10, 0, 0, 0, 3, 0, 0),
     "dedup_embedding_cosine": (1, 3, 3, 0, 0, 0, 4),
     "dedup_embedding_cosine_salted": (1, 3, 3, 0, 0, 0, 4),
     "dedup_semantic": (16, 10, 4, 6, 2, 3, 13),
     "dedup_semantic_recall": (13, 7, 2, 5, 2, 2, 10),
     "decontam_semantic": (3, 3, 3, 0, 1, 0, 5),
+    "edge_jaccard": (6, 0, 0, 0, 3, 0, 0),
+    "clustering_coefficient": (2, 0, 0, 0, 1, 0, 0),
+    "graph_summary_stats": (2, 0, 0, 0, 0, 0, 0),
+    "triangle_count_approx": (6, 1, 0, 1, 2, 0, 0),
+    "degree_assortativity": (5, 0, 0, 0, 2, 0, 0),
+    "community_modularity": (19, 3, 0, 3, 8, 0, 0),
+    "community_louvain_multi": (2, 0, 0, 0, 1, 0, 0),
+    "graph_reciprocity": (4, 1, 0, 1, 1, 0, 0),
+    "motif_find_nonmutual": (3, 0, 0, 0, 1, 0, 0),
+    "graph_rich_club": (10, 15, 10, 5, 0, 0, 0),
+    "gnn_sample_fanout": (5, 3, 3, 0, 0, 3, 0),
+    "graph_anf_accuracy": (10, 2, 2, 0, 2, 0, 4),
+    "graph_effective_diameter": (6, 0, 0, 0, 0, 2, 0),
+    "graph_random_walks": (1, 1, 0, 1, 0, 0, 1),
+    "graph_node2vec_walks": (1, 1, 0, 1, 0, 0, 0),
+    "path_shortest_bidirectional": (8, 1, 0, 1, 3, 0, 1),
+    "_link_predict_jaccard_build": (9, 0, 0, 0, 4, 1, 0),
+    "_link_predict_ra_build": (6, 0, 0, 0, 3, 1, 0),
 }
 _SHAPE_NODES = (
     "Exchange",
@@ -591,9 +615,17 @@ _SHAPE_NODES = (
 
 @pytest.mark.parametrize("name", sorted(_PLAN_SHAPES))
 def test_vector_search_plan_shape(spark, name):
-    from graph_database_akkatyped_spark.operators import curation, llm
+    from graph_database_akkatyped_spark.operators import (
+        algos,
+        centrality,
+        curation,
+        graph_extras,
+        llm,
+        motif,
+    )
 
-    build = getattr(llm, name, None) or getattr(curation, name)
+    modules = (llm, curation, algos, graph_extras, centrality, motif)
+    build = next(getattr(m, name) for m in modules if hasattr(m, name))
     counts = node_counts(build(spark, SF_ORACLE))
     got = tuple(counts[n] for n in _SHAPE_NODES)
     assert dict(zip(_SHAPE_NODES, got)) == dict(

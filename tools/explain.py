@@ -4,7 +4,14 @@ Usage: python tools/explain.py [--plan-out PATH] key [key ...]
 
 Prints one JSON object ``{key: {node: count}}`` on stdout, counted by
 ``plans.explain.node_counts`` (the physical plan tree, AQE's initial
-plan). A key is a registered query key, or ``module:function`` for an
+plan). Each key's object also holds ``spark.jobs`` and ``spark.stages``:
+the Spark jobs its build ran and their stages that ran (skipped stages
+excluded), read from ``statusTracker`` under one job group per key.
+Keys whose plan is one cut scan (fixpoint and memoized kernels) run
+their whole work at build time, so these two numbers are the ones that
+show what such a build did.
+
+A key is a registered query key, or ``module:function`` for an
 unregistered builder with the ``(spark, sf_dir)`` signature (e.g.
 ``graph_database_akkatyped_spark.operators.llm:_knn_graph_build``, whose
 registered key memoizes and would show only a checkpoint scan).
@@ -26,6 +33,8 @@ import json
 import os
 import sys
 
+from py4j.protocol import Py4JJavaError
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
@@ -46,6 +55,26 @@ def _builder(queries: dict, key: str):
     return queries[key]
 
 
+def _work(spark, group: str) -> dict[str, int]:
+    """Jobs run under ``group`` and their stages that ran."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store caught up
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = set()
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        if info is not None:
+            stage_ids.update(int(s) for s in info.stageIds)
+    ran = 0
+    for sid in stage_ids:
+        try:
+            ran += store.lastStageAttempt(sid).status().toString() != "SKIPPED"
+        except Py4JJavaError:  # never submitted
+            continue
+    return {"spark.jobs": len(jobs), "spark.stages": ran}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--plan-out", default=None)
@@ -56,10 +85,17 @@ def main() -> None:
     queries, _ = collect()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     counts, plans = {}, []
-    for key in args.keys:
+    sc = spark.sparkContext
+    for i, key in enumerate(args.keys):
         clear_frame_cache(sf_dir)
-        df = _builder(queries, key)(spark, sf_dir)
+        group = f"explain-{i}"
+        sc.setJobGroup(group, key)
+        try:
+            df = _builder(queries, key)(spark, sf_dir)
+        finally:
+            sc.setJobGroup("explain-idle", "")
         counts[key] = dict(sorted(node_counts(df).items()))
+        counts[key].update(_work(spark, group))
         if args.plan_out:
             plans.append(f"== {key} ==\n{formatted_plan(df)}")
     if args.plan_out:
