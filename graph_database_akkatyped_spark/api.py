@@ -17,8 +17,14 @@ the lakehouse event-log pattern:
 - **compaction** folds the journal into a snapshot so replay cost stays
   O(live data), the Spark analog of Akka Persistence snapshots.
 
-Reads and algorithms are plain DataFrame plans over the replayed state,
-so everything composes with the operators/ modules (Pregel, BFS, ...).
+Point asks (:meth:`GraphDB.get_vertex`, :meth:`GraphDB.neighbors`,
+:meth:`GraphDB.history`) are driver reads: pyarrow reads the few journal
+rows of one key, replays them, and the ask returns a DataFrame over that
+local Arrow table (a LocalRelation plan: collecting it runs no Spark
+job and never reads the journal again), the analog of answering GetNode
+from one actor's state. Bulk reads and analytics are plain DataFrame
+plans over the replayed state, so everything composes with the
+operators/ modules (Pregel, BFS, ...).
 
 Example::
 
@@ -39,6 +45,8 @@ from collections.abc import Iterable
 from contextlib import contextmanager
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -75,6 +83,24 @@ def _journal_files(dest: str) -> list[str]:
         for f in os.listdir(dest)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     ]
+
+
+def _scan(dest: str, ddl: str, predicate: pc.Expression) -> pa.Table:
+    """The journal rows matching ``predicate``, read on the driver
+    (committed files only). pyarrow reads every file's footer, then
+    only the row groups whose statistics can hold a match, so a point
+    ask reads a few rows."""
+    journal = ds.dataset(_journal_files(dest), schema=_arrow_schema(ddl), format="parquet")
+    return journal.to_table(filter=predicate)
+
+
+def _replay(rows: pa.Table, keys: list[str]) -> pa.Table:
+    """:meth:`GraphDB._latest` over a few driver-read rows: the latest
+    batch per key wins, tombstones drop, and the event columns go."""
+    rows = rows.sort_by("batch")
+    last = {k: i for i, k in enumerate(zip(*(rows[c].to_pylist() for c in keys)))}
+    latest = rows.take(pa.array(sorted(last.values()), pa.int64()))
+    return latest.filter(pc.field("op") != "delete").drop_columns(["op", "batch"])
 
 
 def _max_batch(path: str) -> int:
@@ -118,13 +144,17 @@ class GraphDB:
     (an empty command writes none): the driver writes it with pyarrow
     to a dot-prefixed temp name in the journal directory and renames it
     to ``part-….parquet`` while still holding the lock. Spark's file
-    listing and the journal stream skip dot-prefixed names, so readers
-    never lock: a read sees a consistent prefix of the journal, and a
-    temp file left by a crashed writer is never read.
-    ``compact()`` additionally requires that NO reader holds a plan over
-    the journal while it swaps directories — schedule it off-path, as
-    its docstring says. If a writer dies holding the lock, remove the
-    stale ``journal/.write_lock`` manually (:meth:`force_unlock`)."""
+    listing, the driver-side ask reads and the journal stream skip
+    dot-prefixed names, so readers never lock: a read sees a consistent
+    prefix of the journal, and a temp file left by a crashed writer is
+    never read. The point asks return a snapshot taken at call time (a
+    DataFrame over a local Arrow table), so no later command or
+    ``compact()`` can change or break one. ``compact()`` requires that
+    no bulk read or analytic (:meth:`vertices`, :meth:`edges`,
+    :meth:`pagerank`, ...) holds an unexecuted plan over the journal
+    while it swaps directories — schedule it off-path, as its docstring
+    says. If a writer dies holding the lock, remove the stale
+    ``journal/.write_lock`` manually (:meth:`force_unlock`)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -211,20 +241,20 @@ class GraphDB:
         compaction-invariant. Incident edges come from the raw edge
         replay, not :meth:`edges`: an edge whose other endpoint is not
         (yet) live is still incident and would otherwise come back once
-        both endpoints exist. The lookup is a point filter on one vertex
-        id (OLTP-sized), not a scan."""
+        both endpoints exist. The lookup is a driver-side read of the
+        edge events that name the vertex (see :func:`_scan`), so the
+        command starts no Spark job."""
         with self._write_lock():  # one lock spans both appends: the
             # edge-tombstone + vertex-tombstone pair must not interleave
             # with another writer's re-add of the same id
-            incident = (
-                self._edge_replay(None)
-                .where((F.col("src") == vid) | (F.col("dst") == vid))
-                .select("src", "dst", "rel")
-                .collect()
-            )
+            hit = (pc.field("src") == vid) | (pc.field("dst") == vid)
+            incident = _replay(_scan(self._edir, _E_SCHEMA, hit), _E_KEY)
             batch = self._next_batch()
             self._append_unlocked(
-                [(r.src, r.dst, r.rel, None, "delete") for r in incident],
+                [
+                    (r["src"], r["dst"], r["rel"], None, "delete")
+                    for r in incident.to_pylist()
+                ],
                 batch,
                 _E_SCHEMA,
                 _E_KEY,
@@ -321,13 +351,11 @@ class GraphDB:
 
     def history(self, vid: str) -> DataFrame:
         """Full event history of one vertex (the event-sourced audit
-        ask: every upsert/tombstone in batch order). Point read —
-        at scale, partition the journal by id-bucket so this prunes."""
-        return (
-            self._read_journal(self._vdir, _V_SCHEMA)
-            .where(F.col("id") == vid)
-            .orderBy("batch")
-        )
+        ask: every upsert/tombstone in batch order, with ``op`` and
+        ``batch``). A driver-side point read like :meth:`get_vertex`;
+        at scale, bucket the journal by id so footers prune files."""
+        events = _scan(self._vdir, _V_SCHEMA, pc.field("id") == vid)
+        return self.spark.createDataFrame(events.sort_by("batch"))
 
     def compact(self) -> None:
         """Fold the journal into a single latest-state batch (snapshot).
@@ -363,14 +391,24 @@ class GraphDB:
     # ---------------------------------------------------------------- asks
 
     def get_vertex(self, vid: str) -> DataFrame:
-        """Reference: ask(GetNode) — point read."""
-        return self.vertices().where(F.col("id") == vid)
+        """Reference: ask(GetNode) — point read, replayed on the driver
+        from the events of one id (same rows as ``vertices()`` filtered
+        on ``id``)."""
+        events = _scan(self._vdir, _V_SCHEMA, pc.field("id") == vid)
+        return self.spark.createDataFrame(_replay(events, _V_KEY))
 
     def neighbors(self, vid: str) -> DataFrame:
-        """Out-neighbors with edge attributes (adjacency read)."""
-        v = self.vertices()
-        e = self._live_edges(v, None).where(F.col("src") == vid)
-        return e.join(v, e.dst == v.id).select("src", "dst", "rel", "weight", "kind", "name")
+        """Out-neighbors with edge attributes (adjacency read), replayed
+        on the driver: the edge events out of ``vid``, then the vertex
+        events of ``vid`` and of each target. As in :meth:`edges`, both
+        endpoints must be live."""
+        out = _replay(_scan(self._edir, _E_SCHEMA, pc.field("src") == vid), _E_KEY)
+        ids = [vid, *out["dst"].to_pylist()]
+        live = _replay(_scan(self._vdir, _V_SCHEMA, pc.field("id").isin(ids)), _V_KEY)
+        out = out.filter(pc.field("src").isin(live["id"].combine_chunks()))
+        nb = out.join(live, "dst", right_keys="id", join_type="inner", use_threads=False)
+        cols = ["src", "dst", "rel", "weight", "kind", "name"]
+        return self.spark.createDataFrame(nb.select(cols))
 
     def degrees(self) -> DataFrame:
         e = self.edges()

@@ -26,6 +26,7 @@ from graph_database_akkatyped_spark.operators.graph_build import (
     USER_EDGES_CTE,
     _degrees,
     _md5_int,
+    _slot_pairs,
     _sym,
     _uedges_memo,
     nation_edges,
@@ -324,17 +325,6 @@ def cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_trunc("hour", "ts").alias("hour"),
     )
-
-    def pairs(ev: DataFrame) -> DataFrame:
-        a = ev.select(F.col("user_id").alias("a"), "event_type", "hour")
-        b = ev.select(F.col("user_id").alias("b"), "event_type", "hour")
-        return (
-            a.join(b, ["event_type", "hour"])
-            .where(F.col("a") != F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-
     is_delta = (F.col("event_id") % _CC_DELTA_MOD) == 0
     base_ev = e.where(~is_delta)
     base_cc = _memoized(
@@ -343,7 +333,7 @@ def cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda: cc_frame(
             base_ev.select(F.col("user_id").alias("id")).distinct(),
-            pairs(base_ev),
+            _slot_pairs(base_ev),
         ),
     )
     # delta edges: only slots the batch touched can create new pairs
@@ -354,7 +344,7 @@ def cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_slot_ev = base_ev.join(
         touched, ["event_type", "hour"], "left_semi"
     )
-    delta_edges = pairs(slot_ev).subtract(pairs(base_slot_ev))
+    delta_edges = _slot_pairs(slot_ev).subtract(_slot_pairs(base_slot_ev))
     # contract: endpoint -> base component label, or itself if unseen
     lab_a = base_cc.select(
         F.col("id").alias("a"), F.col("component").alias("ca")

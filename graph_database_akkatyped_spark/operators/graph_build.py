@@ -152,11 +152,26 @@ def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Graph stages. Every graph key (here, in algos, graph_extras,
 # centrality and motif, and the GraphDB / streaming graph inputs) is
-# assembled from these: the one "uedges_sym" memo, the endpoint mirror
-# and the symmetric closure built on it, the per-vertex degree count
-# and the md5-prefix integer draw behind every hash gate, sampling key
-# and priority. Column names are data, so one definition serves every
-# naming a caller uses.
+# assembled from these: the slot pair join behind every user edge, the
+# one "uedges_sym" memo, the endpoint mirror and the symmetric closure
+# built on it, the per-vertex degree count and the md5-prefix integer
+# draw behind every hash gate, sampling key and priority. Column names
+# are data, so one definition serves every naming a caller uses.
+
+
+def _slot_pairs(events: DataFrame) -> DataFrame:
+    """Distinct (a, b) user pairs, a ≠ b, sharing an (event_type, hour)
+    slot of ``events`` (columns user_id, event_type, hour): symmetric by
+    construction, the user-edge join of :func:`user_edges_sym` and of
+    ``algos.cc_incremental``'s base and delta passes."""
+    a = events.select(F.col("user_id").alias("a"), "event_type", "hour")
+    b = events.select(F.col("user_id").alias("b"), "event_type", "hour")
+    return (
+        a.join(b, ["event_type", "hour"])
+        .where(F.col("a") != F.col("b"))
+        .select("a", "b")
+        .distinct()
+    )
 
 
 def _uedges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,14 +252,7 @@ def user_edges_sym(
     )
     if cap is not None:
         e = slot_capped_users(e, cap)
-    a = e.select(F.col("user_id").alias("a"), "event_type", "hour")
-    b = e.select(F.col("user_id").alias("b"), "event_type", "hour")
-    return (
-        a.join(b, ["event_type", "hour"])
-        .where(F.col("a") != F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    return _slot_pairs(e)
 
 
 def build_user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 
 import pytest
 
@@ -14,6 +15,21 @@ from graph_database_akkatyped_spark.api import GraphDB
 @pytest.fixture()
 def db(spark, tmp_path):
     return GraphDB(spark, str(tmp_path / "graphdb"))
+
+
+def _spark_jobs(spark, run):
+    """``run()``'s result and the ids of the Spark jobs it started: it
+    runs under a job group of its own, read back from the status
+    tracker."""
+    sc = spark.sparkContext
+    group = f"graphdb-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_crud_roundtrip(db):
@@ -225,14 +241,8 @@ def test_reopen_after_clock_step_back_writes_after_journal(
     db.add_vertices([("v", "k", "old"), ("w", "k", "w")])
     db.remove_vertex("v")
     monkeypatch.setattr(time, "time_ns", lambda: 1_000_000)  # clock steps back
-    sc = spark.sparkContext
-    sc.setJobGroup("graphdb-open", "graphdb-open")
-    try:
-        db = GraphDB(spark, path)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert sc.statusTracker().getJobIdsForGroup("graphdb-open") == []
+    db, jobs = _spark_jobs(spark, lambda: GraphDB(spark, path))
+    assert jobs == []
     db.add_vertices([("v", "k", "new")])
     assert [r["name"] for r in db.get_vertex("v").collect()] == ["new"]
     # a compacted journal (Spark-written snapshot files) seeds it too
@@ -337,3 +347,44 @@ def test_tombstone_null_weight_roundtrips_ddl_schema(db, spark):
     assert [(r["op"], r["weight"]) for r in rows] == [("upsert", 1.5), ("delete", None)]
     v = spark.read.parquet(db._vdir).where("op = 'delete'").collect()
     assert [(r["id"], r["kind"], r["name"]) for r in v] == [("a", None, None)]
+
+
+def test_commands_start_no_spark_job(db, spark):
+    """Every command, remove_vertex's incident-edge lookup included, is
+    a driver-side read and write of the journal: no Spark job."""
+    commands = [
+        (db.add_vertices, [("a", "k", "x"), ("b", "k", "y"), ("c", "k", "z")]),
+        (db.add_edges, [("a", "b", "r", 1.0), ("b", "a", "r", 2.0), ("a", "c", "r", 3.0)]),
+        (db.remove_edge, "a", "c", "r"),
+        (db.remove_vertex, "b"),  # incident edges (a, b) and (b, a)
+        (db.remove_vertex, "c"),  # no live incident edge left
+    ]
+    for command, *args in commands:
+        assert _spark_jobs(spark, lambda: command(*args))[1] == [], command.__name__
+    assert [tuple(r) for r in db.vertices().collect()] == [("a", "k", "x")]
+    tombstoned = spark.read.parquet(db._edir).where("op = 'delete'")
+    assert sorted((r.src, r.dst) for r in tombstoned.collect()) == [
+        ("a", "b"), ("a", "c"), ("b", "a")
+    ]
+
+
+def test_ask_taken_before_compact_collects_after_it(db, spark):
+    """An ask's DataFrame is a snapshot of the journal at call time:
+    compact() swapping the journal directories, and later commands,
+    neither break nor change it. Neither the ask nor collecting its
+    answer runs a Spark job."""
+    db.add_vertices([("a", "k", "x"), ("b", "k", "y")])
+    db.add_edges([("a", "b", "r", 1.0)])
+    db.add_vertices([("a", "k", "x2")])
+    asks, jobs = _spark_jobs(
+        spark, lambda: [db.get_vertex("a"), db.neighbors("a"), db.history("a")]
+    )
+    assert jobs == []
+    db.compact()
+    db.add_vertices([("a", "k", "x3")])
+    got, jobs = _spark_jobs(spark, lambda: [df.collect() for df in asks])
+    assert jobs == []
+    vertex, neighbors, history = ([tuple(r) for r in rows] for rows in got)
+    assert vertex == [("a", "k", "x2")]
+    assert neighbors == [("a", "b", "r", 1.0, "k", "y")]
+    assert [r[:4] for r in history] == [("a", "k", "x", "upsert"), ("a", "k", "x2", "upsert")]

@@ -3,7 +3,7 @@ hold for ANY input, not just the fixtures."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from graph_database_akkatyped_spark.operators.algos import cc_frame, pagerank_frame
@@ -294,3 +294,96 @@ def test_entity_resolve_structural_recall(spark, stems, tmp_path_factory):
         else:
             expected = 0
         assert out[1000000 + k][1] <= expected, (k, name, out[1000000 + k])
+
+
+_GRAPHDB_VIDS = "abcde"
+_GRAPHDB_IDS = st.sampled_from(_GRAPHDB_VIDS)
+_GRAPHDB_RELS = st.sampled_from("rs")
+_GRAPHDB_COMMANDS = st.lists(
+    st.one_of(
+        st.tuples(
+            st.just("add_vertices"),
+            st.lists(st.tuples(_GRAPHDB_IDS, st.sampled_from("xy")), min_size=1, max_size=3),
+        ),
+        st.tuples(st.just("remove_vertex"), _GRAPHDB_IDS),
+        st.tuples(
+            st.just("add_edges"),
+            st.lists(st.tuples(_GRAPHDB_IDS, _GRAPHDB_IDS, _GRAPHDB_RELS), min_size=1, max_size=3),
+        ),
+        st.tuples(st.just("remove_edge"), st.tuples(_GRAPHDB_IDS, _GRAPHDB_IDS, _GRAPHDB_RELS)),
+        st.tuples(st.just("compact"), st.none()),
+    ),
+    max_size=10,
+)
+
+
+def _check_graphdb_asks(db, ids) -> None:
+    """The driver-side asks answer what the Spark replay of the same
+    journal answers (rows and schema), for every id in ``ids``."""
+    from graph_database_akkatyped_spark.api import _V_SCHEMA
+
+    verts = db.vertices()
+    e = db._live_edges(verts, None)
+    nb = e.join(verts, e.dst == verts.id).select("src", "dst", "rel", "weight", "kind", "name")
+    journal = db._read_journal(db._vdir, _V_SCHEMA).orderBy("batch")
+    live = [tuple(r) for r in verts.collect()]
+    nbrs = sorted(tuple(r) for r in nb.collect())
+    events = [tuple(r) for r in journal.collect()]
+    for vid in ids:
+        asks = db.get_vertex(vid), db.neighbors(vid), db.history(vid)
+        assert [df.schema for df in asks] == [verts.schema, nb.schema, journal.schema]
+        got_v, got_nb, got_h = ([tuple(r) for r in df.collect()] for df in asks)
+        assert got_v == [r for r in live if r[0] == vid], vid
+        assert sorted(got_nb) == [r for r in nbrs if r[0] == vid], vid
+        assert got_h == [r for r in events if r[0] == vid], vid
+
+
+@given(commands=_GRAPHDB_COMMANDS, crash=st.sampled_from(["add_vertices", "add_edges"]))
+@example(  # edges out of an absent source and into an absent target
+    commands=[("add_vertices", [("b", "x")]), ("add_edges", [("a", "b", "r"), ("b", "c", "r")])],
+    crash="add_edges",
+)
+@example(  # a tombstoned and re-added vertex around a compaction
+    commands=[
+        ("add_vertices", [("a", "x"), ("b", "y")]),
+        ("add_edges", [("a", "b", "r"), ("b", "a", "s")]),
+        ("remove_vertex", "a"),
+        ("compact", None),
+        ("add_vertices", [("a", "y")]),
+        ("add_edges", [("a", "b", "s")]),
+    ],
+    crash="add_vertices",
+)
+@settings(**_SETTINGS)
+def test_graphdb_driver_asks_match_spark_replay(spark, tmp_path_factory, commands, crash):
+    """get_vertex / neighbors / history, read and replayed on the driver,
+    equal the Spark replay over random command streams: upserts,
+    re-adds, tombstones, edges to absent endpoints, compactions, and a
+    crashed append's leftover temp file; and on an empty journal."""
+    import os
+    from unittest import mock
+
+    import pytest
+
+    from graph_database_akkatyped_spark.api import GraphDB
+
+    db = GraphDB(spark, str(tmp_path_factory.mktemp("graphdb_prop")))
+    _check_graphdb_asks(db, _GRAPHDB_VIDS)  # empty journal
+    for i, (kind, arg) in enumerate(commands):
+        if kind == "add_vertices":
+            db.add_vertices([(v, "k", f"{name}{i}") for v, name in arg])
+        elif kind == "add_edges":
+            db.add_edges([(s, d, r, float(i)) for s, d, r in arg])
+        elif kind == "remove_edge":
+            db.remove_edge(*arg)
+        elif kind == "remove_vertex":
+            db.remove_vertex(arg)
+        else:
+            db.compact()
+    with mock.patch.object(os, "rename", side_effect=OSError("crash before rename")):
+        with pytest.raises(OSError, match="crash before rename"):
+            if crash == "add_vertices":
+                db.add_vertices([("a", "k", "ghost"), ("e", "k", "ghost")])
+            else:
+                db.add_edges([("a", "b", "ghost", 9.0), ("a", "e", "ghost", 9.0)])
+    _check_graphdb_asks(db, _GRAPHDB_VIDS)
