@@ -42,9 +42,10 @@ both through :func:`release_cut`:
   neither cut again nor freed.
 
 Outside them, only the frame cache (:func:`memoized_checkpoint`,
-:func:`clear_frame_cache`) and the streaming sinks' own state free
-blocks. The two cut modes free superseded generations differently,
-and the O(1)-generations claim is mode-specific:
+:func:`clear_frame_cache`) and the streaming stores with their runner
+(``streaming.runner.ledgered_run``) free blocks. The two cut modes
+free superseded generations differently, and the O(1)-generations
+claim is mode-specific:
 
 - localCheckpoint blocks register in ``getPersistentRDDs``; the
   driver's and the frame cache's eviction unpersists them
@@ -72,6 +73,7 @@ import tempfile
 from contextlib import contextmanager
 from typing import Callable, Iterator
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame, set[int]]] = {}
@@ -200,6 +202,21 @@ def cut_block_ids(df: DataFrame) -> set[int]:
         return {int(plan.rdd().id())}
     except Exception:  # not a checkpoint-backed frame
         return set()
+
+
+def read_block_ids(df: DataFrame) -> set[int]:
+    """The persisted-RDD ids of every cut ``df``'s plan reads (its
+    ``LogicalRDD`` leaves) — for a frame BUILT over cuts, such as a
+    projection of a kernel's final generation, where
+    :func:`cut_block_ids` only answers for a frame that is a cut."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    ids = set()
+    for i in range(leaves.size()):
+        try:
+            ids.add(int(leaves.apply(i).rdd().id()))
+        except Py4JError:  # a file scan or a local relation: no rdd()
+            continue
+    return ids
 
 
 def release_cut(*dfs: DataFrame) -> None:

@@ -6142,6 +6142,16 @@ FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
 _MM_MAGIC = b"IM01"
 
 
+def _container(buf, magic: bytes, error: str) -> bytes:
+    """A binary payload as read back from a table, checked to open with
+    ``magic``. The bytes come from outside the program, so a mismatch
+    raises ``ValueError(error)`` rather than asserting."""
+    b = bytes(buf)
+    if b[:4] != magic:
+        raise ValueError(error)
+    return b
+
+
 def multimodal_encode_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, payload: binary) — a deterministic container format
     packed JVM-side with binary concat: 4-byte magic ``IM01``, 2-byte
@@ -6190,8 +6200,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                assert b[:4] == _MM_MAGIC, "bad container magic"
+                b = _container(buf, _MM_MAGIC, "bad container magic")
                 width = int.from_bytes(b[4:6], "big")
                 height = int.from_bytes(b[6:8], "big")
                 body = b[8:]
@@ -6286,11 +6295,11 @@ def multimodal_video_scenecut(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                assert b[:4] == _VD_MAGIC, "bad container magic"
+                b = _container(buf, _VD_MAGIC, "bad container magic")
                 n = int.from_bytes(b[4:6], "big")
                 track = b[6 : 6 + n]
-                assert len(track) == n, "truncated frame track"
+                if len(track) != n:
+                    raise ValueError("truncated frame track")
                 cuts, first_cut, sum_abs = 0, -1, 0
                 for k in range(1, n):
                     d = abs(track[k] - track[k - 1])
@@ -6398,14 +6407,14 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                assert b[:4] == _AU_MAGIC, "bad audio magic"
+                b = _container(buf, _AU_MAGIC, "bad audio magic")
                 n = int.from_bytes(b[4:8], "big")
                 pcm = (
                     np.frombuffer(b[8:], dtype=np.uint8).astype(np.int64)
                     - 128
                 )
-                assert len(pcm) == n, "truncated PCM body"
+                if len(pcm) != n:
+                    raise ValueError("truncated PCM body")
                 frames = pcm.reshape(-1, _AU_FRAME)
                 energy = (frames * frames).sum(axis=1)
                 peak = np.abs(frames).max(axis=1)
@@ -6497,8 +6506,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                assert b[:4] == _MM_MAGIC, "bad container magic"
+                b = _container(buf, _MM_MAGIC, "bad container magic")
                 body = np.frombuffer(b[8:], dtype=np.uint8)
                 n = len(body)
                 if n:

@@ -1,4 +1,4 @@
-"""Exactly-once streaming sink: idempotent ``foreachBatch`` MERGE.
+"""Exactly-once streaming sinks: idempotent ``foreachBatch`` MERGE.
 
 The one production streaming surface every deployment writes first:
 Structured Streaming gives at-least-once batch delivery to
@@ -7,9 +7,27 @@ exactly-once sink = an idempotent MERGE — commit each micro-batch's
 partial aggregate into the snapshot store together with its batch id,
 and skip batches whose id is already in the ledger. Delta/Iceberg users
 get this from ``txnAppId``/``txnVersion`` MERGE metadata; this module
-implements the same contract against an in-memory store so the whole
+implements the same contract against in-memory stores so the whole
 loop (stream -> partials -> ledger-gated MERGE -> replay-is-a-no-op) is
 testable and oracle-checkable without a table format dependency.
+
+Every key here is one ``runner.ledgered_run`` over one store. The run
+replays a split-file layout as micro-batches, reduces each batch to
+the store's partial, merges it, then redelivers the FINAL batch (what
+Spark does after a sink failure), and memoizes the store's snapshot.
+The runner's contract:
+- it owns the run's temp checkpoint dir, every cut it recorded (the
+  per-batch partials and the frames the store reads for the whole
+  run) and the store's live blocks (``blocks``);
+- it frees all of them in one ``finally``: after the snapshot is cut
+  on success, and before re-raising when the stream or a check fails,
+  so a full run leaves exactly one evictable cut frame and no temp dir;
+- its run-shape checks raise ``RuntimeError`` (never ``assert``, which
+  ``python -O`` strips): too few applied micro-batches, or a final
+  replay that was not a no-op.
+What stays per store: ledger replay versus the ledger-bypassed
+``batch_id + 1000`` replay of the set-union stores, the minimum batch
+count, and how the snapshot is assembled.
 
 Key design points for 100 TB:
 - each micro-batch is reduced to a PARTIAL AGGREGATE before the merge
@@ -39,11 +57,13 @@ from graph_database_akkatyped_spark.caching import (
     cut,
     cut_block_ids,
     layout_dir,
-    memoized_checkpoint,
+    read_block_ids,
+    release_cut,
 )
 from graph_database_akkatyped_spark.catalog import load_table
 from graph_database_akkatyped_spark.operators.graph_build import _degrees, _sym
 from graph_database_akkatyped_spark.numerics import dec2double, sql_dsum
+from graph_database_akkatyped_spark.streaming.runner import ledgered_run
 
 _N_SPLITS = 4  # micro-batches the fixture is replayed as
 
@@ -90,7 +110,69 @@ def merge_partials(cur: DataFrame | None, partial: DataFrame) -> DataFrame:
     )
 
 
-class IdempotentSnapshotStore:
+class _LedgerStore:
+    """What every store of a ledgered run shares. ``applied`` is the
+    batch-id ledger: an id enters it once its merge has committed, so
+    a batch that failed mid-merge is merged again on redelivery.
+    ``blocks`` are the cut blocks the current state lives in: a commit
+    frees the superseded generation's, the run frees the last ones
+    (plus anything else the store adds to them). ``min_batches`` is
+    the fewest applied batches a full run must show."""
+
+    min_batches = 2
+
+    def __init__(self, spark: SparkSession | None):
+        self.spark = spark
+        self.applied: set[int] = set()
+        self.n_skipped_replays = 0
+        self.blocks: set[int] = set()
+
+    def _replayed(self, batch_id: int) -> bool:
+        """True, and counted, when ``batch_id`` already committed."""
+        if batch_id in self.applied:
+            self.n_skipped_replays += 1
+            return True
+        return False
+
+    def _commit(self, batch_id: int, *state: DataFrame) -> None:
+        """Swap in the new state cuts: the superseded generation's
+        blocks are dead once they materialized, so a long stream holds
+        O(1) state generations, not O(batches) (the Pregel kernel's
+        discipline) — then ledger the batch."""
+        _unpersist_ids(self.spark, self.blocks)
+        self.blocks = set().union(*map(cut_block_ids, state))
+        self.applied.add(batch_id)
+
+    @staticmethod
+    def _built(state):
+        if state is None:
+            raise RuntimeError("no batch was ever applied")
+        return state
+
+    def replay(self, partial, batch_id: int) -> bool:
+        """Redeliver a batch through the ledger; True when it was
+        skipped."""
+        skipped = self.n_skipped_replays
+        self.apply(partial, batch_id)
+        return self.n_skipped_replays > skipped
+
+
+class _SetUnionStore(_LedgerStore):
+    """A store whose every merge is an anti-join set union, so
+    re-applying a batch is a no-op even with the ledger bypassed —
+    set-union maintenance is self-healing under at-least-once
+    delivery."""
+
+    def replay(self, partial: DataFrame, batch_id: int) -> bool:
+        """Redeliver with the ledger BYPASSED (a fresh id): only the
+        anti-joins can make it a no-op. Telling that here would take a
+        second job per run; the value-hash oracle checks it instead (a
+        double count changes the hash)."""
+        self.apply(partial, batch_id + 1000)
+        return True
+
+
+class IdempotentSnapshotStore(_LedgerStore):
     """In-memory stand-in for a transactional MERGE target. ``applied``
     is the batch-id ledger; a real deployment commits the MERGE and the
     ledger row in ONE transaction (Delta txnAppId/txnVersion, or an
@@ -98,46 +180,21 @@ class IdempotentSnapshotStore:
     driver-side critical section, which models the same atomicity."""
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.applied: set[int] = set()
+        super().__init__(spark)
         self.state: DataFrame | None = None
-        self.last: tuple[DataFrame, int] | None = None
-        self.n_skipped_replays = 0
-        self._state_block_ids: set[int] = set()
 
-    def upsert(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch entry point. The partial is cut eagerly while
-        the micro-batch frame is still valid; the merge itself goes
-        through the ledger-gated :meth:`apply`. Only the latest partial
-        is retained (for failure-replay) — the previous one's blocks
-        are freed once it is no longer the replay candidate."""
-        partial = cut(partial_snapshot(batch_df))
-        new_ids = cut_block_ids(partial)
-        prev = getattr(self, "_partial_block_ids", set())
-        self.last = (partial, batch_id)
-        self.apply(partial, batch_id)
-        _unpersist_ids(self.spark, prev)
-        self._partial_block_ids = new_ids
+    partial = staticmethod(partial_snapshot)
 
     def apply(self, partial: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied:  # replayed batch: already committed
-            self.n_skipped_replays += 1
+        if self._replayed(batch_id):  # replayed batch: already committed
             return
         self.state = cut(merge_partials(self.state, partial))
-        new_ids = cut_block_ids(self.state)
-        # the superseded state generation's blocks are dead once the
-        # new cut materializes — free them so a long stream holds O(1)
-        # state generations, not O(batches) (same discipline as the
-        # Pregel kernel)
-        _unpersist_ids(self.spark, self._state_block_ids)
-        self._state_block_ids = new_ids
-        self.applied.add(batch_id)
+        self._commit(batch_id, self.state)
 
     def snapshot(self) -> DataFrame:
         """Read view of the store: drop the merge-internal tie-break
         column, convert the exact decimal once."""
-        assert self.state is not None, "no batch was ever applied"
-        return self.state.select(
+        return self._built(self.state).select(
             "user_id",
             "last_event_type",
             "last_ts",
@@ -162,69 +219,23 @@ def _split_events_dir(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def run_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One full exactly-once run: events replayed as ``_N_SPLITS``
-    micro-batches through ``foreachBatch`` into the ledger-gated
-    store, then the FINAL batch is replayed (what Spark does after a
-    sink failure) — the ledger makes it a no-op. Returns the snapshot
-    frame still backed by the store's cut blocks; callers must
-    materialize (or re-cut) it before the store is released."""
-    split_dir = _split_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-    store = IdempotentSnapshotStore(spark)
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_sink_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(store.upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    assert store.last is not None and len(store.applied) >= 2
-    store.apply(*store.last)  # failure-replay of the final batch
-    assert store.n_skipped_replays == 1
-    snap = store.snapshot()
-    snap._sink_store = store  # keep the store alive until materialized
-    snap._sink_ckpt = ckpt
-    return snap
-
-
 def stream_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered exactly-once sink key: the driver's value-hash oracle
-    IS the idempotence check (a broken ledger double-counts the
-    replayed batch and the hash mismatches).
-
-    Resource discipline (round-6 fix): the result is memoized via
-    ``memoized_checkpoint`` like every other expensive key, so a bench
-    loop re-invoking it costs one memo fetch, not a fresh streaming
-    run; and after the snapshot is cut, the store's internal state +
-    partial blocks are unpersisted and the run's streaming checkpoint
-    temp dir is deleted — a full run leaves behind exactly one
-    evictable cut frame (``clear_frame_cache`` frees it), zero stray
-    blocks, zero stray temp dirs."""
-    holder: dict = {}
-
-    def build() -> DataFrame:
-        snap = run_sink_idempotent(spark, sf_dir)
-        holder["store"] = snap._sink_store
-        holder["ckpt"] = snap._sink_ckpt
-        return snap
-
-    out = memoized_checkpoint(spark, "sink_idempotent", sf_dir, build)
-    store = holder.get("store")
-    if store is not None:  # fresh build: release the run's resources
-        _unpersist_ids(
-            spark,
-            store._state_block_ids
-            | getattr(store, "_partial_block_ids", set()),
-        )
-        shutil.rmtree(holder["ckpt"], ignore_errors=True)
-    return out
+    """Registered exactly-once sink key: events replayed as
+    ``_N_SPLITS`` micro-batches into the ledger-gated store, then the
+    FINAL batch is replayed through the ledger, which must skip it.
+    The driver's value-hash oracle IS the idempotence check (a broken
+    ledger double-counts the replayed batch and the hash mismatches).
+    Memoized like every other expensive key, so a bench loop
+    re-invoking it costs one memo fetch, not a fresh streaming run."""
+    return ledgered_run(
+        spark,
+        "sink_idempotent",
+        sf_dir,
+        lambda _run_cut: (
+            IdempotentSnapshotStore(spark),
+            _split_events_dir(spark, sf_dir),
+        ),
+    )
 
 
 _SINK_IDEMPOTENT_SQL = f"""
@@ -247,7 +258,7 @@ FROM agg a JOIN last l USING (user_id)
 """
 
 
-class IncrementalDegreeStore:
+class IncrementalDegreeStore(_SetUnionStore):
     """Incremental graph maintenance from the event journal — the
     reference's journal-replay identity [R] made INCREMENTAL instead of
     rebuild-the-world: each micro-batch MERGEs its new bipartite edges
@@ -267,22 +278,18 @@ class IncrementalDegreeStore:
     Idempotence comes in TWO layers: the batch-id ledger skips known
     batches without work, and the merge itself is NATURALLY idempotent
     (a replayed batch's pairs all anti-join away, so degrees are
-    unchanged even with the ledger bypassed) — set-union maintenance
-    is self-healing under at-least-once delivery. The driver's
-    value-hash oracle (batch twin: distinct-slot count per user over
-    the whole journal) is the end-to-end check of both.
+    unchanged even with the ledger bypassed). The driver's value-hash
+    oracle (batch twin: distinct-slot count per user over the whole
+    journal) is the end-to-end check of both.
     """
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.applied: set[int] = set()
+        super().__init__(spark)
         self.edges: DataFrame | None = None
         self.degrees: DataFrame | None = None
-        self._edge_blocks: set[int] = set()
-        self._deg_blocks: set[int] = set()
 
     @staticmethod
-    def _batch_pairs(batch_df: DataFrame) -> DataFrame:
+    def partial(batch_df: DataFrame) -> DataFrame:
         return batch_df.select(
             "user_id",
             "event_type",
@@ -290,13 +297,12 @@ class IncrementalDegreeStore:
         ).distinct()
 
     def upsert(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied:  # ledger layer: replay is free
-            return
-        self.apply(self._batch_pairs(batch_df), batch_id)
+        """``foreachBatch`` entry point: the ledger layer, then the
+        merge."""
+        if not self._replayed(batch_id):
+            self.apply(self.partial(batch_df), batch_id)
 
     def apply(self, batch_pairs: DataFrame, batch_id: int) -> None:
-        from graph_database_akkatyped_spark.caching import cut_block_ids
-
         key = ["user_id", "event_type", "hour"]
         if self.edges is None:
             new_pairs = batch_pairs
@@ -316,83 +322,28 @@ class IncrementalDegreeStore:
             .groupBy("user_id")
             .agg(F.sum("degree").alias("degree"))
         )
-        deg_cut = cut(new_deg)
-        # supersede previous generations (same O(1)-generations
-        # discipline as the Pregel kernel and the snapshot store)
-        _unpersist_ids(self.spark, self._edge_blocks | self._deg_blocks)
-        self.edges, self._edge_blocks = edges_cut, cut_block_ids(edges_cut)
-        self.degrees, self._deg_blocks = deg_cut, cut_block_ids(deg_cut)
-        self.applied.add(batch_id)
+        self.edges, self.degrees = edges_cut, cut(new_deg)
+        self._commit(batch_id, self.edges, self.degrees)
 
     def snapshot(self) -> DataFrame:
-        assert self.degrees is not None, "no batch was ever applied"
-        return self.degrees.select("user_id", "degree")
-
-
-def run_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One full incremental-maintenance run over the journal replayed
-    as micro-batches, ending with a ledger-BYPASSED replay of the
-    final batch — which must be a no-op purely through the anti-join
-    (the natural-idempotence layer), or the driver's value hash
-    catches the double count."""
-    split_dir = _split_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-    store = IncrementalDegreeStore(spark)
-    last_pairs: list = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = cut(IncrementalDegreeStore._batch_pairs(batch_df))
-        last_pairs.append((pairs, batch_id))
-        store.apply(pairs, batch_id)
-
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_deg_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(store.applied) >= 2
-    pairs, batch_id = last_pairs[-1]
-    store.apply(pairs, batch_id + 1000)  # ledger-BYPASSED replay: no-op
-    snap = store.snapshot()
-    snap._deg_store = store
-    snap._deg_ckpt = ckpt
-    snap._deg_partials = last_pairs
-    return snap
+        return self._built(self.degrees).select("user_id", "degree")
 
 
 def stream_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered incremental-graph-maintenance key; memoized with the
-    same leak hygiene as ``stream_sink_idempotent`` (one evictable cut
-    frame per run, store/partial blocks freed, checkpoint dir
-    removed)."""
-    from graph_database_akkatyped_spark.caching import cut_block_ids
-
-    holder: dict = {}
-
-    def build() -> DataFrame:
-        snap = run_graph_degree(spark, sf_dir)
-        holder["store"] = snap._deg_store
-        holder["ckpt"] = snap._deg_ckpt
-        holder["partials"] = snap._deg_partials
-        return snap
-
-    out = memoized_checkpoint(spark, "graph_degree", sf_dir, build)
-    store = holder.get("store")
-    if store is not None:
-        stray = store._edge_blocks | store._deg_blocks
-        for pairs, _bid in holder["partials"]:
-            stray |= cut_block_ids(pairs)
-        _unpersist_ids(spark, stray)
-        shutil.rmtree(holder["ckpt"], ignore_errors=True)
-    return out
+    """Registered incremental-graph-maintenance key: the journal
+    replayed as micro-batches, ending with a ledger-BYPASSED replay of
+    the final batch — which must be a no-op purely through the
+    anti-join (the natural-idempotence layer), or the driver's value
+    hash catches the double count."""
+    return ledgered_run(
+        spark,
+        "graph_degree",
+        sf_dir,
+        lambda _run_cut: (
+            IncrementalDegreeStore(spark),
+            _split_events_dir(spark, sf_dir),
+        ),
+    )
 
 
 _GRAPH_DEGREE_SQL = """
@@ -405,7 +356,7 @@ GROUP BY user_id
 """
 
 
-class IncrementalCooccurStore:
+class IncrementalCooccurStore(_SetUnionStore):
     """Incremental maintenance of the user co-occurrence GRAPH itself —
     one step past ``IncrementalDegreeStore`` (which maintains a
     per-vertex aggregate): per micro-batch, the genuinely-new
@@ -426,15 +377,12 @@ class IncrementalCooccurStore:
     """
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.applied: set[int] = set()
+        super().__init__(spark)
         self.members: DataFrame | None = None   # (event_type, hour, user_id)
         self.pairs: DataFrame | None = None     # canonical a<b user pairs
-        self._m_blocks: set[int] = set()
-        self._p_blocks: set[int] = set()
 
     @staticmethod
-    def _batch_members(batch_df: DataFrame) -> DataFrame:
+    def partial(batch_df: DataFrame) -> DataFrame:
         return batch_df.select(
             "event_type",
             F.date_trunc("hour", "ts").alias("hour"),
@@ -442,8 +390,6 @@ class IncrementalCooccurStore:
         ).distinct()
 
     def apply(self, batch_members: DataFrame, batch_id: int) -> None:
-        from graph_database_akkatyped_spark.caching import cut_block_ids
-
         key = ["event_type", "hour", "user_id"]
         if self.members is None:
             new = batch_members
@@ -477,95 +423,46 @@ class IncrementalCooccurStore:
             if self.pairs is None
             else self.pairs.unionByName(fresh_pairs)
         )
-        members_cut = cut(universe)
-        pairs_cut = cut(merged_pairs)
-        _unpersist_ids(self.spark, self._m_blocks | self._p_blocks)
-        self.members, self._m_blocks = members_cut, cut_block_ids(members_cut)
-        self.pairs, self._p_blocks = pairs_cut, cut_block_ids(pairs_cut)
-        self.applied.add(batch_id)
+        self.members, self.pairs = cut(universe), cut(merged_pairs)
+        release_cut(new)  # both new generations materialized from it
+        self._commit(batch_id, self.members, self.pairs)
 
-    def snapshot_rank(self) -> DataFrame:
+    def snapshot(self) -> DataFrame:
         """Fixed-10-iteration integer-µ-unit PageRank over the
         MAINTAINED graph — uniform init, so the result is a pure
         function of the final pair set and hash-matches the batch
         PageRank oracle iff incremental maintenance converged to the
-        batch-built graph."""
+        batch-built graph. The kernel's final generation is added to
+        ``blocks``: nothing reads it once the snapshot is cut."""
         from graph_database_akkatyped_spark.operators.algos import (
             pagerank_frame,
         )
-        assert self.pairs is not None, "no batch was ever applied"
-        verts = self.members.select(
+
+        verts = self._built(self.members).select(
             F.col("user_id").alias("id")
         ).distinct()
-        return pagerank_frame(verts, _sym(self.pairs, "a", "b"), 10).select(
-            F.col("id").alias("user_id"), "rank_e12", "rank"
-        )
-
-
-def run_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Journal replayed as micro-batches through the co-occurrence
-    store, ledger-BYPASSED replay of the final batch (must be a no-op
-    purely via the anti-joins), then PageRank over the maintained
-    graph."""
-    split_dir = _split_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-    store = IncrementalCooccurStore(spark)
-    last_members: list = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        members = cut(IncrementalCooccurStore._batch_members(batch_df))
-        last_members.append((members, batch_id))
-        store.apply(members, batch_id)
-
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_pr_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(store.applied) >= 2
-    members, batch_id = last_members[-1]
-    store.apply(members, batch_id + 1000)  # bypassed replay: no-op
-    snap = store.snapshot_rank()
-    snap._pr_store = store
-    snap._pr_ckpt = ckpt
-    snap._pr_partials = last_members
-    return snap
+        rank = pagerank_frame(verts, _sym(self.pairs, "a", "b"), 10)
+        self.blocks |= read_block_ids(rank)
+        return rank.select(F.col("id").alias("user_id"), "rank_e12", "rank")
 
 
 def stream_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered incremental-PageRank key; memoized with the same leak
-    hygiene as ``stream_graph_degree``. The oracle is the BATCH
+    """Registered incremental-PageRank key: the journal replayed as
+    micro-batches through the co-occurrence store, a ledger-BYPASSED
+    replay of the final batch (a no-op purely via the anti-joins),
+    then PageRank over the maintained graph. The oracle is the BATCH
     PageRank SQL (same graph definition, same 10 integer iterations) —
     a hash match proves the incrementally maintained edge set equals
     the batch-built one, edge for edge."""
-    from graph_database_akkatyped_spark.caching import cut_block_ids
-
-    holder: dict = {}
-
-    def build() -> DataFrame:
-        snap = run_graph_pagerank(spark, sf_dir)
-        holder["store"] = snap._pr_store
-        holder["ckpt"] = snap._pr_ckpt
-        holder["partials"] = snap._pr_partials
-        return snap
-
-    out = memoized_checkpoint(spark, "graph_pagerank_inc", sf_dir, build)
-    store = holder.get("store")
-    if store is not None:
-        stray = store._m_blocks | store._p_blocks
-        for members, _bid in holder["partials"]:
-            stray |= cut_block_ids(members)
-        _unpersist_ids(spark, stray)
-        shutil.rmtree(holder["ckpt"], ignore_errors=True)
-    return out
+    return ledgered_run(
+        spark,
+        "graph_pagerank_inc",
+        sf_dir,
+        lambda _run_cut: (
+            IncrementalCooccurStore(spark),
+            _split_events_dir(spark, sf_dir),
+        ),
+    )
 
 
 # ------------------------------------------ incremental SCD2 maintenance
@@ -590,7 +487,7 @@ def _scd2_stitch(src: DataFrame) -> DataFrame:
     )
 
 
-class IncrementalScd2Store:
+class IncrementalScd2Store(_LedgerStore):
     """Ledger-gated incremental SCD2 history: per micro-batch, only
     the AFFECTED keys' histories are re-stitched (their raw versions +
     the batch's new versions through one scoped window pass); every
@@ -601,20 +498,29 @@ class IncrementalScd2Store:
     the stitched columns so a re-stitch is lossless. Re-stitching is
     NOT naturally idempotent (re-applying a batch would duplicate
     versions), hence the same batch-id ledger as
-    IdempotentSnapshotStore."""
+    IdempotentSnapshotStore. A run seeds the store as batch -1, so it
+    must show the seed plus at least two micro-batches."""
+
+    min_batches = 3
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.applied: set[int] = set()
+        super().__init__(spark)
         self.history: DataFrame | None = None
-        self.n_skipped_replays = 0
-        self._block_ids: set[int] = set()
+
+    @staticmethod
+    def partial(batch_df: DataFrame) -> DataFrame:
+        """An orders micro-batch as raw versions."""
+        return batch_df.select(
+            F.col("o_custkey").alias("custkey"),
+            F.col("o_totalprice").alias("balance"),
+            F.col("o_orderdate").alias("valid_from"),
+            F.col("o_orderkey").alias("chg_seq"),
+        )
 
     def apply(self, changes: DataFrame, batch_id: int) -> None:
         """``changes``: cut frame of raw versions (custkey, balance,
         valid_from, chg_seq)."""
-        if batch_id in self.applied:
-            self.n_skipped_replays += 1
+        if self._replayed(batch_id):
             return
         if self.history is None:
             new_hist = _scd2_stitch(changes)
@@ -627,14 +533,11 @@ class IncrementalScd2Store:
             new_hist = keep.unionByName(
                 _scd2_stitch(redo_src.unionByName(changes))
             )
-        cut_hist = cut(new_hist)
-        _unpersist_ids(self.spark, self._block_ids)
-        self.history, self._block_ids = cut_hist, cut_block_ids(cut_hist)
-        self.applied.add(batch_id)
+        self.history = cut(new_hist)
+        self._commit(batch_id, self.history)
 
     def snapshot(self) -> DataFrame:
-        assert self.history is not None, "no batch was ever applied"
-        return self.history.select(
+        return self._built(self.history).select(
             "custkey",
             "balance",
             "valid_from",
@@ -657,88 +560,27 @@ def _split_orders_dir(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def run_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One full incremental SCD2 run: the store seeds from the
-    customer master (version-1 rows at the floor date), the orders
-    journal replays as micro-batches through ``foreachBatch``, and the
-    final batch is replayed through the ledger (the post-failure path)
-    — a broken ledger would double the affected keys' versions and the
-    driver's value hash would catch it."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("custkey"),
-        F.col("c_acctbal").alias("balance"),
-        F.lit("1990-01-01 00:00:00").cast("timestamp").alias("valid_from"),
-        F.lit(0).cast("long").alias("chg_seq"),
-    )
-    store = IncrementalScd2Store(spark)
-    seed = cut(cust)
-    last: list = [(seed, -1)]  # tracked so cleanup frees the seed cut
-    store.apply(seed, -1)  # seed = the dimension's initial load
-    split_dir = _split_orders_dir(spark, sf_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        changes = cut(
-            batch_df.select(
-                F.col("o_custkey").alias("custkey"),
-                F.col("o_totalprice").alias("balance"),
-                F.col("o_orderdate").alias("valid_from"),
-                F.col("o_orderkey").alias("chg_seq"),
-            )
-        )
-        last.append((changes, batch_id))
-        store.apply(changes, batch_id)
-
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_scd2_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(store.applied) >= 3  # seed + >= 2 micro-batches
-    changes, batch_id = last[-1]
-    store.apply(changes, batch_id)  # post-failure replay: ledger no-op
-    assert store.n_skipped_replays >= 1
-    snap = store.snapshot()
-    snap._scd2_store = store
-    snap._scd2_ckpt = ckpt
-    snap._scd2_partials = last
-    return snap
-
-
 def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered incremental-SCD2 key; memoized with the same leak
-    hygiene as stream_graph_degree (one evictable cut frame per run,
-    store/partial blocks freed, checkpoint dir removed). The oracle is
-    the BATCH merge_scd2 SQL — the incremental path must land on the
-    identical versioned history."""
-    from graph_database_akkatyped_spark.caching import cut_block_ids
+    """Registered incremental-SCD2 key: the store seeds from the
+    customer master (version-1 rows at the floor date), the orders
+    journal replays as micro-batches, and the final batch is replayed
+    through the ledger (the post-failure path) — a broken ledger would
+    double the affected keys' versions and the driver's value hash
+    would catch it. The oracle is the BATCH merge_scd2 SQL — the
+    incremental path must land on the identical versioned history."""
 
-    holder: dict = {}
+    def start(run_cut):
+        cust = load_table(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("custkey"),
+            F.col("c_acctbal").alias("balance"),
+            F.lit("1990-01-01 00:00:00").cast("timestamp").alias("valid_from"),
+            F.lit(0).cast("long").alias("chg_seq"),
+        )
+        store = IncrementalScd2Store(spark)
+        store.apply(run_cut(cust), -1)  # seed = the dimension's initial load
+        return store, _split_orders_dir(spark, sf_dir)
 
-    def build() -> DataFrame:
-        snap = run_stream_scd2(spark, sf_dir)
-        holder["store"] = snap._scd2_store
-        holder["ckpt"] = snap._scd2_ckpt
-        holder["partials"] = snap._scd2_partials
-        return snap
-
-    out = memoized_checkpoint(spark, "stream_scd2", sf_dir, build)
-    store = holder.get("store")
-    if store is not None:
-        stray = set(store._block_ids)
-        for changes, _bid in holder["partials"]:
-            stray |= cut_block_ids(changes)
-        _unpersist_ids(spark, stray)
-        shutil.rmtree(holder["ckpt"], ignore_errors=True)
-    return out
+    return ledgered_run(spark, "stream_scd2", sf_dir, start)
 
 
 # ---------------------------------------- streaming IVF maintenance
@@ -764,7 +606,7 @@ def _emb_split_dir(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-class IncrementalIvfStore:
+class IncrementalIvfStore(_LedgerStore):
     """Streaming IVF index maintenance — the stream twin of
     ``simsearch_ivf_append``: each micro-batch of arriving vectors is
     assigned to its argmax-cosine cell of a FROZEN broadcast centroid
@@ -781,12 +623,15 @@ class IncrementalIvfStore:
     would catch a double-assignment."""
 
     def __init__(self, spark: SparkSession, cells: DataFrame):
-        self.spark = spark
+        super().__init__(spark)
         self.cells = cells  # cut (cell, centroid, cnrm)
-        self.applied: set[int] = set()
         self.assigned: DataFrame | None = None
-        self.n_skipped_replays = 0
-        self._block_ids: set[int] = set()
+
+    @staticmethod
+    def partial(batch_df: DataFrame) -> DataFrame:
+        from graph_database_akkatyped_spark.operators.llm import _vectors
+
+        return _vectors(batch_df, F.col("label").cast("long").alias("label"))
 
     def apply(self, batch_vecs: DataFrame, batch_id: int) -> None:
         """``batch_vecs``: cut frame (vec_id, label, embedding, nrm)."""
@@ -794,8 +639,7 @@ class IncrementalIvfStore:
             _nearest_cell,
         )
 
-        if batch_id in self.applied:
-            self.n_skipped_replays += 1
+        if self._replayed(batch_id):
             return
         assign = _nearest_cell(batch_vecs, self.cells).select(
             "vec_id", "label", "cell"
@@ -805,14 +649,11 @@ class IncrementalIvfStore:
             if self.assigned is None
             else self.assigned.unionByName(assign)
         )
-        new_state = cut(merged)
-        _unpersist_ids(self.spark, self._block_ids)
-        self.assigned, self._block_ids = new_state, cut_block_ids(new_state)
-        self.applied.add(batch_id)
+        self.assigned = cut(merged)
+        self._commit(batch_id, self.assigned)
 
     def snapshot(self) -> DataFrame:
-        assert self.assigned is not None, "no batch was ever applied"
-        return self.assigned.select(
+        return self._built(self.assigned).select(
             "vec_id",
             "label",
             "cell",
@@ -820,82 +661,27 @@ class IncrementalIvfStore:
         )
 
 
-def run_stream_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One full streaming-ingest run: frozen centroids from the base
-    corpus (labels below the rebalance split), the appended slice
-    replayed as micro-batches through ``foreachBatch``, final batch
-    replayed through the ledger (the post-failure path)."""
+def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Registered streaming-IVF-maintenance key: frozen centroids from
+    the base corpus (labels below the rebalance split), the appended
+    slice replayed as micro-batches, the final batch replayed through
+    the ledger (the post-failure path). The oracle is the BATCH
+    assignment of the full appended slice — the hash match proves the
+    incremental ingest converges to the batch answer."""
     from graph_database_akkatyped_spark.operators.llm import (
         _REBAL_BASE_LABELS,
         _cell_means,
-        _vectors,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("label") < _REBAL_BASE_LABELS).select(
-        F.col("label").cast("long").alias("cell"), "embedding"
-    )
-    cells = cut(_cell_means(base, "cell"))
-    store = IncrementalIvfStore(spark, cells)
-    split_dir = _emb_split_dir(spark, sf_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-    last: list = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        vecs = cut(
-            _vectors(batch_df, F.col("label").cast("long").alias("label"))
+    def start(run_cut):
+        emb = load_table(spark, sf_dir, "embeddings")
+        base = emb.where(F.col("label") < _REBAL_BASE_LABELS).select(
+            F.col("label").cast("long").alias("cell"), "embedding"
         )
-        last.append((vecs, batch_id))
-        store.apply(vecs, batch_id)
+        cells = run_cut(_cell_means(base, "cell"))
+        return IncrementalIvfStore(spark, cells), _emb_split_dir(spark, sf_dir)
 
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ivf_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(store.applied) >= 2
-    vecs, batch_id = last[-1]
-    store.apply(vecs, batch_id)  # ledger replay: must be skipped
-    assert store.n_skipped_replays >= 1
-    snap = store.snapshot()
-    snap._ivf_store = store
-    snap._ivf_ckpt = ckpt
-    snap._ivf_partials = last
-    return snap
-
-
-def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered streaming-IVF-maintenance key; memoized with the
-    same leak hygiene as ``stream_graph_degree`` (store/partial/cell
-    blocks freed, checkpoint dir removed). The oracle is the BATCH
-    assignment of the full appended slice — the hash match proves the
-    incremental ingest converges to the batch answer."""
-    holder: dict = {}
-
-    def build() -> DataFrame:
-        snap = run_stream_ivf(spark, sf_dir)
-        holder["store"] = snap._ivf_store
-        holder["ckpt"] = snap._ivf_ckpt
-        holder["partials"] = snap._ivf_partials
-        return snap
-
-    out = memoized_checkpoint(spark, "stream_ivf", sf_dir, build)
-    store = holder.get("store")
-    if store is not None:
-        stray = set(store._block_ids) | cut_block_ids(store.cells)
-        for vecs, _bid in holder["partials"]:
-            stray |= cut_block_ids(vecs)
-        _unpersist_ids(spark, stray)
-        shutil.rmtree(holder["ckpt"], ignore_errors=True)
-    return out
+    return ledgered_run(spark, "stream_ivf", sf_dir, start)
 
 
 def _stream_ivf_oracle() -> str:
@@ -942,7 +728,25 @@ SELECT vec_id, label, cell, cell <> label AS drifted FROM (
 _BACKFILL_DAYS = 15  # cutoff = day0 + 15 d — splits the 30-day journal
 
 
-class BackfillMergeStore:
+class _PartialsStore(_LedgerStore):
+    """A store whose state is the list of its batches' partials (each
+    a cut the run owns), reassembled at snapshot time — the standard
+    partial/final split, so each trigger costs O(batch) and the
+    history is never rescanned. Appending is NOT naturally idempotent,
+    hence the batch-id ledger."""
+
+    def __init__(self, spark: SparkSession):
+        super().__init__(spark)
+        self.partials: list[DataFrame] = []
+
+    def apply(self, partial: DataFrame, batch_id: int) -> None:
+        if self._replayed(batch_id):
+            return
+        self.partials.append(partial)
+        self.applied.add(batch_id)
+
+
+class BackfillMergeStore(_PartialsStore):
     """Batch-backfill + streaming-tail merge — the pattern that
     retires a lambda architecture: ONE aggregation definition, applied
     once to the history (a batch job over everything before the
@@ -951,110 +755,53 @@ class BackfillMergeStore:
     batch recompute over the whole journal. The oracle is exactly that
     recompute — cutoff-free BY DESIGN: if any event were double-counted
     across the seam (or a replayed batch re-applied), the value hash
-    breaks.
+    breaks."""
 
-    State is a list of per-batch partial aggregates (each cut
-    eagerly); the snapshot re-aggregates backfill + partials — the
-    standard partial/final split, so each trigger costs O(batch) and
-    the history is never rescanned. Replay-safe via the same batch-id
-    ledger as ``IncrementalScd2Store``."""
+    def __init__(self, spark: SparkSession, backfill: DataFrame, cutoff):
+        super().__init__(spark)
+        self.backfill = backfill  # cut partial of the history
+        self.cutoff = cutoff
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.applied: set[int] = set()
-        self.partials: list[DataFrame] = []
-        self.n_skipped_replays = 0
-
-    def apply(self, batch_agg: DataFrame, batch_id: int) -> None:
-        """``batch_agg``: cut partial (user_id, event_type, n, cents)."""
-        if batch_id in self.applied:
-            self.n_skipped_replays += 1
-            return
-        self.partials.append(batch_agg)
-        self.applied.add(batch_id)
-
-
-def run_stream_backfill_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One full backfill+tail run: history aggregated in one batch
-    pass, the tail replayed as genuine micro-batches through
-    ``foreachBatch``, the final batch replayed through the ledger (the
-    post-failure path), then the merged per-(user, type) table."""
-    import datetime
-
-    ev = load_table(spark, sf_dir, "events")
-    day0 = ev.agg(F.date_trunc("day", F.min("ts")).alias("d0")).collect()[0][
-        "d0"
-    ]
-    cutoff = day0 + datetime.timedelta(days=_BACKFILL_DAYS)
-    cents = F.floor(F.col("value") * 100).cast("long")
-
+    @staticmethod
     def agg(df: DataFrame) -> DataFrame:
+        """(user_id, event_type, n, cents): the one aggregation."""
         return df.groupBy("user_id", "event_type").agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(cents).alias("cents"),
+            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("cents"),
         )
 
-    backfill = cut(agg(ev.where(F.col("ts") < F.lit(cutoff))))
-    store = BackfillMergeStore(spark)
-    split_dir = _split_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-    last: list = []
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        return self.agg(batch_df.where(F.col("ts") >= F.lit(self.cutoff)))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        part = cut(agg(batch_df.where(F.col("ts") >= F.lit(cutoff))))
-        last.append((part, batch_id))
-        store.apply(part, batch_id)
-
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_backfill_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(store.applied) >= 2
-    part, batch_id = last[-1]
-    store.apply(part, batch_id)  # ledger replay: must be skipped
-    assert store.n_skipped_replays >= 1
-    merged = backfill
-    for p in store.partials:
-        merged = merged.unionByName(p)
-    snap = merged.groupBy("user_id", "event_type").agg(
-        F.sum("n").alias("n_events"),
-        F.sum("cents").alias("total_cents"),
-    )
-    snap._bf_ckpt = ckpt
-    snap._bf_partials = [backfill, *store.partials]
-    return snap
+    def snapshot(self) -> DataFrame:
+        merged = self.backfill
+        for p in self.partials:
+            merged = merged.unionByName(p)
+        return merged.groupBy("user_id", "event_type").agg(
+            F.sum("n").alias("n_events"),
+            F.sum("cents").alias("total_cents"),
+        )
 
 
 def stream_backfill_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered backfill+tail key; memoized with the same leak
-    hygiene as the other stream stores (partial blocks freed,
-    checkpoint dir removed). The oracle is the cutoff-free batch
+    """Registered backfill+tail key: history aggregated in one batch
+    pass, the tail replayed as genuine micro-batches, the final batch
+    replayed through the ledger (the post-failure path), then the
+    merged per-(user, type) table. The oracle is the cutoff-free batch
     recompute over the full journal."""
-    holder: dict = {}
+    import datetime
 
-    def build() -> DataFrame:
-        snap = run_stream_backfill_merge(spark, sf_dir)
-        holder["ckpt"] = snap._bf_ckpt
-        holder["partials"] = snap._bf_partials
-        return snap
+    def start(run_cut):
+        ev = load_table(spark, sf_dir, "events")
+        day0 = ev.agg(F.date_trunc("day", F.min("ts")).alias("d0")).collect()
+        cutoff = day0[0]["d0"] + datetime.timedelta(days=_BACKFILL_DAYS)
+        history = ev.where(F.col("ts") < F.lit(cutoff))
+        store = BackfillMergeStore(
+            spark, run_cut(BackfillMergeStore.agg(history)), cutoff
+        )
+        return store, _split_events_dir(spark, sf_dir)
 
-    out = memoized_checkpoint(spark, "stream_backfill", sf_dir, build)
-    if "ckpt" in holder:
-        stray: set[int] = set()
-        for p in holder["partials"]:
-            stray |= cut_block_ids(p)
-        _unpersist_ids(spark, stray)
-        shutil.rmtree(holder["ckpt"], ignore_errors=True)
-    return out
+    return ledgered_run(spark, "stream_backfill", sf_dir, start)
 
 
 _BACKFILL_MERGE_SQL = """
@@ -1090,7 +837,7 @@ def _er_split_dir(spark: SparkSession, sf_dir: str) -> str:
     return layout_dir("ersplit", sf_dir, build)
 
 
-def run_stream_entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
+class EntityResolveStore(_PartialsStore):
     """Streaming entity resolution against a static master: the dirty
     registration feed arrives in micro-batches; each batch runs the
     masked-neighborhood match (er_match_frame) against the full
@@ -1103,76 +850,47 @@ def run_stream_entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch answer, and the oracle is entity_resolve_blocked's
     oracle verbatim. This is the production ER shape: a master too
     big to re-match arrives once; registrations trickle in."""
-    from graph_database_akkatyped_spark.operators.relational_extras import (
-        _er_sides_sql,
-        er_match_frame,
-    )
 
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    master_sql, _ = _er_sides_sql()
-    master = cut(spark.sql(master_sql))
-    split_dir = _er_split_dir(spark, sf_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-    parts: list = []
-    applied: set[int] = set()
-    skipped = [0]
+    def __init__(self, spark: SparkSession, master: DataFrame):
+        super().__init__(spark)
+        self.master = master  # cut master side
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in applied:  # ledger: replay must be a no-op
-            skipped[0] += 1
-            return
-        applied.add(batch_id)
-        parts.append((cut(er_match_frame(master, batch_df)), batch_id))
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        from graph_database_akkatyped_spark.operators.relational_extras import (
+            er_match_frame,
+        )
 
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_er_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(parts) >= 2, "feed did not split into micro-batches"
-    sink(parts[-1][0], parts[-1][1])  # ledger replay: must be skipped
-    assert skipped[0] >= 1
-    out = parts[0][0]
-    for frame, _bid in parts[1:]:
-        out = out.unionByName(frame)
-    snap = cut(out)
-    snap._er_parts = parts
-    snap._er_master = master
-    snap._er_ckpt = ckpt
-    return snap
+        return er_match_frame(self.master, batch_df)
+
+    def snapshot(self) -> DataFrame:
+        """The union of the batches' matches, cut; its blocks join
+        ``blocks``."""
+        out = self.partials[0]
+        for part in self.partials[1:]:
+            out = out.unionByName(part)
+        snap = cut(out)
+        self.blocks |= cut_block_ids(snap)
+        return snap
 
 
 def stream_entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered streaming-ER key; memoized with the same leak
-    hygiene as stream_ivf_assign (per-batch cut blocks and the master
-    cut freed, checkpoint dir removed). Oracle: the BATCH
-    entity_resolve_blocked SQL — the hash match proves the ledgered
-    incremental feed converges to the batch answer."""
-    holder: dict = {}
+    """Registered streaming-ER key (see ``EntityResolveStore``).
+    Oracle: the BATCH entity_resolve_blocked SQL — the hash match
+    proves the ledgered incremental feed converges to the batch
+    answer."""
+    from graph_database_akkatyped_spark.operators.relational_extras import (
+        _er_sides_sql,
+    )
 
-    def build() -> DataFrame:
-        snap = run_stream_entity_resolve(spark, sf_dir)
-        holder["parts"] = snap._er_parts
-        holder["master"] = snap._er_master
-        holder["ckpt"] = snap._er_ckpt
-        return snap
+    def start(run_cut):
+        load_table(spark, sf_dir, "customer").createOrReplaceTempView(
+            "customer"
+        )
+        master_sql, _ = _er_sides_sql()
+        master = run_cut(spark.sql(master_sql))
+        return EntityResolveStore(spark, master), _er_split_dir(spark, sf_dir)
 
-    out = memoized_checkpoint(spark, "stream_er", sf_dir, build)
-    if "parts" in holder:
-        stray = cut_block_ids(holder["master"])
-        for frame, _bid in holder["parts"]:
-            stray |= cut_block_ids(frame)
-        _unpersist_ids(spark, stray)
-        shutil.rmtree(holder["ckpt"], ignore_errors=True)
-    return out
+    return ledgered_run(spark, "stream_er", sf_dir, start)
 
 
 def _stream_er_oracle() -> str:
@@ -1225,35 +943,45 @@ def _holt_split_dir(spark: SparkSession, sf_dir: str) -> str:
     return layout_dir("holtsplit", sf_dir, build)
 
 
-class StreamingHoltStore:
+class StreamingHoltStore(_LedgerStore):
     """Driver-held Holt state per event_type: (last day index, level,
     trend) in exact milli-units plus the emitted fitted rows and a
     batch-id ledger. Each micro-batch is REDUCED to its (type, day,
     count) partial aggregate before it reaches the store — O(types ×
     days-in-batch) state per trigger, never O(history) — and the
     recursion advances only through days CONTIGUOUS with what was
-    already processed (an out-of-order slice fails loudly instead of
-    silently smoothing a permuted series). Replayed batch ids are
-    skipped (the idempotent-MERGE ledger contract of
-    ``stream_sink_idempotent``)."""
+    already processed (an out-of-order slice raises ``ValueError``
+    instead of silently smoothing a permuted series). Replayed batch
+    ids are skipped (the idempotent-MERGE ledger contract of
+    ``stream_sink_idempotent``). A run must see every slice."""
 
-    def __init__(self) -> None:
+    min_batches = _HOLT_SPLITS
+
+    def __init__(self, spark: SparkSession | None = None) -> None:
         from graph_database_akkatyped_spark.operators.behavior import (
             _HOLT_SHIFT,
         )
 
+        super().__init__(spark)
         self._shift = _HOLT_SHIFT
         self.state: dict[str, tuple] = {}  # type -> (day, l, b)
         self.pending: dict[str, tuple] = {}  # type -> (day0, x0, n0)
         self.rows: list[tuple] = []
-        self.applied: set[int] = set()
-        self.n_skipped_replays = 0
+
+    @staticmethod
+    def partial(batch_df: DataFrame):
+        """The batch's (event_type, day, n) counts, on the driver."""
+        return (
+            batch_df.groupBy(
+                "event_type", F.date_trunc("day", "ts").alias("day")
+            )
+            .agg(F.count(F.lit(1)).alias("n"))
+            .toPandas()
+        )
 
     def apply(self, pdf, batch_id: int) -> None:
-        if batch_id in self.applied:
-            self.n_skipped_replays += 1
+        if self._replayed(batch_id):
             return
-        self.applied.add(batch_id)
         s = self._shift
         for et, g in pdf.groupby("event_type"):
             g = g.sort_values("day")
@@ -1261,9 +989,10 @@ class StreamingHoltStore:
                 x = int(n) * 1000
                 if et in self.state:
                     last_day, l, b = self.state[et]
-                    assert day > last_day, (
-                        f"out-of-order day {day} after {last_day} for {et}"
-                    )
+                    if day <= last_day:
+                        raise ValueError(
+                            f"out-of-order day {day} after {last_day} for {et}"
+                        )
                     l_new = (x + 3 * (l + b) + 4 * s) // 4 - s
                     b = ((l_new - l) + b + 2 * s) // 2 - s
                     l = l_new
@@ -1271,7 +1000,8 @@ class StreamingHoltStore:
                     self.rows.append((et, day.to_pydatetime(), int(n), l, b))
                 elif et in self.pending:
                     day0, x0, n0 = self.pending.pop(et)
-                    assert day > day0, "out-of-order first pair"
+                    if day <= day0:
+                        raise ValueError("out-of-order first pair")
                     l, b = x0, x - x0  # classic init l1=x1, b1=x2-x1
                     self.rows.append((et, day0.to_pydatetime(), n0, l, b))
                     l_new = (x + 3 * (l + b) + 4 * s) // 4 - s
@@ -1283,64 +1013,34 @@ class StreamingHoltStore:
                     # first observation: the init trend needs day 2,
                     # so day 1 is buffered, not emitted
                     self.pending[et] = (day, x, int(n))
+        self.applied.add(batch_id)
 
-
-def run_stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One full ordered streaming run of the Holt smoother over the
-    journal replay; returns the fitted (event_type, day, n, level_q,
-    trend_q) table, which must hash-match the BATCH recursion
-    (``timeseries_holt``'s oracle) — the convergence proof that the
-    incremental state machine equals the from-scratch smoother."""
-    split_dir = _holt_split_dir(spark, sf_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-    store = StreamingHoltStore()
-    last: list = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        pdf = (
-            batch_df.groupBy(
-                "event_type", F.date_trunc("day", "ts").alias("day")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .toPandas()
+    def snapshot(self) -> DataFrame:
+        """The fitted (event_type, day, n, level_q, trend_q) table."""
+        if self.pending:
+            raise RuntimeError("a series never saw its second day")
+        return self.spark.createDataFrame(
+            self.rows,
+            "event_type string, day timestamp, n long, level_q long, "
+            "trend_q long",
         )
-        last.append((pdf, batch_id))
-        store.apply(pdf, batch_id)
-
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_holt_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    assert len(store.applied) >= _HOLT_SPLITS
-    pdf, batch_id = last[-1]
-    store.apply(pdf, batch_id)  # ledger replay: must be a no-op
-    assert store.n_skipped_replays >= 1
-    assert not store.pending, "a series never saw its second day"
-    out = spark.createDataFrame(
-        store.rows,
-        "event_type string, day timestamp, n long, level_q long, "
-        "trend_q long",
-    )
-    return out
 
 
 def stream_holt_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered streaming-Holt key (memoized). The oracle is the
-    batch recursive-CTE smoother — hash equality proves the ordered
-    incremental replay converges to the from-scratch answer, including
-    the two-day init buffering and the ledger-gated replay skip."""
-    return memoized_checkpoint(
-        spark, "stream_holt", sf_dir, lambda: run_stream_holt(spark, sf_dir)
+    """Registered streaming-Holt key: one ordered streaming run of the
+    Holt smoother over the journal replay. The oracle is the batch
+    recursive-CTE smoother (``timeseries_holt``'s) — hash equality
+    proves the ordered incremental replay converges to the
+    from-scratch answer, including the two-day init buffering and the
+    ledger-gated replay skip."""
+    return ledgered_run(
+        spark,
+        "stream_holt",
+        sf_dir,
+        lambda _run_cut: (
+            StreamingHoltStore(spark),
+            _holt_split_dir(spark, sf_dir),
+        ),
     )
 
 

@@ -12,12 +12,12 @@ equality test in tests/test_streaming.py.
 
 from __future__ import annotations
 
-import uuid
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from graph_database_akkatyped_spark.streaming.runner import drain
 
 _OUT_SCHEMA = "user_id long, n_events long, total_value double"
 _STATE_SCHEMA = "n long, total double"
@@ -46,22 +46,13 @@ def stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # one input file -> one micro-batch -> one emission per user; dedupe
     # defensively by keeping the LATEST emission should the source split:
     # n_events is strictly monotone per user, so pair total_value with the
     # highest counter (independent maxes would mix emissions when values
     # can be negative)
     final = (
-        spark.table(name)
+        drain(counted, "stateful", "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -153,32 +144,18 @@ _MINMAX_OUT_SCHEMA = (
 )
 
 
-def _latest_minmax_per_user(spark: SparkSession, table: str) -> DataFrame:
+def _latest_minmax_per_user(emitted: DataFrame) -> DataFrame:
     """Update mode can emit once per micro-batch per user; n_events is
     strictly monotone, so the final per-user row is the one with the
     highest counter — min/max travel with it via max_by."""
     return (
-        spark.table(table)
-        .groupBy("user_id")
+        emitted.groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
             F.expr("max_by(min_value, n_events)").alias("min_value"),
             F.expr("max_by(max_value, n_events)").alias("max_value"),
         )
     )
-
-
-def _run_to_memory_sink(counted: DataFrame, prefix: str) -> str:
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return name
 
 
 def _minmax_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,7 +170,7 @@ def _minmax_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    return _latest_minmax_per_user(spark, _run_to_memory_sink(counted, "stateful_tws"))
+    return _latest_minmax_per_user(drain(counted, "stateful_tws", "update"))
 
 
 def _update_minmax(key, pdfs, state: GroupState):
@@ -232,7 +209,7 @@ def _minmax_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _latest_minmax_per_user(spark, _run_to_memory_sink(counted, "stateful_aip"))
+    return _latest_minmax_per_user(drain(counted, "stateful_aip", "update"))
 
 
 def stream_stateful_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,7 +293,7 @@ def stream_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    return spark.table(_run_to_memory_sink(expired, "stateful_ttl"))
+    return drain(expired, "stateful_ttl", "update")
 
 
 _STATEFUL_TTL_SQL = """
@@ -401,11 +378,11 @@ def stream_stateful_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    t = _run_to_memory_sink(out, "stateful_topk")
+    emitted = drain(out, "stateful_topk", "update")
     agg = [F.max("n_events").alias("n_events")]
     for c in ("v1", "e1", "v2", "e2", "v3", "e3"):
         agg.append(F.expr(f"max_by({c}, n_events)").alias(c))
-    return spark.table(t).groupBy("user_id").agg(*agg)
+    return emitted.groupBy("user_id").agg(*agg)
 
 
 _STATEFUL_TOPK_SQL = """

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -28,6 +27,7 @@ from graph_database_akkatyped_spark.catalog import (
     normalize_events_ts,
 )
 from graph_database_akkatyped_spark.numerics import dec2double, dsum, sql_dsum
+from graph_database_akkatyped_spark.streaming.runner import drain
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,16 +190,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "n")
     )
-    name = f"wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "wm", "complete")
 
 
 _WATERMARK_SQL = """
@@ -231,19 +222,6 @@ FROM events
 """
 
 
-def _run_to_memory(plan: DataFrame, prefix: str, mode: str) -> tuple:
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        plan.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return name, q
-
-
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: enrich the event stream with a precomputed
     per-user dimension (exact-decimal running average). The static side
@@ -257,8 +235,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream.join(user_stats, "user_id").select(
         "event_id", "user_id", "value", "user_total"
     )
-    name, _ = _run_to_memory(joined, "ss_join", "append")
-    return spark.table(name)
+    return drain(joined, "ss_join", "append")
 
 
 _STREAM_STATIC_JOIN_SQL = """
@@ -308,8 +285,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.unix_micros("click_ts") + HOUR_US
         ),
     ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    name, _ = _run_to_memory(joined, "ss2_join", "append")
-    return spark.table(name)
+    return drain(joined, "ss2_join", "append")
 
 
 _STREAM_STREAM_JOIN_SQL = """
@@ -389,8 +365,7 @@ def _stream_left_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "leftOuter",
     ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    name, _ = _run_to_memory(joined, "ss2_louter", "append")
-    return spark.table(name)
+    return drain(joined, "ss2_louter", "append")
 
 
 _STREAM_STREAM_LEFT_JOIN_SQL = """
@@ -427,16 +402,7 @@ def run_streaming_twin(
     plan = {"tumbling": _tumbling, "sliding": _sliding, "session": _session}[
         which
     ](stream.withWatermark("ts", "1 hour"))
-    name = f"twin_{which}_{uuid.uuid4().hex[:8]}"
-    q = (
-        plan.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(plan, f"twin_{which}", "complete")
 
 
 def source_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,17 +410,7 @@ def source_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     AvailableNow drains the whole journal into a memory sink) — the
     reference's journal-replay entry point [R]. Values must equal the
     batch reader's, which the oracle checks."""
-    stream = stream_events(spark, sf_dir)
-    name = f"src_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(stream_events(spark, sf_dir), "src", "append")
 
 
 _SOURCE_STREAM_SQL = """
@@ -479,16 +435,7 @@ def stream_sampled_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AS BIGINT) % 10000"
     )
     sampled = stream.where(F.expr(bucket) < 2500)
-    name = f"samp_{uuid.uuid4().hex[:8]}"
-    q = (
-        sampled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(sampled, "samp", "append")
 
 
 _STREAM_SAMPLED_SQL = """
@@ -823,16 +770,7 @@ def stream_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stream_dir(sf_dir, "documents")
     )
     sigs = _shingles(stream, "doc_id").groupBy("doc_id").agg(*_minhash_mins())
-    name = f"sig_{uuid.uuid4().hex[:8]}"
-    q = (
-        sigs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(sigs, "sig", "complete")
 
 
 def _stream_minhash_sql() -> str:

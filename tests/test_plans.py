@@ -306,6 +306,19 @@ def test_multimodal_decode_roundtrip_and_map_only(spark):
         assert body == texts[doc_id].encode("utf-8")
 
 
+def test_multimodal_decode_rejects_a_bad_magic():
+    """The container bytes come from outside the program, so a payload
+    that does not open with its magic raises ValueError — a check that
+    ``python -O`` cannot strip."""
+    from graph_database_akkatyped_spark.operators import llm
+
+    error = "bad container magic"
+    good = llm._MM_MAGIC + bytes([0, 64, 0, 64]) + b"body"
+    assert llm._container(good, llm._MM_MAGIC, error) == good
+    with pytest.raises(ValueError, match=error):
+        llm._container(b"PNG!" + good[4:], llm._MM_MAGIC, error)
+
+
 def test_ivf_partitioned_probe_prunes_cells(spark):
     """The cell-partitioned IVF probe must read ONLY the probed cells'
     directories: the candidate scan carries a PartitionFilters entry

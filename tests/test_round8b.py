@@ -404,7 +404,7 @@ def test_streaming_holt_store_ledger_and_ordering_guards():
     # out-of-order slice fails loudly
     import pytest as _pytest
 
-    with _pytest.raises(AssertionError):
+    with _pytest.raises(ValueError, match="out-of-order"):
         store.apply(
             pd.DataFrame(
                 {"event_type": ["x"], "day": days[:1], "n": [9]}

@@ -3,6 +3,10 @@ row set as the batch twin on the same file (SURVEY.md §5.4)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -401,31 +405,85 @@ def test_stateful_topk_fold_is_split_invariant():
     assert whole[2:] == [9.0, 1, 9.0, 2, 9.0, 5]
 
 
-def test_idempotent_sink_key_is_leak_free(spark):
-    """Round-6 hygiene contract for the registered sink key: a full
+_LEDGERED_KEYS = [
+    "stream_sink_idempotent",
+    "stream_graph_degree",
+    "stream_graph_pagerank",
+    "stream_scd2",
+    "stream_ivf_assign",
+    "stream_backfill_merge",
+    "stream_entity_resolve",
+    "stream_holt_state",
+]
+
+
+def _ckpt_dirs() -> set[str]:
+    """Streaming checkpoint temp dirs the ledgered runs create."""
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_*ckpt_*")
+    return set(glob.glob(pattern))
+
+
+@pytest.mark.parametrize("key", _LEDGERED_KEYS)
+def test_idempotent_sink_key_is_leak_free(spark, key):
+    """Round-6 hygiene contract for every ledgered stream key: a full
     run leaves exactly one evictable memoized block (no stray store
-    state/partial blocks), re-invocation is a memo hit that adds
-    nothing, and clear_frame_cache frees it all."""
+    state/partial blocks) and no streaming checkpoint dir,
+    re-invocation is a memo hit that adds nothing, and
+    clear_frame_cache frees it all."""
     from graph_database_akkatyped_spark.caching import (
         clear_frame_cache,
         persistent_rdd_ids,
     )
-    from graph_database_akkatyped_spark.streaming.sinks import (
-        stream_sink_idempotent,
-    )
+    from graph_database_akkatyped_spark.streaming import sinks
 
     sf = "/root/testdata/sf0.001"
     clear_frame_cache()
     baseline = persistent_rdd_ids(spark)
-    first = stream_sink_idempotent(spark, sf)
+    dirs = _ckpt_dirs()
+    first = sinks.QUERIES[key](spark, sf)
     n = first.count()
     after_first = persistent_rdd_ids(spark) - baseline
     assert n > 0 and len(after_first) == 1
-    again = stream_sink_idempotent(spark, sf)
+    assert _ckpt_dirs() - dirs == set()
+    again = sinks.QUERIES[key](spark, sf)
     assert again.count() == n
     assert persistent_rdd_ids(spark) - baseline == after_first
     clear_frame_cache(sf)
     assert persistent_rdd_ids(spark) - baseline == set()
+
+
+def test_ledgered_run_frees_everything_when_the_sink_raises(
+    spark, monkeypatch
+):
+    """A ledgered run whose store raises on its second micro-batch
+    re-raises, and leaves no live block (the first batch's partial and
+    state cuts) and no streaming checkpoint dir behind."""
+    from pyspark.errors import StreamingQueryException
+
+    from graph_database_akkatyped_spark.caching import (
+        clear_frame_cache,
+        persistent_rdd_ids,
+    )
+    from graph_database_akkatyped_spark.streaming import sinks
+
+    apply = sinks.IdempotentSnapshotStore.apply
+
+    def failing_apply(self, partial, batch_id):
+        if self.applied:
+            raise RuntimeError("injected sink failure")
+        apply(self, partial, batch_id)
+
+    sf = "/root/testdata/sf0.001"
+    clear_frame_cache(sf)
+    sinks._split_events_dir(spark, sf)  # the replay layout is cached state
+    baseline = persistent_rdd_ids(spark)
+    dirs = _ckpt_dirs()
+    monkeypatch.setattr(sinks.IdempotentSnapshotStore, "apply", failing_apply)
+    with pytest.raises(StreamingQueryException, match="injected sink failure"):
+        sinks.stream_sink_idempotent(spark, sf)
+    assert persistent_rdd_ids(spark) - baseline == set()
+    assert _ckpt_dirs() - dirs == set()
+    clear_frame_cache(sf)
 
 
 def test_idempotent_sink_ledger_and_replay(spark):
@@ -476,9 +534,8 @@ def test_crash_recovery_resumes_from_checkpoint(spark):
     from committed offsets (the second run only sees batch ids the
     first run had not committed) — i.e. recovery is replay-from-
     checkpoint, not replay-from-scratch."""
-    import tempfile
-
     from pyspark.errors.exceptions.captured import StreamingQueryException
+    from graph_database_akkatyped_spark.streaming.runner import read_splits
     from graph_database_akkatyped_spark.streaming.sinks import (
         IncrementalDegreeStore,
         _split_events_dir,
@@ -486,14 +543,9 @@ def test_crash_recovery_resumes_from_checkpoint(spark):
 
     sf = "/root/testdata/sf0.001"
     split_dir = _split_events_dir(spark, sf)
-    schema = spark.read.parquet(split_dir).schema
 
     def reader():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(split_dir)
-        )
+        return read_splits(spark, split_dir)
 
     # ground truth: one uninterrupted run
     solo = IncrementalDegreeStore(spark)
@@ -624,8 +676,8 @@ def test_incremental_degree_natural_idempotence(spark):
     once = sorted(map(tuple, store.snapshot().collect()))
 
     # ledger-bypassed replays of both batches: naturally no-ops
-    store.apply(IncrementalDegreeStore._batch_pairs(b0), 100)
-    store.apply(IncrementalDegreeStore._batch_pairs(b1), 101)
+    store.apply(IncrementalDegreeStore.partial(b0), 100)
+    store.apply(IncrementalDegreeStore.partial(b1), 101)
     assert sorted(map(tuple, store.snapshot().collect())) == once
 
     rebuilt = sorted(
