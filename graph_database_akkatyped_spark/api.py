@@ -15,7 +15,10 @@ the lakehouse event-log pattern:
   writer, and duplicate keys inside one command collapse to their last
   row before the write), tombstones drop deleted entities;
 - **compaction** folds the journal into a snapshot so replay cost stays
-  O(live data), the Spark analog of Akka Persistence snapshots.
+  O(live data), the Spark analog of Akka Persistence snapshots. Its
+  files are named ``snapshot-…`` and the journal stream reads only
+  ``part-…`` files, so, as in Akka, a snapshot is never replayed into
+  the event stream.
 
 Point asks (:meth:`GraphDB.get_vertex`, :meth:`GraphDB.neighbors`,
 :meth:`GraphDB.history`) are driver reads: pyarrow reads the few journal
@@ -39,6 +42,7 @@ from __future__ import annotations
 
 import functools
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Iterable
@@ -113,6 +117,18 @@ def _max_batch(path: str) -> int:
     return max((st.max for st in stats if st is not None and st.has_min_max), default=0)
 
 
+def _name_snapshot(tmp_dir: str) -> None:
+    """Rename the Spark-written ``part-*`` files of a compaction snapshot,
+    and their ``.part-*.crc`` sidecars, to ``snapshot-*``: the journal
+    stream skips them, while every batch read still lists them."""
+    for name in os.listdir(tmp_dir):
+        if name.lstrip(".").startswith("part-"):
+            os.rename(
+                os.path.join(tmp_dir, name),
+                os.path.join(tmp_dir, name.replace("part-", "snapshot-", 1)),
+            )
+
+
 class ConcurrentWriterError(RuntimeError):
     """A second writer attempted a mutation while another held the
     journal write lock."""
@@ -162,8 +178,11 @@ class GraphDB:
         self._vdir = os.path.join(path, "journal", "vertices")
         self._edir = os.path.join(path, "journal", "edges")
         self._lock_path = os.path.join(path, "journal", ".write_lock")
-        os.makedirs(self._vdir, exist_ok=True)
-        os.makedirs(self._edir, exist_ok=True)
+        for live in (self._vdir, self._edir):
+            # a compact() that died mid-swap left its live directory aside
+            if not os.path.isdir(live) and os.path.isdir(live + ".old"):
+                os.rename(live + ".old", live)
+            os.makedirs(live, exist_ok=True)
         # last batch id issued (see _next_batch), seeded from the journal
         files = _journal_files(self._vdir) + _journal_files(self._edir)
         self._batch = max(map(_max_batch, files), default=0)
@@ -365,6 +384,17 @@ class GraphDB:
         Holds the write lock for its whole duration (snapshot + swap):
         a mutation landing between the snapshot read and the directory
         swap would be silently dropped.
+
+        The swap is crash-safe: each live directory ``X`` moves aside to
+        ``X.old`` before its snapshot is renamed in, and the ``.old``
+        directories are deleted last. A crash at any point leaves each
+        journal either whole or aside; opening the GraphDB moves an
+        ``X.old`` back when ``X`` is missing, and any mix of compacted
+        and uncompacted journals replays to the same state.
+
+        Snapshot files are not streamed (see :meth:`edge_journal_stream`),
+        so refresh a journal view before compacting: commands folded
+        into a snapshot before the view read them are not counted.
         """
         with self._write_lock():
             batch = self._next_batch()
@@ -381,12 +411,16 @@ class GraphDB:
             e.select("src", "dst", "rel", "weight", "op", "batch").write.mode(
                 "overwrite"
             ).parquet(etmp)
-            import shutil
-
-            shutil.rmtree(self._vdir)
-            shutil.rmtree(self._edir)
-            os.rename(vtmp, self._vdir)
-            os.rename(etmp, self._edir)
+            swaps = ((vtmp, self._vdir), (etmp, self._edir))
+            for tmp, live in swaps:
+                _name_snapshot(tmp)
+                # left by a crash after its snapshot was swapped in
+                shutil.rmtree(live + ".old", ignore_errors=True)
+            for tmp, live in swaps:
+                os.rename(live, live + ".old")
+                os.rename(tmp, live)
+            for _tmp, live in swaps:
+                shutil.rmtree(live + ".old")
 
     # ---------------------------------------------------------------- asks
 
@@ -428,8 +462,14 @@ class GraphDB:
         """The edge journal as a Structured Streaming source: every
         mutation batch appended by add_edges/remove_edge becomes a
         micro-batch — the Spark analog of subscribing to the reference's
-        Akka Persistence event journal [R]."""
-        return self.spark.readStream.schema(_E_SCHEMA).parquet(self._edir)
+        Akka Persistence event journal [R]. Only ``part-*`` files stream
+        (command files and bulk appends); ``compact()``'s
+        ``snapshot-*`` files hold no new event and are skipped."""
+        return (
+            self.spark.readStream.schema(_E_SCHEMA)
+            .option("pathGlobFilter", "part-*")
+            .parquet(self._edir)
+        )
 
     def run_incremental_edge_counts(
         self, checkpoint: str, sink_name: str
@@ -440,6 +480,11 @@ class GraphDB:
         consume ONLY journal files appended since the last run and fold
         them into the checkpointed state — O(new mutations) per refresh,
         which is what keeps a materialized graph view cheap at 100 TB.
+        Compaction snapshots are not read, so the counts stay exact
+        across ``compact()``, and a fresh checkpoint counts the command
+        files present at its first run and after, not the events a
+        snapshot already folded. The checkpoint's state store keeps the
+        shuffle-partition count of the session that created it.
         """
         q = (
             self.edge_journal_stream()

@@ -863,14 +863,12 @@ class EntityResolveStore(_PartialsStore):
         return er_match_frame(self.master, batch_df)
 
     def snapshot(self) -> DataFrame:
-        """The union of the batches' matches, cut; its blocks join
-        ``blocks``."""
+        """The lazy union of the batches' (cut) matches; the run's
+        ``memoized_checkpoint`` cuts it once."""
         out = self.partials[0]
         for part in self.partials[1:]:
             out = out.unionByName(part)
-        snap = cut(out)
-        self.blocks |= cut_block_ids(snap)
-        return snap
+        return out
 
 
 def stream_entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:

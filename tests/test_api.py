@@ -63,6 +63,51 @@ def test_compact_preserves_state(db):
     assert db.edges().count() == 0
 
 
+def _state(db):
+    return (
+        sorted(tuple(r) for r in db.vertices().collect()),
+        sorted(tuple(r) for r in db.edges().collect()),
+    )
+
+
+def test_compact_crash_at_any_directory_rename_keeps_state(
+    spark, tmp_path, monkeypatch
+):
+    """A compact() that dies at any directory rename of its swap leaves
+    a journal that reopens to the state it had before the compaction,
+    and the reopened journal compacts again."""
+    for crash_at in range(10):
+        path = str(tmp_path / f"graphdb{crash_at}")
+        db = GraphDB(spark, path)
+        db.add_vertices([("a", "k", "x"), ("b", "k", "y"), ("c", "k", "z")])
+        db.add_edges([("a", "b", "r", 1.0), ("b", "c", "r", 2.0)])
+        db.remove_edge("b", "c", "r")
+        before = _state(db)
+        renames, real_rename = [], os.rename
+
+        def flaky(src, dst, *a, **k):
+            if os.path.isdir(src):
+                renames.append(dst)
+                if len(renames) > crash_at:
+                    raise OSError("crash during the swap")
+            return real_rename(src, dst, *a, **k)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", flaky)
+            try:
+                db.compact()
+                crashed = False
+            except OSError:
+                crashed = True
+        reopened = GraphDB(spark, path)
+        assert _state(reopened) == before
+        reopened.compact()
+        assert _state(reopened) == before
+        if not crashed:
+            break
+    assert not crashed and crash_at >= 2
+
+
 def test_mutations_after_compact(db):
     db.add_vertices([("a", "k", "x")])
     db.compact()

@@ -9,7 +9,10 @@ the Spark jobs its build ran and their stages that ran (skipped stages
 excluded), read from ``statusTracker`` under one job group per key.
 Keys whose plan is one cut scan (fixpoint and memoized kernels) run
 their whole work at build time, so these two numbers are the ones that
-show what such a build did.
+show what such a build did. Each object also records the session's
+``cpus`` (its default parallelism, the n of ``local[n]``) and
+``spark.sql.shuffle.partitions``: job and stage counts taken at
+different core or partition counts are not comparable.
 
 A key is a registered query key, or ``module:function`` for an
 unregistered builder with the ``(spark, sf_dir)`` signature (e.g.
@@ -86,6 +89,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     counts, plans = {}, []
     sc = spark.sparkContext
+    session = {
+        "cpus": sc.defaultParallelism,
+        "spark.sql.shuffle.partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    }
     for i, key in enumerate(args.keys):
         clear_frame_cache(sf_dir)
         group = f"explain-{i}"
@@ -95,7 +102,7 @@ def main() -> None:
         finally:
             sc.setJobGroup("explain-idle", "")
         counts[key] = dict(sorted(node_counts(df).items()))
-        counts[key].update(_work(spark, group))
+        counts[key].update(_work(spark, group), **session)
         if args.plan_out:
             plans.append(f"== {key} ==\n{formatted_plan(df)}")
     if args.plan_out:
