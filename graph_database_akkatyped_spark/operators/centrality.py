@@ -296,7 +296,7 @@ def betweenness_frame(visited: DataFrame, edges: DataFrame) -> DataFrame:
     """Raw fixed-point Brandes passes over a precomputed multi-source
     BFS frame ``visited(seed, id, level)`` and a symmetric edge list
     ``edges(a, b)`` → ``(id, bc_e6)``. Separated from the registered
-    key so tools/graph_scale_check.py can rehearse it on synthetic
+    key so ``tools/rehearse.py hashed`` can rehearse it on synthetic
     million-vertex graphs; see :func:`betweenness_sampled` for the
     algorithm notes."""
     lmax = visited.agg(F.max("level")).collect()[0][0] or 0
@@ -800,7 +800,7 @@ def louvain_multi_frame(
 ) -> DataFrame:
     """Frame-level two-level Louvain kernel (the body of
     ``community_louvain_multi``, extracted for the large-graph
-    rehearsal in tools/round7_kernel_rehearsal.py the same way
+    rehearsal in ``tools/rehearse.py planted`` the same way
     ``mis_frame`` was in round 6). ``verts``: (v); ``edges``: directed
     symmetric (a, b, w) with integer weights. Returns (v, l)."""
     # deg/m2 are sweep-invariant and each sweep's job re-aggregates

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graph_database_akkatyped_spark.catalog import load_table
+from graph_database_akkatyped_spark.operators.graph_build import _md5_int
 from graph_database_akkatyped_spark.operators.llm import (
     _GRAM_FROM_TOKS,
     _TOKS,
@@ -615,11 +616,7 @@ def quality_hashed_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles anywhere; label = sign of the integer score."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(F.expr(_TOKS)).alias("token"))
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("token")), 1, 8), 16, 10)
-        .cast("long")
-        % _QHL_BUCKETS
-    )
+    bucket = _md5_int("", 8, "token") % _QHL_BUCKETS
     counts = (
         toks.select("doc_id", bucket.alias("bucket"))
         .groupBy("doc_id", "bucket")
@@ -926,13 +923,7 @@ def anonymize_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB; the pseudonym expression is a pure per-row function, so it
     parallelizes with zero state."""
     ev = load_table(spark, sf_dir, "events")
-    pseudo = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.lit(_PSEUDO_SALT), "user_id")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    pseudo = _md5_int("|", 15, F.lit(_PSEUDO_SALT), "user_id")
     return (
         ev.withColumn("pseudo_id", pseudo)
         .groupBy("pseudo_id")
@@ -987,8 +978,7 @@ def anonymize_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("nationkey"),
         F.col("c_mktsegment").alias("seg"),
     ).agg(F.count(F.lit(1)).alias("n"))
-    label = F.concat_ws("|", "nationkey", "seg")
-    h = F.conv(F.substring(F.md5(label), 1, 15), 16, 10).cast("long")
+    h = _md5_int("|", 15, "nationkey", "seg")
     u = (h.cast("double") + 0.5) / F.lit(float(1 << 60))
     # Clamp at 2^-60: when h is within ~64 of 2^60 the double rounding
     # of (h+0.5)/2^60 can yield u == 1.0 exactly, making t = 0 and

@@ -263,7 +263,7 @@ def build_user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, not after. The old plan joined raw event rows — a user
     with k events in a slot multiplied every pair k·k' times — and
     only then deduplicated, shipping the inflated pair stream through
-    a full exchange (plans/r11/build_user_graph_before.txt: the
+    a full exchange (in the round-11 plan the
     distinct sat between the join and the final aggregate). With both
     sides pre-deduplicated each co-occurring pair is emitted exactly
     once, the post-join distinct disappears, and the only exchange

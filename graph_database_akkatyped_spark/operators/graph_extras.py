@@ -1149,8 +1149,8 @@ def link_predict_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 10x scale row measures the whole key linear (disjoint slots),
     but at sf0.1 that is still a one-time build; repeat consumers and
     the bench's timed run pay a memo fetch while the true cost stays
-    visible in tools/round6b_scale_check.py (which clears the frame
-    cache). Round 12: this key scores the COUNT-ONLY wedge
+    visible in ``tools/rehearse.py replica 10 r6b`` (which clears
+    the frame cache). Round 12: this key scores the COUNT-ONLY wedge
     (:func:`_lp_candidates` with ``with_ra=False`` — same pair set and
     cn values, no d_z join, (x, y)-only wedge rows); a production job
     scoring both predictors in one session should score the
@@ -2134,7 +2134,7 @@ def mis_frame(verts: DataFrame, sym: DataFrame, rounds: int) -> DataFrame:
     ``sym`` is a symmetric edge list (a, b). Raises if the active set
     survives the round horizon — partial (non-maximal) sets are never
     returned. Also the unit the 1M-vertex kernel rehearsal drives
-    (tools/round6_kernel_rehearsal.py).
+    (``tools/rehearse.py mis``).
 
     The generation is every vertex with its status ``s``: NULL while
     active, 1 once in the set, 0 once a neighbor joined it; each
@@ -2531,7 +2531,7 @@ def anf_frame(verts: DataFrame, edges_sym: DataFrame) -> DataFrame:
     """ANF kernel on an arbitrary graph: ``verts``: (id),
     ``edges_sym``: (a, b) symmetric. Returns (v, r_sum, est_ppm).
     See :func:`graph_neighborhood_anf` for the full contract; the 1M
-    rehearsal (tools/round8c_kernel_rehearsal.py) drives this frame
+    rehearsal (``tools/rehearse.py anf``) drives this frame
     directly."""
     masks = fixpoint(
         lambda masks, rnd: _anf_hop(masks, edges_sym),

@@ -25,6 +25,7 @@ from graph_database_akkatyped_spark.caching import (
     memoized_checkpoint,
 )
 from graph_database_akkatyped_spark.catalog import load_table
+from graph_database_akkatyped_spark.operators.graph_build import _md5_int
 from graph_database_akkatyped_spark.numerics import davg, sql_davg
 from graph_database_akkatyped_spark.operators.pregel import fixpoint
 
@@ -467,12 +468,7 @@ def _simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(F.expr(_TOKS)).alias("tok"))
-    hashed = toks.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
+    hashed = toks.select("doc_id", _md5_int("", 8, "tok").alias("h"))
     bit_sums = hashed.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -950,7 +946,8 @@ def dedup_containment_smallside(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket). With it the per-gram fan-out is bounded: a gram's posting
     is <= cap rows AND the docs sampling it are a subset of its
     posting, so any one key emits <= cap² (= 4096) rows — measured by
-    the planted boilerplate-cluster case in tools/dedup_skew_check.py.
+    the planted boilerplate-cluster case of ``tools/rehearse.py skew
+    boiler``.
     Recall: the bottom-s sample is drawn AMONG low-df grams, so the
     probability-1 full-containment recall argument survives for every
     doc with >= 1 sub-cap gram; a doc composed ENTIRELY of boilerplate
@@ -1251,7 +1248,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-split reach because BOTH join sides share the bucket), switch
     to :func:`dedup_embedding_cosine_salted`, which spreads each bucket
     over a g·(g+1)/2 slot grid with IDENTICAL candidate semantics.
-    Demonstrated in tools/dedup_skew_check.py."""
+    Demonstrated by ``tools/rehearse.py skew``."""
     emb = load_table(spark, sf_dir, "embeddings")
     cand = _band_pairs(_sign_bands(emb), "vec_id", ("band", "key"))
     return _cos_verify(cand, emb, "a", "b", _EMB_COS_MIN)
@@ -1486,11 +1483,8 @@ def corpus_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning."""
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " "))
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 10
-    )
+    # only keepers reach the split, and a NULL doc_id is never a keeper
+    bucket = _md5_int("", 8, "doc_id") % 10
     split = (
         F.when(bucket <= 7, "train").when(bucket == 8, "val").otherwise("test")
     )
@@ -3326,8 +3320,8 @@ def simsearch_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     five fill/move measures from FOUR separate aggregates over the
     stale/new assignment frames plus a corpus-sized vec_id self-join
     (stale ⋈ new) — each use re-computing the whole assignment subtree
-    (plans/r11/simsearch_ivf_rebalance_before.txt: 102 Exchanges, 50
-    parquet scans, zero reuse). Both assignments now ride on ONE
+    (the round-11 plan: 102 Exchanges, 50 parquet scans, zero
+    reuse). Both assignments now ride on ONE
     per-vector row (the rebalanced cell is attached to the stale row
     by an in-place window argmax over the broadcast centroids — no
     vec_id self-join), each
@@ -5464,8 +5458,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.expr(_TOKS)).alias("tok"),
     ).withColumn(
         "b",
-        (F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long")
-         % _DSIR_B).cast("int"),
+        (_md5_int("", 4, "tok") % _DSIR_B).cast("int"),
     )
     counts = toks.groupBy("b").agg(
         F.count(F.lit(1)).alias("raw_f"),
@@ -5690,7 +5683,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_TOKS),
         F.lit(0).cast("long"),
         lambda acc, x: (
-            acc * 131 + F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("long")
+            acc * 131 + _md5_int("", 8, x)
         ) % F.lit(2147483647).cast("long"),
     )
     return docs.select("doc_id", fp.alias("fingerprint"))
@@ -7329,8 +7322,8 @@ def dedup_semantic_frame(
     100 TB shape: clustering is scan-per-iteration with k·dim
     broadcast state; candidates are equi-join buckets (cid, band,
     key); the prune is one grouped count + left join. No stage holds a
-    cluster² or corpus² term — tools/round6_scale_check.py measures
-    the 10x ratio."""
+    cluster² or corpus² term — ``tools/rehearse.py replica 10 r6``
+    measures the 10x ratio."""
     asg = _semantic_asg_frame(emb)
     cand = _semantic_cand_frame(emb, asg)
     pairs = _cos_verify(cand, emb, "a", "b", tau).select("a", "b")

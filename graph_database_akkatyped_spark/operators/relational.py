@@ -420,7 +420,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes the rsd=0.01 HLL++ partial — 1,639 BIGINT register
     words, ~13 KB — for EVERY (segment, custkey) group and ships all
     of them through the first exchange (~130 MB at sf0.1 for a 150k-row
-    input; plans/r11/agg_approx_distinct_before.txt operator (8)).
+    input, measured on the round-11 plan's operator (8)).
     Deduplicating the fact side to distinct custkeys FIRST (a narrow
     8-byte-key aggregate that partial-aggregates map-side) makes the
     segment-level aggregate compute ONE sketch per segment instead.

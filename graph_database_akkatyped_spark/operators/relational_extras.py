@@ -233,8 +233,8 @@ def journal_compact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (honest): this alone is PLAN-ISOMORPHIC — Spark replicates a
     # DataFrame subtree per consumer, and the old _journal_state(ops)
     # subtree was expression-identical to keep_up's, so exchange reuse
-    # already unified them at runtime (plans/r12/journal_compact_
-    # replay_{before,after}.txt differ only in expr ids). The REAL
+    # already unified them at runtime (the round-12 before and after
+    # plans differed only in expr ids). The REAL
     # replica cut is n_compacted: counting ``compacted`` per user
     # rescanned a whole keep_up+keep_tomb replica for a number that is
     # derivable exactly — compacted holds one row per live (user, k)
@@ -834,7 +834,7 @@ def merge_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     table from the batch partition and streams the base partition
     through it, no sort on either side; the per-partition build side
     is batch-sized, so the guide's OOM caveat does not bite. Same
-    rows, same shuffle count (plans/r11/merge_cdc_upsert_before/after:
+    rows, same shuffle count (round-11 plans before/after:
     SortMergeJoin FullOuter + two Sorts -> ShuffledHashJoin FullOuter
     BuildRight, Exchanges unchanged).
     """
@@ -1872,8 +1872,8 @@ def data_quality_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-11 shape fix (guide §1.2 — don't compute things twice): the
     old plan scanned every CHILD table twice per relationship (once
-    for count(*), once under a left-anti join, 12 fact scans total;
-    plans/r11/data_quality_fk_audit_before.txt). One broadcast LEFT
+    for count(*), once under a left-anti join, 12 fact scans total
+    in the round-11 plan). One broadcast LEFT
     OUTER join against the distinct parent keys folds both measures
     into a single aggregate over a single scan: n_child = count(*),
     n_orphans = count of rows whose parent key failed to match.

@@ -326,8 +326,8 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per micro-batch. The materialized result is memoized per
     (session, sf_dir) like stream_sink_idempotent, so a bench loop
     costs one memo fetch, not a fresh streaming run — the true
-    streaming cost shows in tools/round6d_scale_check.py (which clears
-    the frame cache between runs).
+    streaming cost shows in ``tools/rehearse.py replica 10 r6d``
+    (which clears the frame cache between runs).
     """
     from graph_database_akkatyped_spark.caching import memoized_checkpoint
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -12,10 +13,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from graph_database_akkatyped_spark.catalog import TABLES
 from graph_database_akkatyped_spark.session import get_spark
+from tools.explain import LEDGER, moves
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 SF_BENCH = "/root/testdata/sf0.1"
+
+# The plan ledger: per-key physical-plan node counts at sf0.01, written
+# by ``python tools/explain.py`` (no key).
+with open(LEDGER) as _fh:
+    PLANS = json.load(_fh)
+
+
+def plan_moves(key: str, counts) -> dict[str, tuple[int, int]]:
+    """Nodes whose count in ``counts`` (``plans.explain.node_counts``)
+    differs from ``key``'s ledger entry, as ``{node: (ledger, now)}``."""
+    return moves(PLANS[key], counts)
 
 
 @pytest.fixture(scope="session")

@@ -4,6 +4,8 @@ refactor can't silently turn a broadcast join into a 100 TB shuffle."""
 
 from __future__ import annotations
 
+import importlib
+
 import pytest
 
 from graph_database_akkatyped_spark.operators import relational
@@ -14,7 +16,7 @@ from graph_database_akkatyped_spark.plans.explain import (
     read_schema_columns,
     uses,
 )
-from tests.conftest import SF_ORACLE
+from tests.conftest import PLANS, SF_ORACLE, plan_moves
 
 
 def test_scan_pruned_pushdown_and_pruning(spark):
@@ -493,7 +495,7 @@ def test_containment_smallside_probe_is_df_capped(spark):
     probe sides are restricted to sub-cap grams) — the guard that
     bounds any one gram key's join fan-out at cap². A refactor that
     drops it reverts the 247,000-rows-through-one-task shape
-    tools/dedup_skew_check.py 'boiler' measures."""
+    ``tools/rehearse.py skew boiler`` measures."""
     from graph_database_akkatyped_spark.operators import llm
     from graph_database_akkatyped_spark.plans.explain import formatted_plan
 
@@ -536,113 +538,32 @@ def test_truss_incremental_materializes_triangles_once(spark):
     )
 
 
-# Vector-search, dedup and graph plan shapes at sf0.01, counted node by
-# node (physical plan, AQE's initial plan). Columns: shuffle Exchange,
-# BroadcastExchange, BroadcastHashJoin, BroadcastNestedLoopJoin,
-# SortMergeJoin, Window, parquet scans. Every key is assembled from
-# shared stages: in operators/llm.py, for vector search the vector and
-# query frames, _cell_means, _probe, _cos_topk, _nearest_cell and
-# _pq_index, and for dedup the text hash, _shingles, _ngram_grams, the
-# MinHash signature and band stages, _band_pairs, _jaccard_verify,
-# _sign_bands and _cos_verify; for the graph family the stages at the
-# head of operators/graph_build.py's user-graph section (_uedges_memo,
-# _mirror, _sym, _degrees, _md5_int) and graph_extras' _dedges_memo,
-# _succession, _backbone and ANF stages. A stage edit that adds a
-# shuffle, turns a broadcast into a shuffled join or rescans an input
-# shows up here as a changed count. _mmr_pool stands in for
-# simsearch_mmr (whose result is a cut of its rerank fixpoint),
-# _knn_graph_build for knn_graph_build, _ngram_pairs for
-# dedup_ngram_jaccard and the two _link_predict_*_build builders for
-# the link predictors (those keys memoize). Graph keys whose result is
-# a cut (fixpoint or memoized kernels) have a one-scan plan and are not
-# listed; tools/explain.py reports the jobs and stages their build ran.
-_PLAN_SHAPES = {
-    "simsearch_topk": (1, 1, 0, 1, 0, 1, 2),
-    "_mmr_pool": (1, 1, 0, 1, 0, 1, 2),
-    "simsearch_filtered_topk": (1, 1, 1, 0, 0, 1, 2),
-    "simsearch_range": (0, 1, 0, 1, 0, 0, 2),
-    "simsearch_ivf": (3, 2, 1, 1, 0, 2, 3),
-    "_knn_graph_build": (14, 5, 2, 3, 1, 8, 7),
-    "embedding_matryoshka_recall": (6, 2, 0, 2, 1, 3, 4),
-    "simsearch_ivf_filtered": (3, 2, 1, 1, 0, 2, 3),
-    "simsearch_recall_filtered": (8, 3, 2, 1, 1, 4, 5),
-    "simsearch_ivf_partitioned": (4, 2, 1, 1, 0, 2, 3),
-    "simsearch_ivf_append": (4, 2, 1, 1, 0, 1, 3),
-    "simsearch_ivf_rebalance": (17, 5, 1, 4, 1, 4, 10),
-    "simsearch_recall_rebalance": (24, 9, 2, 7, 2, 10, 15),
-    "simsearch_pq": (7, 3, 3, 0, 0, 2, 4),
-    "simsearch_ivfadc": (8, 5, 4, 1, 1, 3, 4),
-    "simsearch_hybrid_rrf": (6, 2, 1, 1, 1, 3, 4),
-    "simsearch_hard_negatives": (1, 1, 0, 1, 0, 1, 2),
-    "simsearch_recall": (8, 3, 1, 2, 1, 4, 5),
-    "simsearch_recall_pq": (12, 4, 3, 1, 1, 4, 6),
-    "simsearch_recall_ivfadc": (13, 6, 4, 2, 2, 5, 6),
-    "simsearch_greedy_graph": (104, 83, 52, 31, 26, 26, 114),
-    "_ngram_pairs": (10, 0, 0, 0, 3, 0, 0),
-    "dedup_exact": (1, 0, 0, 0, 0, 0, 1),
-    "corpus_training_manifest": (1, 0, 0, 0, 0, 1, 1),
-    "corpus_dedup_report": (6, 1, 1, 0, 1, 2, 2),
-    "curation_filter_report": (1, 0, 0, 0, 0, 1, 1),
-    "corpus_pipeline_funnel": (7, 5, 5, 0, 1, 1, 6),
-    "corpus_source_overlap": (7, 3, 3, 0, 0, 0, 4),
-    "decontam_ngram_overlap": (3, 2, 2, 0, 0, 0, 3),
-    "dedup_containment": (10, 0, 0, 0, 3, 0, 0),
-    "dedup_containment_smallside": (16, 0, 0, 0, 7, 1, 0),
-    "dedup_banding_recall": (11, 4, 4, 0, 1, 0, 6),
-    "text_minhash_signature": (1, 0, 0, 0, 0, 0, 0),
-    "dedup_incremental": (10, 0, 0, 0, 3, 0, 0),
-    "dedup_embedding_cosine": (1, 3, 3, 0, 0, 0, 4),
-    "dedup_embedding_cosine_salted": (1, 3, 3, 0, 0, 0, 4),
-    "dedup_semantic": (16, 10, 4, 6, 2, 3, 13),
-    "dedup_semantic_recall": (13, 7, 2, 5, 2, 2, 10),
-    "decontam_semantic": (3, 3, 3, 0, 1, 0, 5),
-    "edge_jaccard": (6, 0, 0, 0, 3, 0, 0),
-    "clustering_coefficient": (2, 0, 0, 0, 1, 0, 0),
-    "graph_summary_stats": (2, 0, 0, 0, 0, 0, 0),
-    "triangle_count_approx": (6, 1, 0, 1, 2, 0, 0),
-    "degree_assortativity": (5, 0, 0, 0, 2, 0, 0),
-    "community_modularity": (19, 3, 0, 3, 8, 0, 0),
-    "community_louvain_multi": (2, 0, 0, 0, 1, 0, 0),
-    "graph_reciprocity": (4, 1, 0, 1, 1, 0, 0),
-    "motif_find_nonmutual": (3, 0, 0, 0, 1, 0, 0),
-    "graph_rich_club": (10, 15, 10, 5, 0, 0, 0),
-    "gnn_sample_fanout": (5, 3, 3, 0, 0, 3, 0),
-    "graph_anf_accuracy": (10, 2, 2, 0, 2, 0, 4),
-    "graph_effective_diameter": (6, 0, 0, 0, 0, 2, 0),
-    "graph_random_walks": (1, 1, 0, 1, 0, 0, 1),
-    "graph_node2vec_walks": (1, 1, 0, 1, 0, 0, 0),
-    "path_shortest_bidirectional": (8, 1, 0, 1, 3, 0, 1),
-    "_link_predict_jaccard_build": (9, 0, 0, 0, 4, 1, 0),
-    "_link_predict_ra_build": (6, 0, 0, 0, 3, 1, 0),
-}
-_SHAPE_NODES = (
-    "Exchange",
-    "BroadcastExchange",
-    "BroadcastHashJoin",
-    "BroadcastNestedLoopJoin",
-    "SortMergeJoin",
-    "Window",
-    "Scan parquet",
-)
+# Every registered key's plan is checked against its PLANS.json entry
+# in tests/test_oracle_parity.py, on the frame that test builds. Five
+# keys return a cut (a memo or a fixpoint's last generation), so their
+# plan is one checkpoint scan; the functions that build their pre-cut
+# frames are ledger entries of their own (``module:function``), checked here, as
+# is the unregistered salted twin of dedup_embedding_cosine.
+_UNREGISTERED = sorted(k for k in PLANS if ":" in k)
 
 
-@pytest.mark.parametrize("name", sorted(_PLAN_SHAPES))
-def test_vector_search_plan_shape(spark, name):
-    from graph_database_akkatyped_spark.operators import (
-        algos,
-        centrality,
-        curation,
-        graph_extras,
-        llm,
-        motif,
-    )
+@pytest.mark.parametrize("frame", _UNREGISTERED)
+def test_unregistered_plan_matches_ledger(spark, frame):
+    module, name = frame.split(":")
+    build = getattr(importlib.import_module(module), name)
+    moved = plan_moves(frame, node_counts(build(spark, SF_ORACLE)))
+    assert not moved, f"{frame}: plan moved from PLANS.json (ledger, now): {moved}"
 
-    modules = (llm, curation, algos, graph_extras, centrality, motif)
-    build = next(getattr(m, name) for m in modules if hasattr(m, name))
-    counts = node_counts(build(spark, SF_ORACLE))
-    got = tuple(counts[n] for n in _SHAPE_NODES)
-    assert dict(zip(_SHAPE_NODES, got)) == dict(
-        zip(_SHAPE_NODES, _PLAN_SHAPES[name])
-    ), counts
-    assert counts["CartesianProduct"] == 0, counts
-    assert counts["ShuffledHashJoin"] == 0, counts
+
+def test_ledger_covers_registry_without_scale_killers():
+    """The ledger's registered entries are exactly the registry; no
+    entry plans a CartesianProduct, and Python UDF evaluation
+    (BatchEvalPython) appears only in the UDF surface key."""
+    from graph_database_akkatyped_spark.registry import collect
+
+    queries, _ = collect()
+    assert sorted(k for k in PLANS if ":" not in k) == sorted(queries)
+    cartesian = {k: e["CartesianProduct"] for k, e in PLANS.items() if e.get("CartesianProduct")}
+    assert not cartesian, cartesian
+    python_udf = sorted(k for k, e in PLANS.items() if e.get("BatchEvalPython"))
+    assert python_udf == ["udf_python"], python_udf

@@ -15,8 +15,8 @@
    constant applies only when the artifact is absent/off-protocol.
 
 3. The bench.py per-key cold-regression gate (round-10 VERDICT #4)
-   is exercised end-to-end by tools/bench_gate_selfcheck.py-style
-   math here: canary-normalized ratios flag only true movers.
+   is exercised end to end by the gate math here: canary-normalized
+   ratios flag only true movers.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
-"""Paired A/B timing of registered keys, with an optional parity pass.
+"""Paired A/B timing of registered keys.
 
-Usage: python tools/ab.py [--cold] [--parity] [-n RUNS] key [key ...]
+Usage: python tools/ab.py [--cold] [-n RUNS] key [key ...]
 
 Times each key at sf0.1 with the bench's noop-sink action, in either
 regime:
@@ -12,10 +12,7 @@ regime:
   plan construction + the noop write together — the bench.py cold
   protocol (memoized kernels pay their real build).
 
-``--parity`` first checks each key against its DuckDB oracle at
-sf0.001 / sf0.01 / sf0.1 (the exact compare of the driver-mirror
-tests, frame cache cleared per check so memoized builds are honest)
-and exits non-zero if any check fails.
+Check a changed key's results with ``tools/parity.py`` first.
 
 Run it alternately from a checkout of the parent commit and from the
 change (the package resolves relative to this file, so each tree times
@@ -33,45 +30,19 @@ import sys
 import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-for p in (_REPO, os.path.join(_REPO, "tests")):
-    if p not in sys.path:
-        sys.path.insert(0, p)
+if _REPO not in sys.path:
+    sys.path.insert(0, _REPO)
 
 from graph_database_akkatyped_spark.caching import clear_frame_cache
 from graph_database_akkatyped_spark.registry import collect
 from graph_database_akkatyped_spark.session import get_spark
 
 _TESTDATA = "/root/testdata"
-_PARITY_SF = ("sf0.001", "sf0.01", "sf0.1")
 _SF = os.path.join(_TESTDATA, "sf0.1")
 
 
 def _noop(df) -> None:
     df.write.mode("overwrite").format("noop").save()
-
-
-def _parity(spark, fn, key: str, oracles: dict) -> int:
-    from tests.conftest import make_duck
-    from tests.oracle_utils import compare
-
-    bad = 0
-    for sf in _PARITY_SF:
-        d = os.path.join(_TESTDATA, sf)
-        clear_frame_cache(d)
-        try:
-            got = fn(spark, d).toPandas()
-            if key in oracles:
-                problems = compare(got, make_duck(d).execute(oracles[key]).fetchdf())
-            else:
-                problems = [] if len(got.columns) > 0 else ["empty"]
-        except Exception as exc:  # noqa: BLE001
-            problems = [f"EXCEPTION: {exc}"]
-        if problems:
-            bad += 1
-            print(f"PARITY FAIL {key} @ {sf}: {problems[0][:400]}")
-        else:
-            print(f"parity ok {key} @ {sf} ({len(got)} rows)")
-    return bad
 
 
 def _times(spark, fn, sf: str, runs: int, cold: bool) -> list[float]:
@@ -91,27 +62,21 @@ def _times(spark, fn, sf: str, runs: int, cold: bool) -> list[float]:
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--cold", action="store_true")
-    ap.add_argument("--parity", action="store_true")
     ap.add_argument("-n", dest="runs", type=int, default=3)
     ap.add_argument("keys", nargs="+")
     args = ap.parse_args()
     spark = get_spark(app_name="ab")
     spark.sparkContext.setLogLevel("ERROR")
-    queries, oracles = collect()
+    queries, _ = collect()
     regime = "cold" if args.cold else "warm"
     print(f"# tree={_REPO} regime={regime} runs={args.runs}", flush=True)
-    bad = 0
     for key in args.keys:
-        fn = queries[key]
-        if args.parity:
-            bad += _parity(spark, fn, key, oracles)
-        samples = _times(spark, fn, _SF, args.runs, args.cold)
+        samples = _times(spark, queries[key], _SF, args.runs, args.cold)
         print(
             f"TIME {key}: median {statistics.median(samples):.3f}s "
             f"runs {[round(s, 3) for s in samples]}",
             flush=True,
         )
-    sys.exit(1 if bad else 0)
 
 
 if __name__ == "__main__":
