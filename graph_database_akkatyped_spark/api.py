@@ -52,7 +52,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -65,6 +65,7 @@ from graph_database_akkatyped_spark.operators.graph_build import (
     _degrees,
     _mirror,
     _sym,
+    _top_per_key,
 )
 
 _V_SCHEMA = "id string, kind string, name string, op string, batch long"
@@ -115,6 +116,14 @@ def _max_batch(path: str) -> int:
     groups = (meta.row_group(i) for i in range(meta.num_row_groups))
     stats = (g.column(col).statistics for g in groups)
     return max((st.max for st in stats if st is not None and st.has_min_max), default=0)
+
+
+def _last_commit(checkpoint: str) -> int:
+    """Id of the last batch committed to a streaming ``checkpoint``
+    (-1 before its first batch)."""
+    path = os.path.join(checkpoint, "commits")
+    names = os.listdir(path) if os.path.isdir(path) else []
+    return max((int(n) for n in names if n.isdigit()), default=-1)
 
 
 def _name_snapshot(tmp_dir: str) -> None:
@@ -301,11 +310,10 @@ class GraphDB:
 
     @staticmethod
     def _latest(df: DataFrame, keys: list[str]) -> DataFrame:
-        w = Window.partitionBy(*keys).orderBy(F.col("batch").desc())
         return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where((F.col("_rn") == 1) & (F.col("op") != "delete"))
-            .drop("_rn", "op", "batch")
+            _top_per_key(df, keys, F.col("batch").desc())
+            .where(F.col("op") != "delete")
+            .drop("op", "batch")
         )
 
     def _read_journal(self, dest: str, schema: str) -> DataFrame:
@@ -484,8 +492,11 @@ class GraphDB:
         across ``compact()``, and a fresh checkpoint counts the command
         files present at its first run and after, not the events a
         snapshot already folded. The checkpoint's state store keeps the
-        shuffle-partition count of the session that created it.
+        shuffle-partition count of the session that created it. A
+        refresh that finds no new command file runs no batch, so it
+        reads the counts back from the checkpoint's state store.
         """
+        last = _last_commit(checkpoint)
         q = (
             self.edge_journal_stream()
             .groupBy("rel", "op")
@@ -498,6 +509,11 @@ class GraphDB:
             .start()
         )
         q.awaitTermination()
+        if last >= 0 and _last_commit(checkpoint) == last:
+            state = self.spark.read.format("statestore").load(checkpoint)
+            return state.select(
+                "key.rel", "key.op", F.col("value.count").alias("n_events")
+            )
         return self.spark.table(sink_name)
 
     # ----------------------------------------------------------- analytics

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.catalog import load_table
+from graph_database_akkatyped_spark.operators.graph_build import _top_per_key
 from graph_database_akkatyped_spark.numerics import dec2double
 
 
@@ -725,15 +726,10 @@ def timeseries_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("b") == F.col("nb"), -F.col("x"))
         .otherwise(-a2)
     )
-    w = Window.partitionBy("b").orderBy(key1, "x")
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            F.col("b").alias("bucket"),
-            F.col("x").alias("day_x"),
-            F.col("y").alias("cents"),
-        )
+    return _top_per_key(j, "b", [key1, "x"]).select(
+        F.col("b").alias("bucket"),
+        F.col("x").alias("day_x"),
+        F.col("y").alias("cents"),
     )
 
 

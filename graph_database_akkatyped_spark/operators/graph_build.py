@@ -16,7 +16,7 @@ is DERIVED from the relational fixtures (FIXTURES.md §derived-graph):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.caching import memoized_checkpoint
 from graph_database_akkatyped_spark.catalog import load_table
@@ -202,14 +202,34 @@ def _degrees(e: DataFrame, key: str, id_name: str, out_name: str) -> DataFrame:
     )
 
 
+def _top_per_key(
+    df: DataFrame,
+    keys: str | Column | list,
+    order: str | Column | list,
+    k: int = 1,
+    rank: str | None = None,
+) -> DataFrame:
+    """The first ``k`` rows of ``df`` per ``keys`` under ``order`` (each
+    a column, a name or a list of them): the journal replay's latest
+    event per key and every per-key top-k. The row_number column is
+    kept as ``rank`` when named, else dropped. The filter reads the
+    window output directly, so Spark infers its pre-shuffle
+    ``WindowGroupLimit``."""
+    rn = rank or "_top_rn"
+    w = Window.partitionBy(keys).orderBy(order)
+    top = df.withColumn(rn, F.row_number().over(w)).where(F.col(rn) <= k)
+    return top if rank else top.drop(rn)
+
+
 def _md5_int(sep: str, n_hex: int, *parts: str | Column) -> Column:
     """BIGINT of the first ``n_hex`` hex digits of
     ``md5(concat_ws(sep, parts))`` — the engine-portable draw (DuckDB:
     ``CAST('0x' || substr(md5(...), 1, n_hex) AS BIGINT)``). A part is
-    a column name or a Column; NULL parts are skipped by concat_ws."""
-    text = F.concat_ws(
-        sep, *[(F.col(p) if isinstance(p, str) else p).cast("string") for p in parts]
-    )
+    a column name or a Column; NULL parts are skipped by concat_ws. A
+    single part is hashed as ``md5(cast(part as string))``, so a NULL
+    part draws NULL, as DuckDB's ``md5(NULL)`` does."""
+    cols = [(F.col(p) if isinstance(p, str) else p).cast("string") for p in parts]
+    text = cols[0] if len(cols) == 1 else F.concat_ws(sep, *cols)
     return F.conv(F.substring(F.md5(text), 1, n_hex), 16, 10).cast("long")
 
 
@@ -322,19 +342,12 @@ def slot_capped_users(e: DataFrame, cap: int = _SLOT_CAP) -> DataFrame:
     (O(k log k) for a k-user slot — a 10⁶-user spike is one task
     sorting 10⁶ rows, a straggler but never a blowup; the quadratic
     danger was always the pair join's OUTPUT, which the cap bounds)."""
-    from pyspark.sql import Window
-
     su = e.groupBy("event_type", "hour", "user_id").agg(
         F.count(F.lit(1)).alias("n_ev")
     )
-    w = Window.partitionBy("event_type", "hour").orderBy(
-        F.desc("n_ev"), F.asc("user_id")
-    )
-    return (
-        su.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= cap)
-        .select("event_type", "hour", "user_id")
-    )
+    return _top_per_key(
+        su, ["event_type", "hour"], [F.desc("n_ev"), F.asc("user_id")], cap
+    ).select("event_type", "hour", "user_id")
 
 
 def build_user_graph_capped(spark: SparkSession, sf_dir: str) -> DataFrame:

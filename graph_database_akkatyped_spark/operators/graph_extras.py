@@ -45,6 +45,7 @@ from graph_database_akkatyped_spark.operators.graph_build import (
     _md5_int,
     _mirror,
     _sym,
+    _top_per_key,
     _uedges_memo,
     build_user_graph_capped,
     nation_edges,
@@ -276,13 +277,8 @@ def bipartite_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey", "o_custkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(30,2)")).alias("qty"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("l_partkey").orderBy(
-        F.desc("qty"), F.asc("o_custkey")
-    )
-    top = pc.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= _PROJ_TOPK
+    top = _top_per_key(
+        pc, "l_partkey", [F.desc("qty"), F.asc("o_custkey")], _PROJ_TOPK
     )
     t1 = top.select(
         F.col("l_partkey").alias("pk"), F.col("o_custkey").alias("c1")
@@ -390,8 +386,6 @@ def graph_activity_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.date_trunc("hour", "first_ts").alias("hr"))
         .agg(F.count(F.lit(1)).alias("n_new"))
     )
-    from pyspark.sql import Window
-
     w = Window.orderBy("hr").rowsBetween(Window.unboundedPreceding, 0)
     return (
         hourly.join(first_seen, "hr", "left")
@@ -1282,13 +1276,8 @@ def _link_predict_jaccard_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("d_x") * F.col("d_y")).alias("pref_attach"),
         )
     )
-    w = Window.partitionBy("x").orderBy(
-        F.col("jacc_e6").desc(), F.col("cn").desc(), "y"
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _LP_TOPK)
-    )
+    order = [F.col("jacc_e6").desc(), F.col("cn").desc(), "y"]
+    return _top_per_key(scored, "x", order, _LP_TOPK, rank="rnk")
 
 
 # Shared oracle prelude: the slot-capped canonical edge set (ce), its
@@ -1382,14 +1371,10 @@ def link_predict_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _link_predict_ra_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _lp_candidates(spark, sf_dir, with_ra=True)
-    w = Window.partitionBy("x").orderBy(
-        F.col("ra_e6").desc(), F.col("cn").desc(), "y"
-    )
-    return (
-        cand.withColumn("ra", F.col("ra_e6").cast("double") / F.lit(1e6))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _LP_TOPK)
-        .select("x", "y", "cn", "ra_e6", "ra", "rnk")
+    cand = cand.withColumn("ra", F.col("ra_e6").cast("double") / F.lit(1e6))
+    order = [F.col("ra_e6").desc(), F.col("cn").desc(), "y"]
+    return _top_per_key(cand, "x", order, _LP_TOPK, rank="rnk").select(
+        "x", "y", "cn", "ra_e6", "ra", "rnk"
     )
 
 
@@ -1603,17 +1588,10 @@ def mst_boruvka_frame(edges: DataFrame) -> DataFrame:
             ),
             "comp", "oc", "a", "b", "weight",
         )
-        w = Window.partitionBy("comp").orderBy(
-            F.col("weight").desc(), "a", "b"
-        )
         # sel must LIVE past the round (a plain cut, not scratch): the
         # returned forest reads every round's picks lazily until the
         # caller materializes it (sel is ≤ one edge per component)
-        sel = cut(
-            cand.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-        )
+        sel = cut(_top_per_key(cand, "comp", [F.col("weight").desc(), "a", "b"]))
         picked.append(
             sel.select("a", "b", "weight")
             .distinct()
@@ -1660,13 +1638,9 @@ def _backbone(ce: DataFrame, k: int) -> DataFrame:
     ``ce`` (a, b, weight): every vertex keeps its ``k`` heaviest incident
     edges (weight desc, then b), symmetrized, distinct, cut. Returns
     (a, b); node2vec walks and greedy coloring run on it."""
-    top = Window.partitionBy("a").orderBy(F.col("weight").desc(), "b")
-    kept = (
-        _sym(ce, "a", "b", "weight")
-        .withColumn("rn", F.row_number().over(top))
-        .where(F.col("rn") <= k)
-        .select("a", "b")
-    )
+    kept = _top_per_key(
+        _sym(ce, "a", "b", "weight"), "a", [F.col("weight").desc(), "b"], k
+    ).select("a", "b")
     return cut(_sym(kept, "a", "b").distinct())
 
 
@@ -1764,13 +1738,12 @@ def graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "seed", "walk_no", "cur", "x",
             F.explode(F.expr("sequence(1, tickets)")).alias("tick"),
         ).withColumn("hkey", _n2v_hash(k))
-        wpick = Window.partitionBy("seed", "walk_no").orderBy(
-            F.col("hkey").desc(), F.col("x").asc_nulls_last()
-        )
         state = cut(
-            lottery.withColumn("rn", F.row_number().over(wpick))
-            .where(F.col("rn") == 1)
-            .select(
+            _top_per_key(
+                lottery,
+                ["seed", "walk_no"],
+                [F.col("hkey").desc(), F.col("x").asc_nulls_last()],
+            ).select(
                 "seed", "walk_no",
                 F.col("cur").alias("prev"),
                 F.coalesce("x", "cur").alias("cur"),
@@ -2017,34 +1990,26 @@ def gnn_sample_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("seed")
         .limit(_GNN_SEEDS)
     )
-    w1 = Window.partitionBy("seed").orderBy("hkey", "dst")
-    hop1 = (
-        sym.join(F.broadcast(seeds), sym["a"] == seeds["seed"])
-        .select(
+    hop1 = _top_per_key(
+        sym.join(F.broadcast(seeds), sym["a"] == seeds["seed"]).select(
             "seed",
             F.col("a").alias("src"),
             F.col("b").alias("dst"),
             _edge_hash(F.col("a"), F.col("b")).alias("hkey"),
-        )
-        .withColumn("rn", F.row_number().over(w1))
-        .where(F.col("rn") <= _GNN_F1)
-        .select("seed", "src", "dst")
-    )
+        ),
+        "seed", ["hkey", "dst"], _GNN_F1,
+    ).select("seed", "src", "dst")
     frontier = hop1.select("seed", F.col("dst").alias("parent"))
     # hop-2 parent == src after the join (sym.a = frontier.parent)
-    w2 = Window.partitionBy("seed", "src").orderBy("hkey", "dst")
-    hop2 = (
-        sym.join(F.broadcast(frontier), sym["a"] == frontier["parent"])
-        .select(
+    hop2 = _top_per_key(
+        sym.join(F.broadcast(frontier), sym["a"] == frontier["parent"]).select(
             "seed",
             F.col("a").alias("src"),
             F.col("b").alias("dst"),
             _edge_hash(F.col("a"), F.col("b")).alias("hkey"),
-        )
-        .withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= _GNN_F2)
-        .select("seed", "src", "dst")
-    )
+        ),
+        ["seed", "src"], ["hkey", "dst"], _GNN_F2,
+    ).select("seed", "src", "dst")
     return (
         hop1.select("seed", F.lit(1).alias("hop"), "src", "dst")
         .unionAll(hop2.select("seed", F.lit(2).alias("hop"), "src", "dst"))

@@ -25,7 +25,7 @@ from graph_database_akkatyped_spark.caching import (
     memoized_checkpoint,
 )
 from graph_database_akkatyped_spark.catalog import load_table
-from graph_database_akkatyped_spark.operators.graph_build import _md5_int
+from graph_database_akkatyped_spark.operators.graph_build import _md5_int, _top_per_key
 from graph_database_akkatyped_spark.numerics import davg, sql_davg
 from graph_database_akkatyped_spark.operators.pregel import fixpoint
 
@@ -978,12 +978,9 @@ def dedup_containment_smallside(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _contain_verify contract)
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_g"))
     low = grams.join(rare, "g", "left_semi").join(sizes, "doc_id")
-    wg = Window.partitionBy("doc_id").orderBy(_minhash(0), "g")
-    sampled = (
-        low.withColumn("rn", F.row_number().over(wg))
-        .where(F.col("rn") <= _CONTAIN_SAMPLE_S)
-        .select("doc_id", "g", "n_g")
-    )
+    sampled = _top_per_key(
+        low, "doc_id", [_minhash(0), "g"], _CONTAIN_SAMPLE_S
+    ).select("doc_id", "g", "n_g")
     q_lt_t = F.col("q") < F.col("t")
     cand = (
         sampled.select(
@@ -1728,19 +1725,12 @@ def _cos() -> Column:
     )
 
 
-def _topk(scored: DataFrame, k: int, rank: str = "rnk") -> DataFrame:
-    """Per-query top-``k`` of ``scored`` by (cos desc, vec_id): adds the
-    row_number column ``rank`` and keeps rank <= k."""
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    return scored.withColumn(rank, F.row_number().over(w)).where(
-        F.col(rank) <= k
-    )
-
-
 def _cos_topk(cand: DataFrame, k: int, rank: str = "rnk") -> DataFrame:
     """Scores the (query, candidate) rows ``cand`` by ``_cos`` and keeps
-    each query's ``_topk``: the exact re-rank stage of every key."""
-    return _topk(cand.withColumn("cos", _cos()), k, rank)
+    each query's top-``k`` by (cos desc, vec_id) with its row_number
+    column ``rank``: the exact re-rank stage of every key."""
+    order = [F.col("cos").desc(), "vec_id"]
+    return _top_per_key(cand.withColumn("cos", _cos()), "q_id", order, k, rank)
 
 
 def _dim_means(members: DataFrame, *key: str) -> DataFrame:
@@ -1792,14 +1782,10 @@ def _probe(queries: DataFrame, cells: DataFrame, nprobe: int) -> DataFrame:
     c_cos = _dot(F.col("q_emb"), F.col("centroid")) / (
         F.sqrt("q_nrm") * F.sqrt("cnrm")
     )
-    wc = Window.partitionBy("q_id").orderBy(F.col("c_cos").desc(), *key)
-    return (
-        queries.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("cell_rnk", F.row_number().over(wc))
-        .where(F.col("cell_rnk") <= nprobe)
-        .select(*queries.columns, *key)
-    )
+    scored = queries.crossJoin(F.broadcast(cells)).withColumn("c_cos", c_cos)
+    return _top_per_key(
+        scored, "q_id", [F.col("c_cos").desc(), *key], nprobe
+    ).select(*queries.columns, *key)
 
 
 def _nearest_cell(
@@ -1828,14 +1814,10 @@ def _nearest_cell(
     c_cos = _dot(F.col("embedding"), F.col("centroid")) / (
         F.sqrt("nrm") * F.sqrt("cnrm")
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), "cell")
-    return (
-        vecs.crossJoin(F.broadcast(cells))
-        .withColumn("c_cos", c_cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select("vec_id", "label", "embedding", "nrm", "cell", *keep)
-    )
+    scored = vecs.crossJoin(F.broadcast(cells)).withColumn("c_cos", c_cos)
+    return _top_per_key(
+        scored, "vec_id", [F.col("c_cos").desc(), "cell"]
+    ).select("vec_id", "label", "embedding", "nrm", "cell", *keep)
 
 
 def simsearch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1931,18 +1913,15 @@ def simsearch_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("pcos").alias("maxsim"))
         )
         mmr = (F.lit(0.7) * F.col("cos")) - (F.lit(0.3) * F.col("maxsim"))
-        wr = Window.partitionBy("q_id").orderBy(mmr.desc(), "vec_id")
-        pick = (
-            maxsim.withColumn("rn", F.row_number().over(wr))
-            .where(F.col("rn") == 1)
-            .select("q_id", "vec_id", "cos", F.lit(r).cast("int").alias("rnk"))
+        pick = _top_per_key(maxsim, "q_id", [mmr.desc(), "vec_id"]).select(
+            "q_id", "vec_id", "cos", F.lit(r).cast("int").alias("rnk")
         )
         return selected.unionByName(pick)
 
     # one generation per pick: the top-1 seed, then ranks 2.._MMR_K
     selected = fixpoint(
         rerank,
-        _topk(slim, 1, "rn").select(
+        _top_per_key(slim, "q_id", [F.col("cos").desc(), "vec_id"]).select(
             "q_id", "vec_id", "cos", F.lit(1).cast("int").alias("rnk")
         ),
         max_iter=_MMR_K - 1,
@@ -2134,17 +2113,12 @@ def _lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).fit(emb)
     queries = emb.where(F.col("vec_id") < 5)
     pairs = lsh.approxSimilarityJoin(queries, emb, 10.0, distCol="dist")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist"), "vec_id")
-    return (
-        pairs.select(
-            F.col("datasetA.vec_id").alias("q_id"),
-            F.col("datasetB.vec_id").alias("vec_id"),
-            "dist",
-        )
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-    )
+    scored = pairs.select(
+        F.col("datasetA.vec_id").alias("q_id"),
+        F.col("datasetB.vec_id").alias("vec_id"),
+        "dist",
+    ).where(F.col("vec_id") != F.col("q_id"))
+    return _top_per_key(scored, "q_id", [F.col("dist"), "vec_id"], 10, rank="rnk")
 
 
 def simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2397,14 +2371,11 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_cos = _dot(F.col("embedding"), F.col("s_emb")) / (
         F.sqrt("nrm") * F.sqrt("s_nrm")
     )
-    wa = Window.partitionBy("vec_id").orderBy(F.col("a_cos").desc(), "sub")
-    assign = (
-        base.join(F.broadcast(seeds), "label")
-        .withColumn("a_cos", a_cos)
-        .withColumn("arn", F.row_number().over(wa))
-        .where(F.col("arn") == 1)
-        .select("vec_id", "label", "sub", "embedding", "nrm")
-    )
+    assign = _top_per_key(
+        base.join(F.broadcast(seeds), "label").withColumn("a_cos", a_cos),
+        "vec_id",
+        [F.col("a_cos").desc(), "sub"],
+    ).select("vec_id", "label", "sub", "embedding", "nrm")
     cells = _cell_means(assign, "label", "sub")
     # every vector queries the graph: probe its sub-cells, re-rank
     probed = _probe(_as_queries(base), cells, _KNN_PROBE)
@@ -2610,7 +2581,6 @@ def simsearch_greedy_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     traj = state
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "node")
     for step in range(1, _GREEDY_STEPS + 1):
         cand = (
             state.join(edges, state["node"] == edges["src"])
@@ -2624,15 +2594,8 @@ def simsearch_greedy_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(queries), "q_id")
             .select("q_id", "node", cos.alias("cos"))
         )
-        state = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                "q_id",
-                F.lit(step).cast("int").alias("step"),
-                "node",
-                "cos",
-            )
+        state = _top_per_key(scored, "q_id", [F.col("cos").desc(), "node"]).select(
+            "q_id", F.lit(step).cast("int").alias("step"), "node", "cos"
         )
         traj = traj.unionByName(state)
     return traj
@@ -2814,15 +2777,12 @@ def simsearch_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     ham = F.bit_count(F.col("h1").bitwiseXOR(F.col("q1"))) + F.bit_count(
         F.col("h2").bitwiseXOR(F.col("q2"))
     )
-    w = Window.partitionBy("q_id").orderBy("ham", "vec_id")
-    cand = (
+    scored = (
         packed.crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("q_id"))
         .withColumn("ham", ham)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select("q_id", "vec_id")
     )
+    cand = _top_per_key(scored, "q_id", ["ham", "vec_id"], 10).select("q_id", "vec_id")
     return _recall_vs_truth(truth, cand)
 
 
@@ -3701,11 +3661,8 @@ def _pq_index(
     smaller label — and the ADC lookup table (q_id, code, m, d_int),
     the queries' OWN subspace distances to every centroid."""
     dist = _pq_dist_frame(emb, cdims)
-    wc = Window.partitionBy("vec_id", "m").orderBy("d_int", "c_label")
-    codes = (
-        dist.withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("c_label").alias("code"))
+    codes = _top_per_key(dist, ["vec_id", "m"], ["d_int", "c_label"]).select(
+        "vec_id", "m", F.col("c_label").alias("code")
     )
     qd = dist.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"),
@@ -3719,17 +3676,12 @@ def _pq_index(
 def _adc_top10(adc: DataFrame) -> DataFrame:
     """Per-query top-10 of the (q_id, vec_id, adc_e9) ADC sums, ties by
     vec_id, with the distance rounded back to float as ``adc_dist``."""
-    w = Window.partitionBy("q_id").orderBy("adc_e9", "vec_id")
-    return (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-        .select(
-            "q_id",
-            "vec_id",
-            "adc_e9",
-            F.round(F.col("adc_e9").cast("double") / 1e9, 6).alias("adc_dist"),
-            "rnk",
-        )
+    return _top_per_key(adc, "q_id", ["adc_e9", "vec_id"], 10, rank="rnk").select(
+        "q_id",
+        "vec_id",
+        "adc_e9",
+        F.round(F.col("adc_e9").cast("double") / 1e9, 6).alias("adc_dist"),
+        "rnk",
     )
 
 
@@ -4128,11 +4080,8 @@ def text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("lang", F.explode(F.expr(_TOKS)).alias("token"))
     counts = toks.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), "token")
-    return (
-        counts.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-    )
+    order = [F.col("cnt").desc(), "token"]
+    return _top_per_key(counts, "lang", order, 10, rank="rnk")
 
 
 _TEXT_WORDCOUNT_SQL = """
@@ -4272,14 +4221,10 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("term_e8").alias("score_e8"),
         )
     )
-    w = Window.partitionBy("q_doc").orderBy(
-        F.col("score_e8").desc(), "doc_id"
-    )
-    return (
-        scored.withColumn("score", F.col("score_e8").cast("double") / 1e8)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _BM25_TOPK)
-        .select("q_doc", "doc_id", "n_terms", "score_e8", "score", "rnk")
+    scored = scored.withColumn("score", F.col("score_e8").cast("double") / 1e8)
+    order = [F.col("score_e8").desc(), "doc_id"]
+    return _top_per_key(scored, "q_doc", order, _BM25_TOPK, rank="rnk").select(
+        "q_doc", "doc_id", "n_terms", "score_e8", "score", "rnk"
     )
 
 
@@ -4357,11 +4302,9 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf_r8").desc(), "token")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 5)
-        .select("doc_id", "token", "tfidf_r8", "rnk")
+    order = [F.col("tfidf_r8").desc(), "token"]
+    return _top_per_key(scored, "doc_id", order, 5, rank="rnk").select(
+        "doc_id", "token", "tfidf_r8", "rnk"
     )
 
 
@@ -4401,11 +4344,8 @@ def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bigram"),
     )
     counts = grams.groupBy("lang", "bigram").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), "bigram")
-    return (
-        counts.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 10)
-    )
+    order = [F.col("cnt").desc(), "bigram"]
+    return _top_per_key(counts, "lang", order, 10, rank="rnk")
 
 
 _TEXT_NGRAMS_SQL = """
@@ -5362,13 +5302,9 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_occ"),
         )
     )
-    wtop = Window.partitionBy("doc_id").orderBy(
-        F.col("score_q").desc(), "phrase"
-    )
-    return (
-        dedup.withColumn("rnk", F.row_number().over(wtop))
-        .where(F.col("rnk") <= _RAKE_TOPK)
-        .select("doc_id", "phrase", "n_occ", "score_q", "rnk")
+    order = [F.col("score_q").desc(), "phrase"]
+    return _top_per_key(dedup, "doc_id", order, _RAKE_TOPK, rank="rnk").select(
+        "doc_id", "phrase", "n_occ", "score_q", "rnk"
     )
 
 
@@ -5546,24 +5482,18 @@ def text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "lang", F.explode(F.expr(_TOKS)).alias("token"))
     lang_counts = toks.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("cnt"))
-    wp = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), "token")
-    profile = (
-        lang_counts.withColumn("rnk", F.row_number().over(wp))
-        .where(F.col("rnk") <= 20)
-        .select(F.col("lang").alias("profile_lang"), "token")
-    )
+    profile = _top_per_key(
+        lang_counts, "lang", [F.col("cnt").desc(), "token"], 20
+    ).select(F.col("lang").alias("profile_lang"), "token")
     doc_toks = toks.select("doc_id", "token").distinct()
     overlap = (
         doc_toks.join(F.broadcast(profile), "token")
         .groupBy("doc_id", "profile_lang")
         .agg(F.count(F.lit(1)).alias("score"))
     )
-    wd = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "profile_lang")
-    best = (
-        overlap.withColumn("r", F.row_number().over(wd))
-        .where(F.col("r") == 1)
-        .select("doc_id", F.col("profile_lang").alias("pred_lang"), "score")
-    )
+    best = _top_per_key(
+        overlap, "doc_id", [F.col("score").desc(), "profile_lang"]
+    ).select("doc_id", F.col("profile_lang").alias("pred_lang"), "score")
     return docs.join(best, "doc_id", "left").select(
         "doc_id",
         "lang",
@@ -6037,11 +5967,7 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: per (lang, split) doc counts + exact bucket bounds check.
     """
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 10
-    )
+    bucket = _md5_int("", 8, "doc_id") % 10
     split = (
         F.when(bucket <= 7, "train").when(bucket == 8, "val").otherwise("test")
     )
@@ -6688,12 +6614,9 @@ def simsearch_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", F.col("doc_id").alias("cand_id"))
         .agg(F.count(F.lit(1)).alias("ov"))
     )
-    wt = Window.partitionBy("q_id").orderBy(F.col("ov").desc(), "cand_id")
-    txt = (
-        ov.withColumn("txt_rank", F.row_number().over(wt))
-        .where(F.col("txt_rank") <= _RRF_CAND)
-        .select("q_id", "cand_id", "txt_rank")
-    )
+    txt = _top_per_key(
+        ov, "q_id", [F.col("ov").desc(), "cand_id"], _RRF_CAND, rank="txt_rank"
+    ).select("q_id", "cand_id", "txt_rank")
 
     fused = vec.join(txt, ["q_id", "cand_id"], "full")
     rrf = F.round(
@@ -6705,13 +6628,10 @@ def simsearch_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     )
-    wf = Window.partitionBy("q_id").orderBy(F.col("rrf").desc(), "cand_id")
-    return (
-        fused.withColumn("rrf", rrf)
-        .withColumn("rank", F.row_number().over(wf))
-        .where(F.col("rank") <= 10)
-        .select("q_id", "cand_id", "vec_rank", "txt_rank", "rrf", "rank")
-    )
+    order = [F.col("rrf").desc(), "cand_id"]
+    return _top_per_key(
+        fused.withColumn("rrf", rrf), "q_id", order, 10, rank="rank"
+    ).select("q_id", "cand_id", "vec_rank", "txt_rank", "rrf", "rank")
 
 
 _HYBRID_SQL = f"""

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.catalog import load_table, register_views
+from graph_database_akkatyped_spark.operators.graph_build import _top_per_key
 from graph_database_akkatyped_spark.numerics import (
     davg,
     dec2double,
@@ -57,11 +58,8 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "r_name", "n_name")
         .agg(dsum(_rev(), 6).alias("revenue"), F.count(F.lit(1)).alias("n_items"))
     )
-    w = Window.partitionBy("c_mktsegment").orderBy(F.col("revenue").desc(), "n_name")
-    return (
-        base.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-    )
+    order = [F.col("revenue").desc(), "n_name"]
+    return _top_per_key(base, "c_mktsegment", order, 3, rank="rnk")
 
 
 _FLAGSHIP_SQL = f"""
@@ -570,6 +568,8 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").desc(), "o_orderkey"
     )
     w_rk = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc())
+    # not _top_per_key: the filter reads rn through the rank window, so
+    # no WindowGroupLimit is inferred and one sort serves both windows
     return (
         orders.select(
             "o_custkey",
@@ -894,17 +894,12 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("cnt").desc(), "o_orderpriority"
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "c_mktsegment",
-            F.col("o_orderpriority").alias("mode_priority"),
-            "cnt",
-        )
+    return _top_per_key(
+        counts, "c_mktsegment", [F.col("cnt").desc(), "o_orderpriority"]
+    ).select(
+        "c_mktsegment",
+        F.col("o_orderpriority").alias("mode_priority"),
+        "cnt",
     )
 
 

@@ -14,7 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.catalog import load_table
-from graph_database_akkatyped_spark.operators.graph_build import _sym
+from graph_database_akkatyped_spark.operators.graph_build import (
+    _md5_int,
+    _sym,
+    _top_per_key,
+)
 from graph_database_akkatyped_spark.numerics import (
     dec2double,
     dsum,
@@ -52,13 +56,7 @@ def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     output depends on physical row order. The filter is map-side only
     (no shuffle) and composes with pushdown on everything upstream."""
     orders = load_table(spark, sf_dir, "orders")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 10
-    )
-    return orders.where(bucket == 0).select(
+    return orders.where(_md5_int("", 8, "o_orderkey") % 10 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
 
@@ -146,12 +144,10 @@ def _journal_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _journal_state(ops: DataFrame) -> DataFrame:
-    """LWW-with-delete replay of an ops frame: per entity, properties
-    set by the latest upsert per key AFTER the last tombstone. Returns
-    (user_id, n_props, state_fp) where state_fp is an order-free exact
-    integer fingerprint Σ (k·1000003 + v_cents) over the state map —
-    integer arithmetic, so Spark and DuckDB agree bit-for-bit."""
+def _journal_survivors(ops: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """LWW-with-delete survivors of an ops frame: each entity's last
+    tombstone ``(user_id, tomb_seq)``, and per property the latest
+    upsert AFTER it ``(user_id, seq, is_tomb, k, v_cents)``."""
     lt = (
         ops.where(F.col("is_tomb") == 1)
         .groupBy("user_id")
@@ -162,12 +158,26 @@ def _journal_state(ops: DataFrame) -> DataFrame:
         .join(lt, "user_id", "left")
         .where(F.col("seq") > F.coalesce(F.col("tomb_seq"), F.lit(-1)))
     )
-    w = Window.partitionBy("user_id", "k").orderBy(F.col("seq").desc())
-    cur = up.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
-    return cur.groupBy("user_id").agg(
+    keep = _top_per_key(up, ["user_id", "k"], F.col("seq").desc())
+    return lt, keep.select("user_id", "seq", "is_tomb", "k", "v_cents")
+
+
+def _state_fp(keep: DataFrame) -> DataFrame:
+    """(user_id, n_props, state_fp) of a survivor frame: state_fp is an
+    order-free exact integer fingerprint Σ (k·1000003 + v_cents) over
+    the state map — integer arithmetic, so Spark and DuckDB agree
+    bit-for-bit."""
+    return keep.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_props"),
         F.sum(F.col("k") * 1000003 + F.col("v_cents")).alias("state_fp"),
     )
+
+
+def _journal_state(ops: DataFrame) -> DataFrame:
+    """LWW-with-delete replay of an ops frame: per entity, properties
+    set by the latest upsert per key AFTER the last tombstone, as
+    :func:`_state_fp`."""
+    return _state_fp(_journal_survivors(ops)[1])
 
 
 def journal_compact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,22 +210,7 @@ def journal_compact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_journal"),
         F.sum("is_tomb").cast("long").alias("n_tombstones"),
     )
-    lt = (
-        ops.where(F.col("is_tomb") == 1)
-        .groupBy("user_id")
-        .agg(F.max("seq").alias("tomb_seq"))
-    )
-    up = (
-        ops.where(F.col("is_tomb") == 0)
-        .join(lt, "user_id", "left")
-        .where(F.col("seq") > F.coalesce(F.col("tomb_seq"), F.lit(-1)))
-    )
-    w = Window.partitionBy("user_id", "k").orderBy(F.col("seq").desc())
-    keep_up = (
-        up.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "seq", "is_tomb", "k", "v_cents")
-    )
+    lt, keep_up = _journal_survivors(ops)
     keep_tomb = lt.select(
         "user_id",
         F.col("tomb_seq").alias("seq"),
@@ -224,32 +219,10 @@ def journal_compact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("v_cents"),
     )
     compacted = keep_up.unionByName(keep_tomb)
-    # Round-12 (guide §2.4, compute once — VERDICT r11 #3): the
-    # full-journal replay IS the keep_up frame — ``_journal_state
-    # (ops)``'s rn=1 rows are, by construction, exactly the rows
-    # keep_up materializes (same lt/up filters, same window) — so
-    # full_state aggregates keep_up directly, mirroring the DuckDB
-    # oracle (``full_state AS (... FROM keep_up)``). Plan note
-    # (honest): this alone is PLAN-ISOMORPHIC — Spark replicates a
-    # DataFrame subtree per consumer, and the old _journal_state(ops)
-    # subtree was expression-identical to keep_up's, so exchange reuse
-    # already unified them at runtime (the round-12 before and after
-    # plans differed only in expr ids). The REAL
-    # replica cut is n_compacted: counting ``compacted`` per user
-    # rescanned a whole keep_up+keep_tomb replica for a number that is
-    # derivable exactly — compacted holds one row per live (user, k)
-    # (= n_props) plus one tombstone row iff the user has any tombstone
-    # (= n_tombstones > 0) — so the count is computed from frames the
-    # query already aggregates, removing one full LWW-window replica
-    # from the plan. comp_state deliberately STAYS an independent
-    # ``_journal_state(compacted)`` replay: the replay_match flag is
-    # computed, not asserted (tests/test_round11.py locks the flag
-    # falsifiable), and that replica is the one that must not be
-    # optimized into truth-by-construction.
-    full_state = keep_up.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_props"),
-        F.sum(F.col("k") * 1000003 + F.col("v_cents")).alias("state_fp"),
-    )
+    # comp_state is an independent replay of the compacted frame, not
+    # derived from keep_up: that keeps replay_match falsifiable
+    # (tests/test_round11.py)
+    full_state = _state_fp(keep_up)
     comp_state = _journal_state(compacted)
     return (
         base.join(
@@ -840,13 +813,12 @@ def merge_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
     batch = (
-        orders.where(F.col("o_orderkey") % 7 < 4)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        _top_per_key(
+            orders.where(F.col("o_orderkey") % 7 < 4),
+            "o_custkey",
+            [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()],
+        )
         .select(
             F.col("o_custkey"),
             F.col("o_totalprice").alias("new_bal"),
@@ -1451,11 +1423,10 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("totw"),
         F.row_number().over(w).alias("rn"),
     )
-    pick = Window.partitionBy("l_partkey").orderBy("rn")
     return (
-        cum.where(F.lit(2) * F.col("cumw") >= F.col("totw"))
-        .withColumn("pick_rn", F.row_number().over(pick))
-        .where(F.col("pick_rn") == 1)
+        _top_per_key(
+            cum.where(F.lit(2) * F.col("cumw") >= F.col("totw")), "l_partkey", "rn"
+        )
         .select(
             "l_partkey",
             dec2double(F.col("price")).alias("weighted_median_price"),
@@ -1681,18 +1652,11 @@ def er_match_frame(master: DataFrame, dirty: DataFrame) -> DataFrame:
     verified = cand.withColumn(
         "dist", F.levenshtein("name", "rname").cast("long")
     ).where(F.col("dist") <= 1)
-    w = Window.partitionBy("r_id").orderBy("dist", "c_custkey")
-    return (
-        verified.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "r_id",
-            F.col("c_custkey").alias("match_key"),
-            "dist",
-            (F.col("c_custkey") == F.col("r_id") - 1000000)
-            .cast("int")
-            .alias("correct"),
-        )
+    return _top_per_key(verified, "r_id", ["dist", "c_custkey"]).select(
+        "r_id",
+        F.col("c_custkey").alias("match_key"),
+        "dist",
+        (F.col("c_custkey") == F.col("r_id") - 1000000).cast("int").alias("correct"),
     )
 
 
@@ -2217,13 +2181,9 @@ def recommend_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("pi").orderBy(
-        F.col("score_q").desc(), F.col("cooc").desc(), "pj"
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _REC_TOPK)
-        .select("pi", "pj", "cooc", "score_q", "rnk")
+    order = [F.col("score_q").desc(), F.col("cooc").desc(), "pj"]
+    return _top_per_key(scored, "pi", order, _REC_TOPK, rank="rnk").select(
+        "pi", "pj", "cooc", "score_q", "rnk"
     )
 
 

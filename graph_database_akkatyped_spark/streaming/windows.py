@@ -27,6 +27,7 @@ from graph_database_akkatyped_spark.catalog import (
     normalize_events_ts,
 )
 from graph_database_akkatyped_spark.numerics import dec2double, dsum, sql_dsum
+from graph_database_akkatyped_spark.operators.graph_build import _top_per_key
 from graph_database_akkatyped_spark.streaming.runner import drain
 
 
@@ -797,21 +798,12 @@ SELECT doc_id, {mins} FROM grams GROUP BY doc_id
 
 
 def _topk_types(df: DataFrame) -> DataFrame:
-    from pyspark.sql import Window
-
     agg = df.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    w = Window.partitionBy("w").orderBy(F.desc("n"), F.asc("event_type"))
-    return (
-        agg.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n",
-            "rn",
-        )
+    order = [F.desc("n"), F.asc("event_type")]
+    return _top_per_key(agg, "w", order, 3, rank="rn").select(
+        F.col("w.start").alias("window_start"), "event_type", "n", "rn"
     )
 
 

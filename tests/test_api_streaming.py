@@ -95,3 +95,27 @@ def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
     }
     stores = os.listdir(os.path.join(ckpt, "state", "0"))
     assert sum(name.isdigit() for name in stores) == 32
+
+
+def test_refresh_without_new_command_keeps_counts(spark, tmp_path):
+    """A refresh that finds no new command file runs no batch; it
+    still answers the checkpointed counts."""
+    db = GraphDB(spark, str(tmp_path / "graphdb"))
+    ckpt = str(tmp_path / "ckpt")
+    db.add_vertices([("a", "n", "A"), ("b", "n", "B")])
+    db.add_edges([("a", "b", "bought", 1.0)])
+    assert _counts(db, ckpt, "view_idle") == {("bought", "upsert"): 1}
+    assert _counts(db, ckpt, "view_idle") == {("bought", "upsert"): 1}
+
+
+def test_refresh_after_compact_only_keeps_counts(spark, tmp_path):
+    """A compact() between two refreshes writes only snapshot files,
+    which the view does not read: the second refresh answers the
+    checkpointed counts."""
+    db = GraphDB(spark, str(tmp_path / "graphdb"))
+    ckpt = str(tmp_path / "ckpt")
+    db.add_vertices([("a", "n", "A"), ("b", "n", "B")])
+    db.add_edges([("a", "b", "bought", 1.0)])
+    assert _counts(db, ckpt, "view_cmp") == {("bought", "upsert"): 1}
+    db.compact()
+    assert _counts(db, ckpt, "view_cmp") == {("bought", "upsert"): 1}

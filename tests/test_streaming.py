@@ -882,3 +882,23 @@ def test_ivf_store_ledger_and_batch_convergence(spark):
     for vid, r in snap.items():
         assert r["cell"] == batch[vid]
         assert r["drifted"] == (r["cell"] != r["label"])
+
+
+@pytest.mark.parametrize("key", ["stream_graph_degree", "stream_graph_pagerank"])
+def test_ledger_bypassed_replay_that_adds_rows_raises(spark, monkeypatch, key):
+    """A set-union store whose merge skips its anti-join adds the
+    redelivered final batch again; the merge's own cut counts the rows
+    it let through and the run raises."""
+    from graph_database_akkatyped_spark.caching import clear_frame_cache
+    from graph_database_akkatyped_spark.streaming import sinks
+
+    new_rows = sinks._SetUnionStore._new_rows
+
+    def no_anti_join(self, batch, state, key):
+        return new_rows(self, batch, None, key)
+
+    clear_frame_cache(SF_SMOKE)
+    monkeypatch.setattr(sinks._SetUnionStore, "_new_rows", no_anti_join)
+    with pytest.raises(RuntimeError, match="not a no-op"):
+        sinks.QUERIES[key](spark, SF_SMOKE)
+    clear_frame_cache(SF_SMOKE)
