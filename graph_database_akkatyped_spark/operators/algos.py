@@ -27,6 +27,7 @@ from graph_database_akkatyped_spark.operators.graph_build import (
     _degrees,
     _md5_int,
     _slot_pairs,
+    _slots,
     _sym,
     _uedges_memo,
     nation_edges,
@@ -319,12 +320,7 @@ def cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than the base. The base labeling is the expensive part
     and is memoized (it stands in for "yesterday's result" a real
     deployment reads from the catalog; see api.py time travel)."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.date_trunc("hour", "ts").alias("hour"),
-    )
+    e = _slots(load_table(spark, sf_dir, "events"), "event_id")
     is_delta = (F.col("event_id") % _CC_DELTA_MOD) == 0
     base_ev = e.where(~is_delta)
     base_cc = _memoized(

@@ -14,11 +14,75 @@ SQL-hash-oracled.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from collections.abc import Iterator
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.catalog import load_table
 from graph_database_akkatyped_spark.operators.graph_build import _top_per_key
 from graph_database_akkatyped_spark.numerics import dec2double
+
+
+# Series stages. Every event-series key (here, in relational_extras'
+# anomaly hours and the streaming gap-fill, interpolation and Holt
+# twins) is assembled from these: the per-type bucket count, the
+# integer-identity z-score, the Holt floor step with its classic init,
+# and the hour grid. Column names are data, so one definition serves
+# every naming a caller uses.
+
+_HOLT_SHIFT = 1 << 40  # positivity shift: floor == trunc on both engines
+
+
+def _type_counts(events: DataFrame, unit: str, name: str) -> DataFrame:
+    """(event_type, name, n): ``events`` counted per type and
+    ``date_trunc(unit, ts)`` bucket."""
+    return events.groupBy(
+        "event_type", F.date_trunc(unit, "ts").alias(name)
+    ).agg(F.count(F.lit(1)).alias("n"))
+
+
+def _zscore() -> Column:
+    """round((n − s/k) / sqrt((k·ss − s²) / (k(k−1))), 4) over the
+    columns n, k = bucket count, s = Σn and ss = Σn²: the variance from
+    the exact integer identity, then one double division, one sqrt and
+    one rounded division — the same IEEE op sequence on both engines."""
+    k, s, ss = F.col("k"), F.col("s"), F.col("ss")
+    var = (k * ss - s * s) / (k * (k - 1))
+    return F.round((F.col("n") - s / k) / F.sqrt(var), 4)
+
+
+def _holt_step(x: int, l: int, b: int) -> tuple[int, int]:
+    """One Holt step (α = 1/4, β = 1/2) in integer milli-units:
+    l' = (x + 3(l + b)) // 4, b' = ((l' − l) + b) // 2. Python ``//``
+    floors but DuckDB ``//`` truncates, and trend terms go negative, so
+    each division carries the ``_HOLT_SHIFT`` positivity shift
+    ((num + k·S) // k − S), where floor == trunc."""
+    s = _HOLT_SHIFT
+    l_new = (x + 3 * (l + b) + 4 * s) // 4 - s
+    return l_new, ((l_new - l) + b + 2 * s) // 2 - s
+
+
+def _holt_fit(x: list[int]) -> Iterator[tuple[int, int]]:
+    """The Holt states (l, b) of the milli-unit series ``x``, one per
+    point: classic init l₁ = x₁, b₁ = x₂ − x₁ (0 for a one-point
+    series), then :func:`_holt_step` through the rest."""
+    l, b = x[0], (x[1] - x[0]) if len(x) > 1 else 0
+    yield l, b
+    for xt in x[1:]:
+        l, b = _holt_step(xt, l, b)
+        yield l, b
+
+
+def _hour_grid(events: DataFrame) -> DataFrame:
+    """(hr, event_type): every hour from the first to the last hour of
+    ``events`` crossed with every event type seen — a ``sequence``
+    explode from one aggregated row, O(span·types) however large the
+    journal."""
+    hr = F.date_trunc("hour", "ts")
+    grid = events.agg(F.min(hr).alias("lo"), F.max(hr).alias("hi")).select(
+        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hr")
+    )
+    return grid.crossJoin(events.select("event_type").distinct())
 
 
 def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,12 +228,9 @@ def events_burst_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity k·Σn² − (Σn)², then one double division, one sqrt, one
     rounded division — the same fixed IEEE op sequence on both engines.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("ep", F.unix_timestamp("hr"))
-    )
+    hourly = _type_counts(
+        load_table(spark, sf_dir, "events"), "hour", "hr"
+    ).withColumn("ep", F.unix_timestamp("hr"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("ep")
@@ -186,13 +247,9 @@ def events_burst_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.alias("s"),
         ss.alias("ss"),
     )
-    mean = F.col("s") / F.col("k")
-    var = (F.col("k") * F.col("ss") - F.col("s") * F.col("s")) / (
-        F.col("k") * (F.col("k") - 1)
-    )
     z = F.when(
         (F.col("k") >= 12) & (F.col("k") * F.col("ss") > F.col("s") * F.col("s")),
-        F.round((F.col("n") - mean) / F.sqrt(var), 4),
+        _zscore(),
     )
     return scored.select(
         "event_type",
@@ -259,10 +316,7 @@ def timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation order, and the final value is one IEEE division. No
     decimal detour needed.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hr")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    hourly = _type_counts(load_table(spark, sf_dir, "events"), "hour", "hr")
     w = Window.partitionBy("event_type").orderBy("hr")
     lagged = hourly.select(
         "event_type",
@@ -411,12 +465,9 @@ def timeseries_changepoint_cusum(
     count units, rounded), and ``is_peak`` marking each type's
     changepoint candidate (max of the two statistics, earliest hour
     on ties — deterministic rank-1 window)."""
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("ep", F.unix_timestamp("hr"))
-    )
+    hourly = _type_counts(
+        load_table(spark, sf_dir, "events"), "hour", "hr"
+    ).withColumn("ep", F.unix_timestamp("hr"))
     wtot = Window.partitionBy("event_type")
     word = (
         Window.partitionBy("event_type")
@@ -610,10 +661,7 @@ def timeseries_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile is exact here because the per-type groups are small by
     construction; at 100 TB the same column feeds approx_percentile
     with a documented error bound instead."""
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hr")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    hourly = _type_counts(load_table(spark, sf_dir, "events"), "hour", "hr")
     med = hourly.groupBy("event_type").agg(
         (F.percentile("n", F.lit(0.5)) * 2).cast("long").alias("med2")
     )
@@ -772,8 +820,6 @@ SELECT b AS bucket, x AS day_x, y AS cents FROM (
 """
 
 
-_HOLT_SHIFT = 1 << 40  # positivity shift: floor == trunc on both engines
-
 _HOLT_SCHEMA = (
     "event_type string, day timestamp, n long, level_q long, trend_q long"
 )
@@ -796,34 +842,17 @@ def timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB journal has millions of series keys, one executor task
     each; here 5 types × 30 days).
 
-    Division discipline: Python ``//`` FLOORS but DuckDB ``//``
-    TRUNCATES, and the fixture's trend terms go negative — so both
-    recurrence divisions carry a ``_HOLT_SHIFT`` positivity shift
-    ((num + k·S) // k − S), where floor == trunc and the two engines
-    (and any partitioning) agree bit-exactly. The oracle is a 30-step
-    recursive CTE replaying the identical shifted recurrence."""
+    Both recurrence divisions carry the ``_HOLT_SHIFT`` positivity shift
+    (:func:`_holt_step`), so the two engines (and any partitioning)
+    agree bit-exactly. The oracle is a 30-step recursive CTE replaying
+    the identical shifted recurrence."""
     import pandas as pd
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = _type_counts(load_table(spark, sf_dir, "events"), "day", "day")
 
     def holt(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("day").reset_index(drop=True)
-        x = (pdf["n"].astype("int64") * 1000).tolist()
-        lev, tr = [], []
-        l = x[0]
-        b = (x[1] - x[0]) if len(x) > 1 else 0
-        lev.append(l)
-        tr.append(b)
-        for t in range(1, len(x)):
-            s = _HOLT_SHIFT
-            l_new = (x[t] + 3 * (l + b) + 4 * s) // 4 - s
-            b = ((l_new - l) + b + 2 * s) // 2 - s
-            l = l_new
-            lev.append(l)
-            tr.append(b)
+        lev, tr = zip(*_holt_fit((pdf["n"].astype("int64") * 1000).tolist()))
         pdf["level_q"] = pd.Series(lev, dtype="int64")
         pdf["trend_q"] = pd.Series(tr, dtype="int64")
         return pdf[["event_type", "day", "n", "level_q", "trend_q"]]
@@ -878,27 +907,14 @@ def timeseries_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     t — no new recursion."""
     import pandas as pd
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = _type_counts(load_table(spark, sf_dir, "events"), "day", "day")
 
     def backtest(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("day").reset_index(drop=True)
         x = (pdf["n"].astype("int64") * 1000).tolist()
-        l = x[0]
-        b = (x[1] - x[0]) if len(x) > 1 else 0
-        n_steps, tot, mx = 0, 0, 0
-        s = _HOLT_SHIFT
-        for t in range(1, len(x)):
-            err = abs(x[t] - (l + b))
-            n_steps += 1
-            tot += err
-            mx = max(mx, err)
-            l_new = (x[t] + 3 * (l + b) + 4 * s) // 4 - s
-            b = ((l_new - l) + b + 2 * s) // 2 - s
-            l = l_new
-        if n_steps == 0:
+        # step t is forecast by the state at t − 1: l + b
+        errs = [abs(xt - (l + b)) for xt, (l, b) in zip(x[1:], _holt_fit(x))]
+        if not errs:
             # Single-observation series can't be backtested; the
             # oracle's errs CTE emits no row for it either, so both
             # engines must omit it (round-8 ADVICE behavior.py:924).
@@ -913,9 +929,9 @@ def timeseries_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.DataFrame(
             {
                 "event_type": [pdf["event_type"].iloc[0]],
-                "n_steps": pd.Series([n_steps], dtype="int64"),
-                "total_abs_err_q": pd.Series([tot], dtype="int64"),
-                "max_abs_err_q": pd.Series([mx], dtype="int64"),
+                "n_steps": pd.Series([len(errs)], dtype="int64"),
+                "total_abs_err_q": pd.Series([sum(errs)], dtype="int64"),
+                "max_abs_err_q": pd.Series([max(errs)], dtype="int64"),
             }
         )
 

@@ -152,11 +152,21 @@ def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Graph stages. Every graph key (here, in algos, graph_extras,
 # centrality and motif, and the GraphDB / streaming graph inputs) is
-# assembled from these: the slot pair join behind every user edge, the
-# one "uedges_sym" memo, the endpoint mirror and the symmetric closure
-# built on it, the per-vertex degree count and the md5-prefix integer
-# draw behind every hash gate, sampling key and priority. Column names
-# are data, so one definition serves every naming a caller uses.
+# assembled from these: the (user, type, hour) activity slot and the
+# slot pair join behind every user edge, the one "uedges_sym" memo,
+# the endpoint mirror and the symmetric closure built on it, the
+# per-vertex degree count and the md5-prefix integer draw behind every
+# hash gate, sampling key and priority. Column names are data, so one
+# definition serves every naming a caller uses.
+
+
+def _slots(events: DataFrame, *carry: str) -> DataFrame:
+    """The activity slots of ``events``, one row per event: (*carry,
+    user_id, event_type, hour) with hour = date_trunc('hour', ts) —
+    the user graph's input."""
+    return events.select(
+        *carry, "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour")
+    )
 
 
 def _slot_pairs(events: DataFrame) -> DataFrame:
@@ -265,11 +275,7 @@ def user_edges_sym(
     registered §2-C oracles pin; tests/test_graph_algos.py's hot-slot
     synthetic shows the capped path completing where the uncapped
     shape blows up."""
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.date_trunc("hour", "ts").alias("hour"),
-    )
+    e = _slots(load_table(spark, sf_dir, "events"))
     if cap is not None:
         e = slot_capped_users(e, cap)
     return _slot_pairs(e)
@@ -290,10 +296,7 @@ def build_user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     carrying pair rows is the final (a, b) count. Same pair set, same
     weights: distinct-then-pair emits precisely the distinct
     (a, b, slot) triples the old pair-then-distinct kept."""
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour")
-    )
-    m = e.distinct()
+    m = _slots(load_table(spark, sf_dir, "events")).distinct()
     a = m.select(F.col("user_id").alias("a"), "event_type", "hour")
     b = m.select(F.col("user_id").alias("b"), "event_type", "hour")
     return (
@@ -367,10 +370,7 @@ def build_user_graph_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     build cost stays measured there."""
 
     def build() -> DataFrame:
-        e = load_table(spark, sf_dir, "events").select(
-            "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour")
-        )
-        top = slot_capped_users(e)
+        top = slot_capped_users(_slots(load_table(spark, sf_dir, "events")))
         a = top.select(F.col("user_id").alias("a"), "event_type", "hour")
         b = top.select(F.col("user_id").alias("b"), "event_type", "hour")
         return (

@@ -44,6 +44,7 @@ from graph_database_akkatyped_spark.operators.graph_build import (
     _degrees,
     _md5_int,
     _mirror,
+    _slots,
     _sym,
     _top_per_key,
     _uedges_memo,
@@ -560,9 +561,7 @@ def user_directed_edges(
     (graph_build.slot_capped_users) before the succession join — the
     hot-slot k² protection for cluster runs; default None preserves
     the exact semantics the registered SCC/HITS/walk oracles pin."""
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour")
-    )
+    e = _slots(load_table(spark, sf_dir, "events"))
     if cap is not None:
         e = slot_capped_users(e, cap)
     return _succession(e)
@@ -630,9 +629,7 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Timed edges are :func:`_succession` contacts, as in
     ``user_directed_edges``, but KEEP the contact hour as the edge
     timestamp ``t`` instead of collapsing it."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour")
-    )
+    ev = _slots(load_table(spark, sf_dir, "events"))
     edges = cut(_succession(ev.withColumn("t", F.col("hour")), "t"))
     seeds = (
         ev.select("user_id")

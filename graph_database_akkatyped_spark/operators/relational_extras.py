@@ -14,6 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from graph_database_akkatyped_spark.catalog import load_table
+from graph_database_akkatyped_spark.operators.behavior import (
+    _type_counts,
+    _zscore,
+)
 from graph_database_akkatyped_spark.operators.graph_build import (
     _md5_int,
     _sym,
@@ -417,20 +421,13 @@ def events_anomaly_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division, one sqrt, one final rounded division — identical
     IEEE ops on both engines (no order-dependent float accumulation).
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hr")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    hourly = _type_counts(load_table(spark, sf_dir, "events"), "hour", "hr")
     stats = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("k"),
         F.sum("n").alias("s"),
         F.sum(F.col("n") * F.col("n")).alias("ss"),
     )
-    mean = F.col("s") / F.col("k")
-    var = (F.col("k") * F.col("ss") - F.col("s") * F.col("s")) / (
-        F.col("k") * (F.col("k") - 1)
-    )
-    z = F.round((F.col("n") - mean) / F.sqrt(var), 4)
+    z = _zscore()
     return (
         hourly.join(stats, "event_type")
         .select(

@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -61,7 +62,17 @@ from graph_database_akkatyped_spark.caching import (
     release_cut,
 )
 from graph_database_akkatyped_spark.catalog import load_table
-from graph_database_akkatyped_spark.operators.graph_build import _degrees, _sym
+from graph_database_akkatyped_spark.operators.behavior import (
+    _HOLT_SQL,
+    _holt_fit,
+    _holt_step,
+    _type_counts,
+)
+from graph_database_akkatyped_spark.operators.graph_build import (
+    _degrees,
+    _slots,
+    _sym,
+)
 from graph_database_akkatyped_spark.numerics import dec2double, sql_dsum
 from graph_database_akkatyped_spark.streaming.runner import ledgered_run
 
@@ -214,19 +225,30 @@ class IdempotentSnapshotStore(_LedgerStore):
         )
 
 
-def _split_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events rewritten as ``_N_SPLITS`` parquet files (hash-split on
-    user_id) so the file stream source with maxFilesPerTrigger=1 yields
-    a genuine multi-micro-batch run; ts is normalized at write time so
-    the stream read needs no nanos handling. Cached per sf_dir via
-    ``caching.layout_dir`` (evicted + rmtree'd by clear_frame_cache)."""
+def _hash_split_dir(
+    kind: str, sf_dir: str, key: str, frame: Callable[[], DataFrame]
+) -> str:
+    """``frame()`` rewritten as ``_N_SPLITS`` parquet files hash-split on
+    ``key``, so the file stream source with maxFilesPerTrigger=1 yields
+    a genuine multi-micro-batch replay. Cached per (kind, sf_dir) via
+    ``caching.layout_dir`` (evicted + rmtree'd by clear_frame_cache);
+    ``frame`` is called only when the layout is built."""
     return layout_dir(
-        "split",
+        kind,
         sf_dir,
-        lambda d: load_table(spark, sf_dir, "events")
-        .repartition(_N_SPLITS, "user_id")
+        lambda d: frame()
+        .repartition(_N_SPLITS, key)
         .write.mode("overwrite")
         .parquet(d),
+    )
+
+
+def _split_events_dir(spark: SparkSession, sf_dir: str) -> str:
+    """events hash-split on user_id (:func:`_hash_split_dir`); ts is
+    normalized at write time so the stream read needs no nanos
+    handling."""
+    return _hash_split_dir(
+        "split", sf_dir, "user_id", lambda: load_table(spark, sf_dir, "events")
     )
 
 
@@ -301,11 +323,7 @@ class IncrementalDegreeStore(_SetUnionStore):
 
     @staticmethod
     def partial(batch_df: DataFrame) -> DataFrame:
-        return batch_df.select(
-            "user_id",
-            "event_type",
-            F.date_trunc("hour", "ts").alias("hour"),
-        ).distinct()
+        return _slots(batch_df).distinct()
 
     def upsert(self, batch_df: DataFrame, batch_id: int) -> None:
         """``foreachBatch`` entry point: the ledger layer, then the
@@ -386,16 +404,12 @@ class IncrementalCooccurStore(_SetUnionStore):
 
     def __init__(self, spark: SparkSession):
         super().__init__(spark)
-        self.members: DataFrame | None = None   # (event_type, hour, user_id)
+        self.members: DataFrame | None = None   # (user_id, event_type, hour)
         self.pairs: DataFrame | None = None     # canonical a<b user pairs
 
     @staticmethod
     def partial(batch_df: DataFrame) -> DataFrame:
-        return batch_df.select(
-            "event_type",
-            F.date_trunc("hour", "ts").alias("hour"),
-            "user_id",
-        ).distinct()
+        return _slots(batch_df).distinct()
 
     def apply(self, batch_members: DataFrame, batch_id: int) -> None:
         key = ["event_type", "hour", "user_id"]
@@ -551,19 +565,6 @@ class IncrementalScd2Store(_LedgerStore):
         )
 
 
-def _split_orders_dir(spark: SparkSession, sf_dir: str) -> str:
-    """orders rewritten as ``_N_SPLITS`` parquet files (hash-split on
-    o_custkey) for a genuine multi-micro-batch replay. Cached."""
-    return layout_dir(
-        "osplit",
-        sf_dir,
-        lambda d: load_table(spark, sf_dir, "orders")
-        .repartition(_N_SPLITS, "o_custkey")
-        .write.mode("overwrite")
-        .parquet(d),
-    )
-
-
 def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered incremental-SCD2 key: the store seeds from the
     customer master (version-1 rows at the floor date), the orders
@@ -582,32 +583,17 @@ def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         store = IncrementalScd2Store(spark)
         store.apply(run_cut(cust), -1)  # seed = the dimension's initial load
-        return store, _split_orders_dir(spark, sf_dir)
+        return store, _hash_split_dir(
+            "osplit",
+            sf_dir,
+            "o_custkey",
+            lambda: load_table(spark, sf_dir, "orders"),
+        )
 
     return ledgered_run(spark, "stream_scd2", sf_dir, start)
 
 
 # ---------------------------------------- streaming IVF maintenance
-
-def _emb_split_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The APPENDED embedding slice (label >= the rebalance base, i.e.
-    the vectors that arrive after the index freeze) rewritten as
-    ``_N_SPLITS`` parquet files hash-split on vec_id, so the stream
-    replays a genuine multi-micro-batch ingest. Cached like
-    ``_split_events_dir``."""
-    from graph_database_akkatyped_spark.operators.llm import (
-        _REBAL_BASE_LABELS,
-    )
-
-    return layout_dir(
-        "embsplit",
-        sf_dir,
-        lambda d: load_table(spark, sf_dir, "embeddings")
-        .where(F.col("label") >= _REBAL_BASE_LABELS)
-        .repartition(_N_SPLITS, "vec_id")
-        .write.mode("overwrite")
-        .parquet(d),
-    )
 
 
 class IncrementalIvfStore(_LedgerStore):
@@ -683,7 +669,13 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").cast("long").alias("cell"), "embedding"
         )
         cells = run_cut(_cell_means(base, "cell"))
-        return IncrementalIvfStore(spark, cells), _emb_split_dir(spark, sf_dir)
+        appended = _hash_split_dir(
+            "embsplit",
+            sf_dir,
+            "vec_id",
+            lambda: emb.where(F.col("label") >= _REBAL_BASE_LABELS),
+        )
+        return IncrementalIvfStore(spark, cells), appended
 
     return ledgered_run(spark, "stream_ivf", sf_dir, start)
 
@@ -821,26 +813,6 @@ GROUP BY user_id, event_type
 # ---------------------------------------- streaming entity resolution
 
 
-def _er_split_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The dirty registration batch (entity_resolve_blocked's right
-    side) rewritten as ``_N_SPLITS`` parquet files hash-split on r_id,
-    so the stream replays a genuine multi-micro-batch feed."""
-    from graph_database_akkatyped_spark.operators.relational_extras import (
-        _er_sides_sql,
-    )
-
-    def build(d: str) -> None:
-        load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-            "customer"
-        )
-        _, dirty_sql = _er_sides_sql()
-        spark.sql(dirty_sql).repartition(
-            _N_SPLITS, "r_id"
-        ).write.mode("overwrite").parquet(d)
-
-    return layout_dir("ersplit", sf_dir, build)
-
-
 class EntityResolveStore(_PartialsStore):
     """Streaming entity resolution against a static master: the dirty
     registration feed arrives in micro-batches; each batch runs the
@@ -876,10 +848,11 @@ class EntityResolveStore(_PartialsStore):
 
 
 def stream_entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered streaming-ER key (see ``EntityResolveStore``).
-    Oracle: the BATCH entity_resolve_blocked SQL — the hash match
-    proves the ledgered incremental feed converges to the batch
-    answer."""
+    """Registered streaming-ER key (see ``EntityResolveStore``): the
+    dirty registration batch (entity_resolve_blocked's right side) is
+    the hash-split feed. Oracle: the BATCH entity_resolve_blocked SQL —
+    the hash match proves the ledgered incremental feed converges to
+    the batch answer."""
     from graph_database_akkatyped_spark.operators.relational_extras import (
         _er_sides_sql,
     )
@@ -888,9 +861,12 @@ def stream_entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "customer").createOrReplaceTempView(
             "customer"
         )
-        master_sql, _ = _er_sides_sql()
+        master_sql, dirty_sql = _er_sides_sql()
         master = run_cut(spark.sql(master_sql))
-        return EntityResolveStore(spark, master), _er_split_dir(spark, sf_dir)
+        feed = _hash_split_dir(
+            "ersplit", sf_dir, "r_id", lambda: spark.sql(dirty_sql)
+        )
+        return EntityResolveStore(spark, master), feed
 
     return ledgered_run(spark, "stream_er", sf_dir, start)
 
@@ -960,12 +936,7 @@ class StreamingHoltStore(_LedgerStore):
     min_batches = _HOLT_SPLITS
 
     def __init__(self, spark: SparkSession | None = None) -> None:
-        from graph_database_akkatyped_spark.operators.behavior import (
-            _HOLT_SHIFT,
-        )
-
         super().__init__(spark)
-        self._shift = _HOLT_SHIFT
         self.state: dict[str, tuple] = {}  # type -> (day, l, b)
         self.pending: dict[str, tuple] = {}  # type -> (day0, x0, n0)
         self.rows: list[tuple] = []
@@ -973,48 +944,35 @@ class StreamingHoltStore(_LedgerStore):
     @staticmethod
     def partial(batch_df: DataFrame):
         """The batch's (event_type, day, n) counts, on the driver."""
-        return (
-            batch_df.groupBy(
-                "event_type", F.date_trunc("day", "ts").alias("day")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .toPandas()
-        )
+        return _type_counts(batch_df, "day", "day").toPandas()
 
     def apply(self, pdf, batch_id: int) -> None:
         if self._replayed(batch_id):
             return
-        s = self._shift
         for et, g in pdf.groupby("event_type"):
             g = g.sort_values("day")
-            for day, n in zip(g["day"], g["n"]):
-                x = int(n) * 1000
+            for day, n in zip(g["day"], map(int, g["n"])):
+                x = n * 1000
                 if et in self.state:
                     last_day, l, b = self.state[et]
                     if day <= last_day:
                         raise ValueError(
                             f"out-of-order day {day} after {last_day} for {et}"
                         )
-                    l_new = (x + 3 * (l + b) + 4 * s) // 4 - s
-                    b = ((l_new - l) + b + 2 * s) // 2 - s
-                    l = l_new
-                    self.state[et] = (day, l, b)
-                    self.rows.append((et, day.to_pydatetime(), int(n), l, b))
+                    fitted = [(day, n, _holt_step(x, l, b))]
                 elif et in self.pending:
                     day0, x0, n0 = self.pending.pop(et)
                     if day <= day0:
                         raise ValueError("out-of-order first pair")
-                    l, b = x0, x - x0  # classic init l1=x1, b1=x2-x1
-                    self.rows.append((et, day0.to_pydatetime(), n0, l, b))
-                    l_new = (x + 3 * (l + b) + 4 * s) // 4 - s
-                    b = ((l_new - l) + b + 2 * s) // 2 - s
-                    l = l_new
-                    self.state[et] = (day, l, b)
-                    self.rows.append((et, day.to_pydatetime(), int(n), l, b))
+                    fitted = list(zip([day0, day], [n0, n], _holt_fit([x0, x])))
                 else:
                     # first observation: the init trend needs day 2,
                     # so day 1 is buffered, not emitted
-                    self.pending[et] = (day, x, int(n))
+                    self.pending[et] = (day, x, n)
+                    continue
+                for d, dn, (l, b) in fitted:
+                    self.rows.append((et, d.to_pydatetime(), dn, l, b))
+                self.state[et] = (day, l, b)
         self.applied.add(batch_id)
 
     def snapshot(self) -> DataFrame:
@@ -1046,12 +1004,6 @@ def stream_holt_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_holt_oracle() -> str:
-    from graph_database_akkatyped_spark.operators.behavior import _HOLT_SQL
-
-    return _HOLT_SQL
-
-
 QUERIES = {
     "stream_sink_idempotent": stream_sink_idempotent,
     "stream_graph_degree": stream_graph_degree,
@@ -1069,7 +1021,7 @@ ORACLES = {
     "stream_graph_degree": _GRAPH_DEGREE_SQL,
     "stream_ivf_assign": _stream_ivf_oracle(),
     "stream_entity_resolve": _stream_er_oracle(),
-    "stream_holt_state": _stream_holt_oracle(),
+    "stream_holt_state": _HOLT_SQL,
 }
 
 

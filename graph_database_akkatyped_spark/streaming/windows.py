@@ -17,16 +17,20 @@ is O(active windows), not O(stream length).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from graph_database_akkatyped_spark.caching import layout_dir
 from graph_database_akkatyped_spark.catalog import (
     _ensure_session_confs,
     load_table,
     normalize_events_ts,
 )
 from graph_database_akkatyped_spark.numerics import dec2double, dsum, sql_dsum
+from graph_database_akkatyped_spark.operators.behavior import (
+    _hour_grid,
+    _type_counts,
+)
 from graph_database_akkatyped_spark.operators.graph_build import _top_per_key
 from graph_database_akkatyped_spark.streaming.runner import drain
 
@@ -35,19 +39,16 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-_STREAM_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _stream_dir(sf_dir: str, name: str) -> str:
     """Spark's file stream source wants a directory of FILES; each
-    driver fixture is a single file, so expose it through a cached
-    temp-dir symlink. A Spark-written fixture (scale-check replicas) is
-    a parquet DIRECTORY instead — the file source does not recurse into
-    a symlinked subdirectory (it silently lists zero files), so link
-    each part file individually."""
-    key = (sf_dir, name)
-    if key not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="spark_graft_stream_")
+    driver fixture is a single file, so expose it through a temp-dir
+    symlink, cached as a ``caching.layout_dir`` layout (evicted and
+    removed by clear_frame_cache). A Spark-written fixture (scale-check
+    replicas) is a parquet DIRECTORY instead — the file source does not
+    recurse into a symlinked subdirectory (it silently lists zero
+    files), so link each part file individually."""
+
+    def build(d: str) -> None:
         src = f"{sf_dir}/{name}.parquet"
         if os.path.isdir(src):
             for i, f in enumerate(sorted(os.listdir(src))):
@@ -55,8 +56,8 @@ def _stream_dir(sf_dir: str, name: str) -> str:
                     os.symlink(f"{src}/{f}", f"{d}/{name}_{i}.parquet")
         else:
             os.symlink(src, f"{d}/{name}.parquet")
-        _STREAM_DIRS[key] = d
-    return _STREAM_DIRS[key]
+
+    return layout_dir(f"stream_{name}", sf_dir, build)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,12 +252,12 @@ FROM events e JOIN stats USING (user_id)
 """
 
 
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join: purchases within 1 hour after a click
-    by the same user. Watermarks on BOTH sides bound the join state the
-    store must retain — without them a stream-stream join buffers
-    forever; with them state evicts once event time passes the window."""
-    HOUR_US = 3_600_000_000
+def _click_purchase_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the stream-stream joins, each its own file
+    stream with a 1-hour watermark: clicks (click_id, user_id,
+    click_ts) and purchases (purchase_id, p_user_id, purchase_ts)."""
     clicks = (
         stream_events(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -277,6 +278,16 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "1 hour")
     )
+    return clicks, purchases
+
+
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join: purchases within 1 hour after a click
+    by the same user. Watermarks on BOTH sides bound the join state the
+    store must retain — without them a stream-stream join buffers
+    forever; with them state evicts once event time passes the window."""
+    HOUR_US = 3_600_000_000
+    clicks, purchases = _click_purchase_sides(spark, sf_dir)
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
@@ -339,26 +350,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_left_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clicks = (
-        stream_events(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        stream_events(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
+    clicks, purchases = _click_purchase_sides(spark, sf_dir)
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
@@ -577,22 +569,9 @@ def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse counts; at scale the grid is O(span·types), independent of
     event volume."""
     e = _events(spark, sf_dir)
-    hr = F.date_trunc("hour", "ts")
-    counts = e.groupBy(hr.alias("hr"), "event_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    bounds = e.agg(
-        F.min(hr).alias("lo"), F.max(hr).alias("hi")
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
-        ).alias("hr")
-    )
-    types = e.select("event_type").distinct()
     return (
-        grid.crossJoin(types)
-        .join(counts, ["hr", "event_type"], "left")
+        _hour_grid(e)
+        .join(_type_counts(e, "hour", "hr"), ["hr", "event_type"], "left")
         .select("hr", "event_type", F.coalesce("n", F.lit(0)).alias("n"))
     )
 
@@ -637,21 +616,13 @@ def timeseries_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLS over the grid) — linear, one shuffle on event_type, grid
     size O(span·types) independent of event volume."""
     e = _events(spark, sf_dir)
-    hr = F.date_trunc("hour", "ts")
-    obs = e.groupBy(hr.alias("hr"), "event_type").agg(
+    obs = e.groupBy(F.date_trunc("hour", "ts").alias("hr"), "event_type").agg(
         F.expr(
             "CAST(SUM(CAST(floor(value * 1e6) AS BIGINT)) div count(*) "
             "AS BIGINT)"
         ).alias("v_e6")
     )
-    bounds = e.agg(F.min(hr).alias("lo"), F.max(hr).alias("hi"))
-    grid = bounds.select(
-        F.explode(
-            F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
-        ).alias("hr")
-    )
-    types = e.select("event_type").distinct()
-    sparse = grid.crossJoin(types).join(obs, ["hr", "event_type"], "left")
+    sparse = _hour_grid(e).join(obs, ["hr", "event_type"], "left")
     from pyspark.sql import Window as W
 
     fwd = W.partitionBy("event_type").orderBy("hr").rowsBetween(

@@ -208,3 +208,16 @@ def test_layout_dir_failed_build_rolls_back(spark):
     ok = layout_dir("probe_bad", "/tmp/fake_a", lambda p: None)
     assert os.path.exists(ok)
     clear_frame_cache()
+
+
+def test_stream_dir_is_a_layout_removed_by_clear_frame_cache():
+    import os
+
+    from graph_database_akkatyped_spark.streaming.windows import _stream_dir
+
+    d = _stream_dir(SF, "events")
+    assert _stream_dir(SF, "events") == d  # memo hit
+    assert os.path.islink(os.path.join(d, "events.parquet"))
+    clear_frame_cache(SF)
+    assert not os.path.exists(d)
+    assert os.path.isfile(f"{SF}/events.parquet")  # the fixture stays
