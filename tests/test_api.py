@@ -108,6 +108,24 @@ def test_compact_crash_at_any_directory_rename_keeps_state(
     assert not crashed and crash_at >= 2
 
 
+def test_compact_replays_a_null_key_as_one_key(db):
+    """The driver fold groups null keys as Spark's replay does: the
+    latest event of a null id wins, and compact() keeps that state. A
+    null endpoint matches no live vertex, as in edges()'s semi-joins,
+    so the edge snapshot drops that edge."""
+    import pyarrow.parquet as pq
+
+    db.add_vertices([(None, "k", "old"), ("a", "k", "x")])
+    db.add_vertices([(None, "k", "new")])
+    db.add_edges([(None, "a", "r", 1.0), ("a", "a", "r", 2.0)])
+    names = lambda: sorted((str(r["id"]), r["name"]) for r in db.vertices().collect())  # noqa: E731
+    assert names() == [("None", "new"), ("a", "x")]
+    assert [tuple(r) for r in db.edges().collect()] == [("a", "a", "r", 2.0)]
+    db.compact()
+    assert names() == [("None", "new"), ("a", "x")]
+    assert pq.read_table(db._edir, columns=["src"])["src"].to_pylist() == ["a"]
+
+
 def test_mutations_after_compact(db):
     db.add_vertices([("a", "k", "x")])
     db.compact()
@@ -290,7 +308,7 @@ def test_reopen_after_clock_step_back_writes_after_journal(
     assert jobs == []
     db.add_vertices([("v", "k", "new")])
     assert [r["name"] for r in db.get_vertex("v").collect()] == ["new"]
-    # a compacted journal (Spark-written snapshot files) seeds it too
+    # a compacted journal (driver-written snapshot files) seeds it too
     db.compact()
     db = GraphDB(spark, path)
     db.add_vertices([("w", "k", "w2")])
@@ -370,9 +388,34 @@ def test_leftover_temp_file_is_invisible(db, monkeypatch, tmp_path):
     assert [tuple(r) for r in counts.collect()] == [("r", "upsert", 1)]
 
 
-def test_tombstone_null_weight_roundtrips_ddl_schema(db, spark):
+def test_stale_compaction_temp_dir_does_not_leak(db):
+    """A ``vertices.tmp`` directory left by a crashed compaction is
+    cleared before the next snapshot is written there, so its rows
+    never reach the live journal."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from graph_database_akkatyped_spark.api import _V_SCHEMA, _arrow_schema
+
+    db.add_vertices([("a", "k", "x")])
+    stale = db._vdir + ".tmp"
+    os.makedirs(stale)
+    ghost = pa.table(
+        [["ghost"], ["k"], ["g"], ["upsert"], [db._batch + 1]], schema=_arrow_schema(_V_SCHEMA)
+    )
+    pq.write_table(ghost, os.path.join(stale, "snapshot-stale.parquet"))
+    db.compact()
+    assert [r["id"] for r in db.vertices().collect()] == ["a"]
+    assert "snapshot-stale.parquet" not in os.listdir(db._vdir)
+    live = pq.read_table(db._vdir)["id"].to_pylist()
+    assert live == ["a"] and not os.path.exists(stale)
+
+
+def test_tombstone_null_weight_roundtrips_ddl_schema(db, spark, monkeypatch):
     """Driver-written journal files carry exactly the DDL schema, and a
-    delete's null weight reads back as null."""
+    delete's null weight reads back as null. So do compact()'s snapshot
+    files (the edge one holds no row here), and a GraphDB reopened on
+    them seeds its batch ids from their footers."""
     from pyspark.sql.types import StructType
 
     from graph_database_akkatyped_spark.api import _E_SCHEMA, _V_SCHEMA
@@ -393,14 +436,29 @@ def test_tombstone_null_weight_roundtrips_ddl_schema(db, spark):
     v = spark.read.parquet(db._vdir).where("op = 'delete'").collect()
     assert [(r["id"], r["kind"], r["name"]) for r in v] == [("a", None, None)]
 
+    db.compact()
+    for d, ddl in ((db._vdir, _V_SCHEMA), (db._edir, _E_SCHEMA)):
+        assert [n.split("-")[0] for n in os.listdir(d)] == ["snapshot"]
+        assert fields(spark.read.parquet(d).schema) == fields(StructType.fromDDL(ddl))
+    assert [tuple(r) for r in spark.read.parquet(db._vdir).collect()] == [
+        ("b", "k", "y", "upsert", db._batch)
+    ]
+    monkeypatch.setattr(time, "time_ns", lambda: 1)  # clock far behind the snapshot
+    reopened = GraphDB(spark, db.path)
+    assert reopened._batch == db._batch
+    reopened.add_vertices([("b", "k", "y2")])
+    assert [tuple(r) for r in reopened.vertices().collect()] == [("b", "k", "y2")]
+
 
 def test_commands_start_no_spark_job(db, spark):
-    """Every command, remove_vertex's incident-edge lookup included, is
-    a driver-side read and write of the journal: no Spark job."""
+    """Every command, remove_vertex's incident-edge lookup and compact()
+    included, is a driver-side read and write of the journal: no Spark
+    job."""
     commands = [
         (db.add_vertices, [("a", "k", "x"), ("b", "k", "y"), ("c", "k", "z")]),
         (db.add_edges, [("a", "b", "r", 1.0), ("b", "a", "r", 2.0), ("a", "c", "r", 3.0)]),
         (db.remove_edge, "a", "c", "r"),
+        (db.compact,),
         (db.remove_vertex, "b"),  # incident edges (a, b) and (b, a)
         (db.remove_vertex, "c"),  # no live incident edge left
     ]
@@ -408,9 +466,7 @@ def test_commands_start_no_spark_job(db, spark):
         assert _spark_jobs(spark, lambda: command(*args))[1] == [], command.__name__
     assert [tuple(r) for r in db.vertices().collect()] == [("a", "k", "x")]
     tombstoned = spark.read.parquet(db._edir).where("op = 'delete'")
-    assert sorted((r.src, r.dst) for r in tombstoned.collect()) == [
-        ("a", "b"), ("a", "c"), ("b", "a")
-    ]
+    assert sorted((r.src, r.dst) for r in tombstoned.collect()) == [("a", "b"), ("b", "a")]
 
 
 def test_ask_taken_before_compact_collects_after_it(db, spark):

@@ -338,6 +338,14 @@ def _check_graphdb_asks(db, ids) -> None:
         assert got_h == [r for r in events if r[0] == vid], vid
 
 
+def _graphdb_state(db) -> tuple[list, list]:
+    """The Spark replay's live vertices and edges."""
+    return (
+        sorted(tuple(r) for r in db.vertices().collect()),
+        sorted(tuple(r) for r in db.edges().collect()),
+    )
+
+
 @given(commands=_GRAPHDB_COMMANDS, crash=st.sampled_from(["add_vertices", "add_edges"]))
 @example(  # edges out of an absent source and into an absent target
     commands=[("add_vertices", [("b", "x")]), ("add_edges", [("a", "b", "r"), ("b", "c", "r")])],
@@ -354,12 +362,25 @@ def _check_graphdb_asks(db, ids) -> None:
     ],
     crash="add_vertices",
 )
+@example(  # repeated compactions around an edge to an absent endpoint
+    commands=[
+        ("add_vertices", [("a", "x")]),
+        ("add_edges", [("a", "b", "r"), ("a", "a", "s")]),
+        ("compact", None),
+        ("compact", None),
+        ("add_vertices", [("b", "y")]),
+        ("remove_edge", ("a", "a", "s")),
+        ("compact", None),
+    ],
+    crash="add_edges",
+)
 @settings(**_SETTINGS)
 def test_graphdb_driver_asks_match_spark_replay(spark, tmp_path_factory, commands, crash):
     """get_vertex / neighbors / history, read and replayed on the driver,
     equal the Spark replay over random command streams: upserts,
     re-adds, tombstones, edges to absent endpoints, compactions, and a
-    crashed append's leftover temp file; and on an empty journal."""
+    crashed append's leftover temp file; and on an empty journal. Each
+    compaction, a driver-side fold, leaves the Spark replay unchanged."""
     import os
     from unittest import mock
 
@@ -378,8 +399,10 @@ def test_graphdb_driver_asks_match_spark_replay(spark, tmp_path_factory, command
             db.remove_edge(*arg)
         elif kind == "remove_vertex":
             db.remove_vertex(arg)
-        else:
+        else:  # the Spark replay is the reference the driver fold must keep
+            before = _graphdb_state(db)
             db.compact()
+            assert _graphdb_state(db) == before
     with mock.patch.object(os, "rename", side_effect=OSError("crash before rename")):
         with pytest.raises(OSError, match="crash before rename"):
             if crash == "add_vertices":
