@@ -18,8 +18,13 @@ the lakehouse event-log pattern:
   O(live data), the Spark analog of Akka Persistence snapshots. It is a
   driver-side fold like the commands: pyarrow reads each journal,
   replays it and writes one key-sorted ``snapshot-…`` file, with no
-  Spark job. The journal stream reads only ``part-…`` files, so, as in
-  Akka, a snapshot is never replayed into the event stream.
+  Spark job. The journal view and the journal stream read only
+  ``part-…`` files, so, as in Akka, a snapshot is never replayed into
+  the event stream;
+- **the journal view** (:meth:`GraphDB.run_incremental_edge_counts`)
+  is a projection folded on the driver: each refresh reads only the
+  command files its checkpoint has not consumed and adds their counts
+  to the kept ones, with no Spark job.
 
 Point asks (:meth:`GraphDB.get_vertex`, :meth:`GraphDB.neighbors`,
 :meth:`GraphDB.history`) are driver reads: pyarrow reads the few journal
@@ -42,10 +47,12 @@ Example::
 from __future__ import annotations
 
 import functools
+import json
 import os
 import shutil
 import time
 import uuid
+from collections import Counter
 from collections.abc import Iterable
 from contextlib import contextmanager
 
@@ -73,6 +80,8 @@ _V_SCHEMA = "id string, kind string, name string, op string, batch long"
 _E_SCHEMA = "src string, dst string, rel string, weight double, op string, batch long"
 _V_KEY = ["id"]
 _E_KEY = ["src", "dst", "rel"]
+_VIEW_SCHEMA = "rel string, op string, n_events bigint"
+_VIEW_STATE = "view-state.json"  # a journal view's counts and consumed files
 
 
 @functools.cache
@@ -127,14 +136,6 @@ def _max_batch(path: str) -> int:
     return max((st.max for st in stats if st is not None and st.has_min_max), default=0)
 
 
-def _last_commit(checkpoint: str) -> int:
-    """Id of the last batch committed to a streaming ``checkpoint``
-    (-1 before its first batch)."""
-    path = os.path.join(checkpoint, "commits")
-    names = os.listdir(path) if os.path.isdir(path) else []
-    return max((int(n) for n in names if n.isdigit()), default=-1)
-
-
 class ConcurrentWriterError(RuntimeError):
     """A second writer attempted a mutation while another held the
     journal write lock."""
@@ -166,20 +167,21 @@ class GraphDB:
     (an empty command writes none): the driver writes it with pyarrow
     to a dot-prefixed temp name in the journal directory and renames it
     to ``part-….parquet`` while still holding the lock. Spark's file
-    listing, the driver-side ask reads and the journal stream skip
-    dot-prefixed names, so readers never lock: a read sees a consistent
-    prefix of the journal, and a temp file left by a crashed writer is
-    never read. The point asks return a snapshot taken at call time (a
-    DataFrame over a local Arrow table), so no later command or
-    ``compact()`` can change or break one. ``compact()`` is a driver
-    fold too: it replays each journal with pyarrow and writes one
-    ``snapshot-….parquet`` per journal, holding the journal's live state
-    in driver memory. It requires that no bulk read or analytic
-    (:meth:`vertices`, :meth:`edges`, :meth:`pagerank`, ...) holds an
-    unexecuted plan over the journal while it swaps directories —
-    schedule it off-path, as its docstring says. If a writer dies
-    holding the lock, remove the stale ``journal/.write_lock``
-    manually (:meth:`force_unlock`)."""
+    listing, the driver-side ask reads, the journal view and the
+    journal stream skip dot-prefixed names, so readers never lock: a
+    read sees a consistent prefix of the journal, and a temp file left
+    by a crashed writer is never read. The point asks and the journal
+    view return a snapshot taken at call time (a DataFrame over a local
+    Arrow table), so no later command or ``compact()`` can change or
+    break one; the view keeps its counts in its checkpoint's state
+    file. ``compact()`` is a driver fold too: it replays each journal
+    with pyarrow and writes one ``snapshot-….parquet`` per journal,
+    holding the journal's live state in driver memory. It requires
+    that no bulk read or analytic (:meth:`vertices`, :meth:`edges`,
+    :meth:`pagerank`, ...) holds an unexecuted plan over the journal
+    while it swaps directories — schedule it off-path, as its
+    docstring says. If a writer dies holding the lock, remove the stale
+    ``journal/.write_lock`` manually (:meth:`force_unlock`)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -410,9 +412,11 @@ class GraphDB:
         ``X.old`` back when ``X`` is missing, and any mix of compacted
         and uncompacted journals replays to the same state.
 
-        Snapshot files are not streamed (see :meth:`edge_journal_stream`),
-        so refresh a journal view before compacting: commands folded
-        into a snapshot before the view read them are not counted.
+        Snapshot files are not read by the journal view (see
+        :meth:`run_incremental_edge_counts`) or streamed (see
+        :meth:`edge_journal_stream`), so refresh a journal view before
+        compacting: commands folded into a snapshot before the view
+        read them are not counted.
         """
         with self._write_lock():
             v = _replay(_scan(self._vdir, _V_SCHEMA), _V_KEY)
@@ -493,39 +497,68 @@ class GraphDB:
     def run_incremental_edge_counts(
         self, checkpoint: str, sink_name: str
     ) -> DataFrame:
-        """Incremental per-(rel, op) event counts over the journal.
+        """Incremental per-(rel, op) event counts over the edge journal,
+        as temp view ``sink_name`` (``rel string, op string, n_events
+        bigint``).
 
-        With a persistent ``checkpoint``, successive AvailableNow runs
-        consume ONLY journal files appended since the last run and fold
-        them into the checkpointed state — O(new mutations) per refresh,
-        which is what keeps a materialized graph view cheap at 100 TB.
+        A projection in the Akka Persistence sense, folded on the
+        driver: each refresh lists the journal's committed ``part-*``
+        files, reads only the ``rel`` and ``op`` columns of the files
+        the ``checkpoint`` has not consumed yet, batch by batch, and
+        adds their counts to the kept ones — O(new mutations) per
+        refresh, and no Spark job. The counts and the consumed file
+        names (pruned to files still in the journal, so the list holds
+        the command files since the last ``compact()``) are one small
+        JSON file swapped in with ``os.replace``: that rename is the
+        exactly-once boundary, so a refresh that dies before it leaves
+        the previous state, and its rerun counts the same files once.
+        As with a streaming query's checkpoint, one refresh at a time
+        may use a ``checkpoint``.
+
         Compaction snapshots are not read, so the counts stay exact
         across ``compact()``, and a fresh checkpoint counts the command
         files present at its first run and after, not the events a
-        snapshot already folded. The checkpoint's state store keeps the
-        shuffle-partition count of the session that created it. A
-        refresh that finds no new command file runs no batch, so it
-        reads the counts back from the checkpoint's state store.
+        snapshot already folded. A refresh that finds no new command
+        file answers the kept counts. The view is a DataFrame over a
+        local Arrow table: collecting it runs no Spark job. A
+        ``checkpoint`` that holds a Spark streaming checkpoint (the
+        view's earlier form) raises ``ValueError`` rather than
+        recounting from zero.
         """
-        last = _last_commit(checkpoint)
-        q = (
-            self.edge_journal_stream()
-            .groupBy("rel", "op")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if last >= 0 and _last_commit(checkpoint) == last:
-            state = self.spark.read.format("statestore").load(checkpoint)
-            return state.select(
-                "key.rel", "key.op", F.col("value.count").alias("n_events")
+        if any(os.path.isdir(os.path.join(checkpoint, d)) for d in ("commits", "offsets")):
+            raise ValueError(
+                f"{checkpoint} holds a Spark streaming checkpoint, not a journal "
+                "view state: refresh the view into a new checkpoint directory"
             )
-        return self.spark.table(sink_name)
+        state = os.path.join(checkpoint, _VIEW_STATE)
+        try:
+            with open(state) as fh:
+                kept = json.load(fh)
+        except FileNotFoundError:
+            kept = {"files": [], "counts": []}
+        counts = Counter({(r["rel"], r["op"]): r["n_events"] for r in kept["counts"]})
+        parts = sorted(
+            n for n in os.listdir(self._edir) if n.startswith("part-") and n.endswith(".parquet")
+        )
+        consumed = set(kept["files"])
+        new = [os.path.join(self._edir, n) for n in parts if n not in consumed]
+        journal = ds.dataset(new, schema=_arrow_schema(_E_SCHEMA), format="parquet")
+        for batch in journal.to_batches(columns=["rel", "op"]):
+            by = pa.Table.from_batches([batch]).group_by(["rel", "op"]).aggregate(
+                [([], "count_all")]
+            )
+            keys = zip(by["rel"].to_pylist(), by["op"].to_pylist())
+            counts.update(dict(zip(keys, by["count_all"].to_pylist())))
+        rows = [{"rel": rel, "op": op, "n_events": n} for (rel, op), n in counts.items()]
+        if parts != kept["files"]:
+            os.makedirs(checkpoint, exist_ok=True)
+            with open(state + ".tmp", "w") as fh:
+                json.dump({"files": parts, "counts": rows}, fh)
+            os.replace(state + ".tmp", state)
+        view = pa.Table.from_pylist(rows, schema=_arrow_schema(_VIEW_SCHEMA))
+        df = self.spark.createDataFrame(view.sort_by([("rel", "ascending"), ("op", "ascending")]))
+        df.createOrReplaceTempView(sink_name)
+        return df
 
     # ----------------------------------------------------------- analytics
 

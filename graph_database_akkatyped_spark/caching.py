@@ -68,6 +68,7 @@ the cut changes WHERE blocks live, never their content.
 
 from __future__ import annotations
 
+import atexit
 import shutil
 import tempfile
 from contextlib import contextmanager
@@ -291,10 +292,10 @@ def clear_frame_cache(sf_dir: str | None = None) -> None:
     callers re-derive via ``memoized_checkpoint`` on next use.
 
     Also evicts (and removes from disk) the memoized on-disk layouts
-    registered through :func:`layout_dir`, so a regenerated input
-    under the same ``sf_dir`` cannot be served a stale physical
-    layout — the layout cache follows the frame cache's eviction
-    discipline."""
+    registered through :func:`layout_dir` and the round-trip
+    directories of :func:`temp_dir`, so a regenerated input under the
+    same ``sf_dir`` cannot be served a stale physical layout — the
+    layout cache follows the frame cache's eviction discipline."""
     for key in [k for k in _CACHE if sf_dir is None or k[1] == sf_dir]:
         spark, _df, block_ids = _CACHE.pop(key)
         try:
@@ -305,7 +306,17 @@ def clear_frame_cache(sf_dir: str | None = None) -> None:
         shutil.rmtree(_LAYOUT_DIRS.pop(key), ignore_errors=True)
 
 
+# every on-disk directory the package makes: a layout_dir layout under
+# its (kind, sf_dir), a temp_dir under (its own path, sf_dir)
 _LAYOUT_DIRS: dict[tuple[str, str], str] = {}
+
+
+@atexit.register
+def _remove_layout_dirs() -> None:
+    """Remove the directories of a process that exits without clearing
+    the cache."""
+    while _LAYOUT_DIRS:
+        shutil.rmtree(_LAYOUT_DIRS.popitem()[1], ignore_errors=True)
 
 
 def layout_dir(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
@@ -327,4 +338,16 @@ def layout_dir(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
             shutil.rmtree(path, ignore_errors=True)
             raise
         _LAYOUT_DIRS[key] = path
+    return path
+
+
+def temp_dir(kind: str, sf_dir: str) -> str:
+    """A fresh ``spark_graft_{kind}_*`` directory for one call's sink
+    round-trip (written, then read back lazily), registered like a
+    :func:`layout_dir` layout: :func:`clear_frame_cache` removes it with
+    ``sf_dir``'s entries, and the exit hook removes what is left. It is
+    not memoized: each call gets its own directory, so a frame built by
+    an earlier call keeps its files until the cache is cleared."""
+    path = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_")
+    _LAYOUT_DIRS[(path, sf_dir)] = path
     return path

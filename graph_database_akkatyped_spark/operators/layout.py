@@ -23,10 +23,10 @@ Scale notes:
 from __future__ import annotations
 
 import math
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from graph_database_akkatyped_spark.caching import temp_dir
 from graph_database_akkatyped_spark.catalog import load_table
 
 _ZBITS = 16
@@ -257,13 +257,13 @@ def sink_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, not 1.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    small_dir = tempfile.mkdtemp(prefix="spark_graft_shred_")
+    small_dir = temp_dir("shred", sf_dir)
     docs.repartition(64).write.mode("overwrite").parquet(small_dir)
     back_small = spark.read.parquet(small_dir)
 
     n_rows = back_small.count()
     n_target = max(1, math.ceil(n_rows / _COMPACT_ROWS_PER_FILE))
-    compact_dir = tempfile.mkdtemp(prefix="spark_graft_compact_")
+    compact_dir = temp_dir("compact", sf_dir)
     back_small.repartition(n_target).write.mode("overwrite").parquet(
         compact_dir
     )

@@ -9,8 +9,9 @@ Defaults chosen for oracle parity and 100 TB readiness:
 - Arrow enabled: every pandas_udf / applyInPandas path is Arrow-batched.
 - Sized to the machine. A local session runs ``local[n]`` with
   ``shuffle.partitions=n``, where n is :func:`local_cpus`: more
-  partitions than cores only add tasks, and a streaming state store
-  keeps one store per partition. The driver heap is
+  partitions than cores only add tasks, and a stateful streaming
+  query keeps one state store per partition (the GraphDB journal view
+  is a driver fold and keeps none). The driver heap is
   :func:`driver_memory`. A real cluster deployment passes its
   ``master``, sets the partition count via ``spark-defaults.conf`` and
   leans on AQE's ``advisoryPartitionSizeInBytes`` instead.

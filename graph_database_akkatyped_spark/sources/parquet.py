@@ -10,10 +10,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from graph_database_akkatyped_spark import caching
 from graph_database_akkatyped_spark.catalog import load_table
 
 
@@ -47,7 +47,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    out = tempfile.mkdtemp(prefix="spark_graft_sink_")
+    out = caching.temp_dir("sink", sf_dir)
     agg.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     back = spark.read.parquet(out)
     # partition column comes back as the last column; normalize order/types
@@ -63,7 +63,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema (never infer in production — schema drift at 100 TB
     is silent data corruption). Oracle-checked against the original."""
     nation = load_table(spark, sf_dir, "nation")
-    out = tempfile.mkdtemp(prefix="spark_graft_csv_")
+    out = caching.temp_dir("csv", sf_dir)
     nation.write.mode("overwrite").option("header", True).csv(out)
     return spark.read.schema(nation.schema).option("header", True).csv(out)
 
@@ -71,7 +71,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + source with explicit schema on re-read."""
     docs = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="spark_graft_json_")
+    out = caching.temp_dir("json", sf_dir)
     docs.write.mode("overwrite").json(out)
     return spark.read.schema(docs.schema).json(out)
 
@@ -82,7 +82,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks the roundtrip against the ORIGIN table — byte-exact
     values surviving the format hop is precisely the claim."""
     supplier = load_table(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="spark_graft_orc_")
+    out = caching.temp_dir("orc", sf_dir)
     supplier.write.mode("overwrite").orc(out)
     return spark.read.schema(supplier.schema).orc(out)
 
@@ -95,7 +95,7 @@ def sink_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py) — the scan never touches the other partitions'
     bytes."""
     orders = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="spark_graft_part_")
+    out = caching.temp_dir("part", sf_dir)
     orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
     back = spark.read.parquet(out).where(
         F.col("o_orderpriority") == "1-URGENT"
@@ -156,9 +156,7 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first and orders LAST so the last-written table doubles as the
     # completion marker; the data dirs are registered in the shared
     # layout-dir cache so eviction cleans them like every other sink.
-    from graph_database_akkatyped_spark import caching
-
-    k_orders, k_cust = ("bkt_orders", sf_dir), ("bkt_customer", sf_dir)
+    k_orders, k_cust = ("bkt_o", sf_dir), ("bkt_c", sf_dir)
     fresh = (
         spark.catalog.tableExists(t_orders)
         and spark.catalog.tableExists(t_cust)
@@ -175,15 +173,16 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             old = caching._LAYOUT_DIRS.pop(k, None)
             if old is not None:
                 shutil.rmtree(old, ignore_errors=True)
-        d_cust = tempfile.mkdtemp(prefix="spark_graft_bkt_c_")
-        caching._LAYOUT_DIRS[k_cust] = d_cust
-        write_bucketed(
-            cust.withColumnRenamed("c_custkey", "o_custkey"),
-            t_cust, "o_custkey", path=d_cust,
+        caching.layout_dir(
+            "bkt_c", sf_dir,
+            lambda d: write_bucketed(
+                cust.withColumnRenamed("c_custkey", "o_custkey"),
+                t_cust, "o_custkey", path=d,
+            ),
         )
-        d_orders = tempfile.mkdtemp(prefix="spark_graft_bkt_o_")
-        caching._LAYOUT_DIRS[k_orders] = d_orders
-        write_bucketed(orders, t_orders, "o_custkey", path=d_orders)
+        caching.layout_dir(
+            "bkt_o", sf_dir, lambda d: write_bucketed(orders, t_orders, "o_custkey", path=d)
+        )
     from graph_database_akkatyped_spark.numerics import dsum
 
     j = spark.table(t_orders).hint("merge").join(

@@ -221,3 +221,39 @@ def test_stream_dir_is_a_layout_removed_by_clear_frame_cache():
     clear_frame_cache(SF)
     assert not os.path.exists(d)
     assert os.path.isfile(f"{SF}/events.parquet")  # the fixture stays
+
+
+def test_sink_round_trip_dirs_removed_by_clear_frame_cache(spark):
+    """The sink round-trips, ``sink_compacted`` and ``sink_bucketed_join``
+    write their directories through the cache's registry:
+    clear_frame_cache() removes every one of them, and the exit hook
+    removes what a process leaves registered."""
+    import glob
+    import os
+    import tempfile
+
+    from graph_database_akkatyped_spark.operators import layout
+    from graph_database_akkatyped_spark.sources import parquet
+
+    kinds = ("sink", "csv", "json", "orc", "part", "shred", "compact", "bkt_c", "bkt_o")
+
+    def dirs():
+        root = tempfile.gettempdir()
+        return {
+            (k, d) for k in kinds for d in glob.glob(os.path.join(root, f"spark_graft_{k}_*"))
+        }
+
+    clear_frame_cache()  # the bucketed tables rebuild into registered dirs
+    before = dirs()
+    keys = [getattr(parquet, k) for k in parquet.QUERIES if k.startswith("sink_")]
+    for key in [*keys, layout.sink_compacted]:
+        assert key(spark, SF).collect()
+    made = dirs() - before
+    assert {k for k, _ in made} == set(kinds)
+    clear_frame_cache()
+    assert not [d for _, d in made if os.path.exists(d)]
+    assert not caching._LAYOUT_DIRS
+
+    kept = caching.temp_dir("sink", SF)
+    caching._remove_layout_dirs()
+    assert not os.path.exists(kept) and not caching._LAYOUT_DIRS

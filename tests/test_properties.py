@@ -299,22 +299,20 @@ def test_entity_resolve_structural_recall(spark, stems, tmp_path_factory):
 _GRAPHDB_VIDS = "abcde"
 _GRAPHDB_IDS = st.sampled_from(_GRAPHDB_VIDS)
 _GRAPHDB_RELS = st.sampled_from("rs")
-_GRAPHDB_COMMANDS = st.lists(
-    st.one_of(
-        st.tuples(
-            st.just("add_vertices"),
-            st.lists(st.tuples(_GRAPHDB_IDS, st.sampled_from("xy")), min_size=1, max_size=3),
-        ),
-        st.tuples(st.just("remove_vertex"), _GRAPHDB_IDS),
-        st.tuples(
-            st.just("add_edges"),
-            st.lists(st.tuples(_GRAPHDB_IDS, _GRAPHDB_IDS, _GRAPHDB_RELS), min_size=1, max_size=3),
-        ),
-        st.tuples(st.just("remove_edge"), st.tuples(_GRAPHDB_IDS, _GRAPHDB_IDS, _GRAPHDB_RELS)),
-        st.tuples(st.just("compact"), st.none()),
+_GRAPHDB_COMMAND = st.one_of(
+    st.tuples(
+        st.just("add_vertices"),
+        st.lists(st.tuples(_GRAPHDB_IDS, st.sampled_from("xy")), min_size=1, max_size=3),
     ),
-    max_size=10,
+    st.tuples(st.just("remove_vertex"), _GRAPHDB_IDS),
+    st.tuples(
+        st.just("add_edges"),
+        st.lists(st.tuples(_GRAPHDB_IDS, _GRAPHDB_IDS, _GRAPHDB_RELS), min_size=1, max_size=3),
+    ),
+    st.tuples(st.just("remove_edge"), st.tuples(_GRAPHDB_IDS, _GRAPHDB_IDS, _GRAPHDB_RELS)),
+    st.tuples(st.just("compact"), st.none()),
 )
+_GRAPHDB_COMMANDS = st.lists(_GRAPHDB_COMMAND, max_size=10)
 
 
 def _check_graphdb_asks(db, ids) -> None:
@@ -410,3 +408,70 @@ def test_graphdb_driver_asks_match_spark_replay(spark, tmp_path_factory, command
             else:
                 db.add_edges([("a", "b", "ghost", 9.0), ("a", "e", "ghost", 9.0)])
     _check_graphdb_asks(db, _GRAPHDB_VIDS)
+
+
+@given(
+    commands=st.lists(
+        st.one_of(_GRAPHDB_COMMAND, st.tuples(st.just("refresh"), st.none())), max_size=14
+    )
+)
+@example(  # a vertex removed after a compaction dropped its dangling edge
+    commands=[
+        ("add_vertices", [("a", "x"), ("b", "y")]),
+        ("add_edges", [("a", "b", "r"), ("a", "c", "s"), ("a", "b", "r")]),
+        ("compact", None),
+        ("remove_vertex", "a"),
+        ("refresh", None),
+        ("remove_edge", ("a", "b", "r")),
+        ("compact", None),
+    ],
+)
+@settings(**_SETTINGS)
+def test_graphdb_view_counts_every_edge_event(spark, tmp_path_factory, commands):
+    """The journal view equals a Counter of (rel, op) over every edge
+    event the commands wrote, across random commands, refreshes and
+    compactions (each compaction refreshes first, as the view asks), and
+    on the empty journal. Edge events follow the command semantics: one
+    upsert per distinct key of an add_edges, one delete per remove_edge,
+    and one delete per incident edge of the raw edge replay for a
+    remove_vertex; a compaction keeps only edges with both endpoints
+    live."""
+    from collections import Counter
+
+    from graph_database_akkatyped_spark.api import GraphDB
+
+    work = tmp_path_factory.mktemp("graphdb_view")
+    db = GraphDB(spark, str(work / "db"))
+    ckpt = str(work / "ckpt")
+
+    def refresh():
+        view = db.run_incremental_edge_counts(ckpt, "view_prop").collect()
+        assert Counter({(r["rel"], r["op"]): r["n_events"] for r in view}) == events
+
+    live, replay, events = set(), set(), Counter()
+    refresh()  # the empty journal
+    for i, (kind, arg) in enumerate(commands):
+        if kind == "add_vertices":
+            db.add_vertices([(v, "k", f"{name}{i}") for v, name in arg])
+            live.update(v for v, _ in arg)
+        elif kind == "add_edges":
+            db.add_edges([(s, d, r, float(i)) for s, d, r in arg])
+            replay.update(arg)
+            events.update((r, "upsert") for _, _, r in set(arg))
+        elif kind == "remove_edge":
+            db.remove_edge(*arg)
+            replay.discard(arg)
+            events[(arg[2], "delete")] += 1
+        elif kind == "remove_vertex":
+            db.remove_vertex(arg)
+            incident = {k for k in replay if arg in k[:2]}
+            replay -= incident
+            live.discard(arg)
+            events.update((r, "delete") for _, _, r in incident)
+        elif kind == "compact":
+            refresh()
+            db.compact()
+            replay = {k for k in replay if k[0] in live and k[1] in live}
+        else:
+            refresh()
+    refresh()
